@@ -1,7 +1,7 @@
 package graft.etl
 
 import java.nio.file.{Files, Paths, StandardCopyOption}
-import java.util.concurrent.atomic.AtomicBoolean
+import java.util.concurrent.ConcurrentHashMap
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.ops.EventOps
@@ -46,17 +46,21 @@ object Incremental {
       StandardCopyOption.REPLACE_EXISTING)
   }
 
-  /** Single-flight guard (`/root/reference/flask_server.py:86-90`) — the
-    * reference's check-then-set on a shared dict is racy; an
-    * AtomicBoolean is the correct form.
+  /** Single-flight guard (`/root/reference/flask_server.py:86-90`), one
+    * per pipeline: the normalized absolute `statePath`s of the runs in
+    * flight. The reference's check-then-set on a shared dict is racy; an
+    * atomic set-add is the correct form. Keying by state path refuses a
+    * second run of the same pipeline but lets pipelines with their own
+    * watermarks run side by side; runs that share a sink must share a
+    * state path, since the sinks assume a single writer.
     */
-  private val running = new AtomicBoolean(false)
+  private val running = ConcurrentHashMap.newKeySet[String]()
 
   final case class RunResult(rowsFetched: Long, rowsInserted: Long, newWatermarkUs: Long)
 
   /** One incremental run. `transform` is the pluggable extraction step
     * (N1 etc.); `keys` is the natural dedup key. Returns None if another
-    * run is in flight (HTTP 409 analogue,
+    * run with the same `statePath` is in flight (HTTP 409 analogue,
     * `/root/reference/flask_server.py:270-271`).
     */
   def runOnce(
@@ -77,6 +81,22 @@ object Incremental {
     * [[Sinks.copyUpsertPostgres]] (the reference's actual target,
     * exercised in PostgresDialectSpec), or a test double. The sink
     * returns rows actually inserted (cursor.rowcount semantics).
+    *
+    * The deduplicated batch is materialized once with
+    * `localCheckpoint`, at the partition count AQE picks from its size:
+    * a 2,000-row batch lands in one partition. A `cache()` would keep
+    * `spark.sql.shuffle.partitions` partitions however few rows they
+    * hold, because AQE may not change the output partitioning of a plan
+    * being cached (`spark.sql.optimizer.canChangeCachedPlanOutputPartitioning`
+    * is off by default), and every sink task and parquet file downstream
+    * would inherit that width. One job counts the batch and takes its
+    * max timestamp, materializing it on the way.
+    *
+    * Recovery trade-off: a lost cache block is rebuilt from lineage, a
+    * lost local-checkpoint block is not, so losing an executor fails
+    * the run. That is safe here: the run fails before the watermark
+    * advances, so the rerun re-fetches the same rows and the keyed sink
+    * skips the ones already committed.
     */
   def runOnceTo(
       spark: SparkSession,
@@ -87,23 +107,21 @@ object Incremental {
       defaultWatermarkUs: Long,
       sink: DataFrame => Long,
       transform: DataFrame => DataFrame = identity): Option[RunResult] = {
-    if (!running.compareAndSet(false, true)) return None
+    val flight = Paths.get(statePath).toAbsolutePath.normalize.toString
+    if (!running.add(flight)) return None
     try {
       val wm = readWatermark(statePath, defaultWatermarkUs)
       val fresh = transform(source.filter(col(tsCol) > lit(wm)))
       val batch = EventOps
         .dedupFirstWrite(fresh, keys, tsCol, keys.head)
-        .cache()
-      val fetched = batch.count()
-      val inserted = sink(batch)
+        .localCheckpoint(eager = false)
+      val stats = batch.agg(count(lit(1)), max(col(tsCol))).head()
+      val inserted = try sink(batch) finally Sinks.release(batch)
       // Advance only forward, only after the sink write committed —
       // mirrors flask_server.py:204-207 ordering.
-      val maxRow = batch.agg(max(col(tsCol))).head()
-      batch.unpersist()
-      val newWm = if (fetched == 0 || maxRow.isNullAt(0)) wm
-                  else math.max(wm, maxRow.getLong(0))
+      val newWm = if (stats.isNullAt(1)) wm else math.max(wm, stats.getLong(1))
       if (newWm > wm) writeWatermark(statePath, newWm)
-      Some(RunResult(fetched, inserted, newWm))
-    } finally running.set(false)
+      Some(RunResult(stats.getLong(0), inserted, newWm))
+    } finally running.remove(flight)
   }
 }

@@ -1,6 +1,7 @@
 package graft.etl
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.types.StructType
 import graft.ops.EventOps
 
@@ -195,10 +196,11 @@ object Sinks {
 
   /** Small-file compaction: rewrite a directory into `numFiles`
     * right-sized parquet files. Long-running append pipelines (the
-    * incremental upsert sink) accumulate one file per batch per
-    * partition; at scale the fix is a periodic compaction pass sized
-    * so each file is ~128MB-1GB. Writes to a temp dir then swaps, so a
-    * crash mid-compact never loses the sink.
+    * incremental upsert sink) accumulate a file or two per run, one per
+    * data-sized partition of the run's batch (see [[upsertAppend]]);
+    * at scale the fix is a periodic compaction pass sized so each file
+    * is ~128MB-1GB. Writes to a temp dir then swaps, so a crash
+    * mid-compact never loses the sink.
     */
   def compact(spark: SparkSession, dir: String, numFiles: Int): Unit = {
     import java.nio.file.{Files, Paths}
@@ -344,8 +346,8 @@ object Sinks {
     // two concurrent loads into the same target (a streaming drain plus
     // an ad-hoc batch) DROP/clobber each other's staging mid-COPY and
     // silently lose rows. Callers here are serialized (Incremental's
-    // CAS guard, AvailableNow triggers), but the sink must not depend
-    // on that.
+    // single-flight guard, AvailableNow triggers), but the sink must not
+    // depend on that.
     val staging = s"${table}_stg_${java.util.UUID.randomUUID().toString.take(13).replace("-", "")}"
     // PostgreSQL truncates identifiers to 63 bytes with only a NOTICE —
     // a long target name would silently truncate the unique suffix away
@@ -411,20 +413,39 @@ object Sinks {
   /** S6 — idempotent upsert: append only rows whose natural key is not
     * already in the sink. Returns the number of rows appended (the
     * reference's `cursor.rowcount`, `/root/reference/flask_server.py:197`).
+    *
+    * The anti-join result is materialized before the append, since
+    * appending while the lazy plan still scans the sink dir would race
+    * with itself. It is materialized with `localCheckpoint`, at the
+    * partition count AQE picks from its size, so a run appends a file or
+    * two; a `cache()` would keep `spark.sql.shuffle.partitions`
+    * partitions (see [[Incremental.runOnceTo]]) and append up to one file
+    * per partition. A lost checkpoint block fails the upsert instead of
+    * being recomputed; the caller's watermark has not moved then, and a
+    * rerun skips the keys already appended.
     */
   def upsertAppend(spark: SparkSession, incoming: DataFrame, dir: String, keys: Seq[String]): Long = {
     val exists = new java.io.File(dir).exists()
     val fresh =
       if (!exists) incoming
       else EventOps.newKeysOnly(incoming, spark.read.parquet(dir), keys)
-    // Materialize the anti-join BEFORE appending: appending while the
-    // lazy plan still scans the sink dir would race with itself.
-    val staged = fresh.cache()
-    val n = staged.count()
-    if (n > 0) staged.write.mode("append").parquet(dir)
-    staged.unpersist()
-    n
+    val staged = fresh.localCheckpoint(eager = false)
+    try {
+      val n = staged.count()
+      if (n > 0) staged.write.mode("append").parquet(dir)
+      n
+    } finally release(staged)
   }
+
+  /** Drops the blocks of a frame made by `localCheckpoint` once its last
+    * reader is done, as `unpersist` does for a cached frame; otherwise
+    * they stay until the driver garbage-collects the frame.
+    */
+  private[etl] def release(checkpointed: DataFrame): Unit =
+    checkpointed.queryExecution.logical.foreach {
+      case r: LogicalRDD => r.rdd.unpersist(blocking = false)
+      case _ =>
+    }
 
   /** Z-order (Morton-curve) layout write: cluster rows so each output
     * file covers a small rectangle of the (c1, c2) value space instead

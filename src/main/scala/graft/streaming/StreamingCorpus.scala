@@ -43,12 +43,15 @@ object StreamingCorpus {
       .withColumn("__event_time", timestamp_micros(col(tsMicrosCol)))
       .withWatermark("__event_time", lateness)
       .dropDuplicatesWithinWatermark("text_hash")
+    val aqe = StreamingIncremental.aqeOf(spark)
     Corpus.gopherPass(src)
       .drop("__event_time")
       .writeStream
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
-        Sinks.upsertAppend(batch.sparkSession, batch, sinkDir, Seq("text_hash"))
+        StreamingIncremental.withAqe(batch, aqe) {
+          Sinks.upsertAppend(batch.sparkSession, batch, sinkDir, Seq("text_hash"))
+        }
         ()
       }
       .trigger(Trigger.AvailableNow())

@@ -32,6 +32,26 @@ import graft.ops.EventOps
   */
 object StreamingIncremental {
 
+  private val AqeKey = "spark.sql.adaptive.enabled"
+
+  /** Runs a `foreachBatch` body with `aqe` as the micro-batch session's
+    * AQE setting. Structured Streaming turns AQE off in the session of a
+    * stateful query, so that the state store keeps its partitioning, and
+    * that reaches the `foreachBatch` body too, though the micro-batch
+    * there is an already planned, stateless frame. Without AQE the sink
+    * materializes the batch at `spark.sql.shuffle.partitions` and appends
+    * up to one file per partition; with the starting session's setting
+    * it appends a data-sized count (see [[Sinks.upsertAppend]]).
+    */
+  private[streaming] def withAqe[T](batch: DataFrame, aqe: String)(body: => T): T = {
+    val conf = batch.sparkSession.conf
+    val prior = conf.get(AqeKey)
+    conf.set(AqeKey, aqe)
+    try body finally conf.set(AqeKey, prior)
+  }
+
+  private[streaming] def aqeOf(spark: SparkSession): String = spark.conf.get(AqeKey)
+
   /** Start one drain-available run.
     *
     * @param transform extraction step applied per micro-batch (N1 etc.)
@@ -53,17 +73,20 @@ object StreamingIncremental {
       .withColumn("__event_time", timestamp_micros(col(tsMicrosCol)))
       .withWatermark("__event_time", lateness)
       .dropDuplicatesWithinWatermark(keys)
+    val aqe = aqeOf(spark)
     transform(src)
       .drop("__event_time")
       .writeStream
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        // In-batch dedup is deterministic first-write-wins; the keyed
-        // anti-join append makes re-delivered batches no-ops, so the
-        // end-to-end effect is exactly-once (at-least-once delivery ×
-        // idempotent sink), mirroring flask_server.py:193.
-        val deduped = EventOps.dedupFirstWrite(batch, keys, tsMicrosCol, keys.head)
-        Sinks.upsertAppend(batch.sparkSession, deduped, sinkDir, keys)
+        withAqe(batch, aqe) {
+          // In-batch dedup is deterministic first-write-wins; the keyed
+          // anti-join append makes re-delivered batches no-ops, so the
+          // end-to-end effect is exactly-once (at-least-once delivery ×
+          // idempotent sink), mirroring flask_server.py:193.
+          val deduped = EventOps.dedupFirstWrite(batch, keys, tsMicrosCol, keys.head)
+          Sinks.upsertAppend(batch.sparkSession, deduped, sinkDir, keys)
+        }
         ()
       }
       .trigger(Trigger.AvailableNow())
@@ -96,13 +119,16 @@ object StreamingIncremental {
       .withColumn("__event_time", timestamp_micros(col(tsMicrosCol)))
       .withWatermark("__event_time", lateness)
       .dropDuplicatesWithinWatermark(keys)
+    val aqe = aqeOf(spark)
     transform(src)
       .drop("__event_time")
       .writeStream
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        val deduped = EventOps.dedupFirstWrite(batch, keys, tsMicrosCol, keys.head)
-        Sinks.jdbcUpsert(deduped, url, table, keys, dialect)
+        withAqe(batch, aqe) {
+          val deduped = EventOps.dedupFirstWrite(batch, keys, tsMicrosCol, keys.head)
+          Sinks.jdbcUpsert(deduped, url, table, keys, dialect)
+        }
         ()
       }
       .trigger(Trigger.AvailableNow())
@@ -135,13 +161,16 @@ object StreamingIncremental {
       .withColumn("__event_time", timestamp_micros(col(tsMicrosCol)))
       .withWatermark("__event_time", lateness)
       .dropDuplicatesWithinWatermark(keys)
+    val aqe = aqeOf(spark)
     transform(src)
       .drop("__event_time")
       .writeStream
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        val deduped = EventOps.dedupFirstWrite(batch, keys, tsMicrosCol, keys.head)
-        Sinks.copyUpsertPostgres(deduped, psqlArgs, table, keys)
+        withAqe(batch, aqe) {
+          val deduped = EventOps.dedupFirstWrite(batch, keys, tsMicrosCol, keys.head)
+          Sinks.copyUpsertPostgres(deduped, psqlArgs, table, keys)
+        }
         ()
       }
       .trigger(Trigger.AvailableNow())

@@ -1,8 +1,12 @@
 package graft
 
 import java.nio.file.Files
+import java.util.concurrent.{CountDownLatch, TimeUnit}
+import scala.concurrent.{Await, Future}
+import scala.concurrent.ExecutionContext.Implicits.global
+import scala.concurrent.duration._
 import org.scalatest.funsuite.AnyFunSuite
-import graft.etl.Incremental
+import graft.etl.{Incremental, Sinks}
 
 /** T1/T2 — the watermark pipeline: advances only forward and only on
   * success; incremental runs over a split stream equal one full run
@@ -79,5 +83,104 @@ class IncrementalSpec extends AnyFunSuite {
           org.apache.spark.sql.functions.expr("assert_true(ts_us < 0)").isNull))
     }
     assert(Incremental.readWatermark(state, 0L) === 250L)
+  }
+
+  private def partFiles(dir: String): Int =
+    Option(new java.io.File(dir).listFiles()).map(_.count(_.getName.startsWith("part-"))).getOrElse(0)
+
+  private def sinkRows(dir: String): Seq[String] =
+    spark.read.parquet(dir).collect().map(_.toString).sorted.toSeq
+
+  // 40 distinct keys plus replays of the first 8
+  private val wide = {
+    val base = (1 to 40).map(i => (i % 5L, Seq("click", "view", "buy")(i % 3), 10L * i))
+    (base ++ base.take(8)).toDF("user_id", "event_type", "ts_us")
+  }
+
+  /** Two runs over `wide` (its first half, then all of it) into a new
+    * sink: the run results, the part files each run appended, the sink.
+    */
+  private def twoRuns(): (Seq[Incremental.RunResult], Seq[Int], Seq[String]) = {
+    val base = tmp()
+    val (state, sink) = (s"$base/wm.txt", s"$base/sink")
+    val runs = Seq(wide.filter($"ts_us" <= 200L), wide).map { src =>
+      val before = partFiles(sink)
+      val r = Incremental.runOnce(spark, src, "ts_us", keys, state, sink, 0L).get
+      (r, partFiles(sink) - before)
+    }
+    (runs.map(_._1), runs.map(_._2), sinkRows(sink))
+  }
+
+  test("at the shipped 200 shuffle partitions a run appends a data-sized file count") {
+    val narrow = twoRuns()
+    val key = "spark.sql.shuffle.partitions"
+    val prior = spark.conf.get(key)
+    spark.conf.set(key, "200")
+    val shipped = try twoRuns() finally spark.conf.set(key, prior)
+    val cap = spark.sparkContext.defaultParallelism
+    shipped._2.foreach(n => assert(n <= cap, s"a run appended $n part files, over $cap"))
+    assert(shipped._1 === narrow._1)
+    assert(shipped._3 === narrow._3)
+  }
+
+  test("a crash after the sink commit keeps the watermark; the rerun inserts nothing") {
+    val base = tmp()
+    val cleanSink = s"$base/clean_sink"
+    val clean = Incremental.runOnce(spark, stream, "ts_us", keys, s"$base/clean_wm.txt",
+      cleanSink, 0L).get
+    val (state, sink) = (s"$base/wm.txt", s"$base/sink")
+    Incremental.writeWatermark(state, 0L)
+    intercept[IllegalStateException] {
+      Incremental.runOnceTo(spark, stream, "ts_us", keys, state, 0L, batch => {
+        Sinks.upsertAppend(spark, batch, sink, keys)
+        throw new IllegalStateException("crash after the sink commit")
+      })
+    }
+    assert(Incremental.readWatermark(state, -1L) === 0L)
+    val rerun = Incremental.runOnce(spark, stream, "ts_us", keys, state, sink, 0L).get
+    assert(rerun.rowsInserted === 0L)
+    assert(rerun.newWatermarkUs === clean.newWatermarkUs)
+    assert(sinkRows(sink) === sinkRows(cleanSink))
+  }
+
+  /** Starts a run on `state` whose sink holds until `release` opens;
+    * returns once that run is inside its sink.
+    */
+  private def heldRun(state: String, release: CountDownLatch): Future[Option[Incremental.RunResult]] = {
+    val entered = new CountDownLatch(1)
+    val run = Future {
+      Incremental.runOnceTo(spark, stream, "ts_us", keys, state, 0L, _ => {
+        entered.countDown()
+        assert(release.await(120, TimeUnit.SECONDS))
+        0L
+      })
+    }
+    assert(entered.await(120, TimeUnit.SECONDS), "held run never reached its sink")
+    run
+  }
+
+  test("single-flight: a second run on the same state path is refused") {
+    val base = tmp()
+    val release = new CountDownLatch(1)
+    val held = heldRun(s"$base/wm.txt", release)
+    try {
+      // the same path, spelled differently
+      val second = Incremental.runOnce(spark, stream, "ts_us", keys, s"$base/./wm.txt",
+        s"$base/sink", 0L)
+      assert(second === None)
+    } finally release.countDown()
+    assert(Await.result(held, 2.minutes).isDefined)
+    assert(Incremental.runOnce(spark, stream, "ts_us", keys, s"$base/wm.txt",
+      s"$base/sink", 0L).isDefined, "the guard is released when a run ends")
+  }
+
+  test("single-flight: runs on different state paths proceed concurrently") {
+    val base = tmp()
+    val release = new CountDownLatch(1)
+    val held = heldRun(s"$base/a_wm.txt", release)
+    val other = try Incremental.runOnce(spark, stream, "ts_us", keys, s"$base/b_wm.txt",
+      s"$base/b_sink", 0L) finally release.countDown()
+    assert(other.map(_.rowsInserted) === Some(6L))
+    assert(Await.result(held, 2.minutes).isDefined)
   }
 }

@@ -60,4 +60,21 @@ class StreamingSpec extends AnyFunSuite {
     q3.awaitTermination()
     assert(spark.read.parquet(sink).collect().map(_.toSeq).toSet === after2)
   }
+
+  test("a micro-batch at the shipped 200 shuffle partitions appends a data-sized file count") {
+    val base = Files.createTempDirectory("graft-stream-wide").toString
+    val (src, sink, ckpt) = (s"$base/src", s"$base/sink", s"$base/ckpt")
+    val t0 = System.currentTimeMillis() * 1000L
+    (1 to 40).map(i => (i % 5L, Seq("click", "view", "buy")(i % 3), t0 + i))
+      .toDF("user_id", "event_type", "ts_us").coalesce(1).write.parquet(src)
+    val key = "spark.sql.shuffle.partitions"
+    val prior = spark.conf.get(key)
+    spark.conf.set(key, "200")
+    try StreamingIncremental.start(spark, src, schema, "ts_us", keys, ckpt, sink).awaitTermination()
+    finally spark.conf.set(key, prior)
+    val files = new java.io.File(sink).listFiles().count(_.getName.startsWith("part-"))
+    val cap = spark.sparkContext.defaultParallelism
+    assert(files <= cap, s"the micro-batch appended $files part files, over $cap")
+    assert(spark.read.parquet(sink).count() === 40L)
+  }
 }
