@@ -614,7 +614,7 @@ private[graft] object EntrySupport {
     * — each query's vector plus its nProbe best cells under the shared
     * corpus-versioned k-means quantizer ([[pqModel]]). The probe lists
     * are computed ONCE by the operator's own model-build path (so the
-    * kernel/fallback probe arithmetic stays in one place) and replayed
+    * probe arithmetic stays in one place) and replayed
     * on every later construct. Keyed by dir + params; the centroids
     * are a pure function of dir through the fingerprinted pq store.
     */

@@ -27,17 +27,6 @@ object Profile {
     }
 
     time("corpus count")(corpus.count())
-    // native codegen dot vs interpreted HOF dot on 1M 64-dim pairs
-    val vecs = spark.range(1000000).select(
-      expr("transform(sequence(0, 63), i -> cast(id % 97 + i as double))").as("a"),
-      expr("transform(sequence(0, 63), i -> cast(id % 89 + i as double))").as("b"))
-      .cache()
-    vecs.count()
-    time("dot HOF (1M x 64d)")(
-      vecs.select(sum(graft.ops.Sim.dot(col("a"), col("b")))).collect())
-    time("dot native (1M x 64d)")(
-      vecs.select(sum(call_function("graft_dot", col("a"), col("b")))).collect())
-    vecs.unpersist()
     (1 to 2).foreach { i =>
       time(s"ngram run $i")(println("  pairs=" +
         graft.ops.Dedup.ngramJaccardPairs(corpus, 0.7).count()))

@@ -77,12 +77,12 @@ object Tables {
   )
 
   /** STATIC configs — only settable on a session builder; setting them
-    * at runtime throws. Queries therefore only use features behind
-    * these via capability checks (e.g. Sim.dotNative falls back to the
-    * HOF dot product when graft_dot isn't registered).
+    * at runtime throws. They tune cost only: a session built without
+    * them (say, an external one handed to SparkEntry.ensure) runs the
+    * same plans, the graft.plans kernels included, since those are
+    * built as Columns rather than resolved by name.
     */
   def builderConfigs: Seq[(String, String)] = sessionConfigs ++ Seq(
-    "spark.sql.extensions" -> "graft.plans.GraftExtensions",
     // The default codegen class cache holds 100 entries; a workload of
     // 136 distinct queries x several codegen units each thrashes it,
     // so every execution re-compiles Janino even in steady state. A

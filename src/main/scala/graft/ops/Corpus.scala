@@ -3,6 +3,8 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.plans.{GopherStats, SegHashes}
+
 /** Training-corpus assembly operators: the steps between "deduped,
   * scored documents" and "tensors on a trainer" — deterministic
   * shuffling/sharding, sequence packing, and PII redaction. All are
@@ -285,30 +287,16 @@ object Corpus {
     // is read by BOTH the df branch and the join probe side, and the
     // two subtrees are the same object, so ReuseExchange shares the
     // shuffle and the tokenize+explode+hash map work runs once.
-    // The segment keys come from the compiled graft_seghash kernel when
-    // the session has it (plans/SegHashes.scala — one byte-scan pass
-    // per doc, bit-identical hashes to the declarative chain, which
-    // otherwise allocates a token array + per-segment slice/concat/hash
-    // and was q_boilerplate's measured execute cost); the declarative
-    // form remains the extension-less fallback, pinned equal by
-    // SegHashesSpec.
-    val native = docs.sparkSession.catalog.functionExists("graft_seghash")
-    val segRows =
-      if (native)
-        docs.select(col("doc_id"),
-          explode(call_function("graft_seghash", col("text"), lit(segLen))).as("seg"))
-      else docs
-        .select(col("doc_id"), Dedup.tokens(col("text")).as("toks"))
-        // guard BEFORE sequence(): for size < segLen the last index is
-        // -1 and sequence(0, -1) would generate a DESCENDING range, not
-        // an empty one; sub-segLen docs simply have no segments
-        .filter(size(col("toks")) >= segLen)
-        .select(col("doc_id"), col("toks"),
-          explode(expr(s"sequence(0, size(toks) div $segLen - 1)")).as("i"))
-        .select(col("doc_id"),
-          xxhash64(concat_ws(" ",
-            slice(col("toks"), col("i") * segLen + 1, lit(segLen)))).as("seg"))
-    val segs = segRows.repartition(col("seg"))
+    // The segment keys come from the compiled graft_seghash kernel
+    // (plans/SegHashes.scala — one byte-scan pass per doc, hashes
+    // bit-identical to the declarative xxhash64(concat_ws(slice(...)))
+    // chain that SegHashesSpec keeps as reference; that chain allocates
+    // a token array + per-segment slice/concat/hash and was
+    // q_boilerplate's measured execute cost).
+    val segs = docs
+      .select(col("doc_id"),
+        explode(SegHashes.column(col("text"), lit(segLen))).as("seg"))
+      .repartition(col("seg"))
     // hash(seg) clustering satisfies BOTH the (doc_id, seg) distinct
     // (subset key) and the per-seg count on top of it. SHUFFLE_HASH,
     // not broadcast: a broadcast build would re-run the scan+explode
@@ -345,45 +333,20 @@ object Corpus {
     * row-local expressions; joining a map-side-derivable column would
     * be a gratuitous shuffle at any scale).
     */
-  private[graft] def withGopher(docs: DataFrame): DataFrame = {
-    val native = docs.sparkSession.catalog.functionExists("graft_gopher")
-    val withCounts =
-      if (native)
-        // one compiled pass per document (plans/GopherStats.scala) —
-        // the declarative form below allocates three arrays and runs
-        // four interpreted HOF lambdas per row, which dominated the
-        // composed pipeline's profile. Raw counts only; every
-        // oracle-visible fraction + rounding is shared SQL below.
-        docs.withColumn("__g", call_function("graft_gopher", col("text")))
-          .withColumn("n_words", col("__g.n_words"))
-          .withColumn("__nonspace", col("__g.n_nonspace"))
-          .withColumn("__n_bg", col("__g.n_bigrams"))
-          .withColumn("__n_bg_d", col("__g.n_bigrams_distinct"))
-          .withColumn("__n_digit", col("__g.n_digits"))
-          .withColumn("__n_char", col("__g.n_chars"))
-          .drop("__g")
-      else {
-        // HOF fallback for sessions without GraftExtensions —
-        // law-equal to the kernel (GopherStatsSpec)
-        val d = docs
-          .withColumn("toks", Dedup.tokens(col("text")))
-          .withColumn("n_words", size(col("toks")).cast("long"))
-        val bgLen = greatest(col("n_words").cast("int") - 1, lit(0))
-        val bigrams = zip_with(
-          slice(col("toks"), lit(1), bgLen),
-          slice(col("toks"), lit(2), bgLen),
-          (a, b) => concat_ws(" ", a, b))
-        d.withColumn("bg", bigrams)
-          .withColumn("__nonspace", length(array_join(col("toks"), "")).cast("long"))
-          .withColumn("__n_bg", size(col("bg")).cast("long"))
-          .withColumn("__n_bg_d", size(array_distinct(col("bg"))).cast("long"))
-          .withColumn("__n_digit",
-            (length(col("text")) -
-              length(regexp_replace(col("text"), "[0-9]", ""))).cast("long"))
-          .withColumn("__n_char", length(col("text")).cast("long"))
-          .drop("toks", "bg")
-      }
-    withCounts
+  private[graft] def withGopher(docs: DataFrame): DataFrame =
+    // one compiled pass per document (plans/GopherStats.scala) — the
+    // declarative HOF form (GopherStatsSpec's reference) allocates
+    // three arrays and runs four interpreted lambdas per row, which
+    // dominated the composed pipeline's profile. Raw counts only;
+    // every oracle-visible fraction + rounding is SQL below.
+    docs.withColumn("__g", GopherStats.column(col("text")))
+      .withColumn("n_words", col("__g.n_words"))
+      .withColumn("__nonspace", col("__g.n_nonspace"))
+      .withColumn("__n_bg", col("__g.n_bigrams"))
+      .withColumn("__n_bg_d", col("__g.n_bigrams_distinct"))
+      .withColumn("__n_digit", col("__g.n_digits"))
+      .withColumn("__n_char", col("__g.n_chars"))
+      .drop("__g")
       .withColumn("mean_wlen",
         when(col("n_words") > 0,
           round(col("__nonspace").cast("double") / col("n_words"), 4))
@@ -401,7 +364,6 @@ object Corpus {
           col("mean_wlen").between(2.0, 12.0) &&
           col("dup_bigram_frac") < 0.3, 1L).otherwise(0L))
       .drop("__nonspace", "__n_bg", "__n_bg_d", "__n_digit", "__n_char")
-  }
 
   /** Quality gate: `docs` minus every document failing the Gopher
     * rules — original columns preserved, signals dropped. Map-side.
@@ -859,6 +821,16 @@ object Corpus {
     * the standing corpus never appears in the plan at all, so the run
     * cost is batch-proportional by construction.
     */
+  /** How the incremental cycle consults its standing indexes: a
+    * broadcast of the whole index ([[BroadcastProbe]]) or a semi-join
+    * reduction against a pre-bucketed index ([[BucketedProbe]]).
+    * [[probeStage]] is the one place that turns a strategy into the
+    * gated batch and the [[ProbeFn]] the stages call.
+    */
+  private sealed trait IndexProbe
+  private case object BroadcastProbe extends IndexProbe
+  private case object BucketedProbe extends IndexProbe
+
   /** How a batch frame consults a standing one-column index:
     * `(batch, idx, joinKey, flagCol, candidates)` → batch plus
     * `flagCol` (1L where the key exists in the index, else NULL).
@@ -871,7 +843,7 @@ object Corpus {
     * plan). The verdict logic upstream/downstream is identical under
     * every strategy — only the physical probe differs.
     */
-  private type IndexProbe = (DataFrame, DataFrame, String, String, DataFrame) => DataFrame
+  private type ProbeFn = (DataFrame, DataFrame, String, String, DataFrame) => DataFrame
 
   /** The distinct-value-sized index builds once and broadcasts; the
     * whole batch left-joins map-side (NULL keys never shuffle because
@@ -880,7 +852,7 @@ object Corpus {
     * use [[bucketedIndexProbe]]. Candidates are unused: the broadcast
     * carries the whole index, so its plan has no hit-set subtree.
     */
-  private val broadcastIndexProbe: IndexProbe = (batch, idx, key, flag, _) =>
+  private val broadcastIndexProbe: ProbeFn = (batch, idx, key, flag, _) =>
     batch.join(broadcast(idx.withColumn(flag, lit(1L))), Seq(key), "left")
 
   /** The broadcast-budget fallback (VERDICT r16 #1) — a SEMI-JOIN
@@ -905,7 +877,7 @@ object Corpus {
     * every consumer guards the flag with the predicate that defined
     * its candidates (or a stricter one).
     */
-  private val bucketedIndexProbe: IndexProbe = (batch, idx, key, flag, candidates) => {
+  private val bucketedIndexProbe: ProbeFn = (batch, idx, key, flag, candidates) => {
     // SHUFFLE_HASH semi with the CANDIDATE side as the build (a
     // LeftSemi can only build right, so the INDEX takes the left/
     // streamed seat): the hash map is batch-bounded — memory-safe at
@@ -946,7 +918,7 @@ object Corpus {
     * exactly like the USING-join it replaces).
     */
   private def fusedBucketedProbes(canonIdx: DataFrame, textIdx: DataFrame,
-                                  bg: DataFrame): IndexProbe = {
+                                  bg: DataFrame): ProbeFn = {
     val candC = bg.filter(col("passes") === 1L && col("canonical").isNotNull)
       .select(col("canonical"))
     val candT = bg.filter(col("passes") === 1L)
@@ -974,14 +946,22 @@ object Corpus {
     */
   private def incBatchCanonStage(canonIdx: DataFrame, batchPages: DataFrame,
                                  linkDensityPct: Int,
-                                 probe: IndexProbe = broadcastIndexProbe): DataFrame =
-    incCanonStageFromGated(canonIdx,
-      incGatedForProbe(batchPages, linkDensityPct, probe), probe)
+                                 probe: IndexProbe = BroadcastProbe): DataFrame = {
+    val (bg, p) = probeStage(probe, batchPages, linkDensityPct, fuseWith = None)
+    incCanonStageFromGated(canonIdx, bg, p)
+  }
 
-  /** [[incGated]], MATERIALIZED when the probe strategy needs to read
-    * it from more than one plan subtree. Under the BUCKETED probe,
-    * each hit-set build is a SEPARATE subtree over the batch (the
-    * broadcast probe is one linear join — no duplication), so without
+  /** A probe strategy's physical form: the gated batch and the probe
+    * function the stages call. `fuseWith` = the (canon, text) indexes
+    * when the caller probes both, so the bucketed strategy can build
+    * both hit sets at once ([[fusedBucketedProbes]]; the broadcast
+    * strategy is a plain linear join per index and needs no fusion).
+    *
+    * The gated batch is [[incGated]], MATERIALIZED when the probe
+    * strategy needs to read it from more than one plan subtree. Under
+    * the BUCKETED probe, each hit-set build is a SEPARATE subtree over
+    * the batch (the broadcast probe is one linear join — no
+    * duplication), so without
     * materialization the regex-heavy gate extraction re-executes once
     * per probe subtree: measured r17 at sf0.1, the bucketed
     * store/delta/cycle queries ran 1.01-1.51 s vs their broadcast
@@ -994,16 +974,20 @@ object Corpus {
     * cache is safe at any standing-index size — which is the bucketed
     * regime's premise.
     */
-  private def incGatedForProbe(batchPages: DataFrame, linkDensityPct: Int,
-                               probe: IndexProbe): DataFrame = {
-    val gatedRaw = incGated(batchPages, linkDensityPct)
-    if (probe eq bucketedIndexProbe) graft.CacheScope.cached(gatedRaw)
-    else gatedRaw
-  }
+  private def probeStage(probe: IndexProbe, batchPages: DataFrame,
+                         linkDensityPct: Int,
+                         fuseWith: Option[(DataFrame, DataFrame)]): (DataFrame, ProbeFn) =
+    probe match {
+      case BroadcastProbe => (incGated(batchPages, linkDensityPct), broadcastIndexProbe)
+      case BucketedProbe =>
+        val bg = graft.CacheScope.cached(incGated(batchPages, linkDensityPct))
+        (bg, fuseWith.fold(bucketedIndexProbe) { case (canonIdx, textIdx) =>
+          fusedBucketedProbes(canonIdx, textIdx, bg) })
+    }
 
   /** The canonical stage over an already-gated batch frame `bg`. */
   private def incCanonStageFromGated(canonIdx: DataFrame, bg: DataFrame,
-                                     probe: IndexProbe): DataFrame = {
+                                     probe: ProbeFn): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val bk1 = when(col("passes") === 1L && col("canonical").isNotNull,
         concat(lit("c:"), col("canonical")))
@@ -1089,7 +1073,7 @@ object Corpus {
                                   batchPages: DataFrame,
                                   linkDensityPct: Int = 30): DataFrame = {
     val b1 = incBatchCanonStage(canonIdx, batchPages, linkDensityPct,
-      bucketedIndexProbe)
+      BucketedProbe)
     b1
       .select(explode(array(
         when(col("passes") === 1L && col("canonical").isNotNull,
@@ -1174,7 +1158,7 @@ object Corpus {
                              batchPages: DataFrame,
                              linkDensityPct: Int = 30): DataFrame =
     incrementFromWith(canonIdx, textIdx, batchPages, linkDensityPct,
-      broadcastIndexProbe)
+      BroadcastProbe)
 
   /** The WHOLE nightly cycle as ONE run (VERDICT r16 #2): per-page
     * stage verdicts ([[webCorpusIncrementFrom]]'s contract, rows with
@@ -1208,7 +1192,7 @@ object Corpus {
                             batchPages: DataFrame,
                             linkDensityPct: Int = 30): DataFrame =
     nightlyCycleWith(canonIdx, textIdx, batchPages, linkDensityPct,
-      broadcastIndexProbe)
+      BroadcastProbe)
 
   /** [[webCorpusNightlyCycle]] over PRE-BUCKETED standing indexes —
     * the whole composed cycle at broadcast-breaking scale: the two
@@ -1222,7 +1206,7 @@ object Corpus {
                                     batchPages: DataFrame,
                                     linkDensityPct: Int = 30): DataFrame =
     nightlyCycleWith(canonIdx, textIdx, batchPages, linkDensityPct,
-      bucketedIndexProbe)
+      BucketedProbe)
 
   private def nightlyCycleWith(canonIdx: DataFrame, textIdx: DataFrame,
                                batchPages: DataFrame, linkDensityPct: Int,
@@ -1287,7 +1271,7 @@ object Corpus {
                                      batchPages: DataFrame,
                                      linkDensityPct: Int = 30): DataFrame =
     incrementFromWith(canonIdx, textIdx, batchPages, linkDensityPct,
-      bucketedIndexProbe)
+      BucketedProbe)
 
   private def incrementFromWith(canonIdx: DataFrame, textIdx: DataFrame,
                                 batchPages: DataFrame, linkDensityPct: Int,
@@ -1307,12 +1291,10 @@ object Corpus {
                              batchPages: DataFrame, linkDensityPct: Int,
                              probe: IndexProbe): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val bg = incGatedForProbe(batchPages, linkDensityPct, probe)
     // under the bucketed strategy both probes read ONE fused hit-set
-    // broadcast (r18) — the broadcast strategy stays a plain linear
-    // join per index, which needs no fusion (no hit-set subtree)
-    val p = if (probe eq bucketedIndexProbe)
-      fusedBucketedProbes(canonIdx, textIdx, bg) else probe
+    // broadcast (r18)
+    val (bg, p) = probeStage(probe, batchPages, linkDensityPct,
+      fuseWith = Some((canonIdx, textIdx)))
     val b1 = incCanonStageFromGated(canonIdx, bg, p)
     // the in-batch text race keys on md5(text) — the SAME equality
     // relation the standing textIdx probe and the streaming twin

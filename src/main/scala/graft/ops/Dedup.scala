@@ -749,11 +749,10 @@ object Dedup {
     * this same pairwise scoring within buckets only.
     */
   def embeddingNearDupPairs(embeddings: DataFrame, cap: Int, n: Int): DataFrame = {
-    val dotF = Sim.dotNative(embeddings.sparkSession) _
     val e = embeddings
       .filter(col("vec_id") < cap)
       .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
-      .withColumn("nrm", sqrt(dotF(col("v"), col("v"))))
+      .withColumn("nrm", Sim.norm(col("v")))
     val a = e.select(col("vec_id").as("a"), col("v").as("av"), col("nrm").as("an"))
       // the capped block arrives as 1-2 parquet splits; spread the
       // pairwise scoring so each task carries ≥ ~50k pair-scorings
@@ -766,7 +765,7 @@ object Dedup {
     a.join(broadcast(b), col("a") < col("b"))
       .select(
         col("a"), col("b"),
-        round(dotF(col("av"), col("bv")) / (col("an") * col("bn")), 4).as("cos_r"))
+        round(Sim.dot(col("av"), col("bv")) / (col("an") * col("bn")), 4).as("cos_r"))
       .orderBy(col("cos_r").desc, col("a"), col("b"))
       .limit(n)
   }

@@ -388,16 +388,15 @@ object Hnsw {
                        nQueries: Int, nProbe: Int): Array[(Long, Array[Double], Array[Int])] = {
     val spark = embeddings.sparkSession
     import spark.implicits._
-    val dotF = Sim.dotNative(spark) _
     embeddings
       .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
-      .withColumn("nrm", sqrt(dotF(col("v"), col("v"))))
+      .withColumn("nrm", Sim.norm(col("v")))
       .withColumn("cell",
-        Sim.argmaxCell(dotF, cents)(col("v"), col("nrm")).cast("int"))
+        Sim.argmaxCell(cents)(col("v"), col("nrm")).cast("int"))
       .filter(col("vec_id") < nQueries)
       .withColumn("probe",
         if (nProbe <= 1) array(col("cell"))
-        else Sim.probeCells(dotF, cents, nProbe)(col("v"), col("nrm")))
+        else Sim.probeCells(cents, nProbe)(col("v"), col("nrm")))
       .select(col("vec_id"), col("v"), col("probe").cast("array<int>"))
       .as[(Long, Array[Double], Array[Int])]
       .collect().sortBy(_._1)
@@ -430,7 +429,6 @@ object Hnsw {
     import org.apache.spark.sql.expressions.Window
     val spark = standing.sparkSession
     import spark.implicits._
-    val dotF = Sim.dotNative(spark) _
     val sealedTop = hnswTopKRouted(standing, cents, nQueries, k, nProbe,
         m, efConstruction, efSearch, queryModel)
       .select(col("q_id"), col("c_id"), col("cos_r"))
@@ -438,12 +436,12 @@ object Hnsw {
       routedQueryModel(standing, cents, nQueries, nProbe))
     val qdf = queries.toSeq.toDF("q_id", "qv", "probe")
       .select(col("q_id"), col("qv"), explode(col("probe")).as("cell"))
-      .withColumn("qn", sqrt(dotF(col("qv"), col("qv"))))
+      .withColumn("qn", Sim.norm(col("qv")))
     val growing = Sim.ivfAssign(batch, cents)
       .join(broadcast(qdf), Seq("cell"))
       .filter(col("vec_id") =!= col("q_id"))
       .select(col("q_id"), col("vec_id").as("c_id"),
-        round(dotF(col("qv"), col("v")) / (col("qn") * col("nrm")), 4)
+        round(Sim.dot(col("qv"), col("v")) / (col("qn") * col("nrm")), 4)
           .as("cos_r"))
     val w = Window.partitionBy(col("q_id"))
       .orderBy(col("cos_r").desc, col("c_id").asc)
@@ -547,12 +545,11 @@ object Hnsw {
                      queryModel: Option[Seq[(Long, Array[Double], Array[Int])]] = None): DataFrame = {
     val spark = embeddings.sparkSession
     import spark.implicits._
-    val dotF = Sim.dotNative(spark) _
     val assigned = embeddings
       .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
-      .withColumn("nrm", sqrt(dotF(col("v"), col("v"))))
+      .withColumn("nrm", Sim.norm(col("v")))
       .withColumn("cell",
-        Sim.argmaxCell(dotF, cents)(col("v"), col("nrm")).cast("int"))
+        Sim.argmaxCell(cents)(col("v"), col("nrm")).cast("int"))
     // query model build: nQueries rows with their probe lists (driver-
     // sized, the searchCells shape); memoized callers pass it in —
     // validated loudly against the declared nQueries/nProbe

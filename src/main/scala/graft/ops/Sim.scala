@@ -5,31 +5,22 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.CacheScope
+import graft.plans.{AllCosines, AllCosinesI8, CellTopIds, DotProduct, PqEncode}
 
 /** Similarity search over the `embeddings` table (SURVEY.md §7.5).
   *
-  * The dot product / norm are pure built-in higher-order functions
-  * (`zip_with` + `aggregate`) over `array<double>` — sequential left
-  * fold in array-index order, so the double arithmetic is
-  * deterministic and matches any engine that folds in order.
+  * The hot loops are the codegen'd `graft.plans` kernels, built as
+  * plain Columns: [[dot]] (and so every norm and cosine), IVF cell
+  * ranking, PQ encoding and the all-cosines scans. Each folds in
+  * array-index order, so the double arithmetic is deterministic and
+  * matches any engine that folds in order.
   */
 object Sim {
 
-  /** Left-fold dot product of two array<double> columns — the pure
-    * built-in formulation. HOF lambdas are interpreted, so prefer
-    * [[dotNative]] in hot paths when the session has GraftExtensions.
+  /** Left-fold dot product of two array<double> columns — the
+    * codegen'd graft_dot kernel (graft.plans.DotProduct).
     */
-  def dot(a: Column, b: Column): Column =
-    aggregate(zip_with(a, b, (x, y) => x * y), lit(0.0d), (acc, x) => acc + x)
-
-  /** Codegen'd dot product via the native graft_dot expression
-    * (graft.plans.DotProduct) when registered, else the HOF fallback.
-    * Identical results on equal-length dense vectors, so oracle
-    * comparisons are unaffected by which path runs.
-    */
-  def dotNative(spark: org.apache.spark.sql.SparkSession)(a: Column, b: Column): Column =
-    if (spark.catalog.functionExists("graft_dot")) call_function("graft_dot", a, b)
-    else dot(a, b)
+  def dot(a: Column, b: Column): Column = DotProduct.column(a, b)
 
   def norm(a: Column): Column = sqrt(dot(a, a))
 
@@ -73,17 +64,13 @@ object Sim {
   /** The outDim-d projected vector of an array<double> column — one
     * ordered left-fold dot per component against a literal sign row,
     * scaled by 1/√outDim so norms are preserved in expectation. Each
-    * component goes through [[dotNative]] (the codegen'd graft_dot
-    * kernel when the session has GraftExtensions, the HOF fold
-    * otherwise — identical results either way), because an interpreted
+    * component is one compiled [[dot]], because an interpreted
     * transform-over-matrix fold measured 1G lambda calls at the 1M×64
     * ScaleStress build (24.6 s vs SQ8's 13 s).
     */
-  private[graft] def rpProject(spark: org.apache.spark.sql.SparkSession,
-                               emb: Column, inDim: Int, outDim: Int): Column = {
-    val dotF = dotNative(spark) _
+  private[graft] def rpProject(emb: Column, inDim: Int, outDim: Int): Column = {
     val scale = 1.0 / math.sqrt(outDim.toDouble)
-    array(rpSigns(inDim, outDim).map(row => dotF(emb, typedLit(row.toSeq)) * scale): _*)
+    array(rpSigns(inDim, outDim).map(row => dot(emb, typedLit(row.toSeq)) * scale): _*)
   }
 
   /** The same projection as a driver-side fold (identical j-ascending
@@ -105,7 +92,7 @@ object Sim {
     // full projected vector computed ONCE, then bound through the
     // array+transform let-idiom (see quantizeInt8) so the norm /
     // sample-component reads never re-run the O(outDim·inDim) fold
-    val projExpr = rpProject(embeddings.sparkSession, emb, inDim, outDim)
+    val projExpr = rpProject(emb, inDim, outDim)
     val bound = element_at(
       transform(array(projExpr), p => struct(
         (Seq.tabulate(sampleComponents)(i =>
@@ -174,24 +161,34 @@ object Sim {
     * probed buckets — turns O(Q×N) into O(Q×N/buckets).
     */
   def cosineTopK(embeddings: DataFrame, nQueries: Int, k: Int): DataFrame = {
-    val dotF = dotNative(embeddings.sparkSession) _
-    def normF(c: Column) = sqrt(dotF(c, c))
     val asDouble = embeddings.select(
       col("vec_id"), col("embedding").cast("array<double>").as("v"))
     val cands = asDouble.select(
-      col("vec_id").as("c_id"), col("v").as("cv"), normF(col("v")).as("cn"))
+      col("vec_id").as("c_id"), col("v").as("cv"), norm(col("v")).as("cn"))
     val queries = asDouble.filter(col("vec_id") < nQueries).select(
-      col("vec_id").as("q_id"), col("v").as("qv"), normF(col("v")).as("qn"))
+      col("vec_id").as("q_id"), col("v").as("qv"), norm(col("v")).as("qn"))
     val scored = cands
       .join(broadcast(queries), col("q_id") =!= col("c_id"))
       .select(
         col("q_id"), col("c_id"),
-        round(dotF(col("qv"), col("cv")) / (col("qn") * col("cn")), 4).as("cos_r"))
+        round(dot(col("qv"), col("cv")) / (col("qn") * col("cn")), 4).as("cos_r"))
     val w = Window.partitionBy(col("q_id")).orderBy(col("cos_r").desc, col("c_id").asc)
     scored
       .withColumn("rnk", row_number().over(w).cast("long"))
       .filter(col("rnk") <= k)
   }
+
+  /** The SQ8 index layout: (c_id, scale double, codes array<tinyint>)
+    * — what [[cosineTopKSq]] caches as its resident working set.
+    * Exposed so the spec can pin that the index never grows a
+    * full-precision array column back.
+    */
+  def sqIndex(asDouble: DataFrame): DataFrame = asDouble
+    .withColumn("sq", quantizeInt8(col("v")))
+    .select(
+      col("vec_id").as("c_id"),
+      col("sq").getField("scale").as("scale"),
+      col("sq").getField("q").as("codes"))
 
   /** Scalar-quantized (int8) cosine top-k with full-precision refine —
     * the simplest production ANN compression, sitting between
@@ -221,38 +218,16 @@ object Sim {
     * losslessly), so the boundary is reproducible across engines
     * regardless of accumulation order — strictly safer than the old
     * dequantized-double fold.
+    *
+    * `queryRows` optionally supplies the pre-collected query slice
+    * (vec_id < nQueries, id-ascending, exactly what the internal
+    * collect fetches) so a caller that memoizes the bounded query side
+    * constructs this plan without launching the collect job — results
+    * are identical either way (QueryModelMemoSpec).
     */
-  /** The SQ8 index layout: (c_id, scale double, codes array<tinyint>)
-    * — what [[cosineTopKSq]] caches as its resident working set.
-    * Exposed so the spec can pin that the index never grows a
-    * full-precision array column back.
-    */
-  def sqIndex(asDouble: DataFrame): DataFrame = asDouble
-    .withColumn("sq", quantizeInt8(col("v")))
-    .select(
-      col("vec_id").as("c_id"),
-      col("sq").getField("scale").as("scale"),
-      col("sq").getField("q").as("codes"))
-
   def cosineTopKSq(embeddings: DataFrame, nQueries: Int, k: Int,
                    shortlist: Int,
-                   queryRows: Option[Seq[(Long, Array[Double])]] = None): DataFrame =
-    cosineTopKSqImpl(embeddings, nQueries, k, shortlist, useKernel = true, queryRows)
-
-  /** `useKernel = false` forces the HOF fallback — test hook for the
-    * kernel-vs-fallback parity pin (integer dots are exact, so the two
-    * paths must agree bit-for-bit). `queryRows` optionally supplies
-    * the pre-collected query slice (vec_id < nQueries, id-ascending,
-    * exactly what the internal collect fetches) so a caller that
-    * memoizes the bounded query side constructs this plan without
-    * launching the collect job — results are identical either way
-    * (QueryModelMemoSpec).
-    */
-  private[graft] def cosineTopKSqImpl(embeddings: DataFrame, nQueries: Int, k: Int,
-                   shortlist: Int, useKernel: Boolean,
                    queryRows: Option[Seq[(Long, Array[Double])]] = None): DataFrame = {
-    val dotF = dotNative(embeddings.sparkSession) _
-    def normF(c: Column) = sqrt(dotF(c, c))
     val asDouble = embeddings.select(
       col("vec_id"), col("embedding").cast("array<double>").as("v"))
     // the stored index: id + scale + int8 codes, nothing else — this
@@ -290,36 +265,17 @@ object Sim {
       }
     }
     val qFlat = qVecs.flatMap(codesOf)
-    val adc: DataFrame = if (useKernel && spark.catalog.functionExists("graft_all_cos_i8")) {
-      // one compiled pass per candidate: byte loads, long accumulate —
-      // the integer-SIMD scan SQ exists to enable
-      index
-        .select(col("c_id"),
-          posexplode(call_function("graft_all_cos_i8",
-            col("codes"), typedlit(qFlat), lit(qRows.length)))
-            .as(Seq("q_idx", "cos")))
-        .select(
-          element_at(typedlit(qIds), col("q_idx") + 1).as("q_id"),
-          col("c_id"), round(col("cos"), 6).as("adc_r"))
-        .filter(col("q_id") =!= col("c_id"))
-    } else {
-      // HOF fallback without the extension: same integer math via a
-      // broadcast of the per-query code arrays — exact-integer dots,
-      // so results are identical to the kernel path
-      import spark.implicits._
-      val qDf = qIds.zip(qVecs.map(codesOf)).toIndexedSeq
-        .toDF("q_id", "qc")
-      def idot(a: Column, b: Column): Column =
-        aggregate(zip_with(a, b, (x, y) => (x * y).cast("long")),
-          lit(0L), (acc, x) => acc + x)
-      index
-        .withColumn("ci", col("codes").cast("array<int>"))
-        .join(broadcast(qDf), col("q_id") =!= col("c_id"))
-        .select(col("q_id"), col("c_id"),
-          round(idot(col("qc"), col("ci")).cast("double") /
-            (sqrt(idot(col("qc"), col("qc")).cast("double")) *
-             sqrt(idot(col("ci"), col("ci")).cast("double"))), 6).as("adc_r"))
-    }
+    // one compiled pass per candidate: byte loads, long accumulate —
+    // the integer-SIMD scan SQ exists to enable
+    val adc = index
+      .select(col("c_id"),
+        posexplode(AllCosinesI8.column(
+          col("codes"), typedlit(qFlat), lit(qRows.length)))
+          .as(Seq("q_idx", "cos")))
+      .select(
+        element_at(typedlit(qIds), col("q_idx") + 1).as("q_id"),
+        col("c_id"), round(col("cos"), 6).as("adc_r"))
+      .filter(col("q_id") =!= col("c_id"))
     val short = adc
       .withColumn("srnk", row_number().over(wTop))
       .filter(col("srnk") <= shortlist)
@@ -337,11 +293,11 @@ object Sim {
       }.toDF("q_id", "qv", "qn")
     }
     val wFinal = Window.partitionBy(col("q_id")).orderBy(col("cos_r").desc, col("c_id").asc)
-    asDouble.select(col("vec_id").as("c_id"), col("v").as("cv"), normF(col("v")).as("cn"))
+    asDouble.select(col("vec_id").as("c_id"), col("v").as("cv"), norm(col("v")).as("cn"))
       .join(broadcast(short), Seq("c_id"))
       .join(broadcast(queries), Seq("q_id"))
       .select(col("q_id"), col("c_id"),
-        round(dotF(col("qv"), col("cv")) / (col("qn") * col("cn")), 4).as("cos_r"))
+        round(dot(col("qv"), col("cv")) / (col("qn") * col("cn")), 4).as("cos_r"))
       .withColumn("rnk", row_number().over(wFinal).cast("long"))
       .filter(col("rnk") <= k)
   }
@@ -366,13 +322,11 @@ object Sim {
                    queryRows: Option[Seq[(Long, Array[Double])]] = None): DataFrame = {
     val spark = embeddings.sparkSession
     import spark.implicits._
-    val dotF = dotNative(spark) _
-    def normF(c: Column) = sqrt(dotF(c, c))
     val asDouble = embeddings.select(
       col("vec_id"), col("embedding").cast("array<double>").as("v"))
     // the resident RP index: id + outDim doubles, nothing else
     val index = CacheScope.cached(asDouble.select(
-      col("vec_id").as("c_id"), rpProject(spark, col("v"), inDim, outDim).as("pv")))
+      col("vec_id").as("c_id"), rpProject(col("v"), inDim, outDim).as("pv")))
     val signs = rpSigns(inDim, outDim)
     queryRows.foreach { qs =>
       require(qs.map(_._1) == qs.map(_._1).sorted && qs.forall(_._1 < nQueries),
@@ -390,17 +344,17 @@ object Sim {
     val short = index
       .join(broadcast(queries.select(col("q_id"), col("qp"))), col("q_id") =!= col("c_id"))
       .select(col("q_id"), col("c_id"),
-        round(dotF(col("qp"), col("pv")) / (normF(col("qp")) * normF(col("pv"))), 4)
+        round(dot(col("qp"), col("pv")) / (norm(col("qp")) * norm(col("pv"))), 4)
           .as("pcos_r"))
       .withColumn("srnk", row_number().over(wShort))
       .filter(col("srnk") <= shortlist)
       .select(col("q_id"), col("c_id"), col("pcos_r"))
     val wFinal = Window.partitionBy(col("q_id")).orderBy(col("cos_r").desc, col("c_id").asc)
-    asDouble.select(col("vec_id").as("c_id"), col("v").as("cv"), normF(col("v")).as("cn"))
+    asDouble.select(col("vec_id").as("c_id"), col("v").as("cv"), norm(col("v")).as("cn"))
       .join(broadcast(short), Seq("c_id"))
       .join(broadcast(queries.select(col("q_id"), col("qv"), col("qn"))), Seq("q_id"))
       .select(col("q_id"), col("c_id"), col("pcos_r"),
-        round(dotF(col("qv"), col("cv")) / (col("qn") * col("cn")), 4).as("cos_r"))
+        round(dot(col("qv"), col("cv")) / (col("qn") * col("cn")), 4).as("cos_r"))
       .withColumn("rnk", row_number().over(wFinal).cast("long"))
       .filter(col("rnk") <= k)
   }
@@ -429,69 +383,43 @@ object Sim {
   def maxSimTopK(embeddings: DataFrame, groupEvery: Int, nQueryDocs: Int,
                  k: Int,
                  queryRows: Option[Seq[(Long, Array[Double])]] = None): DataFrame = {
-    val spark = embeddings.sparkSession
-    val dotF = dotNative(spark) _
-    def normF(c: Column) = sqrt(dotF(c, c))
     val toks = embeddings.select(
       (col("vec_id") / groupEvery).cast("long").as("did"),
       col("vec_id").as("tid"),
       col("embedding").cast("array<double>").as("v"))
     val cands = toks.filter(col("did") >= nQueryDocs).select(
-      col("did").as("c_doc"), col("v").as("cv"), normF(col("v")).as("cn"))
+      col("did").as("c_doc"), col("v").as("cv"), norm(col("v")).as("cn"))
     val w = Window.partitionBy(col("q_doc"))
       .orderBy(col("maxsim_r").desc, col("c_doc").asc)
     // pre-collected form: the first nQueryDocs*groupEvery vec_ids in
     // id order ARE the query tokens in tid order; did = tid/groupEvery.
-    // Validated LOUDLY on both paths — a slice of the wrong size would
-    // silently mis-attribute q_docs (the kernel matrix is positional).
+    // Validated LOUDLY — a slice of the wrong size would silently
+    // mis-attribute q_docs (the kernel matrix is positional).
     queryRows.foreach { qs =>
       require(qs.map(_._1) == (0L until nQueryDocs.toLong * groupEvery),
         s"maxSimTopK queryRows must be vec_ids 0..${nQueryDocs * groupEvery - 1} " +
           s"in order, got ${qs.size} rows")
     }
-    // per-(q_doc, c_doc, q_token) best, then per-(q_doc, c_doc) sum
-    val perToken: DataFrame = if (spark.catalog.functionExists("graft_all_cos")) {
-      // query tokens become a planning-time MATRIX model (nQueryDocs ×
-      // groupEvery rows — bounded) and the native kernel scores each
-      // candidate token against all of them in one compiled loop —
-      // no vector-carrying pair join (the knnLabelVote lesson)
-      val qRows: Seq[(Long, Array[Double])] = queryRows.getOrElse(
-        toks.filter(col("did") < nQueryDocs)
-          .orderBy(col("tid")).collect().toSeq
-          .map(r => (r.getLong(1), r.getSeq[Double](2).toArray)))
-      val qDocs = qRows.map(_._1 / groupEvery).toArray
-      val flat = qRows.toArray.flatMap(_._2)
-      cands
-        .select(col("c_doc"),
-          posexplode(call_function("graft_all_cos",
-            col("cv"), col("cn"), typedlit(flat), lit(qRows.length)))
-            .as(Seq("q_idx", "cos")))
-        .groupBy(
-          element_at(typedlit(qDocs), col("q_idx") + 1).as("q_doc"),
-          col("c_doc"), col("q_idx"))
-        .agg(max(round(col("cos"), 6)).as("best"))
-    } else {
-      // the fallback ALSO honors queryRows (LocalRelation + driver
-      // left-fold norms — the same sequential sum as the distributed
-      // HOF fold, the cosineTopKSqImpl precedent), so a memoizing
-      // caller is construct-job-free on kernel-less sessions too
-      val queries = queryRows.map { qs =>
-        import spark.implicits._
-        qs.toIndexedSeq.map { case (tid, v) =>
-          var s2 = 0.0; v.foreach(x => s2 += x * x)
-          (tid / groupEvery, tid, v, math.sqrt(s2))
-        }.toDF("q_doc", "q_idx", "qv", "qn")
-      }.getOrElse(
-        toks.filter(col("did") < nQueryDocs).select(
-          col("did").as("q_doc"), col("tid").as("q_idx"),
-          col("v").as("qv"), normF(col("v")).as("qn")))
-      cands
-        .join(broadcast(queries), lit(true))
-        .groupBy(col("q_doc"), col("c_doc"), col("q_idx"))
-        .agg(max(round(dotF(col("qv"), col("cv")) / (col("qn") * col("cn")), 6))
-          .as("best"))
-    }
-    perToken
+    // per-(q_doc, c_doc, q_token) best, then per-(q_doc, c_doc) sum.
+    // Query tokens become a planning-time MATRIX model (nQueryDocs ×
+    // groupEvery rows — bounded) and the native kernel scores each
+    // candidate token against all of them in one compiled loop — no
+    // vector-carrying pair join (the knnLabelVote lesson)
+    val qRows: Seq[(Long, Array[Double])] = queryRows.getOrElse(
+      toks.filter(col("did") < nQueryDocs)
+        .orderBy(col("tid")).collect().toSeq
+        .map(r => (r.getLong(1), r.getSeq[Double](2).toArray)))
+    val qDocs = qRows.map(_._1 / groupEvery).toArray
+    val flat = qRows.toArray.flatMap(_._2)
+    cands
+      .select(col("c_doc"),
+        posexplode(AllCosines.column(
+          col("cv"), col("cn"), typedlit(flat), lit(qRows.length)))
+          .as(Seq("q_idx", "cos")))
+      .groupBy(
+        element_at(typedlit(qDocs), col("q_idx") + 1).as("q_doc"),
+        col("c_doc"), col("q_idx"))
+      .agg(max(round(col("cos"), 6)).as("best"))
       .groupBy(col("q_doc"), col("c_doc"))
       .agg(round(sum(col("best")), 4).as("maxsim_r"))
       .withColumn("rnk", row_number().over(w).cast("long"))
@@ -513,90 +441,50 @@ object Sim {
   private def l2(v: Array[Double]): Double =
     math.sqrt(v.foldLeft(0.0)((acc, x) => acc + x * x))
 
-  /** Per-centroid cosine as struct(score, -cent_id): `greatest` over
-    * these picks max score with smallest-cent_id tiebreak — the same
-    * (score DESC, cent_id ASC) rule the previous windowed form used,
-    * and the same 6dp rounding, so cell boundaries stay reproducible
-    * across engines. Centroid norms are pre-folded at the driver with
-    * the identical left-fold order, so the doubles match bit-for-bit.
-    */
-  private def cellScoreStructs(
-      dotF: (Column, Column) => Column, cents: Centroids)(
-      v: Column, nrm: Column): Seq[Column] =
-    cents.map { case (id, cv) =>
-      struct(
-        round(dotF(v, typedlit(cv.toSeq)) / (nrm * lit(l2(cv))), 6).as("score"),
-        lit(-id).as("neg_id"))
-    }
-
-  /** Top-`nProbe` cell ids via the native graft_cell_top expression
-    * (graft.plans.CellTopIds) when registered. The declarative
-    * k-struct forms below are the no-extension fallback — identical
-    * math (same 6dp rounding, same (score DESC, id ASC) rank), but at
-    * k=64 their generated code overruns Janino's method budget and the
-    * projection runs interpreted: measured 214 s vs ~4 s to assign 1M
-    * 64-d vectors to 64 cells. Cell ids are model POSITIONS in both
-    * paths (Centroids ids are 0..k-1 by construction).
-    */
-  private def cellTopNative(spark: org.apache.spark.sql.SparkSession,
-                            cents: Centroids, nProbe: Int)(
-      v: Column, nrm: Column): Option[Column] =
-    if (!spark.catalog.functionExists("graft_cell_top")) None
-    else Some(call_function("graft_cell_top", v, nrm,
-      typedlit(cents.flatMap(_._2.toSeq)), lit(cents.size), lit(nProbe)))
-
-  /** Map-side argmax cell assignment — zero joins, zero shuffles. */
-  private[ops] def argmaxCell(
-      dotF: (Column, Column) => Column, cents: Centroids)(
-      v: Column, nrm: Column): Column = {
-    val spark = org.apache.spark.sql.SparkSession.active
-    cellTopNative(spark, cents, 1)(v, nrm)
-      .map(ids => ids.getItem(0))
-      .getOrElse(-greatest(cellScoreStructs(dotF, cents)(v, nrm): _*).getField("neg_id"))
-  }
-
   /** Top-`nProbe` cells for a query vector, best first — multi-probe
     * IVF recovers the neighbors that fell just across a cell boundary.
-    * HOF transform is acceptable in the fallback: it runs on the
-    * handful of query rows, never the candidate table.
+    * The codegen'd graft_cell_top kernel (graft.plans.CellTopIds)
+    * ranks the cosine to each centroid rounded to 6dp (score DESC,
+    * cent_id ASC), so cell boundaries stay reproducible across
+    * engines. Cell ids are model POSITIONS (Centroids ids are 0..k-1 by
+    * construction). A declarative k-struct `greatest` form overruns
+    * Janino's method budget at k=64 and runs interpreted: measured
+    * 214 s vs ~4 s to assign 1M 64-d vectors to 64 cells.
     */
-  private[ops] def probeCells(
-      dotF: (Column, Column) => Column, cents: Centroids, nProbe: Int)(
-      v: Column, nrm: Column): Column = {
-    val spark = org.apache.spark.sql.SparkSession.active
-    cellTopNative(spark, cents, nProbe)(v, nrm)
-      .getOrElse(transform(
-        slice(
-          sort_array(array(cellScoreStructs(dotF, cents)(v, nrm): _*), asc = false),
-          1, nProbe),
-        s => -s.getField("neg_id")))
-  }
+  private[ops] def probeCells(cents: Centroids, nProbe: Int)(
+      v: Column, nrm: Column): Column =
+    CellTopIds.column(v, nrm,
+      typedlit(cents.flatMap(_._2.toSeq)), lit(cents.size), lit(nProbe))
+
+  /** Map-side argmax cell assignment — zero joins, zero shuffles. */
+  private[ops] def argmaxCell(cents: Centroids)(v: Column, nrm: Column): Column =
+    probeCells(cents, 1)(v, nrm).getItem(0)
 
   /** Shared IVF search path: map-side cell assignment for the corpus,
     * multi-probe cell selection for the queries, scoring restricted to
     * probed cells.
     */
   private def searchCells(
-      withNorm: DataFrame, dotF: (Column, Column) => Column,
+      withNorm: DataFrame,
       cents: Centroids, nQueries: Int, k: Int, nProbe: Int): DataFrame =
     searchAssigned(
       CacheScope.cached(
         withNorm
-          .withColumn("cell", argmaxCell(dotF, cents)(col("v"), col("nrm")))
+          .withColumn("cell", argmaxCell(cents)(col("v"), col("nrm")))
           .select(col("vec_id"), col("v"), col("nrm"), col("cell"))),
-      dotF, cents, nQueries, k, nProbe)
+      cents, nQueries, k, nProbe)
 
   /** [[searchCells]] after assignment — the tail shared with the
     * incremental form, whose standing side arrives PRE-ASSIGNED from
     * the materialized index store.
     */
   private def searchAssigned(
-      assigned: DataFrame, dotF: (Column, Column) => Column,
+      assigned: DataFrame,
       cents: Centroids, nQueries: Int, k: Int, nProbe: Int): DataFrame = {
     val queries = assigned.filter(col("vec_id") < nQueries)
       .withColumn("probe",
         if (nProbe <= 1) array(col("cell"))
-        else probeCells(dotF, cents, nProbe)(col("v"), col("nrm")))
+        else probeCells(cents, nProbe)(col("v"), col("nrm")))
       .select(
         col("vec_id").as("q_id"), col("v").as("qv"), col("nrm").as("qn"),
         explode(col("probe")).as("cell"))
@@ -605,18 +493,17 @@ object Sim {
       .filter(col("q_id") =!= col("vec_id"))
       .select(
         col("q_id"), col("vec_id").as("c_id"),
-        round(dotF(col("qv"), col("v")) / (col("qn") * col("nrm")), 4).as("cos_r"))
+        round(dot(col("qv"), col("v")) / (col("qn") * col("nrm")), 4).as("cos_r"))
     val wTop = Window.partitionBy(col("q_id")).orderBy(col("cos_r").desc, col("c_id").asc)
     scored
       .withColumn("rnk", row_number().over(wTop).cast("long"))
       .filter(col("rnk") <= k)
   }
 
-  private def withNormed(embeddings: DataFrame,
-                         dotF: (Column, Column) => Column): DataFrame =
+  private def withNormed(embeddings: DataFrame): DataFrame =
     embeddings
       .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
-      .withColumn("nrm", sqrt(dotF(col("v"), col("v"))))
+      .withColumn("nrm", norm(col("v")))
 
   /** IVF (inverted-file) approximate nearest neighbour — the coarse
     * quantizer of Jégou/Douze/Schmid's IVF-PQ family ("Product
@@ -640,12 +527,11 @@ object Sim {
     * per-row driver loop — the standard MLlib KMeansModel shape.
     */
   def cosineTopKIvf(embeddings: DataFrame, nQueries: Int, k: Int, nCells: Int): DataFrame = {
-    val dotF = dotNative(embeddings.sparkSession) _
-    val withNorm = withNormed(embeddings, dotF)
+    val withNorm = withNormed(embeddings)
     val cents: Centroids = withNorm.filter(col("vec_id") < nCells)
       .select(col("vec_id"), col("v")).collect()
       .map(r => (r.getLong(0), r.getSeq[Double](1).toArray)).sortBy(_._1).toSeq
-    searchCells(withNorm, dotF, cents, nQueries, k, nProbe = 1)
+    searchCells(withNorm, cents, nQueries, k, nProbe = 1)
   }
 
   /** Deterministic seeded Lloyd's k-means for IVF centroid training —
@@ -667,9 +553,7 @@ object Sim {
     * at the driver like MLlib's KMeansModel.
     */
   def kmeansCentroids(embeddings: DataFrame, k: Int, iters: Int): Centroids = {
-    val spark = embeddings.sparkSession
-    val dotF = dotNative(spark) _
-    val withNorm = CacheScope.cached(withNormed(embeddings, dotF))
+    val withNorm = CacheScope.cached(withNormed(embeddings))
     val n = withNorm.count()
     val stride = math.max(n / k, 1L)
     val initIds = (0 until k).map(i => i * stride)
@@ -681,7 +565,7 @@ object Sim {
     val dim = cents.head._2.length
     for (_ <- 0 until iters) {
       val assigned = withNorm.withColumn(
-        "cell", argmaxCell(dotF, cents)(col("v"), col("nrm")))
+        "cell", argmaxCell(cents)(col("v"), col("nrm")))
       val aggs = (0 until dim).map(i =>
         round(avg(col("v").getItem(i)), 9).as(s"c$i"))
       val rows = assigned.groupBy(col("cell")).agg(aggs.head, aggs.tail: _*).collect()
@@ -711,9 +595,8 @@ object Sim {
     */
   def kmeansCentroidsSampledLocal(embeddings: DataFrame, k: Int, iters: Int,
                                   sampleMod: Int): Centroids = {
-    val dotF = dotNative(embeddings.sparkSession) _
     val sample: Array[(Long, Array[Double])] =
-      withNormed(embeddings, dotF)
+      withNormed(embeddings)
         .filter(pmod(col("vec_id"), lit(sampleMod.toLong)) === 0L)
         .select(col("vec_id"), col("v")).collect()
         .map(r => (r.getLong(0), r.getSeq[Double](1).toArray)).sortBy(_._1)
@@ -778,8 +661,7 @@ object Sim {
     */
   def cosineTopKIvfFrom(embeddings: DataFrame, cents: Centroids,
                         nQueries: Int, k: Int, nProbe: Int = 2): DataFrame = {
-    val dotF = dotNative(embeddings.sparkSession) _
-    searchCells(withNormed(embeddings, dotF), dotF, cents, nQueries, k, nProbe)
+    searchCells(withNormed(embeddings), cents, nQueries, k, nProbe)
   }
 
   /** Map-side frozen-cell assignment — the IVF index-MAINTENANCE
@@ -794,10 +676,9 @@ object Sim {
     * scan time.
     */
   def ivfAssign(embeddings: DataFrame, cents: Centroids): DataFrame = {
-    val dotF = dotNative(embeddings.sparkSession) _
-    withNormed(embeddings, dotF)
+    withNormed(embeddings)
       .withColumn("cell",
-        argmaxCell(dotF, cents)(col("v"), col("nrm")).cast("int"))
+        argmaxCell(cents)(col("v"), col("nrm")).cast("int"))
       .select(col("vec_id"), col("v"), col("nrm"), col("cell"))
   }
 
@@ -817,12 +698,11 @@ object Sim {
   def cosineTopKIvfIncrement(assignedStanding: DataFrame, batch: DataFrame,
                              cents: Centroids, nQueries: Int, k: Int,
                              nProbe: Int = 2): DataFrame = {
-    val dotF = dotNative(batch.sparkSession) _
     val all = assignedStanding
       .select(col("vec_id"), col("v"), col("nrm"),
         col("cell").cast("int").as("cell"))
       .unionByName(ivfAssign(batch, cents))
-    searchAssigned(CacheScope.cached(all), dotF, cents, nQueries, k, nProbe)
+    searchAssigned(CacheScope.cached(all), cents, nQueries, k, nProbe)
   }
 
   /** DuckDB oracle SQL for the TRAINED-centroid IVF search — the
@@ -939,15 +819,14 @@ object Sim {
     * (see [[cosineTopKIvfFrom]] — models are build-step artifacts). */
   def semanticDedupKeepersFrom(embeddings: DataFrame, cents: Centroids,
                                minCos: Double): DataFrame = {
-    val dotF = dotNative(embeddings.sparkSession) _
     val assigned = CacheScope.cached(
-      withNormed(embeddings, dotF)
-        .withColumn("cell", argmaxCell(dotF, cents)(col("v"), col("nrm")))
+      withNormed(embeddings)
+        .withColumn("cell", argmaxCell(cents)(col("v"), col("nrm")))
         .select(col("vec_id"), col("v"), col("nrm"), col("cell")))
     val pairs = assigned.as("x")
       .join(assigned.as("y"),
         col("x.cell") === col("y.cell") && col("x.vec_id") < col("y.vec_id"))
-      .filter(round(dotF(col("x.v"), col("y.v")) / (col("x.nrm") * col("y.nrm")), 4)
+      .filter(round(dot(col("x.v"), col("y.v")) / (col("x.nrm") * col("y.nrm")), 4)
         >= minCos)
       .select(col("x.vec_id").as("a"), col("y.vec_id").as("b"))
     // Undirected neighbor view in one explode, min-folded to one row
@@ -986,19 +865,18 @@ object Sim {
     */
   def semanticDedupIncrement(assignedStanding: DataFrame, batch: DataFrame,
                              cents: Centroids, minCos: Double): DataFrame = {
-    val dotF = dotNative(batch.sparkSession) _
     val bAssigned = CacheScope.cached(ivfAssign(batch, cents))
     val standingNb = assignedStanding
       .select(col("vec_id"), col("v"), col("nrm"),
         col("cell").cast("int").as("cell")).as("s")
       .join(broadcast(bAssigned.as("b")), col("s.cell") === col("b.cell"))
-      .filter(round(dotF(col("s.v"), col("b.v")) /
+      .filter(round(dot(col("s.v"), col("b.v")) /
         (col("s.nrm") * col("b.nrm")), 4) >= minCos)
       .select(col("b.vec_id").as("vec_id"), col("s.vec_id").as("nb"))
     val batchPairs = bAssigned.as("x")
       .join(bAssigned.as("y"),
         col("x.cell") === col("y.cell") && col("x.vec_id") < col("y.vec_id"))
-      .filter(round(dotF(col("x.v"), col("y.v")) /
+      .filter(round(dot(col("x.v"), col("y.v")) /
         (col("x.nrm") * col("y.nrm")), 4) >= minCos)
       .select(col("x.vec_id").as("a"), col("y.vec_id").as("b"))
     val batchNb = batchPairs
@@ -1083,7 +961,6 @@ object Sim {
 
   /** [[clusterPurity]] under a pre-trained quantizer. */
   def clusterPurityFrom(embeddings: DataFrame, cents: Centroids): DataFrame = {
-    val dotF = dotNative(embeddings.sparkSession) _
     if (cents.isEmpty) {
       // empty table → empty audit, never a fault (EmptyInputSpec contract)
       val spark = embeddings.sparkSession
@@ -1094,9 +971,9 @@ object Sim {
     val assigned = embeddings
       .select(col("vec_id"), col("label"),
         col("embedding").cast("array<double>").as("v"))
-      .withColumn("nrm", sqrt(dotF(col("v"), col("v"))))
+      .withColumn("nrm", norm(col("v")))
       .select(col("label"),
-        argmaxCell(dotF, cents)(col("v"), col("nrm")).as("cell"))
+        argmaxCell(cents)(col("v"), col("nrm")).as("cell"))
     assigned
       .groupBy(col("cell"), col("label")).agg(count(lit(1)).as("c"))
       .groupBy(col("cell"))
@@ -1229,8 +1106,7 @@ object Sim {
     val dim = cents.head._2.length
     require(dim % m == 0, s"dim $dim not divisible by m=$m")
     val d = dim / m
-    val dotF = dotNative(embeddings.sparkSession) _
-    val sample = withNormed(embeddings, dotF)
+    val sample = withNormed(embeddings)
       .filter(pmod(col("vec_id"), lit(sampleMod.toLong)) === 0L)
       .select(col("vec_id"), col("v")).collect()
       .map(r => (r.getLong(0), r.getSeq[Double](1).toArray))
@@ -1252,34 +1128,15 @@ object Sim {
     * the memory story that makes billion-vector ANN fit
     * (64-d doubles = 512 B → 8 B at m=8).
     *
-    * Declarative struct-min form, deliberately: at m=8, ks=16 each
-    * `least` folds 16 structs over 8-dim sub-dots — inside Janino's
-    * method budget (the k=64 full-dim case that overran it is why
-    * [[cellTopNative]] exists; a `graft_pq_encode` kernel is the same
-    * one-evening extension if a profile ever demands it).
+    * Computed by the codegen'd graft_pq_encode kernel
+    * (graft.plans.PqEncode): primitive loops plus a monotone-round
+    * shortcut, because Spark round() on double allocates a BigDecimal
+    * per evaluation and a declarative struct-min form pays m·ks of
+    * them per row.
     */
-  private def pqCodes(dotF: (Column, Column) => Column, cb: Codebooks,
-                      d: Int)(v: Column): Column = {
-    val spark = org.apache.spark.sql.SparkSession.active
-    if (spark.catalog.functionExists("graft_pq_encode"))
-      // compiled kernel (plans/PqEncode.scala): primitive loops +
-      // monotone-round shortcut — Spark round() on double allocates a
-      // BigDecimal per evaluation, and the declarative form below pays
-      // m·ks of them per row
-      call_function("graft_pq_encode", v,
-        typedlit(cb.flatMap(_.flatMap(_.toSeq))), lit(cb.size),
-        lit(cb.head.size))
-    else
-      array(cb.zipWithIndex.map { case (codes, j) =>
-        val sub = slice(v, j * d + 1, d)
-        codes.zipWithIndex.map { case (bv, ci) =>
-          struct(
-            round(dotF(sub, sub) - lit(2.0) * dotF(sub, typedlit(bv.toSeq))
-              + lit(l2sq(bv)), 6).as("dist"),
-            lit(ci).as("code"))
-        }.reduce(least(_, _)).getField("code")
-      }: _*)
-  }
+  private def pqCodes(cb: Codebooks)(v: Column): Column =
+    PqEncode.column(v, typedlit(cb.flatMap(_.flatMap(_.toSeq))), lit(cb.size),
+      lit(cb.head.size))
 
   /** Reconstruction from codes: concatenate each subspace's looked-up
     * reproduction vector. A pure projection over the m-byte codes —
@@ -1328,18 +1185,15 @@ object Sim {
   def cosineTopKIvfPqFrom(embeddings: DataFrame, cents: Centroids,
                           cb: Codebooks, nQueries: Int, k: Int,
                           nProbe: Int = 2, refine: Int = 0): DataFrame = {
-    val dotF = dotNative(embeddings.sparkSession) _
-    val m = cb.size
-    val d = cents.head._2.length / m
     val assigned = CacheScope.cached(
-      withNormed(embeddings, dotF)
-        .withColumn("cell", argmaxCell(dotF, cents)(col("v"), col("nrm")))
-        .withColumn("codes", pqCodes(dotF, cb, d)(col("v")))
+      withNormed(embeddings)
+        .withColumn("cell", argmaxCell(cents)(col("v"), col("nrm")))
+        .withColumn("codes", pqCodes(cb)(col("v")))
         .select(col("vec_id"), col("v"), col("nrm"), col("cell"), col("codes")))
     val queries = assigned.filter(col("vec_id") < nQueries)
       .withColumn("probe",
         if (nProbe <= 1) array(col("cell"))
-        else probeCells(dotF, cents, nProbe)(col("v"), col("nrm")))
+        else probeCells(cents, nProbe)(col("v"), col("nrm")))
       .select(col("vec_id").as("q_id"), col("v").as("qv"), col("nrm").as("qn"),
         explode(col("probe")).as("cell"))
     val scored = assigned
@@ -1347,8 +1201,8 @@ object Sim {
       .filter(col("q_id") =!= col("vec_id"))
       .withColumn("rv", pqRecon(cb)(col("codes")))
       .select(col("q_id"), col("vec_id").as("c_id"),
-        round(dotF(col("qv"), col("rv"))
-          / (col("qn") * sqrt(dotF(col("rv"), col("rv")))), 4).as("cos_r"))
+        round(dot(col("qv"), col("rv"))
+          / (col("qn") * norm(col("rv"))), 4).as("cos_r"))
     val wTop = Window.partitionBy(col("q_id")).orderBy(col("cos_r").desc, col("c_id").asc)
     val pqRanked = scored
       .withColumn("rnk", row_number().over(wTop).cast("long"))
@@ -1369,7 +1223,7 @@ object Sim {
         .join(broadcast(short), col("vec_id") === col("c_id"))
         .join(broadcast(qv), Seq("q_id"))
         .select(col("q_id"), col("c_id"),
-          round(dotF(col("qv"), col("v")) / (col("qn") * col("nrm")), 4)
+          round(dot(col("qv"), col("v")) / (col("qn") * col("nrm")), 4)
             .as("cos_r"))
         .withColumn("rnk", row_number().over(wTop).cast("long"))
         .filter(col("rnk") <= k)
@@ -1516,10 +1370,9 @@ object Sim {
     */
   def cosineTopKLsh(embeddings: DataFrame, nQueries: Int, k: Int, nPlanes: Int,
                     probeHamming1: Boolean = false): DataFrame = {
-    val dotF = dotNative(embeddings.sparkSession) _
     val bucketed = CacheScope.cached(
       hyperplaneLshBuckets(embeddings, dim = 64, nPlanes = nPlanes)
-        .withColumn("nrm", sqrt(dotF(col("v"), col("v")))))
+        .withColumn("nrm", norm(col("v"))))
     val probes =
       if (!probeHamming1) array(col("bucket"))
       else array(col("bucket") +:
@@ -1532,7 +1385,7 @@ object Sim {
       .filter(col("q_id") =!= col("vec_id"))
       .select(
         col("q_id"), col("vec_id").as("c_id"),
-        round(dotF(col("qv"), col("v")) / (col("qn") * col("nrm")), 4).as("cos_r"))
+        round(dot(col("qv"), col("v")) / (col("qn") * col("nrm")), 4).as("cos_r"))
     val w = Window.partitionBy(col("q_id")).orderBy(col("cos_r").desc, col("c_id").asc)
     scored
       .withColumn("rnk", row_number().over(w).cast("long"))
@@ -1554,21 +1407,19 @@ object Sim {
     * ANN family; the mining predicate is unchanged.
     */
   def hardNegatives(embeddings: DataFrame, nQueries: Int, k: Int): DataFrame = {
-    val dotF = dotNative(embeddings.sparkSession) _
-    def normF(c: Column) = sqrt(dotF(c, c))
     val asDouble = embeddings.select(
       col("vec_id"), col("label"), col("embedding").cast("array<double>").as("v"))
     val cands = asDouble.select(
       col("vec_id").as("c_id"), col("label").as("c_label"),
-      col("v").as("cv"), normF(col("v")).as("cn"))
+      col("v").as("cv"), norm(col("v")).as("cn"))
     val queries = asDouble.filter(col("vec_id") < nQueries).select(
       col("vec_id").as("q_id"), col("label").as("q_label"),
-      col("v").as("qv"), normF(col("v")).as("qn"))
+      col("v").as("qv"), norm(col("v")).as("qn"))
     val scored = cands
       .join(broadcast(queries), col("q_label") =!= col("c_label"))
       .select(
         col("q_id"), col("c_id"), col("c_label"),
-        round(dotF(col("qv"), col("cv")) / (col("qn") * col("cn")), 4).as("cos_r"))
+        round(dot(col("qv"), col("cv")) / (col("qn") * col("cn")), 4).as("cos_r"))
     val w = Window.partitionBy(col("q_id")).orderBy(col("cos_r").desc, col("c_id").asc)
     scored
       .withColumn("rnk", row_number().over(w).cast("long"))
@@ -1584,44 +1435,25 @@ object Sim {
     * the intuition behind confident-learning cleanup).
     *
     * Shape: the held-out queries become a MODEL — collected once
-    * (bounded by 1/modulus of the table, the same bound the former
-    * broadcast-join form already assumed) into a flat matrix shipped
+    * (bounded by 1/modulus of the table) into a flat matrix shipped
     * per task as a codegen reference object. One compiled
     * [[graft.plans.AllCosines]] pass per corpus row then scores every
     * query WITHOUT materializing pair rows that carry the dense
-    * vectors (the broadcast-nested-loop form copied qv+cv — ~1 KB —
-    * per scored pair), and the bounded-state
-    * [[graft.ops.TopK.TopKPayloadAggregator]] (payload = neighbor
-    * label) caps each task's partial state at k rows per query, so
-    * the only exchange carries ≤ |queries|·k·|tasks| skinny rows. The
-    * vote then aggregates ≤ q·k rows. Without GraftExtensions the
-    * BNLJ fallback runs with the same aggregator and identical math.
-    * Same ANN-shortlist substitution as [[hardNegatives]] at scale.
+    * vectors (a broadcast-nested-loop form copies qv+cv — ~1 KB — per
+    * scored pair); the pair stream is (c_id, label, q_idx, cos). The
+    * vote then aggregates ≤ q·k rows. Same ANN-shortlist substitution
+    * as [[hardNegatives]] at scale.
     */
   def knnLabelVote(embeddings: DataFrame, modulus: Int, k: Int,
-                   holdoutRows: Option[Seq[(Long, Int, Array[Double])]] = None): DataFrame =
-    knnLabelVoteImpl(embeddings, modulus, k,
-      embeddings.sparkSession.catalog.functionExists("graft_all_cos"), holdoutRows)
-
-  /** Path-pinned body — `useKernel` is what [[knnLabelVote]] resolves
-    * from the session; exposed so the parity spec can run BOTH paths
-    * in one (extension-registered) session and compare row-for-row.
-    */
-  private[graft] def knnLabelVoteImpl(embeddings: DataFrame, modulus: Int,
-                                      k: Int, useKernel: Boolean,
-                                      holdoutRows: Option[Seq[(Long, Int, Array[Double])]] = None): DataFrame = {
-    val spark = embeddings.sparkSession
-    import spark.implicits._
-    val dotF = dotNative(spark) _
-    def normF(c: Column) = sqrt(dotF(c, c))
+                   holdoutRows: Option[Seq[(Long, Int, Array[Double])]] = None): DataFrame = {
     val asDouble = embeddings.select(
       col("vec_id"), col("label"), col("embedding").cast("array<double>").as("v"))
     val labeled = asDouble.filter(pmod(col("vec_id"), lit(modulus.toLong)) =!= 0)
       .select(col("vec_id").as("c_id"), col("label").as("c_label"),
-        col("v").as("cv"), normF(col("v")).as("cn"))
-    // pre-collected holdout validated LOUDLY on both paths: ids must be
-    // ascending multiples of `modulus` (a wrong-modulus slice would
-    // silently score the wrong holdout — the positional-matrix trap).
+        col("v").as("cv"), norm(col("v")).as("cn"))
+    // pre-collected holdout validated LOUDLY: ids must be ascending
+    // multiples of `modulus` (a wrong-modulus slice would silently
+    // score the wrong holdout — the positional-matrix trap).
     // An EMPTY slice is accepted (consistent with an empty embeddings
     // table, so memo-fed ≡ collect-path on empty input — EmptyInputSpec
     // pins this) but is completeness-checked IN-PLAN below: if the
@@ -1633,65 +1465,37 @@ object Sim {
         s"knnLabelVote holdoutRows must be ascending vec_ids % $modulus == 0, " +
           s"got ${hs.size} rows")
     }
-    val topAgg = new graft.ops.TopK.TopKPayloadAggregator(k).toColumn
-    val neighbors: DataFrame = if (useKernel) {
-      // query-matrix model build (bounded: |holdout| rows of dim
-      // doubles, the broadcast side of the fallback form)
-      val qRows: Seq[(Long, Int, Array[Double])] = holdoutRows.getOrElse(
-        asDouble.filter(pmod(col("vec_id"), lit(modulus.toLong)) === 0)
-          .orderBy(col("vec_id"))
-          .collect().toSeq
-          .map(r => (r.getLong(0), r.getInt(1), r.getSeq[Double](2).toArray)))
-      val qIds = qRows.map(_._1).toArray
-      val qLabels = qRows.map(_._2).toArray
-      val flat = qRows.toArray.flatMap(_._3)
-      // top-k per query: the codegen'd expression form (collect_list →
-      // array_sort → slice; struct packs (-cos, c_id) so the natural
-      // ASC sort is cos DESC, id ASC — the same ordering contract as
-      // TopKPayloadAggregator). Partial lists are unbounded but rows
-      // are 24-byte skinny structs; when the candidate side is a full
-      // corpus rather than a table this size, swap this aggregate for
-      // the bounded-state typed form below (measured trade at sf0.1:
-      // the typed path pays ~1 µs/row of encoder+buffer overhead,
-      // 2.5× this aggregate; at corpus scale the O(k) partial state is
-      // the only shape that survives).
-      labeled
-        .select(col("c_id"), col("c_label").cast("long").as("c_label"),
-          posexplode(call_function("graft_all_cos",
-            col("cv"), col("cn"), typedlit(flat), lit(qRows.length)))
-            .as(Seq("q_idx", "cos")))
-        .groupBy(col("q_idx"))
-        .agg(slice(array_sort(collect_list(struct(
-          (-round(col("cos"), 4)).as("ns"), col("c_id"), col("c_label")))), 1, k).as("top"))
-        .select(
-          element_at(typedlit(qIds), col("q_idx") + 1).as("q_id"),
-          element_at(typedlit(qLabels), col("q_idx") + 1).as("q_label"),
-          expr("transform(top, t -> t.c_label)").as("labels"))
-    } else {
-      // fallback ALSO honors holdoutRows (LocalRelation + driver
-      // left-fold norms, the cosineTopKSqImpl precedent) so a
-      // memoizing caller stays construct-job-free without the kernel
-      val holdout = holdoutRows.map { hs =>
-        hs.toIndexedSeq.map { case (id, label, v) =>
-          var s2 = 0.0; v.foreach(x => s2 += x * x)
-          (id, label, v, math.sqrt(s2))
-        }.toDF("q_id", "q_label", "qv", "qn")
-      }.getOrElse(
-        asDouble.filter(pmod(col("vec_id"), lit(modulus.toLong)) === 0)
-          .select(col("vec_id").as("q_id"), col("label").as("q_label"),
-            col("v").as("qv"), normF(col("v")).as("qn")))
-      labeled
-        .join(broadcast(holdout), lit(true))
-        .select(
-          col("q_id"), col("q_label"), col("c_id"), col("c_label").cast("long"),
-          round(dotF(col("qv"), col("cv")) / (col("qn") * col("cn")), 4).as("cos_r"))
-        .as[(Long, Int, Long, Long, Double)]
-        .groupByKey { case (qId, qLabel, _, _, _) => (qId, qLabel) }
-        .mapValues { case (_, _, cId, cLabel, cos) => (cos, cId, cLabel) }
-        .agg(topAgg.name("top"))
-        .map { case ((qId, qLabel), top) => (qId, qLabel, top.map(_._3)) }
-        .toDF("q_id", "q_label", "labels")
-    }
+    // query-matrix model build (bounded: |holdout| rows of dim doubles)
+    val qRows: Seq[(Long, Int, Array[Double])] = holdoutRows.getOrElse(
+      asDouble.filter(pmod(col("vec_id"), lit(modulus.toLong)) === 0)
+        .orderBy(col("vec_id"))
+        .collect().toSeq
+        .map(r => (r.getLong(0), r.getInt(1), r.getSeq[Double](2).toArray)))
+    val qIds = qRows.map(_._1).toArray
+    val qLabels = qRows.map(_._2).toArray
+    val flat = qRows.toArray.flatMap(_._3)
+    // top-k per query: the codegen'd expression form (collect_list →
+    // array_sort → slice; struct packs (-cos, c_id) so the natural
+    // ASC sort is cos DESC, id ASC — the same ordering contract as
+    // TopK.TopKPayloadAggregator). Partial lists are unbounded but rows
+    // are 24-byte skinny structs; when the candidate side is a full
+    // corpus rather than a table this size, swap this aggregate for
+    // that bounded-state typed aggregator (measured trade at sf0.1:
+    // the typed path pays ~1 µs/row of encoder+buffer overhead, 2.5×
+    // this aggregate; at corpus scale the O(k) partial state is the
+    // only shape that survives).
+    val neighbors = labeled
+      .select(col("c_id"), col("c_label").cast("long").as("c_label"),
+        posexplode(AllCosines.column(
+          col("cv"), col("cn"), typedlit(flat), lit(qRows.length)))
+          .as(Seq("q_idx", "cos")))
+      .groupBy(col("q_idx"))
+      .agg(slice(array_sort(collect_list(struct(
+        (-round(col("cos"), 4)).as("ns"), col("c_id"), col("c_label")))), 1, k).as("top"))
+      .select(
+        element_at(typedlit(qIds), col("q_idx") + 1).as("q_id"),
+        element_at(typedlit(qLabels), col("q_idx") + 1).as("q_label"),
+        expr("transform(top, t -> t.c_label)").as("labels"))
     // majority vote IN-ARRAY: k is small, so the per-query vote is a
     // map-side HOF over the top-k label array — no explode, no second
     // aggregation exchange, no rank window. Winner = max votes, label
@@ -1752,7 +1556,6 @@ object Sim {
     * approx-quantile threshold when only a keep/cut verdict is needed.
     */
   def prototypicality(embeddings: DataFrame): DataFrame = {
-    val dotF = dotNative(embeddings.sparkSession) _
     val cast = embeddings.select(
       col("vec_id"), col("label"),
       col("embedding").cast("array<double>").as("v"))
@@ -1767,8 +1570,8 @@ object Sim {
     cast.join(broadcast(cents), Seq("label"))
       .select(
         col("vec_id"), col("label"),
-        round(dotF(col("v"), col("cv")) /
-          (sqrt(dotF(col("v"), col("v"))) * sqrt(dotF(col("cv"), col("cv")))), 4)
+        round(dot(col("v"), col("cv")) /
+          (norm(col("v")) * norm(col("cv"))), 4)
           .as("cos_r"))
       .withColumn("proto_rnk", row_number().over(w).cast("long"))
   }

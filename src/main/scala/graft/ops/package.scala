@@ -28,7 +28,8 @@ package graft
   *    substring-level duplication scores.
   *  - [[graft.ops.Sim]] — cosine top-k (brute force, IVF, trained
   *    k-means IVF, hyperplane LSH with multi-probe), normalization,
-  *    quantization, the codegen'd `graft_dot` bridge.
+  *    quantization, on the codegen'd `graft.plans` kernels (dot, IVF
+  *    cell ranking, PQ encoding, all-cosines scans).
   *  - [[graft.ops.Corpus]] — corpus assembly: deterministic
   *    shuffle-shard, sequence packing, PII masking, Gopher quality
   *    signals/gate, decontamination, weighted sampling, overlapping

@@ -1,5 +1,7 @@
 package graft.plans
 
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.graftbridge.ExpressionColumns.{column => toColumn, expression => toExpr}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode, FalseLiteral}
@@ -103,6 +105,10 @@ case class AllCosines(vec: Expression, nrm: Expression,
 }
 
 object AllCosines {
+
+  /** `graft_all_cos(vec, nrm, matFlat, k)` as a Column, resolved without any function registry. */
+  def column(vec: Column, nrm: Column, matFlat: Column, k: Column): Column =
+    toColumn(AllCosines(toExpr(vec), toExpr(nrm), toExpr(matFlat), toExpr(k)))
 
   /** Planning-time model: row-major k×dim query matrix with
     * precomputed L2 norms — shipped to generated code as a reference

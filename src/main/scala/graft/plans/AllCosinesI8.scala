@@ -1,5 +1,7 @@
 package graft.plans
 
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.graftbridge.ExpressionColumns.{column => toColumn, expression => toExpr}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode, FalseLiteral}
@@ -111,6 +113,10 @@ case class AllCosinesI8(codes: Expression, matFlat: Expression,
 }
 
 object AllCosinesI8 {
+
+  /** `graft_all_cos_i8(codes, matFlat, k)` as a Column, resolved without any function registry. */
+  def column(codes: Column, matFlat: Column, k: Column): Column =
+    toColumn(AllCosinesI8(toExpr(codes), toExpr(matFlat), toExpr(k)))
 
   /** Planning-time model: row-major k×dim int8 query-code matrix with
     * precomputed code norms — shipped to generated code once as a

@@ -1,5 +1,7 @@
 package graft.plans
 
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.graftbridge.ExpressionColumns.{column => toColumn, expression => toExpr}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode, FalseLiteral}
@@ -20,11 +22,10 @@ import org.apache.spark.sql.types._
   * whole expression runs INTERPRETED: measured 214 s to assign 1M
   * vectors (64 cells × 64 dims) where this kernel runs the same
   * argmax as one compiled loop over a reference-object matrix in
-  * ~4 s. The k-struct form remains the no-extension fallback in
-  * `Sim` (identical math, law-checked by the recall spec and the
-  * q_sim_ann oracle).
+  * ~4 s.
   *
-  * Semantics — EXACTLY the fallback's, so oracle parity holds:
+  * Semantics — EXACTLY the k-struct form's, which the q_sim_ann
+  * oracle restates in SQL:
   * score(cell) = round(dot(v, c) / (nrm · ‖c‖), 6) with Spark
   * `round()` rounding (BigDecimal.valueOf → HALF_UP); cells ranked
   * (score DESC, cell_id ASC); ids are the centroid-model positions.
@@ -114,6 +115,12 @@ case class CellTopIds(vec: Expression, nrm: Expression, centsFlat: Expression,
 }
 
 object CellTopIds {
+
+  /** `graft_cell_top(vec, nrm, centsFlat, k, nProbe)` as a Column, resolved without any function registry. */
+  def column(vec: Column, nrm: Column, centsFlat: Column, k: Column,
+             nProbe: Column): Column =
+    toColumn(CellTopIds(toExpr(vec), toExpr(nrm), toExpr(centsFlat), toExpr(k),
+      toExpr(nProbe)))
 
   /** Planning-time model: row-major k×dim centroid matrix with
     * precomputed L2 norms. Small (k×dim doubles) and serializable —

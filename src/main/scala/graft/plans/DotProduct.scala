@@ -1,11 +1,11 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSessionExtensions
-import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.sql.graftbridge.ExpressionColumns.{column => toColumn, expression => toExpr}
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
 
 /** Native dot product over two `array<double>` columns.
@@ -22,7 +22,7 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
   *
   * Semantics: left-fold in index order over min(len(a), len(b)) —
   * identical to the HOF form on equal-length inputs (the embedding
-  * case); NULL if either array is NULL. Null ELEMENTS are not expected
+  * case; DotProductSpec keeps that fold as its reference); NULL if either array is NULL. Null ELEMENTS are not expected
   * (embedding vectors are dense) and read as 0.0.
   */
 case class DotProduct(left: Expression, right: Expression)
@@ -78,45 +78,8 @@ case class DotProduct(left: Expression, right: Expression)
     copy(left = newLeft, right = newRight)
 }
 
-/** Session extension registering the engine's native functions.
-  * Activate with `spark.sql.extensions=graft.plans.GraftExtensions`
-  * (a static conf — must be set on the session BUILDER, not at
-  * runtime). Callers that may run in a session without the extension
-  * should fall back to the HOF formulation — see `Sim.dotNative`.
-  */
-class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction((
-      FunctionIdentifier("graft_dot"),
-      new ExpressionInfo(classOf[DotProduct].getName, "graft_dot"),
-      (children: Seq[Expression]) => DotProduct(children.head, children(1))))
-    ext.injectFunction((
-      FunctionIdentifier("graft_gopher"),
-      new ExpressionInfo(classOf[GopherStats].getName, "graft_gopher"),
-      (children: Seq[Expression]) => GopherStats(children.head)))
-    ext.injectFunction((
-      FunctionIdentifier("graft_cell_top"),
-      new ExpressionInfo(classOf[CellTopIds].getName, "graft_cell_top"),
-      (children: Seq[Expression]) => CellTopIds(
-        children(0), children(1), children(2), children(3), children(4))))
-    ext.injectFunction((
-      FunctionIdentifier("graft_all_cos"),
-      new ExpressionInfo(classOf[AllCosines].getName, "graft_all_cos"),
-      (children: Seq[Expression]) => AllCosines(
-        children(0), children(1), children(2), children(3))))
-    ext.injectFunction((
-      FunctionIdentifier("graft_all_cos_i8"),
-      new ExpressionInfo(classOf[AllCosinesI8].getName, "graft_all_cos_i8"),
-      (children: Seq[Expression]) => AllCosinesI8(
-        children(0), children(1), children(2))))
-    ext.injectFunction((
-      FunctionIdentifier("graft_seghash"),
-      new ExpressionInfo(classOf[SegHashes].getName, "graft_seghash"),
-      (children: Seq[Expression]) => SegHashes(children.head, children(1))))
-    ext.injectFunction((
-      FunctionIdentifier("graft_pq_encode"),
-      new ExpressionInfo(classOf[PqEncode].getName, "graft_pq_encode"),
-      (children: Seq[Expression]) => PqEncode(
-        children(0), children(1), children(2), children(3))))
-  }
+object DotProduct {
+
+  /** `graft_dot(a, b)` as a Column, resolved without any function registry. */
+  def column(a: Column, b: Column): Column = toColumn(DotProduct(toExpr(a), toExpr(b)))
 }

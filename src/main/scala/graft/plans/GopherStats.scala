@@ -1,5 +1,7 @@
 package graft.plans
 
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.graftbridge.ExpressionColumns.{column => toColumn, expression => toExpr}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
@@ -26,8 +28,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * Returns struct<n_words, n_nonspace, n_bigrams, n_bigrams_distinct,
   * n_digits, n_chars> (all long) — raw COUNTS only; the fractions and
   * their 4dp rounding stay in declarative SQL on top, so the
-  * oracle-visible arithmetic is shared with the HOF fallback
-  * (equivalence is law-tested in GopherStatsSpec).
+  * oracle-visible arithmetic is the same for both forms (GopherStatsSpec
+  * law-tests the kernel against the HOF form it keeps as reference).
   *
   * Semantics mirror the HOF form exactly: tokens split on the single
   * space character (U+0020) with empties dropped; `n_nonspace` and
@@ -59,6 +61,11 @@ case class GopherStats(child: Expression) extends UnaryExpression {
 }
 
 object GopherStats {
+
+  /** `graft_gopher(text)` as a Column, resolved without any function registry. */
+  def column(text: Column): Column =
+    toColumn(GopherStats(toExpr(text)))
+
   val schema: StructType = StructType(Seq(
     StructField("n_words", LongType, nullable = false),
     StructField("n_nonspace", LongType, nullable = false),

@@ -1,5 +1,7 @@
 package graft.plans
 
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.graftbridge.ExpressionColumns.{column => toColumn, expression => toExpr}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode, FalseLiteral}
@@ -104,6 +106,10 @@ case class PqEncode(vec: Expression, cbFlat: Expression,
 }
 
 object PqEncode {
+
+  /** `graft_pq_encode(vec, cbFlat, m, ks)` as a Column, resolved without any function registry. */
+  def column(vec: Column, cbFlat: Column, m: Column, ks: Column): Column =
+    toColumn(PqEncode(toExpr(vec), toExpr(cbFlat), toExpr(m), toExpr(ks)))
 
   /** Planning-time model: row-major m×ks×d reproduction vectors with
     * their ‖bv‖² pre-folded in index order — the identical doubles the

@@ -1,5 +1,7 @@
 package graft.plans
 
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.graftbridge.ExpressionColumns.{column => toColumn, expression => toExpr}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, XXH64}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -61,6 +63,10 @@ case class SegHashes(left: Expression, right: Expression)
 }
 
 object SegHashes {
+
+  /** `graft_seghash(text, segLen)` as a Column, resolved without any function registry. */
+  def column(text: Column, segLen: Column): Column =
+    toColumn(SegHashes(toExpr(text), toExpr(segLen)))
 
   private val emptyResult = new GenericArrayData(Array.empty[Long])
 

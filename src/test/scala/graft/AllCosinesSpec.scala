@@ -1,14 +1,16 @@
 package graft
 
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+import graft.ops.TopK
 import graft.plans.AllCosines
 
 /** Kernel laws for the native all-cosines expression
   * (graft.plans.AllCosines) plus the payload-carrying bounded top-k
-  * aggregator — the two halves of the kNN-vote rewrite. The
-  * DataFrame-level contract is covered by the q_knn_vote oracle; this
-  * pins the kernel math and the kernel-vs-fallback path parity.
+  * aggregator. The DataFrame-level contract is covered by the
+  * q_knn_vote oracle; this pins the kernel math and the op's parity
+  * with the broadcast-nested-loop form it replaced.
   */
 class AllCosinesSpec extends AnyFunSuite {
 
@@ -44,7 +46,7 @@ class AllCosinesSpec extends AnyFunSuite {
     val rows = Seq((1L, Some(Seq(3.0, 4.0))), (2L, None)).toDF("id", "v")
       .select(col("id"), col("v").cast("array<double>").as("v"))
       .withColumn("nrm", sqrt(expr("aggregate(transform(v, x -> x*x), 0d, (a, x) -> a + x)")))
-      .withColumn("cos", call_function("graft_all_cos",
+      .withColumn("cos", AllCosines.column(
         col("v"), col("nrm"), typedlit(qs.flatten), lit(2)))
       .select(col("id"), col("cos")).collect()
       .map(r => r.getLong(0) -> Option(r.get(1))).toMap
@@ -67,11 +69,43 @@ class AllCosinesSpec extends AnyFunSuite {
     assert(merged === direct)
   }
 
+  /** The broadcast-nested-loop form the kernel replaced: every
+    * (holdout, labeled) pair carries both vectors and is scored by the
+    * HOF dot fold, [[TopK.TopKPayloadAggregator]] keeps each holdout's
+    * k best (payload = label), and the vote (count desc, label asc)
+    * runs on the driver.
+    */
+  private def bnljKnnLabelVote(emb: DataFrame, modulus: Int, k: Int): DataFrame = {
+    def dot(a: Column, b: Column): Column =
+      aggregate(zip_with(a, b, (x, y) => x * y), lit(0.0d), (acc, x) => acc + x)
+    def side(df: DataFrame, id: String, label: String, v: String, n: String) =
+      df.select(col("vec_id").as(id), col("label").as(label), col("v").as(v),
+        sqrt(dot(col("v"), col("v"))).as(n))
+    val asDouble = emb.select(
+      col("vec_id"), col("label"), col("embedding").cast("array<double>").as("v"))
+    val holdout = pmod(col("vec_id"), lit(modulus.toLong)) === 0
+    side(asDouble.filter(!holdout), "c_id", "c_label", "cv", "cn")
+      .join(broadcast(side(asDouble.filter(holdout), "q_id", "q_label", "qv", "qn")), lit(true))
+      .select(
+        col("q_id"), col("q_label"), col("c_id"), col("c_label").cast("long"),
+        round(dot(col("qv"), col("cv")) / (col("qn") * col("cn")), 4).as("cos_r"))
+      .as[(Long, Int, Long, Long, Double)]
+      .groupByKey { case (qId, qLabel, _, _, _) => (qId, qLabel) }
+      .mapValues { case (_, _, cId, cLabel, cos) => (cos, cId, cLabel) }
+      .agg(new TopK.TopKPayloadAggregator(k).toColumn.name("top"))
+      .map { case ((qId, qLabel), top) =>
+        val (pred, votes) = top.groupBy(_._3).map { case (l, ns) => (l, ns.size) }
+          .maxBy { case (l, n) => (n, -l) }
+        (qId, qLabel, pred.toInt, votes.toLong, if (pred == qLabel) 1L else 0L)
+      }
+      .toDF("vec_id", "label", "pred_label", "votes", "correct")
+  }
+
   test("knnLabelVote: kernel path and BNLJ fallback agree row-for-row") {
     val emb = Tables.embeddings(spark, "/root/testdata/sf0.001")
-    val a = graft.ops.Sim.knnLabelVoteImpl(emb, 10, 5, useKernel = true)
+    val a = graft.ops.Sim.knnLabelVote(emb, 10, 5)
       .orderBy(col("vec_id")).collect().toSeq
-    val b = graft.ops.Sim.knnLabelVoteImpl(emb, 10, 5, useKernel = false)
+    val b = bnljKnnLabelVote(emb, 10, 5)
       .orderBy(col("vec_id")).collect().toSeq
     assert(a.nonEmpty && a === b)
   }

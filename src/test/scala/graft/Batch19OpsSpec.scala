@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.ops.{Dedup, Multimodal, Relational, Sim, Text}
@@ -176,14 +178,49 @@ class Batch19OpsSpec extends AnyFunSuite {
       f.dataType == ArrayType(DoubleType) || f.dataType == ArrayType(FloatType)))
   }
 
+  /** The HOF form the graft_all_cos_i8 kernel replaced: exact integer
+    * dots of every candidate's codes against broadcast query codes
+    * (the index's own rows below nQueries), then the same shortlist
+    * and full-precision refine, every fold an interpreted HOF.
+    */
+  private def sqHofReference(emb: DataFrame, nQueries: Int, k: Int,
+                             shortlist: Int): DataFrame = {
+    def idot(a: Column, b: Column): Column =
+      aggregate(zip_with(a, b, (x, y) => (x * y).cast("long")), lit(0L), (acc, x) => acc + x)
+    def dot(a: Column, b: Column): Column =
+      aggregate(zip_with(a, b, (x, y) => x * y), lit(0.0d), (acc, x) => acc + x)
+    def top(n: Int, score: String)(df: DataFrame): DataFrame = df
+      .withColumn("rnk", row_number().over(Window.partitionBy(col("q_id"))
+        .orderBy(col(score).desc, col("c_id").asc)).cast("long"))
+      .filter(col("rnk") <= n)
+    val asDouble = emb.select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
+    val index = Sim.sqIndex(asDouble).withColumn("ci", col("codes").cast("array<int>"))
+    val qCodes = index.filter(col("c_id") < nQueries)
+      .select(col("c_id").as("q_id"), col("ci").as("qc"))
+    val short = index.join(broadcast(qCodes), col("q_id") =!= col("c_id"))
+      .select(col("q_id"), col("c_id"),
+        round(idot(col("qc"), col("ci")).cast("double") /
+          (sqrt(idot(col("qc"), col("qc")).cast("double")) *
+           sqrt(idot(col("ci"), col("ci")).cast("double"))), 6).as("adc_r"))
+      .transform(top(shortlist, "adc_r"))
+      .select(col("q_id"), col("c_id"))
+    val vecs = asDouble.withColumn("n", sqrt(dot(col("v"), col("v"))))
+    short
+      .join(vecs.select(col("vec_id").as("c_id"), col("v").as("cv"), col("n").as("cn")), Seq("c_id"))
+      .join(vecs.select(col("vec_id").as("q_id"), col("v").as("qv"), col("n").as("qn")), Seq("q_id"))
+      .select(col("q_id"), col("c_id"),
+        round(dot(col("qv"), col("cv")) / (col("qn") * col("cn")), 4).as("cos_r"))
+      .transform(top(k, "cos_r"))
+  }
+
   test("cosineTopKSq kernel and HOF fallback agree bit-for-bit") {
-    // integer dots are exact, so the two paths must match EXACTLY,
+    // integer dots are exact, so the two forms must match EXACTLY,
     // not just approximately — this is the cross-path determinism pin
     val emb = Tables.embeddings(spark, "/root/testdata/sf0.001")
-    val withKernel = Sim.cosineTopKSqImpl(emb, 4, 4, 12, useKernel = true)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getLong(3))).toSet
-    val viaHof = Sim.cosineTopKSqImpl(emb, 4, 4, 12, useKernel = false)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getLong(3))).toSet
+    def rows(df: DataFrame) =
+      df.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getLong(3))).toSet
+    val withKernel = rows(Sim.cosineTopKSq(emb, 4, 4, 12))
+    val viaHof = rows(sqHofReference(emb, 4, 4, 12))
     assert(withKernel.nonEmpty && withKernel === viaHof)
     CacheScope.flush()
   }

@@ -6,8 +6,8 @@ import graft.plans.CellTopIds
 
 /** Kernel laws for the native IVF cell-ranking expression
   * (graft.plans.CellTopIds) — the codegen'd replacement for the
-  * k-struct greatest/sort_array forms (which stay as the no-extension
-  * fallback in Sim). The DataFrame-level contract (assignment feeding
+  * k-struct greatest/sort_array forms, whose semantics the reference
+  * ranking below restates. The DataFrame-level contract (assignment feeding
   * search, recall) is covered by KmeansIvfSpec and the q_sim_ann
   * oracles; this pins the kernel itself.
   */
@@ -71,7 +71,7 @@ class CellTopIdsSpec extends AnyFunSuite {
       (1L, Some(Seq(0.1, 0.9))), (2L, None)).toDF("id", "v")
       .select(col("id"), col("v").cast("array<double>").as("v"))
       .withColumn("nrm", sqrt(expr("aggregate(transform(v, x -> x*x), 0d, (a, x) -> a + x)")))
-      .withColumn("cells", call_function("graft_cell_top",
+      .withColumn("cells", CellTopIds.column(
         col("v"), col("nrm"), typedlit(cents.flatten), lit(2), lit(1)))
     val rows = df.select(col("id"), col("cells")).collect()
       .map(r => r.getLong(0) -> Option(r.get(1))).toMap

@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+import graft.plans.GopherStats
 
 /** Law-pins the native graft_gopher kernel (plans/GopherStats.scala)
   * against the declarative HOF formulation it replaces: identical raw
@@ -37,12 +38,11 @@ class GopherStatsSpec extends AnyFunSuite {
   }
 
   private def nativeCounts(df: org.apache.spark.sql.DataFrame) =
-    df.select(col("id"), call_function("graft_gopher", col("text")).as("g"))
+    df.select(col("id"), GopherStats.column(col("text")).as("g"))
       .select(col("id"), col("g.n_words"), col("g.n_nonspace"), col("g.n_bigrams"),
         col("g.n_bigrams_distinct"), col("g.n_digits"), col("g.n_chars"))
 
   test("kernel == HOF on the sf0.001 documents corpus") {
-    assert(spark.catalog.functionExists("graft_gopher"))
     val docs = Tables.documents(spark, "/root/testdata/sf0.001")
       .select(col("doc_id").as("id"), col("text"))
     val n = nativeCounts(docs)

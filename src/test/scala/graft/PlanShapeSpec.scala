@@ -420,11 +420,9 @@ class PlanShapeSpec extends AnyFunSuite {
       .map(i => (i, Array.tabulate(8)(j => ((i * 31 + j * 7) % 13).toFloat), 0))
       .toDF("vec_id", "embedding", "label")
     val p = plan(graft.ops.Sim.maxSimTopK(emb, groupEvery = 4, nQueryDocs = 2, k = 3))
-    if (spark.catalog.functionExists("graft_all_cos")) {
-      assert(!p.contains("BroadcastNestedLoopJoin"),
-        s"maxSim fell back to the BNLJ pair stream despite the kernel:\n$p")
-      assert(p.contains("graft_all_cos"), p)
-    }
+    assert(!p.contains("BroadcastNestedLoopJoin"),
+      s"maxSim fell back to the BNLJ pair stream despite the kernel:\n$p")
+    assert(p.contains("graft_all_cos"), p)
   }
 
   test("no declared query windows partition-less over an unbounded input") {
@@ -524,5 +522,39 @@ class PlanShapeSpec extends AnyFunSuite {
       s"candidates shuffled for the query join:\n$p")
     assert(p.contains("BroadcastHashJoin"), p)
     CacheScope.flush()
+  }
+
+  // Every public op that owns a graft.plans kernel must reach it in a
+  // session built WITHOUT spark.sql.extensions: the kernels are plain
+  // Columns over their expressions, never resolved by name, so no
+  // session can silently route an op onto a slower declarative twin.
+  private lazy val kernelEmb = Tables.embeddings(spark, "/root/testdata/sf0.001")
+  private lazy val kernelDocs = Tables.documents(spark, "/root/testdata/sf0.001")
+    .select(col("doc_id"), col("text"))
+  private val kernelReach: Seq[(String, String, () => DataFrame)] = Seq(
+    ("ivfAssign", "graft_cell_top", () => graft.ops.Sim.ivfAssign(kernelEmb,
+      (0L until 4L).map(c => (c, Array.tabulate(64)(j => ((c * 5 + j) % 7).toDouble))))),
+    ("knnLabelVote", "graft_all_cos", () => graft.ops.Sim.knnLabelVote(kernelEmb, 10, 5)),
+    ("maxSimTopK", "graft_all_cos", () =>
+      graft.ops.Sim.maxSimTopK(kernelEmb, groupEvery = 4, nQueryDocs = 2, k = 3)),
+    ("cosineTopKSq", "graft_all_cos_i8", () =>
+      graft.ops.Sim.cosineTopKSq(kernelEmb, nQueries = 4, k = 4, shortlist = 12)),
+    ("cosineTopKIvfPq", "graft_pq_encode", () => graft.ops.Sim.cosineTopKIvfPq(kernelEmb,
+      nQueries = 4, k = 3, nCells = 4, m = 8, ks = 4, iters = 2, nProbe = 2)),
+    ("randomProjection", "graft_dot", () =>
+      graft.ops.Sim.randomProjection(kernelEmb, inDim = 64, outDim = 16)),
+    ("boilerplate", "graft_seghash", () => Corpus.boilerplate(kernelDocs, segLen = 5, minDocs = 2)),
+    ("gopherSignals", "graft_gopher", () => Corpus.gopherSignals(kernelDocs)))
+
+  for ((op, kernel, build) <- kernelReach) {
+    test(s"kernel reach: $op runs $kernel in a session without spark.sql.extensions") {
+      assert(spark.sparkContext.getConf.getOption("spark.sql.extensions").isEmpty &&
+        spark.conf.getOption("spark.sql.extensions").isEmpty)
+      val df = build()
+      assert(df.collect().nonEmpty, s"$op returned no rows")
+      val p = plan(df)
+      assert(p.contains(kernel), s"$op did not run $kernel:\n$p")
+      CacheScope.flush()
+    }
   }
 }

@@ -5,8 +5,8 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.plans.PqEncode
 
 /** Kernel laws for the native PQ encoder (graft.plans.PqEncode) — the
-  * compiled replacement for the m×ks least-of-structs form (which
-  * stays as the no-extension fallback in Sim.pqCodes). The
+  * compiled replacement for the m×ks least-of-structs form, whose
+  * semantics `referenceCodes` below restates. The
   * DataFrame-level contract is covered by KmeansIvfSpec and the
   * q_sim_ann_pq oracle; this pins the kernel itself, in particular the
   * monotone-round shortcut's exact equivalence to rounding every

@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+import graft.plans.SegHashes
 
 /** Law-pins the native graft_seghash kernel (plans/SegHashes.scala)
   * against the declarative chain it replaces —
@@ -29,10 +30,9 @@ class SegHashesSpec extends AnyFunSuite {
 
   private def native(df: org.apache.spark.sql.DataFrame, segLen: Int) =
     df.select(col("id"),
-      call_function("graft_seghash", col("text"), lit(segLen)).as("hashes"))
+      SegHashes.column(col("text"), lit(segLen)).as("hashes"))
 
   test("kernel == declarative chain on the sf0.001 documents corpus") {
-    assert(spark.catalog.functionExists("graft_seghash"))
     val docs = Tables.documents(spark, "/root/testdata/sf0.001")
       .select(col("doc_id").as("id"), col("text"))
     for (segLen <- Seq(3, 5)) {
@@ -69,10 +69,8 @@ class SegHashesSpec extends AnyFunSuite {
     val docs = Tables.documents(spark, "/root/testdata/sf0.001")
       .select(col("doc_id"), col("text"))
     val viaKernel = ops.Corpus.boilerplate(docs, segLen = 5, minDocs = 2)
-    // force the fallback by hiding the function behind a session clone
-    // is heavier than re-deriving: the declarative segs are already
-    // pinned hash-identical above, so compare against a hand-built
-    // fallback-equivalent here
+    // the operator's pipeline rebuilt over the declarative segment
+    // keys (pinned hash-identical above) as the reference
     val toks = filter(split(col("text"), " "), t => t =!= "")
     val segs = docs
       .select(col("doc_id"), toks.as("toks"))
