@@ -1,32 +1,25 @@
 package graft
 import java.util.concurrent.atomic.AtomicLong
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
-import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-    Tables.builderConfigs.foreach { case (k, v) => builder.config(k, v) }
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
+    val spark = Tables.localSession(cpus)
     // AQE OFF for this measurement workload — a deliberate, per-session
     // choice, not an engine default (Tables.builderConfigs keeps AQE on:
     // at 100 TB its skew-join splitting and size-targeted reducer
     // coalescing are exactly what the plans are designed around). AQE
     // executes a query stage-by-stage, materializing every exchange as
     // its own job; on this host a job launch costs a measured ~70-90 ms
-    // (ProfCc "floor" mode), so for a 136-query set of sub-second
-    // sf0.1 queries over 4 shuffle partitions — where there is nothing
-    // to adapt — AQE is pure fixed cost: measured 38.6 s (on) vs
-    // 32.3 s (off) on the same build, identical results. Disabling the
-    // runtime re-planner for small interactive queries is the same
+    // (timed on trivial one-job queries), so for a 136-query set of
+    // sub-second sf0.1 queries over 4 shuffle partitions — where there
+    // is nothing to adapt — AQE is pure fixed cost: measured 38.6 s (on)
+    // vs 32.3 s (off) on the same build, identical results. Disabling
+    // the runtime re-planner for small interactive queries is the same
     // per-workload call a warehouse operator makes; the detail line
-    // carries an "aqe" field so the config is explicit in the artifact,
-    // and SPARK_GRAFT_EXTRA_CONF=spark.sql.adaptive.enabled=true
-    // reproduces the AQE-on number.
-    builder.config("spark.sql.adaptive.enabled", "false")
+    // carries an "aqe" field so the config is explicit in the artifact.
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
     // Reducer count sized to the MEASURED shuffle volumes, the same
     // call a warehouse operator makes when AQE is off: every query in
     // this set shuffles ≤16 MB (shuffle_write_mb in the detail file),
@@ -36,19 +29,11 @@ object Bench {
     // runtime coalescing reaches the same partition counts but its
     // stage-by-stage job materialization costs more than it saves
     // here: 34.6 s measured with parallelismFirst=false). The engine
-    // default stays data-proportional (builder above: one reducer per
-    // core; at 100 TB, AQE-on sizes reducers by its 64 MB advisory
-    // target) — this is a per-workload measurement knob, visible in
-    // the artifact and overridable via SPARK_GRAFT_EXTRA_CONF.
-    builder.config("spark.sql.shuffle.partitions",
-      math.min(8, cpus.toInt).toString)
-    // experiment hook: SPARK_GRAFT_EXTRA_CONF="key=value;key=value"
-    sys.env.get("SPARK_GRAFT_EXTRA_CONF").foreach { s =>
-      s.split(';').filter(_.contains('=')).foreach { kv =>
-        val Array(k, v) = kv.split("=", 2); builder.config(k, v)
-      }
-    }
-    val spark = builder.getOrCreate()
+    // default stays data-proportional (Tables.localSession: one reducer
+    // per core; at 100 TB, AQE-on sizes reducers by its 64 MB advisory
+    // target) — this is a per-workload measurement setting, visible in
+    // the artifact.
+    spark.conf.set("spark.sql.shuffle.partitions", math.min(8, cpus).toString)
     spark.sparkContext.setLogLevel("WARN")
     // Host-capacity probe, published in the artifact: this host is
     // capacity-throttled for hours at a time (measured 17-27 effective
@@ -80,8 +65,8 @@ object Bench {
     val shuffleWrite = new AtomicLong
     // ... and cumulative job count: with AQE each exchange materializes
     // as its own job, and this harness pays a measured ~60-100 ms of
-    // fixed driver cost per job (ProfCc "floor" mode) — so the
-    // per-query job count IS the floor model for the sub-second
+    // fixed driver cost per job (timed on trivial one-job queries) — so
+    // the per-query job count IS the floor model for the sub-second
     // queries, published per query in BENCH_DETAIL.json.
     val jobCount = new AtomicLong
     spark.sparkContext.addSparkListener(new SparkListener {
@@ -186,8 +171,9 @@ object Bench {
       val uncached = scala.collection.mutable.ArrayBuffer[Double]()
       val cachedTs = scala.collection.mutable.ArrayBuffer[Double]()
       // driver-side construct phase (query-body return time) of each
-      // uncached sample — the PlanCost 'construct' split, published
-      // per query so the residual Catalyst floor is a measurement
+      // uncached sample — the construct half of construct/execute,
+      // published per query so the residual Catalyst floor is a
+      // measurement
       val constructTs = scala.collection.mutable.ArrayBuffer[Double]()
     }
     val names = selected.keys.toSeq.sorted
@@ -484,8 +470,8 @@ object Bench {
     // per-query job-launch + single-exchange floor (~0.2-0.3 s/job on
     // this host), not a scale defect — DuckDB's in-process scheduler
     // has no such floor at sf0.1, and the gap inverts under the 8-way
-    // throughput run where the floor amortizes. Audited round 7 with
-    // graft.JobProfile (steady reps, per-job walls).
+    // throughput run where the floor amortizes. Audited round 7 from
+    // per-job wall times over steady reps.
     val floorNotes = Map(
       "q_cooccur" -> "r13 JobProfile: 2 jobs - the cached per-container distinct-set build (0.39-0.69s cold-ish, the operator's real work, re-paid per sample by design) + the marginals/pair join (0.14-0.32s); bench-condition 0.29s. DuckDB's 36ms is the same work with no job floor and its sets in-process; no plan defect - the pair algebra is bounded by containers^2",
       "q_outliers" -> "2 jobs at ~0.08s each steady; one broadcast stats-join-back - the 100TB shape",
@@ -550,7 +536,7 @@ object Bench {
     val floorNotesJson = floorNotes
       .map { case (k, v) => "\"" + k + "\":\"" + esc(v) + "\"" }
       .mkString("{", ",", "}")
-    // PlanCost sweep (r13 verdict item 1): per-query driver-side
+    // Construct sweep (r13 verdict item 1): per-query driver-side
     // construct time (min over the steady samples' query-body return
     // times), worst 10 published so the residual Catalyst-construct
     // floor is a tracked measurement, not an inference

@@ -23,7 +23,7 @@ private[graft] object EntryQueriesD {
       val s = ensure(s0)
       // construct-plan memo: the 5 unrolled power iterations build a
       // deeply-nested tree whose EAGER per-transform analysis was the
-      // query's measured cost (PlanCost r10: execute 0.4-0.6s, the
+      // query's measured cost (r10: execute 0.4-0.6s, the
       // rest driver-side construction) — memoized per (dir) so repeat
       // constructs are a map lookup; execution still fully re-runs per
       // sample (EntrySupport.memoPlan scaladoc)

@@ -195,10 +195,6 @@ private[graft] object EntrySupport {
     * Cached because the CC pipeline consumes it twice (shingles +
     * final keeper join).
     */
-  /** ProfCc's phase-profiling entry into the q_dedup_cc corpus. */
-  private[graft] def chainCorpusForProf(s: SparkSession, dir: String): DataFrame =
-    chainCorpus(s, dir, cap = 500)
-
   private[graft] def chainCorpus(s: SparkSession, dir: String, cap: Long): DataFrame = {
     val path = tmpDir(s"chain_$cap", dir)
     Sinks.ensureWritten(chainFrame(s, dir, cap), path)

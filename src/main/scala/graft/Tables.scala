@@ -92,6 +92,24 @@ object Tables {
     "spark.sql.codegen.cache.maxEntries" -> "8192"
   )
 
+  /** The one local session builder: `local[cpus]`, one shuffle
+    * partition per core, no UI, [[builderConfigs]], and a throwaway
+    * warehouse dir so `saveAsTable` targets (bucketed indexes) never
+    * land in the working directory. Smoke, Verify, Bench, ScaleStress
+    * and the test session all build through here; a caller that wants
+    * a different runtime SQL conf sets it on the returned session.
+    */
+  def localSession(cpus: Int): SparkSession = {
+    val builder = SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus.toString)
+      .config("spark.ui.enabled", "false")
+      .config("spark.sql.warehouse.dir",
+        java.nio.file.Files.createTempDirectory("graft-warehouse").toString)
+    builderConfigs.foreach { case (k, v) => builder.config(k, v) }
+    builder.getOrCreate()
+  }
+
   /** Parquet schema per path, inferred once per JVM. A catalog-backed
     * deployment owns table schemas; re-running footer-based inference
     * on every query is a per-query driver tax (a footer read, and a
@@ -116,15 +134,12 @@ object Tables {
     */
   private val spreadTables = Set("events", "documents", "embeddings", "lineitem")
 
-  /** Spread width for [[spreadTables]] — `SPARK_GRAFT_SPREAD` overrides
-    * (0 disables; measurement knob, same spirit as
-    * SPARK_GRAFT_EXTRA_CONF). Default: the data-proportional
+  /** Spread width for [[spreadTables]]: the data-proportional
     * [[fanWidth]] of the table's own bytes — fan-out tracks input
     * volume at every scale instead of a constant.
     */
   private def spreadParts(spark: SparkSession, path: String, targetMult: Double): Int =
-    sys.env.get("SPARK_GRAFT_SPREAD").map(_.toInt)
-      .getOrElse(fanWidth(spark, pathBytes(spark, path), targetMult))
+    fanWidth(spark, pathBytes(spark, path), targetMult)
 
   /** Bytes on disk under `path` (recursive), memoized — static inputs
     * and write-once fixtures by design; [[invalidatePath]] evicts when
@@ -157,8 +172,8 @@ object Tables {
     * whose launch overhead exceeds their work (the measured 8-vs-32
     * core inversion). At production scale the byte term exceeds any
     * core count and the clamp hands back exactly the old behavior:
-    * width = cluster parallelism. The target is a conf so the A/B is
-    * one EXTRA_CONF flag, not a rebuild.
+    * width = cluster parallelism. The target is a runtime SQL conf, so
+    * an A/B is one `spark.conf.set` on a live session, not a rebuild.
     */
   def fanWidth(spark: SparkSession, bytes: Long, targetMult: Double = 1.0): Int = {
     val target = math.max(1L, (targetMult *
@@ -182,12 +197,13 @@ object Tables {
   /** Analyzed-relation memo per (session, path, spread). A fresh
     * `spark.read.parquet` pays a footer schema-merge JOB plus a file
     * listing at EVERY query construction — sampled at ~20% of the
-    * whole bench's driver-side plan time across 202 queries
-    * (graft.ConstructProf). A catalog-backed deployment resolves a
-    * table to its relation once and serves it to every query; this
-    * memo is that catalog. Static under a live session by design
-    * (testdata and write-once fixtures); [[invalidatePath]] drops
-    * entries when a writer does rewrite a path.
+    * whole bench's driver-side plan time across 202 queries (timed
+    * around query construction, before execution). A catalog-backed
+    * deployment resolves a table to its relation once and serves it
+    * to every query; this memo is that catalog. Static under a live
+    * session by design (testdata and write-once fixtures);
+    * [[invalidatePath]] drops entries when a writer does rewrite a
+    * path.
     */
   private val dfCache =
     new java.util.concurrent.ConcurrentHashMap[(String, String, Int), DataFrame]()

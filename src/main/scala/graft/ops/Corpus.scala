@@ -697,8 +697,8 @@ object Corpus {
     // them back into exactly this single projection every sample — so
     // the collapsed form is the identical optimized plan minus six
     // driver-side analysis passes per construct (the bench's uncached
-    // column pays construct per sample; ConstructProf shows generic
-    // Catalyst tree-walking as the family's construct cost).
+    // column pays construct per sample; a construct profile shows
+    // generic Catalyst tree-walking as the family's construct cost).
     val bad = litCount(col("html"), "<script") =!=
       litCount(col("html"), "</script>")
     val nos = regexp_replace(

@@ -296,8 +296,6 @@ object Dedup {
       .select(col("doc_id"), col("hs"), col("sz"), col("minhashes"))
   }
 
-  private[graft] def minhashSignaturesFromHashedP(hashed: org.apache.spark.sql.DataFrame, numHashes: Int): org.apache.spark.sql.DataFrame = minhashSignaturesFromHashed(hashed, numHashes)
-  private[graft] def lshCandidatesFromSigsP(s: org.apache.spark.sql.DataFrame, n: Int, b: Int): org.apache.spark.sql.DataFrame = lshCandidatesFromSigs(s, n, b)
   private def minhashSignaturesFromHashed(hashed: DataFrame, numHashes: Int): DataFrame = {
     val mins = (0 until numHashes).map { s =>
       min(expr(s"((${37 + 101 * s} * h + ${13 + 97 * s}) % 2147483647)")).as(s"mh$s")

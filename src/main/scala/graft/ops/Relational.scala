@@ -238,14 +238,10 @@ object Relational {
     *  - rows ≤ `maxWindowRows` (bounded; default [[NtileWindowMaxRows]]):
     *    the plain window — cheapest at interactive size, and safe
     *    because the bound caps the single task's working set;
-    *  - larger: `repartitionByRange` on the order keys (balanced,
-    *    monotone partitions), a PARTITIONED row_number window for
-    *    local ranks, and per-partition offsets from a
-    *    cluster-parallelism-sized count table collected to the driver
-    *    (bounded: one row per partition). Global rank = offset +
-    *    local rank is EXACT for any monotone partitioning, so the
-    *    band arithmetic below reproduces ntile bit-for-bit — no
-    *    approx-quantile drift, the oracle stays hash-green.
+    *  - larger: the exact global rank of [[scaleRowNumber]]
+    *    (range-partitioned, never one task), so the band arithmetic
+    *    below reproduces ntile bit-for-bit — no approx-quantile
+    *    drift, the oracle stays hash-green.
     *
     * The rank→band arithmetic is ntile's contract: with N rows and n
     * bands, the first N % n bands get ⌈N/n⌉ rows, the rest ⌊N/n⌋.
@@ -276,19 +272,7 @@ object Relational {
       df.withColumn(out,
         ntile(n).over(Window.orderBy(orderKeys: _*)).cast("long"))
     } else {
-      val parts = df.sparkSession.sparkContext.defaultParallelism
-      val ranged = graft.CacheScope.cached(
-        graft.CacheScope.cached(df).repartitionByRange(parts, orderKeys: _*)
-          .withColumn("__pid", spark_partition_id()))
-      // one row per partition — bounded by cluster parallelism, the
-      // same documented collect family as broadcast model builds
-      val cnt = ranged.groupBy(col("__pid")).count().collect()
-        .map(r => r.getInt(0) -> r.getLong(1)).toMap
-      val offsets = new Array[Long](parts)
-      var acc = 0L
-      (0 until parts).foreach { p => offsets(p) = acc; acc += cnt.getOrElse(p, 0L) }
-      val rank = element_at(typedlit(offsets.toSeq), col("__pid") + 1) +
-        row_number().over(Window.partitionBy(col("__pid")).orderBy(orderKeys: _*))
+      val rank = col("__rank")
       // exact ntile arithmetic from (rank, N): ceilDiv stays exact in
       // double math for N < 2^52
       def ceilDiv(a: Column, b: Long): Column =
@@ -299,7 +283,8 @@ object Relational {
         else if (rem == 0) ceilDiv(rank, q)
         else when(rank <= rem * (q + 1), ceilDiv(rank, q + 1))
           .otherwise(lit(rem) + ceilDiv(rank - rem * (q + 1), q))
-      ranged.withColumn(out, band.cast("long")).drop("__pid")
+      scaleRowNumber(df, orderKeys, "__rank")
+        .withColumn(out, band.cast("long")).drop("__rank")
     }
   }
 
@@ -309,10 +294,10 @@ object Relational {
     * per-partition offsets from a bounded one-row-per-partition count
     * collected to the driver. Global rank = offset + local rank is
     * EXACT for any monotone partitioning, so the result is
-    * bit-identical to the partition-less window it replaces (the same
-    * construction [[bandedNtile]]'s scale path uses, factored out for
-    * rank-only callers — Text.zipfFit's vocabulary rank). Requires
-    * `orderKeys` to be a total order over the input.
+    * bit-identical to the partition-less window it replaces.
+    * [[bandedNtile]]'s scale path bands this rank; Text.zipfFit ranks
+    * its vocabulary with it. Requires `orderKeys` to be a total order
+    * over the input.
     */
   def scaleRowNumber(df: DataFrame, orderKeys: Seq[Column], out: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
@@ -320,6 +305,8 @@ object Relational {
     val ranged = graft.CacheScope.cached(
       graft.CacheScope.cached(df).repartitionByRange(parts, orderKeys: _*)
         .withColumn("__pid", spark_partition_id()))
+    // one row per partition — bounded by cluster parallelism, the
+    // same documented collect family as broadcast model builds
     val cnt = ranged.groupBy(col("__pid")).count().collect()
       .map(r => r.getInt(0) -> r.getLong(1)).toMap
     val offsets = new Array[Long](parts)

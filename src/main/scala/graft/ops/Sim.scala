@@ -1477,13 +1477,11 @@ object Sim {
     // top-k per query: the codegen'd expression form (collect_list →
     // array_sort → slice; struct packs (-cos, c_id) so the natural
     // ASC sort is cos DESC, id ASC — the same ordering contract as
-    // TopK.TopKPayloadAggregator). Partial lists are unbounded but rows
-    // are 24-byte skinny structs; when the candidate side is a full
-    // corpus rather than a table this size, swap this aggregate for
-    // that bounded-state typed aggregator (measured trade at sf0.1:
-    // the typed path pays ~1 µs/row of encoder+buffer overhead, 2.5×
-    // this aggregate; at corpus scale the O(k) partial state is the
-    // only shape that survives).
+    // TopK.TopKAggregator). Partial lists are unbounded but rows are
+    // 24-byte skinny structs. A bounded-state typed aggregator with
+    // the label as payload caps each partial at k, but measured ~1
+    // µs/row of encoder+buffer overhead at sf0.1, 2.5× this aggregate;
+    // it pays off only once the candidate side is a full corpus.
     val neighbors = labeled
       .select(col("c_id"), col("c_label").cast("long").as("c_label"),
         posexplode(AllCosines.column(

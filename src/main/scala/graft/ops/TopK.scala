@@ -52,35 +52,6 @@ object TopK {
     override def outputEncoder: Encoder[Seq[(Double, Long)]] = bufferEncoder
   }
 
-  /** [[TopKAggregator]] with a rider: each (score, id) entry carries an
-    * opaque Long payload that plays no part in the ordering (score DESC,
-    * id ASC) but travels with its row through the bounded buffer — the
-    * shape a kNN vote needs (payload = neighbor's class label) and, in
-    * general, any top-k whose consumer wants one more column than the
-    * ranking key. Same O(k) partial state per group per task.
-    */
-  final class TopKPayloadAggregator(k: Int)
-      extends Aggregator[(Double, Long, Long), Seq[(Double, Long, Long)], Seq[(Double, Long, Long)]] {
-    require(k > 0, "top-k needs k > 0")
-    private def better(a: (Double, Long, Long), b: (Double, Long, Long)): Boolean =
-      a._1 > b._1 || (a._1 == b._1 && a._2 < b._2)
-    private def insertP(buf: Seq[(Double, Long, Long)], x: (Double, Long, Long)): Seq[(Double, Long, Long)] =
-      if (buf.size >= k && better(buf.last, x)) buf
-      else {
-        val (front, back) = buf.span(better(_, x))
-        (front :+ x) ++ back.take(k - front.size - 1)
-      }
-    override def zero: Seq[(Double, Long, Long)] = Vector.empty
-    override def reduce(b: Seq[(Double, Long, Long)], a: (Double, Long, Long)): Seq[(Double, Long, Long)] =
-      insertP(b, a)
-    override def merge(b1: Seq[(Double, Long, Long)], b2: Seq[(Double, Long, Long)]): Seq[(Double, Long, Long)] =
-      b2.foldLeft(b1)(insertP)
-    override def finish(r: Seq[(Double, Long, Long)]): Seq[(Double, Long, Long)] = r
-    override def bufferEncoder: Encoder[Seq[(Double, Long, Long)]] =
-      org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Seq[(Double, Long, Long)]]()
-    override def outputEncoder: Encoder[Seq[(Double, Long, Long)]] = bufferEncoder
-  }
-
   /** DataFrame-level exact top-k per group with built-in aggregates:
     * rows become (score, id) structs, collect_list gathers each
     * group's structs, and sort+slice applies ONLY AFTER the final

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Dev harness: run the scale-critical operators on a SYNTHETIC corpus
@@ -16,20 +15,16 @@ import org.apache.spark.sql.functions._
   * member, giving known near-dup cliques (J ≈ 29/33 ≈ 0.88 between
   * members) at a known rate, with the rest of the corpus collision-free.
   *
-  * Usage: sbt "runMain graft.ScaleStress [nDocs] [dupFrac]"
+  * Usage: sbt "runMain graft.ScaleStress [nDocs] [dupFrac]" with
+  * `SPARK_GRAFT_CPUS` cores (default 4) and `SPARK_DRIVER_MEM` heap
+  * (the forked JVM's -Xmx, build.sbt; a 1M-doc run wants tens of GB).
   */
 object ScaleStress {
   def main(args: Array[String]): Unit = {
     val nDocs = if (args.length > 0) args(0).toLong else 1000000L
     val dupFrac = if (args.length > 1) args(1).toDouble else 0.02
     val clusterSize = 4L
-    val builder = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.driver.memory", "48g")
-      .config("spark.ui.enabled", "false")
-    Tables.builderConfigs.foreach { case (k, v) => builder.config(k, v) }
-    val spark = builder.getOrCreate()
+    val spark = Tables.localSession(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt)
     spark.sparkContext.setLogLevel("WARN")
 
     // dup share: the first `nDocs*dupFrac` ids form clusters of 4

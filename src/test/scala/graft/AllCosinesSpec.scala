@@ -1,9 +1,9 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Encoder}
+import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import graft.ops.TopK
 import graft.plans.AllCosines
 
 /** Kernel laws for the native all-cosines expression
@@ -56,7 +56,7 @@ class AllCosinesSpec extends AnyFunSuite {
   }
 
   test("TopKPayloadAggregator: bounded insert keeps (score desc, id asc), payload rides") {
-    val agg = new graft.ops.TopK.TopKPayloadAggregator(3)
+    val agg = new AllCosinesSpec.TopKPayloadAggregator(3)
     val items = Seq(
       (0.5, 10L, 100L), (0.9, 3L, 300L), (0.9, 1L, 111L),
       (0.1, 7L, 700L), (0.7, 2L, 200L), (0.9, 5L, 500L))
@@ -71,7 +71,7 @@ class AllCosinesSpec extends AnyFunSuite {
 
   /** The broadcast-nested-loop form the kernel replaced: every
     * (holdout, labeled) pair carries both vectors and is scored by the
-    * HOF dot fold, [[TopK.TopKPayloadAggregator]] keeps each holdout's
+    * HOF dot fold, [[AllCosinesSpec.TopKPayloadAggregator]] keeps each holdout's
     * k best (payload = label), and the vote (count desc, label asc)
     * runs on the driver.
     */
@@ -92,7 +92,7 @@ class AllCosinesSpec extends AnyFunSuite {
       .as[(Long, Int, Long, Long, Double)]
       .groupByKey { case (qId, qLabel, _, _, _) => (qId, qLabel) }
       .mapValues { case (_, _, cId, cLabel, cos) => (cos, cId, cLabel) }
-      .agg(new TopK.TopKPayloadAggregator(k).toColumn.name("top"))
+      .agg(new AllCosinesSpec.TopKPayloadAggregator(k).toColumn.name("top"))
       .map { case ((qId, qLabel), top) =>
         val (pred, votes) = top.groupBy(_._3).map { case (l, ns) => (l, ns.size) }
           .maxBy { case (l, n) => (n, -l) }
@@ -108,5 +108,37 @@ class AllCosinesSpec extends AnyFunSuite {
     val b = bnljKnnLabelVote(emb, 10, 5)
       .orderBy(col("vec_id")).collect().toSeq
     assert(a.nonEmpty && a === b)
+  }
+}
+
+object AllCosinesSpec {
+
+  /** [[graft.ops.TopK.TopKAggregator]] with a rider: each (score, id)
+    * entry carries an opaque Long payload that plays no part in the
+    * ordering (score DESC, id ASC) but travels with its row through the
+    * bounded buffer — the shape a kNN vote needs (payload = neighbor's
+    * class label). Same O(k) partial state per group per task; the
+    * reference vote below uses it.
+    */
+  final class TopKPayloadAggregator(k: Int)
+      extends Aggregator[(Double, Long, Long), Seq[(Double, Long, Long)], Seq[(Double, Long, Long)]] {
+    require(k > 0, "top-k needs k > 0")
+    private def better(a: (Double, Long, Long), b: (Double, Long, Long)): Boolean =
+      a._1 > b._1 || (a._1 == b._1 && a._2 < b._2)
+    private def insertP(buf: Seq[(Double, Long, Long)], x: (Double, Long, Long)): Seq[(Double, Long, Long)] =
+      if (buf.size >= k && better(buf.last, x)) buf
+      else {
+        val (front, back) = buf.span(better(_, x))
+        (front :+ x) ++ back.take(k - front.size - 1)
+      }
+    override def zero: Seq[(Double, Long, Long)] = Vector.empty
+    override def reduce(b: Seq[(Double, Long, Long)], a: (Double, Long, Long)): Seq[(Double, Long, Long)] =
+      insertP(b, a)
+    override def merge(b1: Seq[(Double, Long, Long)], b2: Seq[(Double, Long, Long)]): Seq[(Double, Long, Long)] =
+      b2.foldLeft(b1)(insertP)
+    override def finish(r: Seq[(Double, Long, Long)]): Seq[(Double, Long, Long)] = r
+    override def bufferEncoder: Encoder[Seq[(Double, Long, Long)]] =
+      org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Seq[(Double, Long, Long)]]()
+    override def outputEncoder: Encoder[Seq[(Double, Long, Long)]] = bufferEncoder
   }
 }

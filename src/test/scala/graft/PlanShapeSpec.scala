@@ -425,6 +425,34 @@ class PlanShapeSpec extends AnyFunSuite {
     assert(p.contains("graft_all_cos"), p)
   }
 
+  // Declared queries run against sf0.001 with its derived fixtures
+  // (partitioned layouts, stores) materialized once for the whole spec.
+  private val sf = "/root/testdata/sf0.001"
+  private lazy val prepared: Unit =
+    try SparkEntry.prepare(spark, sf) catch { case _: Throwable => () }
+  private def queryPlan(name: String): String = {
+    prepared
+    try plan(SparkEntry.queries(name)(spark, sf)) finally CacheScope.flush()
+  }
+
+  for (q <- Seq("q_join_inner", "q_join_left"))
+    test(s"$q: the dimension side broadcasts — the fact side never sort-merges") {
+      val p = queryPlan(q)
+      assert(p.contains("BroadcastHashJoin"), p)
+      assert(!p.contains("SortMergeJoin"), s"dimension join shuffled:\n$p")
+    }
+
+  test("q_prune_dates: the date range prunes partitions at the scan (PartitionFilters)") {
+    val p = queryPlan("q_prune_dates")
+    assert("PartitionFilters: \\[[^\\]]+\\]".r.findFirstIn(p).isDefined,
+      s"no partition filter on the daily layout scan:\n$p")
+  }
+
+  test("q_topk: orderBy+limit plans TakeOrderedAndProject") {
+    val p = queryPlan("q_topk")
+    assert(p.contains("TakeOrderedAndProject"), p)
+  }
+
   test("no declared query windows partition-less over an unbounded input") {
     // A Window with an empty partitionSpec funnels its whole input
     // through ONE task (only Dataset.orderBy range-partitions; window
@@ -464,8 +492,7 @@ class PlanShapeSpec extends AnyFunSuite {
       // r12: the merged HDR bucket frame is ≤ ~8·64 rows at ANY value
       // cardinality (the sketch contract — Sketches.hdrMergedQuantiles)
       "q_sketch_hdr_merge" -> "bucket-vocabulary-sized merged frame (≤ ~520 rows)")
-    val sf = "/root/testdata/sf0.001"
-    try SparkEntry.prepare(spark, sf) catch { case _: Throwable => () }
+    prepared
     val offenders = SparkEntry.queries.toSeq.sortBy(_._1).flatMap { case (name, fn) =>
       val analyzed: LogicalPlan =
         try fn(spark, sf).queryExecution.analyzed

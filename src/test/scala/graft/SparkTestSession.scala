@@ -5,16 +5,7 @@ import org.apache.spark.sql.SparkSession
 /** One shared local session for the whole forked test JVM. */
 object SparkTestSession {
   lazy val spark: SparkSession = {
-    val builder = SparkSession.builder()
-      .master("local[2]")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.ui.enabled", "false")
-      // static conf: saveAsTable targets (bucketing spec) land in a
-      // temp warehouse, not the repo working dir
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft-warehouse").toString)
-    Tables.builderConfigs.foreach { case (k, v) => builder.config(k, v) }
-    val s = builder.getOrCreate()
+    val s = Tables.localSession(2)
     s.sparkContext.setLogLevel("ERROR")
     s
   }
