@@ -17,8 +17,9 @@ object Bench {
     // is nothing to adapt — AQE is pure fixed cost: measured 38.6 s (on)
     // vs 32.3 s (off) on the same build, identical results. Disabling
     // the runtime re-planner for small interactive queries is the same
-    // per-workload call a warehouse operator makes; the detail line
-    // carries an "aqe" field so the config is explicit in the artifact.
+    // per-workload call a warehouse operator makes; the summary line and
+    // the detail file carry an "aqe" field so the config is explicit in
+    // the artifact.
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     // Reducer count sized to the MEASURED shuffle volumes, the same
     // call a warehouse operator makes when AQE is off: every query in
@@ -32,7 +33,7 @@ object Bench {
     // default stays data-proportional (Tables.localSession: one reducer
     // per core; at 100 TB, AQE-on sizes reducers by its 64 MB advisory
     // target) — this is a per-workload measurement setting, visible in
-    // the artifact.
+    // the artifact as "shuffle_partitions".
     spark.conf.set("spark.sql.shuffle.partitions", math.min(8, cpus).toString)
     spark.sparkContext.setLogLevel("WARN")
     // Host-capacity probe, published in the artifact: this host is
@@ -464,7 +465,10 @@ object Bench {
     // Full per-query detail (steady, cold-first-run, shuffle MB) goes
     // to a file in the repo — the harness keeps only the last ~2KB of
     // stdout, which can no longer hold 118 query timings.
+    // the measurement config, read back from the session: published on
+    // the summary line (subset runs included) and in the detail file
     val aqe = spark.conf.get("spark.sql.adaptive.enabled", "true")
+    val shufflePartitions = spark.conf.get("spark.sql.shuffle.partitions")
     // Plan-audited justifications for queries that sit above 2x DuckDB
     // at >= 0.5 s: each is 1-3 Spark jobs whose absolute cost is the
     // per-query job-launch + single-exchange floor (~0.2-0.3 s/job on
@@ -552,7 +556,7 @@ object Bench {
     // closed mid-run shows up as a start/end delta
     val effectiveCoresEnd = capacityProbe()
     val detailJson =
-      s"""{"metric":"total","value":${f"$total%.3f"},"unit":"sec","sf":"$sfDir","aqe":$aqe,""" +
+      s"""{"metric":"total","value":${f"$total%.3f"},"unit":"sec","sf":"$sfDir","aqe":$aqe,"shuffle_partitions":$shufflePartitions,""" +
         s""""effective_cores_start":${f"$effectiveCoresStart%.1f"},""" +
         s""""effective_cores_end":${f"$effectiveCoresEnd%.1f"},""" +
         s""""headline_procedure":"value: min of 3 uncached steady samples (each pays Catalyst construct+analysis; randomized per-pass order since r13) + end-of-run re-sample >= 0.4s. steady_cached_total: same procedure over statement-cached frames (construct held, fresh QueryExecution + fresh exchanges per sample; construct-effect queries excluded and copied from uncached)",""" +
@@ -609,11 +613,11 @@ object Bench {
         if (duckTotal > 0 && isSf01)
           s""","oracle_total_sec":${f"$duckTotal%.2f"},"n_over_2x_and_ge_half_sec":${over2x.size},"n_over_2x_cached":${over2xCached.size}"""
         else ""
-      s"""{"metric":"total","value":${f"$total%.3f"},"unit":"sec","errors":$errJson,"sf":"$sfDir","n_queries":${results.size},"queries_shown":"slowest $n of ${results.size}; full map in BENCH_DETAIL.json","steady_cached_total":${f"$cachedTotal%.3f"},"cold_first_run_total":${f"$coldTotal%.3f"},"prepare_sec":${f"$prepareSec%.3f"},"effective_cores_start":${f"$effectiveCoresStart%.1f"},"effective_cores_end":${f"$effectiveCoresEnd%.1f"},"throughput_8way_wall_sec":${f"$throughputWall%.3f"},"throughput_probe_cores":${throughputProbes.map(c => f"$c%.1f").mkString("[", ",", "]")}$tpErr$oracleBit,"queries":$qs}"""
+      s"""{"metric":"total","value":${f"$total%.3f"},"unit":"sec","errors":$errJson,"sf":"$sfDir","aqe":$aqe,"shuffle_partitions":$shufflePartitions,"n_queries":${results.size},"queries_shown":"slowest $n of ${results.size}; full map in BENCH_DETAIL.json","steady_cached_total":${f"$cachedTotal%.3f"},"cold_first_run_total":${f"$coldTotal%.3f"},"prepare_sec":${f"$prepareSec%.3f"},"effective_cores_start":${f"$effectiveCoresStart%.1f"},"effective_cores_end":${f"$effectiveCoresEnd%.1f"},"throughput_8way_wall_sec":${f"$throughputWall%.3f"},"throughput_probe_cores":${throughputProbes.map(c => f"$c%.1f").mkString("[", ",", "]")}$tpErr$oracleBit,"queries":$qs}"""
     }
     val line = Seq(40, 30, 20, 10, 0).iterator.map(headParts)
       .find(_.length <= 1700)
-      .getOrElse(s"""{"metric":"total","value":${f"$total%.3f"},"unit":"sec","errors":{},"sf":"$sfDir","n_queries":${results.size},"queries":{}}""")
+      .getOrElse(s"""{"metric":"total","value":${f"$total%.3f"},"unit":"sec","errors":{},"sf":"$sfDir","aqe":$aqe,"shuffle_partitions":$shufflePartitions,"n_queries":${results.size},"queries":{}}""")
     println(line)
     spark.stop()
   }

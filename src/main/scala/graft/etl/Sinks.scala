@@ -271,28 +271,26 @@ object Sinks {
     * `cursor.rowcount` accounting), summed across partitions via a
     * LongAccumulator — no collect.
     *
-    * Correctness under parallel writers: `repartitionByKeys` (default
-    * on) hash-partitions the frame on the natural key first, so all
-    * rows for one key are written by one partition and a NOT-EXISTS
-    * dialect cannot race against a sibling writer. With an atomic
-    * dialect (Postgres ON CONFLICT) the pre-shuffle is optional but
-    * still the right 100 TB shape — it also dedupes writer/lock
-    * contention per key range. Exercised end-to-end against embedded
-    * Derby in JdbcUpsertSpec.
+    * Correctness under parallel writers: the frame is always
+    * hash-partitioned on the natural key first, so all rows for one key
+    * are written by one partition and a NOT-EXISTS dialect cannot race
+    * against a sibling writer. An atomic dialect (Postgres ON CONFLICT)
+    * would not need the pre-shuffle for correctness, but it is still the
+    * right 100 TB shape — it also dedupes writer/lock contention per key
+    * range. Exercised end-to-end against embedded Derby in
+    * JdbcUpsertSpec.
     */
   def jdbcUpsert(
       df: DataFrame, url: String, table: String, keys: Seq[String],
       dialect: (String, Seq[String], Seq[String]) => UpsertDialect,
       batchSize: Int = 1000,
-      commitPerBatch: Boolean = true,
-      repartitionByKeys: Boolean = true): Long = {
+      commitPerBatch: Boolean = true): Long = {
     val cols = df.schema.fieldNames.toSeq
     val d = dialect(table, cols, keys)
     val bindIdx = d.bindCols.map(c => cols.indexOf(c)).toArray
     require(bindIdx.forall(_ >= 0), s"dialect binds unknown column in ${d.bindCols}")
     val inserted = df.sparkSession.sparkContext.longAccumulator("jdbc_upsert_inserted")
-    val part = if (repartitionByKeys) df.repartition(keys.map(df(_)): _*) else df
-    part.foreachPartition { rows: Iterator[org.apache.spark.sql.Row] =>
+    df.repartition(keys.map(df(_)): _*).foreachPartition { rows: Iterator[org.apache.spark.sql.Row] =>
       if (rows.hasNext) {
         val conn = java.sql.DriverManager.getConnection(url)
         try {

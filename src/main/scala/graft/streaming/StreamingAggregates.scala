@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery}
 import org.apache.spark.sql.types.StructType
 
 /** Streaming aggregation surfaces (SURVEY §2.10): watermarked tumbling
@@ -24,23 +24,8 @@ object StreamingAggregates {
       checkpointDir: String,
       sinkDir: String,
       lateness: String = "1 hour"): StreamingQuery =
-    spark.readStream
-      .schema(schema)
-      .parquet(sourceDir)
-      .withColumn("__event_time", timestamp_micros(col(tsMicrosCol)))
-      .withWatermark("__event_time", lateness)
-      .groupBy(window(col("__event_time"), "1 hour"), col("event_type"))
-      .agg(count(lit(1)).as("n"))
-      .select(
-        col("window.start").as("win_start"),
-        col("event_type"), col("n"))
-      .writeStream
-      .format("parquet")
-      .option("path", sinkDir)
-      .option("checkpointLocation", checkpointDir)
-      .outputMode(OutputMode.Append)
-      .trigger(Trigger.AvailableNow())
-      .start()
+    slidingCounts(spark, sourceDir, schema, tsMicrosCol, checkpointDir, sinkDir,
+      "1 hour", "1 hour", lateness)
 
   /** Streaming HyperLogLog registers: approximate distinct keys per
     * tumbling window and group with FIXED state — m = 64 register
@@ -71,24 +56,15 @@ object StreamingAggregates {
       .cast("long")
     val w2 = h(1)
     val rho = when(w2 === 0L, lit(33L)).otherwise(lit(33L) - length(bin(w2)))
-    spark.readStream
-      .schema(schema)
-      .parquet(sourceDir)
-      .filter(col(groupCol).isNotNull && col(keyCol).isNotNull)
-      .withColumn("__event_time", timestamp_micros(col(tsMicrosCol)))
-      .withWatermark("__event_time", lateness)
-      .groupBy(window(col("__event_time"), "1 hour"), col(groupCol),
-        (h(0) % 64).as("idx"))
-      .agg(max(rho).as("mj"))
-      .select(col("window.start").as("win_start"), col(groupCol),
-        col("idx"), col("mj"))
-      .writeStream
-      .format("parquet")
-      .option("path", sinkDir)
-      .option("checkpointLocation", checkpointDir)
-      .outputMode(OutputMode.Append)
-      .trigger(Trigger.AvailableNow())
-      .start()
+    Drain.toParquet(
+      Drain.watermarked(spark, sourceDir, schema, tsMicrosCol, lateness,
+          col(groupCol).isNotNull && col(keyCol).isNotNull)
+        .groupBy(window(col("__event_time"), "1 hour"), col(groupCol),
+          (h(0) % 64).as("idx"))
+        .agg(max(rho).as("mj"))
+        .select(col("window.start").as("win_start"), col(groupCol),
+          col("idx"), col("mj")),
+      sinkDir, checkpointDir)
   }
 
   /** Streaming count-min counters per tumbling window — the frequency
@@ -113,27 +89,17 @@ object StreamingAggregates {
       d: Int = 4,
       w: Int = 64,
       lateness: String = "1 hour"): StreamingQuery =
-    spark.readStream
-      .schema(schema)
-      .parquet(sourceDir)
-      .filter(col(keyCol).isNotNull)
-      .withColumn("__event_time", timestamp_micros(col(tsMicrosCol)))
-      .withWatermark("__event_time", lateness)
-      .select(col("__event_time"), col(keyCol).cast("string").as("k"),
-        explode(sequence(lit(0), lit(d - 1))).as("j"))
-      .withColumn("b",
-        conv(substring(md5(concat(col("j").cast("string"), lit("|"), col("k"))
-          .cast("binary")), 1, 8), 16, 10).cast("long") % w)
-      .groupBy(window(col("__event_time"), "1 hour"), col("j"), col("b"))
-      .agg(count(lit(1)).as("c"))
-      .select(col("window.start").as("win_start"), col("j"), col("b"), col("c"))
-      .writeStream
-      .format("parquet")
-      .option("path", sinkDir)
-      .option("checkpointLocation", checkpointDir)
-      .outputMode(OutputMode.Append)
-      .trigger(Trigger.AvailableNow())
-      .start()
+    Drain.toParquet(
+      Drain.watermarked(spark, sourceDir, schema, tsMicrosCol, lateness, col(keyCol).isNotNull)
+        .select(col("__event_time"), col(keyCol).cast("string").as("k"),
+          explode(sequence(lit(0), lit(d - 1))).as("j"))
+        .withColumn("b",
+          conv(substring(md5(concat(col("j").cast("string"), lit("|"), col("k"))
+            .cast("binary")), 1, 8), 16, 10).cast("long") % w)
+        .groupBy(window(col("__event_time"), "1 hour"), col("j"), col("b"))
+        .agg(count(lit(1)).as("c"))
+        .select(col("window.start").as("win_start"), col("j"), col("b"), col("c")),
+      sinkDir, checkpointDir)
 
   /** Streaming Bloom bit-set per tumbling window — the membership twin
     * of [[hllRegisters]]/[[cmsCounters]], completing the mergeable-
@@ -160,27 +126,17 @@ object StreamingAggregates {
       m: Int,
       k: Int = 3,
       lateness: String = "1 hour"): StreamingQuery =
-    spark.readStream
-      .schema(schema)
-      .parquet(sourceDir)
-      .filter(col(keyCol).isNotNull)
-      .withColumn("__event_time", timestamp_micros(col(tsMicrosCol)))
-      .withWatermark("__event_time", lateness)
-      .select(col("__event_time"), col(keyCol).cast("string").as("bk"),
-        explode(sequence(lit(0), lit(k - 1))).as("i"))
-      .withColumn("pos",
-        conv(substring(md5(concat(col("i").cast("string"), lit("|"), col("bk"))
-          .cast("binary")), 1, 8), 16, 10).cast("long") % m)
-      .groupBy(window(col("__event_time"), "1 hour"), col("pos"))
-      .agg(count(lit(1)).as("n_keys"))
-      .select(col("window.start").as("win_start"), col("pos"), col("n_keys"))
-      .writeStream
-      .format("parquet")
-      .option("path", sinkDir)
-      .option("checkpointLocation", checkpointDir)
-      .outputMode(OutputMode.Append)
-      .trigger(Trigger.AvailableNow())
-      .start()
+    Drain.toParquet(
+      Drain.watermarked(spark, sourceDir, schema, tsMicrosCol, lateness, col(keyCol).isNotNull)
+        .select(col("__event_time"), col(keyCol).cast("string").as("bk"),
+          explode(sequence(lit(0), lit(k - 1))).as("i"))
+        .withColumn("pos",
+          conv(substring(md5(concat(col("i").cast("string"), lit("|"), col("bk"))
+            .cast("binary")), 1, 8), 16, 10).cast("long") % m)
+        .groupBy(window(col("__event_time"), "1 hour"), col("pos"))
+        .agg(count(lit(1)).as("n_keys"))
+        .select(col("window.start").as("win_start"), col("pos"), col("n_keys")),
+      sinkDir, checkpointDir)
 
   /** Streaming HDR-histogram buckets per tumbling window — the
     * quantile twin completing the sketch family: values quantize to
@@ -205,38 +161,29 @@ object StreamingAggregates {
       checkpointDir: String,
       sinkDir: String,
       lateness: String = "1 hour"): StreamingQuery =
-    spark.readStream
-      .schema(schema)
-      .parquet(sourceDir)
-      .filter(col(groupCol).isNotNull && col(valueCol).isNotNull && col(valueCol) >= 0)
-      .withColumn("__event_time", timestamp_micros(col(tsMicrosCol)))
-      .withWatermark("__event_time", lateness)
-      .select(col("__event_time"), col(groupCol).as("g"),
-        floor(col(valueCol) * 100).cast("long").as("vc"))
-      .withColumn("blen", length(bin(col("vc"))).cast("long"))
-      .withColumn("mant",
-        when(col("vc") >= 16,
-          expr("shiftright(vc, cast(blen - 4 as int))")).otherwise(lit(0L)))
-      .withColumn("bucket",
-        when(col("vc") < 16, col("vc"))
-          .otherwise(col("blen") * 8 + (col("mant") - 8)))
-      .withColumn("rep",
-        when(col("vc") < 16, col("vc").cast("double") / 100.0)
-          .otherwise(
-            (expr("shiftleft(mant, cast(blen - 4 as int))").cast("double") +
-              expr("shiftleft(mant + 1, cast(blen - 4 as int))").cast("double"))
-              / 2.0 / 100.0))
-      .groupBy(window(col("__event_time"), "1 hour"), col("g"), col("bucket"))
-      .agg(count(lit(1)).as("c"), max(col("rep")).as("rep"))
-      .select(col("window.start").as("win_start"), col("g"),
-        col("bucket"), col("c"), col("rep"))
-      .writeStream
-      .format("parquet")
-      .option("path", sinkDir)
-      .option("checkpointLocation", checkpointDir)
-      .outputMode(OutputMode.Append)
-      .trigger(Trigger.AvailableNow())
-      .start()
+    Drain.toParquet(
+      Drain.watermarked(spark, sourceDir, schema, tsMicrosCol, lateness,
+          col(groupCol).isNotNull && col(valueCol).isNotNull && col(valueCol) >= 0)
+        .select(col("__event_time"), col(groupCol).as("g"),
+          floor(col(valueCol) * 100).cast("long").as("vc"))
+        .withColumn("blen", length(bin(col("vc"))).cast("long"))
+        .withColumn("mant",
+          when(col("vc") >= 16,
+            expr("shiftright(vc, cast(blen - 4 as int))")).otherwise(lit(0L)))
+        .withColumn("bucket",
+          when(col("vc") < 16, col("vc"))
+            .otherwise(col("blen") * 8 + (col("mant") - 8)))
+        .withColumn("rep",
+          when(col("vc") < 16, col("vc").cast("double") / 100.0)
+            .otherwise(
+              (expr("shiftleft(mant, cast(blen - 4 as int))").cast("double") +
+                expr("shiftleft(mant + 1, cast(blen - 4 as int))").cast("double"))
+                / 2.0 / 100.0))
+        .groupBy(window(col("__event_time"), "1 hour"), col("g"), col("bucket"))
+        .agg(count(lit(1)).as("c"), max(col("rep")).as("rep"))
+        .select(col("window.start").as("win_start"), col("g"),
+          col("bucket"), col("c"), col("rep")),
+      sinkDir, checkpointDir)
 
   /** Streaming DSIR bucket histogram — the model-fitting half of
     * [[graft.ops.Text.dsirWeights]] as a watermarked tumbling-window
@@ -265,29 +212,20 @@ object StreamingAggregates {
       buckets: Int = 256,
       windowLen: String = "1 hour",
       lateness: String = "1 hour"): StreamingQuery =
-    spark.readStream
-      .schema(schema)
-      .parquet(sourceDir)
-      .withColumn("__event_time", timestamp_micros(col(tsMicrosCol)))
-      .withWatermark("__event_time", lateness)
-      // null text coalesces to zero grams AFTER the watermark node, so
-      // a bare tick row still advances the watermark (filtering it
-      // upstream would stall window finalization)
-      .select(col("__event_time"), targetPred.as("tgt"),
-        explode(graft.ops.Text.dsirGrams(
-          graft.ops.Dedup.tokens(coalesce(col(textCol), lit(""))))).as("gram"))
-      .withColumn("bucket", graft.ops.Text.dsirBucket(col("gram"), buckets))
-      .groupBy(window(col("__event_time"), windowLen), col("bucket"))
-      .agg(count(lit(1)).as("sc"), count(when(col("tgt"), lit(1))).as("tc"))
-      .select(col("window.start").as("win_start"), col("bucket"),
-        col("sc"), col("tc"))
-      .writeStream
-      .format("parquet")
-      .option("path", sinkDir)
-      .option("checkpointLocation", checkpointDir)
-      .outputMode(OutputMode.Append)
-      .trigger(Trigger.AvailableNow())
-      .start()
+    Drain.toParquet(
+      Drain.watermarked(spark, sourceDir, schema, tsMicrosCol, lateness)
+        // null text coalesces to zero grams AFTER the watermark node, so
+        // a bare tick row still advances the watermark (filtering it
+        // upstream would stall window finalization)
+        .select(col("__event_time"), targetPred.as("tgt"),
+          explode(graft.ops.Text.dsirGrams(
+            graft.ops.Dedup.tokens(coalesce(col(textCol), lit(""))))).as("gram"))
+        .withColumn("bucket", graft.ops.Text.dsirBucket(col("gram"), buckets))
+        .groupBy(window(col("__event_time"), windowLen), col("bucket"))
+        .agg(count(lit(1)).as("sc"), count(when(col("tgt"), lit(1))).as("tc"))
+        .select(col("window.start").as("win_start"), col("bucket"),
+          col("sc"), col("tc")),
+      sinkDir, checkpointDir)
 
   /** Sliding-window counts: each event lands in `windowLen/slide`
     * overlapping windows (window() emits one row per covered window —
@@ -306,23 +244,12 @@ object StreamingAggregates {
       windowLen: String = "1 hour",
       slide: String = "30 minutes",
       lateness: String = "1 hour"): StreamingQuery =
-    spark.readStream
-      .schema(schema)
-      .parquet(sourceDir)
-      .withColumn("__event_time", timestamp_micros(col(tsMicrosCol)))
-      .withWatermark("__event_time", lateness)
-      .groupBy(window(col("__event_time"), windowLen, slide), col("event_type"))
-      .agg(count(lit(1)).as("n"))
-      .select(
-        col("window.start").as("win_start"),
-        col("event_type"), col("n"))
-      .writeStream
-      .format("parquet")
-      .option("path", sinkDir)
-      .option("checkpointLocation", checkpointDir)
-      .outputMode(OutputMode.Append)
-      .trigger(Trigger.AvailableNow())
-      .start()
+    Drain.toParquet(
+      Drain.watermarked(spark, sourceDir, schema, tsMicrosCol, lateness)
+        .groupBy(window(col("__event_time"), windowLen, slide), col("event_type"))
+        .agg(count(lit(1)).as("n"))
+        .select(col("window.start").as("win_start"), col("event_type"), col("n")),
+      sinkDir, checkpointDir)
 
   final case class TouchInput(event_id: Long, user_id: Long, ts_us: Long, event_type: String)
   final case class TouchState(lastTouchUs: Long)
@@ -364,8 +291,13 @@ object StreamingAggregates {
             state.remove()
             Iterator.empty
           } else {
+            // a touch whose timeout is already behind the watermark is
+            // evicted: it is what a no-data batch firing the timeout
+            // would have removed, and re-arming it would fault the stream
+            val wm = state.getCurrentWatermarkMs()
+            def live(t: Long) = (t + idleUs) / 1000L >= wm
             val sorted = rows.toSeq.sortBy(e => (e.ts_us, e.event_id))
-            var last = state.getOption.map(_.lastTouchUs)
+            var last = state.getOption.map(_.lastTouchUs).filter(live)
             val out = Seq.newBuilder[TouchOut]
             sorted.foreach { e =>
               if (e.event_type == convType)
@@ -374,9 +306,11 @@ object StreamingAggregates {
               // attributes to it (strictly-preceding), so update second
               if (e.event_type == touchType) last = Some(e.ts_us)
             }
-            last.foreach { t =>
-              state.update(TouchState(t))
-              state.setTimeoutTimestamp((t + idleUs) / 1000L)
+            last.filter(live) match {
+              case Some(t) =>
+                state.update(TouchState(t))
+                state.setTimeoutTimestamp((t + idleUs) / 1000L)
+              case None => state.remove()
             }
             out.result().iterator
           }
@@ -530,18 +464,13 @@ object StreamingAggregates {
         col("ts_us").as("r_ts"))
       .withColumn("r_time", timestamp_micros(col("r_ts")))
       .withWatermark("r_time", lateness)
-    l.join(r,
-        col("l_user") === col("r_user") &&
-          expr(s"r_time BETWEEN l_time AND l_time + INTERVAL $maxGap"))
-      .select(col("l_user").as("user_id"), col("l_id"), col("r_id"),
-        (col("r_ts") - col("l_ts")).as("gap_us"))
-      .writeStream
-      .format("parquet")
-      .option("path", sinkDir)
-      .option("checkpointLocation", checkpointDir)
-      .outputMode(OutputMode.Append)
-      .trigger(Trigger.AvailableNow())
-      .start()
+    Drain.toParquet(
+      l.join(r,
+          col("l_user") === col("r_user") &&
+            expr(s"r_time BETWEEN l_time AND l_time + INTERVAL $maxGap"))
+        .select(col("l_user").as("user_id"), col("l_id"), col("r_id"),
+          (col("r_ts") - col("l_ts")).as("gap_us")),
+      sinkDir, checkpointDir)
   }
 
   /** Stream-static enrichment: each micro-batch of the event stream

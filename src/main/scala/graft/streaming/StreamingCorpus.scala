@@ -1,9 +1,11 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery}
+import org.apache.spark.sql.types.{StringType, StructType}
 
 import graft.etl.Sinks
 import graft.ops.{Corpus, Dedup}
@@ -36,26 +38,17 @@ object StreamingCorpus {
       checkpointDir: String,
       sinkDir: String,
       lateness: String = "1 hour"): StreamingQuery = {
-    val src = spark.readStream
-      .schema(schema)
-      .parquet(sourceDir)
+    val src = Drain.watermarked(spark, sourceDir, schema, tsMicrosCol, lateness)
       .withColumn("text_hash", md5(col("text").cast("binary")))
-      .withColumn("__event_time", timestamp_micros(col(tsMicrosCol)))
-      .withWatermark("__event_time", lateness)
       .dropDuplicatesWithinWatermark("text_hash")
-    val aqe = StreamingIncremental.aqeOf(spark)
-    Corpus.gopherPass(src)
-      .drop("__event_time")
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
-        StreamingIncremental.withAqe(batch, aqe) {
-          Sinks.upsertAppend(batch.sparkSession, batch, sinkDir, Seq("text_hash"))
-        }
-        ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
+    Drain.foreachBatch(Corpus.gopherPass(src).drop("__event_time"), checkpointDir) { batch =>
+      // the micro-batch arrives in the dedup state's hash partitioning
+      // (`spark.sql.shuffle.partitions` of them, one file each), which a
+      // plain repartition on the same key keeps; a rebalance shuffles,
+      // so AQE sizes the append from the data
+      Sinks.upsertAppend(batch.sparkSession, batch.hint("rebalance", col("text_hash")),
+        sinkDir, Seq("text_hash"))
+    }
   }
 
   /** Streaming twin of the `q_xml_intake` PERMISSIVE quarantine: a
@@ -80,33 +73,9 @@ object StreamingCorpus {
       checkpointDir: String,
       goodSink: String,
       quarantineSink: String,
-      rowTag: String = "row"): StreamingQuery = {
-    val withCorrupt = schema.add("_corrupt_record",
-      org.apache.spark.sql.types.StringType)
-    val opts = new java.util.HashMap[String, String]
-    opts.put("rowTag", rowTag)
-    opts.put("mode", "PERMISSIVE")
-    opts.put("columnNameOfCorruptRecord", "_corrupt_record")
-    spark.readStream
-      .text(sourceDir)
-      .select(col("value"), from_xml(col("value"), withCorrupt, opts).as("r"))
-      .select(col("value"), col("r.*"))
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val b = batch.persist()
-        b.filter(col("_corrupt_record").isNull)
-          .drop("value", "_corrupt_record")
-          .write.mode("append").parquet(goodSink)
-        b.filter(col("_corrupt_record").isNotNull)
-          .select(col("value"))
-          .write.mode("append").parquet(quarantineSink)
-        b.unpersist()
-        ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-  }
+      rowTag: String = "row"): StreamingQuery =
+    dirtyIntake(spark, sourceDir, schema, checkpointDir, goodSink, quarantineSink)(
+      (line, s, opts) => from_xml(line, s, (opts + ("rowTag" -> rowTag)).asJava))
 
   /** Streaming twin of the `q_csv_intake` PERMISSIVE quarantine — the
     * [[dirtyXmlIntake]] contract for CSV: each text line parses via
@@ -122,32 +91,49 @@ object StreamingCorpus {
       schema: StructType,
       checkpointDir: String,
       goodSink: String,
-      quarantineSink: String): StreamingQuery = {
-    val withCorrupt = schema.add("_corrupt_record",
-      org.apache.spark.sql.types.StringType)
-    val opts = Map(
-      "mode" -> "PERMISSIVE",
-      "columnNameOfCorruptRecord" -> "_corrupt_record")
-    spark.readStream
-      .text(sourceDir)
-      .select(col("value"), from_csv(col("value"), withCorrupt, opts).as("r"))
+      quarantineSink: String): StreamingQuery =
+    dirtyIntake(spark, sourceDir, schema, checkpointDir, goodSink, quarantineSink)(
+      from_csv(_, _, _))
+
+  /** The dirty-intake body both twins share: each text line parses via
+    * `parse(line, schema + corrupt-record field, PERMISSIVE options)`,
+    * and each micro-batch routes good typed rows to `goodSink` and
+    * corrupt raw lines to `quarantineSink`.
+    */
+  private def dirtyIntake(
+      spark: SparkSession,
+      sourceDir: String,
+      schema: StructType,
+      checkpointDir: String,
+      goodSink: String,
+      quarantineSink: String)(
+      parse: (Column, StructType, Map[String, String]) => Column): StreamingQuery = {
+    val opts = Map("mode" -> "PERMISSIVE", "columnNameOfCorruptRecord" -> "_corrupt_record")
+    val parsed = spark.readStream.text(sourceDir)
+      .select(col("value"), parse(col("value"), schema.add("_corrupt_record", StringType), opts).as("r"))
       .select(col("value"), col("r.*"))
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val b = batch.persist()
-        b.filter(col("_corrupt_record").isNull)
-          .drop("value", "_corrupt_record")
-          .write.mode("append").parquet(goodSink)
-        b.filter(col("_corrupt_record").isNotNull)
-          .select(col("value"))
-          .write.mode("append").parquet(quarantineSink)
-        b.unpersist()
-        ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
+    route(parsed, col("_corrupt_record").isNotNull, checkpointDir, goodSink, quarantineSink)(
+      _.drop("value", "_corrupt_record"), _.select(col("value")))
   }
+
+  /** Drains `stream`, persisting each micro-batch once and splitting it:
+    * rows where `bad` is false append through `good` to `goodSink`, rows
+    * where it is true through `quarantined` to `quarantineSink`.
+    */
+  private def route(
+      stream: DataFrame,
+      bad: Column,
+      checkpointDir: String,
+      goodSink: String,
+      quarantineSink: String)(
+      good: DataFrame => DataFrame,
+      quarantined: DataFrame => DataFrame): StreamingQuery =
+    Drain.foreachBatch(stream, checkpointDir) { batch =>
+      val b = batch.persist()
+      good(b.filter(!bad)).write.mode("append").parquet(goodSink)
+      quarantined(b.filter(bad)).write.mode("append").parquet(quarantineSink)
+      b.unpersist()
+    }
 
   /** Streaming twin of `q_html_extract` — the crawl front door run
     * continuously: pages arrive as parquet files (doc_id, html), the
@@ -175,22 +161,55 @@ object StreamingCorpus {
       quarantineSink: String,
       linkDensityPct: Int = 30): StreamingQuery = {
     val src = spark.readStream.schema(schema).parquet(sourceDir)
-    Corpus.htmlExtract(src, linkDensityPct, keepText = true)
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val b = batch.persist()
-        b.filter(col("status") =!= "quarantined")
-          .write.mode("append").parquet(goodSink)
-        b.filter(col("status") === "quarantined")
-          .select(col("doc_id"))
-          .write.mode("append").parquet(quarantineSink)
-        b.unpersist()
-        ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
+    route(Corpus.htmlExtract(src, linkDensityPct, keepText = true),
+        col("status") === "quarantined", checkpointDir, goodSink, quarantineSink)(
+      identity, _.select(col("doc_id")))
   }
+
+  /** The event-time keyed fold under every stateful stage below. Rows
+    * group by `key`; a group's arrivals fold through `step` in `order`
+    * (ts_us, then a unique id), from the stored state or `zero`, each
+    * step emitting its rows. A timed-out group is removed and emits
+    * nothing. A group whose key `keeps` state stores the folded state
+    * and arms a timeout `lateness` past its newest arrival, clamped
+    * strictly after the current watermark: a group fed only rows older
+    * than the watermark would otherwise ask for a timeout in the past,
+    * which `setTimeoutTimestamp` rejects. Other groups write no state
+    * and no timer.
+    */
+  private[streaming] def keyedFold[V, K: Encoder, S: Encoder, U: Encoder](
+      rows: Dataset[V], lateness: String)(
+      key: V => K, order: V => (Long, Long), zero: S, keeps: K => Boolean = (_: K) => true)(
+      step: (S, V) => (S, IterableOnce[U])): Dataset[U] =
+    rows.groupByKey(key).flatMapGroupsWithState[S, U](
+      OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
+      (k: K, newRows: Iterator[V], state: GroupState[S]) =>
+        if (state.hasTimedOut) { state.remove(); Iterator.empty }
+        else {
+          val arrivals = newRows.toSeq.sortBy(order)
+          var folded = state.getOption.getOrElse(zero)
+          val out = arrivals.flatMap { r =>
+            val (next, emitted) = step(folded, r)
+            folded = next
+            emitted
+          }
+          if (keeps(k)) {
+            state.update(folded)
+            val newestMs = order(arrivals.last)._1 / 1000L
+            state.setTimeoutTimestamp(
+              math.max(newestMs, state.getCurrentWatermarkMs() + 1L), lateness)
+          }
+          out.iterator
+        }
+    }
+
+  /** The crawl keeper's group key: a gate survivor claiming a canonical
+    * races for it; every other page is its own `d:` singleton group.
+    */
+  private def canonicalKey(passes: Long, canonical: String, docId: Long): String =
+    if (passes == 1L && canonical != null) "c:" + canonical else "d:" + docId
+
+  private val contested: String => Boolean = !_.startsWith("d:")
 
   final case class PageArrival(doc_id: Long, ts_us: Long, status: String,
                                verdict: String, canonical: String, passes: Long,
@@ -234,36 +253,13 @@ object StreamingCorpus {
         timestamp_micros(col(tsMicrosCol)).as("__event_time"))
       .withWatermark("__event_time", lateness)
       .as[PageArrival]
-    gated
-      .groupByKey(p =>
-        if (p.passes == 1L && p.canonical != null) "c:" + p.canonical
-        else "d:" + p.doc_id)
-      .flatMapGroupsWithState[Boolean, CrawlVerdict](
-        OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        (_: String, newRows: Iterator[PageArrival], state: GroupState[Boolean]) =>
-          if (state.hasTimedOut) {
-            state.remove()
-            Iterator.empty
-          } else {
-            val arrivals = newRows.toSeq.sortBy(r => (r.ts_us, r.doc_id))
-            var seen = state.getOption.getOrElse(false)
-            var maxTs = Long.MinValue
-            val out = arrivals.map { r =>
-              maxTs = math.max(maxTs, r.ts_us)
-              val kept =
-                if (r.passes == 0L) 0L
-                else if (seen) 0L
-                else { seen = true; 1L }
-              CrawlVerdict(r.doc_id, r.ts_us, r.status, r.verdict, kept)
-            }
-            state.update(seen)
-            // strictly after the current watermark so late-only groups
-            // don't fault (the lshCandidates clamp)
-            val base = math.max(maxTs / 1000L, state.getCurrentWatermarkMs() + 1L)
-            state.setTimeoutTimestamp(base, lateness)
-            out.iterator
-          }
-      }
+    keyedFold(gated, lateness)(
+        p => canonicalKey(p.passes, p.canonical, p.doc_id), r => (r.ts_us, r.doc_id), false) {
+      (seen, r) =>
+        val kept = r.passes == 1L && !seen
+        (seen || kept,
+          Some(CrawlVerdict(r.doc_id, r.ts_us, r.status, r.verdict, if (kept) 1L else 0L)))
+    }
   }
 
   final case class WcArr(doc_id: Long, ts_us: Long, status: String,
@@ -279,9 +275,30 @@ object StreamingCorpus {
       th: String, canon_dup: Boolean, text_dup: Boolean, alive2: Boolean,
       new_canon: Boolean, new_text: Boolean)
 
-  /** The STREAMING end-to-end crawl capstone — the junction the
-    * round-15 residual named: [[canonicalFirstSeen]]'s canonical race
-    * CHAINED INTO [[incrementalDedup]]'s text-hash first-seen state in
+  /** Runs `body` with Spark's multi-stateful-operator analyzer guard
+    * (`spark.sql.streaming.statefulOperator.checkCorrectness.enabled`)
+    * disabled, restoring the session's prior value afterwards — the
+    * opt-in scope for starting [[webCorpusStream]] (whose chained
+    * append-mode stages are proven safe in its scaladoc) without
+    * stripping the guard from every other streaming query the session
+    * later builds. Wrap BOTH the plan construction and the
+    * `writeStream...start()` call: the analyzer consults the conf at
+    * query start. Once `start()` returns, the running query is not
+    * re-checked, so restoring immediately after is safe.
+    */
+  def withChainedStatefulGuardDisabled[T](spark: SparkSession)(body: => T): T = {
+    val key = "spark.sql.streaming.statefulOperator.checkCorrectness.enabled"
+    val prior = spark.conf.getOption(key)
+    spark.conf.set(key, "false")
+    try body
+    finally prior match {
+      case Some(v) => spark.conf.set(key, v)
+      case None    => spark.conf.unset(key)
+    }
+  }
+
+  /** The STREAMING end-to-end crawl capstone: [[canonicalFirstSeen]]'s
+    * canonical race CHAINED INTO [[incrementalDedup]]'s text-hash first-seen state in
     * ONE streaming query, probing the SAME materialized standing
     * indexes as the batch increment
     * ([[graft.ops.Corpus.webCorpusIncrementFrom]]), so every arriving
@@ -305,7 +322,7 @@ object StreamingCorpus {
     * per-doc `d:` singleton groups (gate-failed, dead, no-canonical
     * rows in stage 1; non-survivors in stage 2) compute their verdicts
     * without ever consulting state, so the handlers write NO state and
-    * register NO timer for them (ADVICE r16) — the store never holds a
+    * register NO timer for them — the store never holds a
     * per-page entry. The standing corpus appears only as the broadcast
     * indexes.
     *
@@ -329,34 +346,12 @@ object StreamingCorpus {
     * lateness semantics are exactly a single stage's. The check is
     * session-wide, so this operator does NOT flip it itself (a
     * permanent disable would silently strip the guard from every
-    * OTHER streaming query later built on the session — ADVICE r16):
+    * OTHER streaming query later built on the session):
     * callers opt in by wrapping plan construction AND `start()` in
     * [[withChainedStatefulGuardDisabled]], which restores the prior
     * session value the moment the query is running. The spec proves
     * the semantics across batch splits under exactly that scope.
     */
-  /** Runs `body` with Spark's multi-stateful-operator analyzer guard
-    * (`spark.sql.streaming.statefulOperator.checkCorrectness.enabled`)
-    * disabled, restoring the session's prior value afterwards — the
-    * opt-in scope for starting [[webCorpusStream]] (whose chained
-    * append-mode stages are proven safe in its scaladoc) without
-    * stripping the guard from every other streaming query the session
-    * later builds. Wrap BOTH the plan construction and the
-    * `writeStream...start()` call: the analyzer consults the conf at
-    * query start. Once `start()` returns, the running query is not
-    * re-checked, so restoring immediately after is safe.
-    */
-  def withChainedStatefulGuardDisabled[T](spark: SparkSession)(body: => T): T = {
-    val key = "spark.sql.streaming.statefulOperator.checkCorrectness.enabled"
-    val prior = spark.conf.getOption(key)
-    spark.conf.set(key, "false")
-    try body
-    finally prior match {
-      case Some(v) => spark.conf.set(key, v)
-      case None    => spark.conf.unset(key)
-    }
-  }
-
   def webCorpusStream(
       pages: DataFrame,
       tsMicrosCol: String,
@@ -368,10 +363,9 @@ object StreamingCorpus {
       linkDensityPct, lateness)
       .select(col("doc_id"), col("ts_us"), col("stage"), col("tok_cnt"))
 
-  /** [[webCorpusStream]] PLUS the streamed index write-back (VERDICT
-    * r16 #5) — the full nightly cycle as one continuous query: each
-    * verdict row also carries `delta_canon` / `delta_text`, non-NULL
-    * exactly on the row whose claim FIRST admitted that key (stage 1
+  /** [[webCorpusStream]] PLUS the streamed index write-back — the full
+    * nightly cycle as one continuous query: each verdict row also
+    * carries `delta_canon` / `delta_text`, non-NULL exactly on the row whose claim FIRST admitted that key (stage 1
     * flags the arrival that takes a canonical's keeper slot against
     * standing index ∪ stream state; stage 2 flags the arrival whose
     * text hash first survives both) — so the keys with a non-NULL
@@ -416,46 +410,26 @@ object StreamingCorpus {
     // stage 1: canonical first-seen — a passing page with a canonical
     // claimed by the standing index OR by an earlier passing arrival
     // is a canonical_dup (the batch rn1 rule under arrival order)
-    val afterCanon = gated
-      .groupByKey(p =>
-        if (p.passes == 1L && p.canonical != null) "c:" + p.canonical
-        else "d:" + p.doc_id)
-      .flatMapGroupsWithState[Boolean, WcMid](
-        OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        (key: String, newRows: Iterator[WcArr], state: GroupState[Boolean]) =>
-          if (state.hasTimedOut) { state.remove(); Iterator.empty }
-          else {
-            val arrivals = newRows.toSeq.sortBy(r => (r.ts_us, r.doc_id))
-            var seen = state.getOption.getOrElse(false)
-            var maxTs = Long.MinValue
-            val out = arrivals.map { r =>
-              maxTs = math.max(maxTs, r.ts_us)
-              val claims = r.passes == 1L && r.canonical != null
-              val dup = claims && (r.in_canon_idx || seen)
-              // the arrival that takes the keeper slot is the one that
-              // ADMITS the canonical into the index — the streamed
-              // write-back flag (≡ the batch delta's rank-free
-              // "any gate survivor claims it, not in standing")
-              val admits = claims && !dup
-              if (admits) seen = true
-              WcMid(r.doc_id, r.ts_us, r.status, r.verdict, r.text, r.n_toks,
-                r.canonical, r.th, r.in_text_idx, canon_dup = dup,
-                alive1 = r.passes == 1L && !dup, new_canon = admits,
-                r.__event_time)
-            }
-            // `d:` groups hold only non-claiming rows (claims = false
-            // above for every member), whose verdicts never consult
-            // `seen` — persisting state + a timer for them would put
-            // one entry per PAGE in the store for the whole horizon.
-            // Only contested canonical keys keep state.
-            if (!key.startsWith("d:")) {
-              state.update(seen)
-              val base = math.max(maxTs / 1000L, state.getCurrentWatermarkMs() + 1L)
-              state.setTimeoutTimestamp(base, lateness)
-            }
-            out.iterator
-          }
-      }
+    // `d:` groups hold only non-claiming rows, whose verdicts never
+    // consult `seen` — persisting state + a timer for them would put one
+    // entry per PAGE in the store for the whole horizon. Only contested
+    // canonical keys keep state.
+    val afterCanon = keyedFold(gated, lateness)(
+        p => canonicalKey(p.passes, p.canonical, p.doc_id), r => (r.ts_us, r.doc_id), false,
+        contested) {
+      (seen, r) =>
+        val claims = r.passes == 1L && r.canonical != null
+        val dup = claims && (r.in_canon_idx || seen)
+        // the arrival that takes the keeper slot is the one that ADMITS
+        // the canonical into the index — the streamed write-back flag
+        // (≡ the batch delta's rank-free "any gate survivor claims it,
+        // not in standing")
+        val admits = claims && !dup
+        (seen || admits,
+          Some(WcMid(r.doc_id, r.ts_us, r.status, r.verdict, r.text, r.n_toks,
+            r.canonical, r.th, r.in_text_idx, canon_dup = dup,
+            alive1 = r.passes == 1L && !dup, new_canon = admits, r.__event_time)))
+    }
     // stage 2: text-hash first-seen over canonical-stage survivors —
     // the incrementalDedup state keyed on md5(text) (the batch rn2
     // rule; md5 equality stands in for text equality exactly as the
@@ -465,38 +439,19 @@ object StreamingCorpus {
     // timeout needs its own watermark node (chained append-mode
     // stateful operators are supported; the re-mark is how the chain
     // declares its time column at each stage)
-    val afterText = afterCanon
-      .withWatermark("__event_time", lateness)
-      .groupByKey(p => if (p.alive1) "t:" + p.th else "d:" + p.doc_id)
-      .flatMapGroupsWithState[Boolean, WcStaged](
-        OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        (key: String, newRows: Iterator[WcMid], state: GroupState[Boolean]) =>
-          if (state.hasTimedOut) { state.remove(); Iterator.empty }
-          else {
-            val arrivals = newRows.toSeq.sortBy(r => (r.ts_us, r.doc_id))
-            var seen = state.getOption.getOrElse(false)
-            var maxTs = Long.MinValue
-            val out = arrivals.map { r =>
-              maxTs = math.max(maxTs, r.ts_us)
-              val dup = r.alive1 && (r.in_text_idx || seen)
-              val admits = r.alive1 && !dup
-              if (admits) seen = true
-              WcStaged(r.doc_id, r.ts_us, r.status, r.verdict, r.text,
-                r.n_toks, r.canonical, r.th, r.canon_dup, text_dup = dup,
-                alive2 = r.alive1 && !dup, new_canon = r.new_canon,
-                new_text = admits)
-            }
-            // same state-free rule as stage 1: `d:` groups hold only
-            // non-survivors (alive1 = false), whose verdicts never
-            // consult `seen` — skip the store write and the timer
-            if (!key.startsWith("d:")) {
-              state.update(seen)
-              val base = math.max(maxTs / 1000L, state.getCurrentWatermarkMs() + 1L)
-              state.setTimeoutTimestamp(base, lateness)
-            }
-            out.iterator
-          }
-      }
+    // same state-free rule as stage 1: `d:` groups hold only
+    // non-survivors (alive1 = false), whose verdicts never consult `seen`
+    val afterText = keyedFold(afterCanon.withWatermark("__event_time", lateness), lateness)(
+        p => if (p.alive1) "t:" + p.th else "d:" + p.doc_id, r => (r.ts_us, r.doc_id), false,
+        contested) {
+      (seen, r) =>
+        val dup = r.alive1 && (r.in_text_idx || seen)
+        val admits = r.alive1 && !dup
+        (seen || admits,
+          Some(WcStaged(r.doc_id, r.ts_us, r.status, r.verdict, r.text,
+            r.n_toks, r.canonical, r.th, r.canon_dup, text_dup = dup,
+            alive2 = r.alive1 && !dup, new_canon = r.new_canon, new_text = admits)))
+    }
     // stage 3: the Gopher gate map-side + the batch increment's final
     // verdict projection, with the write-back columns riding along
     Corpus.withGopher(afterText.toDF())
@@ -533,16 +488,10 @@ object StreamingCorpus {
       sinkDir: String,
       stopwords: Seq[String],
       medians: (Double, Double, Double, Double)): StreamingQuery = {
-    spark.readStream.schema(schema).parquet(sourceDir)
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        graft.ops.Text.qualityVotesFrom(batch, stopwords, medians)
-          .write.mode("append").parquet(sinkDir)
-        ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
+    Drain.foreachBatch(spark.readStream.schema(schema).parquet(sourceDir), checkpointDir) { batch =>
+      graft.ops.Text.qualityVotesFrom(batch, stopwords, medians)
+        .write.mode("append").parquet(sinkDir)
+    }
   }
 
   /** Streaming twin of `q_spm_encode` — continuous tokenizer-encode
@@ -563,16 +512,10 @@ object StreamingCorpus {
       sinkDir: String,
       model: Seq[(String, Long)],
       maxPieceLen: Int): StreamingQuery = {
-    spark.readStream.schema(schema).parquet(sourceDir)
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        graft.ops.Text.spmEncodeDocs(batch, model, maxPieceLen)
-          .write.mode("append").parquet(sinkDir)
-        ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
+    Drain.foreachBatch(spark.readStream.schema(schema).parquet(sourceDir), checkpointDir) { batch =>
+      graft.ops.Text.spmEncodeDocs(batch, model, maxPieceLen)
+        .write.mode("append").parquet(sinkDir)
+    }
   }
 
   final case class HashedDoc(doc_id: Long, ts_us: Long, h: String, in_corpus: Boolean,
@@ -617,35 +560,12 @@ object StreamingCorpus {
       .withWatermark("__event_time", lateness)
       .select(col("doc_id"), col("ts_us"), col("h"), col("in_corpus"), col("__event_time"))
       .as[HashedDoc]
-    hashed
-      .groupByKey(_.h)
-      .flatMapGroupsWithState[Boolean, DocVerdict](
-        OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        (_: String, newRows: Iterator[HashedDoc], state: GroupState[Boolean]) =>
-          if (state.hasTimedOut) {
-            state.remove()
-            Iterator.empty
-          } else {
-            val arrivals = newRows.toSeq.sortBy(r => (r.ts_us, r.doc_id))
-            var seen = state.getOption.getOrElse(false)
-            var maxTs = Long.MinValue
-            val out = arrivals.map { r =>
-              val dupStream = seen
-              seen = true
-              maxTs = math.max(maxTs, r.ts_us)
-              DocVerdict(r.doc_id, r.ts_us,
-                dup_of_corpus = if (r.in_corpus) 1L else 0L,
-                dup_in_stream = if (dupStream) 1L else 0L,
-                keep = if (!r.in_corpus && !dupStream) 1L else 0L)
-            }
-            state.update(seen)
-            // same timeout clamp as lshCandidates: strictly after the
-            // current watermark so late-only groups don't fault
-            val base = math.max(maxTs / 1000L, state.getCurrentWatermarkMs() + 1L)
-            state.setTimeoutTimestamp(base, lateness)
-            out.iterator
-          }
-      }
+    keyedFold(hashed, lateness)(_.h, r => (r.ts_us, r.doc_id), false) { (seen, r) =>
+      (true, Some(DocVerdict(r.doc_id, r.ts_us,
+        dup_of_corpus = if (r.in_corpus) 1L else 0L,
+        dup_in_stream = if (seen) 1L else 0L,
+        keep = if (!r.in_corpus && !seen) 1L else 0L)))
+    }
   }
 
   final case class SegOcc(doc_id: Long, ts_us: Long, seg: String,
@@ -690,30 +610,9 @@ object StreamingCorpus {
       .withColumn("__event_time", timestamp_micros(col("ts_us")))
       .withWatermark("__event_time", lateness)
       .as[SegOcc]
-    segs
-      .groupByKey(_.seg)
-      .flatMapGroupsWithState[Boolean, SegSeen](
-        OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        (_: String, newRows: Iterator[SegOcc], state: GroupState[Boolean]) =>
-          if (state.hasTimedOut) {
-            state.remove()
-            Iterator.empty
-          } else {
-            val arrivals = newRows.toSeq.sortBy(r => (r.ts_us, r.doc_id))
-            var seen = state.getOption.getOrElse(false)
-            var maxTs = Long.MinValue
-            val out = arrivals.map { r =>
-              val dup = seen
-              seen = true
-              maxTs = math.max(maxTs, r.ts_us)
-              SegSeen(r.doc_id, r.ts_us, r.seg, if (dup) 1L else 0L)
-            }
-            state.update(seen)
-            val base = math.max(maxTs / 1000L, state.getCurrentWatermarkMs() + 1L)
-            state.setTimeoutTimestamp(base, lateness)
-            out.iterator
-          }
-      }
+    keyedFold(segs, lateness)(_.seg, r => (r.ts_us, r.doc_id), false) { (seen, r) =>
+      (true, Some(SegSeen(r.doc_id, r.ts_us, r.seg, if (seen) 1L else 0L)))
+    }
   }
 
   final case class MediaBandRow(media_id: Long, ts_us: Long, band_i: Int,
@@ -776,45 +675,20 @@ object StreamingCorpus {
       }
       .withWatermark("__event_time", lateness)
       .as[MediaBandRow]
-    banded
-      .groupByKey(r => (r.band_i, r.band_val))
-      .flatMapGroupsWithState[MediaBucket, MediaCandPair](
-        OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        (key: (Int, Long), newRows: Iterator[MediaBandRow],
-         state: GroupState[MediaBucket]) =>
-          if (state.hasTimedOut) {
-            state.remove()
-            Iterator.empty
-          } else {
-            val arrivals = newRows.toSeq.sortBy(r => (r.ts_us, r.media_id))
-            var bucket = state.getOption.getOrElse(MediaBucket(Nil, Nil))
-            val out = Seq.newBuilder[MediaCandPair]
-            var maxTs = Long.MinValue
-            arrivals.foreach { r =>
-              if (!bucket.ids.contains(r.media_id)) {
-                bucket.ids.iterator.zip(bucket.bints.iterator).foreach {
-                  case (d, db) =>
-                    var ham = 0L
-                    var i = 0
-                    while (i < bands) {
-                      ham += java.lang.Long.bitCount(db(i) ^ r.bints(i))
-                      i += 1
-                    }
-                    if (ham <= maxHamming)
-                      out += MediaCandPair(math.min(d, r.media_id),
-                        math.max(d, r.media_id), key._1, ham)
-                }
-                bucket = MediaBucket(bucket.ids :+ r.media_id,
-                  bucket.bints :+ r.bints)
-              }
-              maxTs = math.max(maxTs, r.ts_us)
-            }
-            state.update(bucket)
-            val base = math.max(maxTs / 1000L, state.getCurrentWatermarkMs() + 1L)
-            state.setTimeoutTimestamp(base, lateness)
-            out.result().iterator
-          }
-      }
+    keyedFold(banded, lateness)(
+        r => (r.band_i, r.band_val), r => (r.ts_us, r.media_id), MediaBucket(Nil, Nil)) {
+      (bucket, r) =>
+        if (bucket.ids.contains(r.media_id)) (bucket, Nil)
+        else {
+          val pairs = bucket.ids.iterator.zip(bucket.bints.iterator).flatMap { case (d, db) =>
+            val ham = (0 until bands).map(i => java.lang.Long.bitCount(db(i) ^ r.bints(i)).toLong).sum
+            if (ham <= maxHamming)
+              Some(MediaCandPair(math.min(d, r.media_id), math.max(d, r.media_id), r.band_i, ham))
+            else None
+          }.toList
+          (MediaBucket(bucket.ids :+ r.media_id, bucket.bints :+ r.bints), pairs)
+        }
+    }
   }
 
   final case class BandRow(doc_id: Long, ts_us: Long, band_id: Int, sig: String,
@@ -865,38 +739,12 @@ object StreamingCorpus {
       // the watermarked column must REACH the stateful operator —
       // projecting it away disables event-time timeout
       .as[BandRow]
-    banded
-      .groupByKey(r => (r.band_id, r.sig))
-      .flatMapGroupsWithState[BucketState, CandPair](
-        OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        (key: (Int, String), newRows: Iterator[BandRow], state: GroupState[BucketState]) =>
-          if (state.hasTimedOut) {
-            state.remove()
-            Iterator.empty
-          } else {
-            val arrivals = newRows.toSeq.sortBy(r => (r.ts_us, r.doc_id))
-            var seen = state.getOption.map(_.docIds).getOrElse(Vector.empty)
-            val out = Seq.newBuilder[CandPair]
-            var maxTs = Long.MinValue
-            arrivals.foreach { r =>
-              if (!seen.contains(r.doc_id)) {
-                seen.foreach { d =>
-                  out += CandPair(math.min(d, r.doc_id), math.max(d, r.doc_id), key._1)
-                }
-                seen = seen :+ r.doc_id
-              }
-              maxTs = math.max(maxTs, r.ts_us)
-            }
-            state.update(BucketState(seen))
-            // evict the bucket once the watermark passes the horizon
-            // beyond its newest member; a bucket fed only rows older
-            // than the watermark would otherwise compute a timeout in
-            // the past, which setTimeoutTimestamp rejects — clamp to
-            // strictly after the current watermark
-            val base = math.max(maxTs / 1000L, state.getCurrentWatermarkMs() + 1L)
-            state.setTimeoutTimestamp(base, lateness)
-            out.result().iterator
-          }
-      }
+    keyedFold(banded, lateness)(
+        r => (r.band_id, r.sig), r => (r.ts_us, r.doc_id), BucketState(Vector.empty)) {
+      (bucket, r) =>
+        if (bucket.docIds.contains(r.doc_id)) (bucket, Nil)
+        else (BucketState(bucket.docIds :+ r.doc_id),
+          bucket.docIds.map(d => CandPair(math.min(d, r.doc_id), math.max(d, r.doc_id), r.band_id)))
+    }
   }
 }

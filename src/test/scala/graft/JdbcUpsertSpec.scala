@@ -99,31 +99,30 @@ class JdbcUpsertSpec extends AnyFunSuite {
       StructField("user_id", LongType), StructField("ts_us", LongType),
       StructField("event_type", StringType), StructField("payload", StringType)))
     val t0 = System.currentTimeMillis() * 1000L
+    val toDb: org.apache.spark.sql.DataFrame => Long =
+      b => Sinks.jdbcUpsert(b, url, "events_sink", keys, Sinks.insertWhereAbsentDialect)
 
     Seq((1L, t0 + 1, "click", "a"), (2L, t0 + 2, "view", "b"),
       (1L, t0 + 1, "click", "dup-in-stream"))
       .toDF("user_id", "ts_us", "event_type", "payload")
       .coalesce(1).write.mode("append").parquet(src)
-    graft.streaming.StreamingIncremental.startJdbc(
-      spark, src, schema, "ts_us", keys, ckpt, url, "events_sink",
-      Sinks.insertWhereAbsentDialect).awaitTermination()
+    graft.streaming.StreamingIncremental.start(
+      spark, src, schema, "ts_us", keys, ckpt, toDb).awaitTermination()
     assert(contents(url).size === 2)
 
     // new file: one replayed key + one new row; resumed checkpoint
     Seq((2L, t0 + 2, "view", "replay"), (3L, t0 + 3, "buy", "c"))
       .toDF("user_id", "ts_us", "event_type", "payload")
       .coalesce(1).write.mode("append").parquet(src)
-    graft.streaming.StreamingIncremental.startJdbc(
-      spark, src, schema, "ts_us", keys, ckpt, url, "events_sink",
-      Sinks.insertWhereAbsentDialect).awaitTermination()
+    graft.streaming.StreamingIncremental.start(
+      spark, src, schema, "ts_us", keys, ckpt, toDb).awaitTermination()
     val after2 = contents(url)
     assert(after2.size === 3)
     assert(after2((2L, t0 + 2, "view")) === "b") // replay skipped, original kept
 
     // checkpoint loss: full source replay, database absorbs every row
-    graft.streaming.StreamingIncremental.startJdbc(
-      spark, src, schema, "ts_us", keys, s"$base/ckpt2", url, "events_sink",
-      Sinks.insertWhereAbsentDialect).awaitTermination()
+    graft.streaming.StreamingIncremental.start(
+      spark, src, schema, "ts_us", keys, s"$base/ckpt2", toDb).awaitTermination()
     assert(contents(url) === after2)
   }
 

@@ -215,9 +215,10 @@ class PostgresDialectSpec extends AnyFunSuite {
             event_type VARCHAR(32))""")
     try {
       def drain(checkpoint: String): Unit =
-        graft.streaming.StreamingIncremental.startCopyUpsert(
+        graft.streaming.StreamingIncremental.start(
           spark, srcDir, schema, "ts_us", Seq("event_id"), checkpoint,
-          pgArgs, "graft_pg_stream").awaitTermination()
+          b => Sinks.copyUpsertPostgres(b, pgArgs, "graft_pg_stream", Seq("event_id")))
+          .awaitTermination()
       drain(ckpt)
       val half = psql("SELECT count(*) FROM graft_pg_stream").toLong
       assert(half === early.count())

@@ -346,6 +346,48 @@ class StreamingAggSpec extends AnyFunSuite {
     assert(streamed(7L) === Some(t0 + 7))
   }
 
+  test("streaming last-touch attribution evicts a touch the watermark passed between batches") {
+    val base = Files.createTempDirectory("graft-attr-evict").toString
+    val t0 = 1000L * 60 * 1000000
+    val hourUs = 3600L * 1000000
+    // file 1: user 10's click at t0 and a pusher at t0+10h (watermark
+    // t0+9h after the batch); file 2: user 10's purchase at t0+9.5h. The
+    // click's timeout (t0+1h) is behind the watermark when file 2 lands,
+    // so it is evicted, as a no-data batch between the files would do.
+    val files = Seq(
+      Seq(TouchInput(1L, 10L, t0, "click"), TouchInput(99L, 99L, t0 + 10 * hourUs, "view")),
+      Seq(TouchInput(2L, 10L, t0 + 19 * hourUs / 2, "purchase")))
+    val now = System.currentTimeMillis()
+    new java.io.File(s"$base/src").mkdirs()
+    files.zipWithIndex.foreach { case (rows, i) =>
+      rows.toDF().coalesce(1).write.parquet(s"$base/stage$i")
+      val part = new java.io.File(s"$base/stage$i").listFiles()
+        .find(_.getName.endsWith(".parquet")).get
+      val dst = new java.io.File(s"$base/src/f$i.parquet")
+      Files.copy(part.toPath, dst.toPath)
+      dst.setLastModified(now - 10000L + i * 5000L) // file order = arrival order
+    }
+
+    val src = spark.readStream.option("maxFilesPerTrigger", "1").schema(
+      StructType(Seq(
+        StructField("event_id", LongType), StructField("user_id", LongType),
+        StructField("ts_us", LongType), StructField("event_type", StringType))))
+      .parquet(s"$base/src").as[TouchInput]
+    StreamingAggregates.attribute(src, "click", "purchase", idleUs = hourUs)
+      .writeStream
+      .format("parquet")
+      .option("path", s"$base/sink")
+      .option("checkpointLocation", s"$base/ckpt")
+      .outputMode(OutputMode.Append)
+      .trigger(Trigger.AvailableNow())
+      .start()
+      .awaitTermination()
+
+    val streamed = spark.read.parquet(s"$base/sink").as[TouchOut].collect()
+      .map(o => (o.event_id, o.last_touch_ts)).toMap
+    assert(streamed === Map(2L -> None))
+  }
+
   test("streaming recency scores: incremental decay equals the smooth batch sum across batches") {
     import StreamingAggregates.{DecayInput, DecayOut}
     val base = java.nio.file.Files.createTempDirectory("graft-sdecay").toString

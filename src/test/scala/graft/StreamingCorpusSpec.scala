@@ -54,6 +54,23 @@ class StreamingCorpusSpec extends AnyFunSuite {
     assert(spark.read.parquet(sink).collect().length === 3)
   }
 
+  test("a corpus micro-batch at the shipped 200 shuffle partitions appends a data-sized file count") {
+    val base = Files.createTempDirectory("graft-scorpus-wide").toString
+    val (src, sink, ckpt) = (s"$base/src", s"$base/sink", s"$base/ckpt")
+    val t0 = System.currentTimeMillis() * 1000L
+    (1 to 40).map(i => (i.toLong, goodText(s"d$i"), t0 + i))
+      .toDF("doc_id", "text", "ts_us").coalesce(1).write.parquet(src)
+    val key = "spark.sql.shuffle.partitions"
+    val prior = spark.conf.get(key)
+    spark.conf.set(key, "200")
+    try StreamingCorpus.start(spark, src, schema, "ts_us", ckpt, sink).awaitTermination()
+    finally spark.conf.set(key, prior)
+    val files = new java.io.File(sink).listFiles().count(_.getName.startsWith("part-"))
+    val cap = spark.sparkContext.defaultParallelism
+    assert(files <= cap, s"the micro-batch appended $files part files, over $cap")
+    assert(spark.read.parquet(sink).count() === 40L)
+  }
+
   test("streaming LSH candidates: near-dups pair across and within batches") {
     import org.apache.spark.sql.streaming.{OutputMode, Trigger}
     val base = Files.createTempDirectory("graft-slsh").toString

@@ -1,8 +1,10 @@
 package graft
 
 import java.nio.file.Files
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
+import graft.etl.Sinks
 import graft.streaming.StreamingIncremental
 
 /** The Structured Streaming incremental path: drains available files,
@@ -22,6 +24,9 @@ class StreamingSpec extends AnyFunSuite {
 
   private val keys = Seq("user_id", "event_type", "ts_us")
 
+  private def toSink(dir: String): DataFrame => Long =
+    b => Sinks.upsertAppend(b.sparkSession, b, dir, keys)
+
   test("AvailableNow drains, checkpoints, and resumes incrementally") {
     val base = Files.createTempDirectory("graft-stream").toString
     val src = s"$base/src"
@@ -37,7 +42,7 @@ class StreamingSpec extends AnyFunSuite {
     ).toDF("user_id", "event_type", "ts_us")
     batch1.coalesce(1).write.mode("append").parquet(src)
 
-    val q1 = StreamingIncremental.start(spark, src, schema, "ts_us", keys, ckpt, sink)
+    val q1 = StreamingIncremental.start(spark, src, schema, "ts_us", keys, ckpt, toSink(sink))
     q1.awaitTermination()
     val after1 = spark.read.parquet(sink).collect().map(_.toSeq).toSet
     assert(after1.size === 2)
@@ -49,14 +54,14 @@ class StreamingSpec extends AnyFunSuite {
     ).toDF("user_id", "event_type", "ts_us")
     batch2.coalesce(1).write.mode("append").parquet(src)
 
-    val q2 = StreamingIncremental.start(spark, src, schema, "ts_us", keys, ckpt, sink)
+    val q2 = StreamingIncremental.start(spark, src, schema, "ts_us", keys, ckpt, toSink(sink))
     q2.awaitTermination()
     val after2 = spark.read.parquet(sink).collect().map(_.toSeq).toSet
     assert(after2.size === 3)
     assert(after2.map(r => (r(0), r(1))).contains((3L, "buy")))
 
     // third run with nothing new: sink unchanged
-    val q3 = StreamingIncremental.start(spark, src, schema, "ts_us", keys, ckpt, sink)
+    val q3 = StreamingIncremental.start(spark, src, schema, "ts_us", keys, ckpt, toSink(sink))
     q3.awaitTermination()
     assert(spark.read.parquet(sink).collect().map(_.toSeq).toSet === after2)
   }
@@ -70,7 +75,7 @@ class StreamingSpec extends AnyFunSuite {
     val key = "spark.sql.shuffle.partitions"
     val prior = spark.conf.get(key)
     spark.conf.set(key, "200")
-    try StreamingIncremental.start(spark, src, schema, "ts_us", keys, ckpt, sink).awaitTermination()
+    try StreamingIncremental.start(spark, src, schema, "ts_us", keys, ckpt, toSink(sink)).awaitTermination()
     finally spark.conf.set(key, prior)
     val files = new java.io.File(sink).listFiles().count(_.getName.startsWith("part-"))
     val cap = spark.sparkContext.defaultParallelism
