@@ -8,9 +8,9 @@ import graft.ops.Dedup
 
 /** Shared fixtures for the declared queries and their oracles: session
   * config guard, scratch-layout paths, derived corpora (perturbed /
-  * exact-dup / chain), the GA4 nested table, and the CC keeper oracle
-  * CTE chain. Split from SparkEntry; `private[graft]` because only the
-  * Entry* files and SparkEntry compose them.
+  * exact-dup / chain), the GA4 nested table and the trained-model
+  * stores. `private[graft]` because only the `graft.queries` registry
+  * and SparkEntry compose them.
   */
 private[graft] object EntrySupport {
   /** Some session configs (nanos-as-long, UTC) must be set even when the
@@ -88,7 +88,7 @@ private[graft] object EntrySupport {
   }
 
   /** True for class-file paths (relative, '/'-separated) that belong
-    * to fixture-producing code. Entry{Queries,Oracles}* are EXCLUDED
+    * to fixture-producing code. The `graft/queries/` registry is EXCLUDED
     * on purpose: query bodies only COMPOSE on fixtures, and including
     * them would churn the key on every declared-query edit.
     */
@@ -756,68 +756,6 @@ private[graft] object EntrySupport {
     Tables.readParquetCached(s, ga4)
   }
 
-  /** The CC keeper oracle's CTE chain (corpus construction → shingle
-    * hashes → verified edges → transitive reach), shared verbatim by
-    * `q_dedup_cc` and the cluster-size histogram that composes on it.
-    */
-  private[graft] val ccKeeperCtes: String =
-    """        |base AS (
-        |  SELECT doc_id,
-        |         list_filter(string_split(text, ' '), t -> t != '') AS toks
-        |  FROM documents WHERE doc_id < 500),
-        |corpus AS (
-        |  SELECT doc_id, array_to_string(toks, ' ') AS text FROM base
-        |  UNION ALL
-        |  SELECT doc_id + 100000,
-        |         array_to_string(toks[1:CAST(ceil(len(toks) * CAST(0.80 AS DOUBLE)) AS INT)], ' ')
-        |  FROM base
-        |  UNION ALL
-        |  SELECT doc_id + 200000,
-        |         array_to_string(toks[1:CAST(ceil(len(toks) * CAST(0.64 AS DOUBLE)) AS INT)], ' ')
-        |  FROM base),
-        |tok AS (
-        |  SELECT doc_id, list_filter(string_split(text, ' '), t -> t != '') AS toks
-        |  FROM corpus),
-        |shx AS (
-        |  SELECT doc_id, unnest(list_distinct(list_transform(
-        |    generate_series(1, greatest(len(toks) - 2, 1)),
-        |    i -> concat_ws(' ', toks[i], toks[i + 1], toks[i + 2])))) AS shingle
-        |  FROM tok),
-        |hx AS (
-        |  SELECT doc_id,
-        |         ('0x' || substr(md5(shingle), 1, 8))::BIGINT % 2147483647 AS h
-        |  FROM shx),
-        |mh AS (
-        |  SELECT doc_id, seeds.seed,
-        |         min(((37 + 101 * seeds.seed) * h + 13 + 97 * seeds.seed) % 2147483647) AS mh
-        |  FROM hx, (SELECT unnest(generate_series(0, 15)) AS seed) seeds
-        |  GROUP BY doc_id, seeds.seed),
-        |bands AS (
-        |  SELECT doc_id, seed // 4 AS band_id,
-        |         string_agg(CAST(mh AS VARCHAR), ',' ORDER BY seed) AS sig
-        |  FROM mh GROUP BY doc_id, seed // 4),
-        |cands AS (
-        |  SELECT DISTINCT x.doc_id AS a, y.doc_id AS b
-        |  FROM bands x JOIN bands y
-        |    ON x.band_id = y.band_id AND x.sig = y.sig AND x.doc_id < y.doc_id),
-        |sizes AS (SELECT doc_id, count(*) AS sz FROM hx GROUP BY doc_id),
-        |common AS (
-        |  SELECT c.a, c.b, count(*) AS cnt FROM cands c
-        |  JOIN hx xa ON xa.doc_id = c.a
-        |  JOIN hx xb ON xb.doc_id = c.b AND xb.h = xa.h
-        |  GROUP BY c.a, c.b),
-        |verified AS (
-        |  SELECT m.a, m.b FROM common m
-        |  JOIN sizes sa ON sa.doc_id = m.a
-        |  JOIN sizes sb ON sb.doc_id = m.b
-        |  WHERE round(m.cnt / (sa.sz + sb.sz - m.cnt), 4) >= 0.7),
-        |edges AS (
-        |  SELECT a, b FROM verified UNION ALL SELECT b, a FROM verified),
-        |reach AS (
-        |  SELECT a AS doc_id, b AS r FROM edges
-        |  UNION
-        |  SELECT rc.doc_id, e.b FROM reach rc JOIN edges e ON e.a = rc.r)""".stripMargin
-
   /** Materialized trained quality-classifier model — (idx, w) rows,
     * idx −1 carrying the bias ([[graft.ops.Text.trainQualityLrLocal]],
     * deterministic, so this is a derived corpus-versioned constant
@@ -1287,64 +1225,4 @@ private[graft] object EntrySupport {
     ensureBucketed(s, built._2, "th", tp, tName)
     (Tables.tableCached(s, cName), Tables.tableCached(s, tName))
   }
-
-  /** Queries whose MODEL loads driver-side from a qtmp store (weights
-    * collected and embedded as literals), which Bench's plan-walk
-    * fixture detection cannot see — declared here so fixture_readers
-    * stays complete. FixtureCteSpec pins every name to a declared
-    * query.
-    */
-  private[graft] val modelStoreReaders: Set[String] = Set(
-    "q_quality_classifier", "q_sim_ann_kmeans", "q_sim_ann_pq",
-    "q_sim_ann_pq_refine", "q_dedup_semantic", "q_cluster_purity",
-    "q_bpe_encode", "q_bpe_fertility", "q_spm_encode", "q_spm_fertility",
-    "q_spm_sample", "q_spm_byte_fallback", "q_sim_ivf_incremental",
-    "q_sim_hnsw_growing", "q_dedup_semantic_incremental",
-    "q_sim_hnsw_sealed")
-
-  /** For each query whose Spark side reads a prepare-materialized qtmp
-    * fixture while its DuckDB oracle recomputes the same stage from raw
-    * text, the name of the oracle CTE at the fixture boundary — i.e.
-    * the prefix of the oracle that corresponds to work the engine did
-    * once at ingest. Verify dumps this as oracle_fixture_cte.json;
-    * tools/time_oracle.py times `SELECT count(*) FROM <cte>` under the
-    * same WITH chain and publishes the split so BENCH's
-    * ratio_vs_duckdb for this family can be read like-for-like
-    * (VERDICT r9 #2). Media derivation oracles are absent on purpose:
-    * they restate planted answers arithmetically and are already
-    * flagged nominal in floor_notes. FixtureCteSpec pins every entry
-    * to a declared query and an existing CTE.
-    */
-  private[graft] val oracleFixtureCte: Map[String, String] = Map(
-    "q_dedup_minhash"      -> "mh",   // fixture stores minhash signatures
-    "q_dedup_minhash_est"  -> "mh",
-    "q_minhash_error"      -> "mh",
-    "q_dedup_ngram"        -> "hx",   // fixture stores shingle-hash arrays
-    "q_dedup_contain"      -> "hx",
-    "q_ngram_novelty"      -> "hx",
-    "q_dedup_pipeline"     -> "mh",
-    "q_dedup_simhash"      -> "fps",  // fixture stores simhash fingerprints
-    "q_dedup_simhash_band" -> "fp",
-    "q_dedup_cc"           -> "reach", // fixture stores the CC keeper fixpoint
-    "q_dup_cluster_stats"  -> "keep",
-    "q_bigram_lm"          -> "bi",   // fixture stores the (doc,prev,next,c) collapse
-    "q_lm_interp"          -> "db",
-    "q_kn_bigram"          -> "db",
-    // the r11 posting store (weighted postings materialized at ingest);
-    // boundaries chosen CONSERVATIVELY — each names the deepest CTE the
-    // oracle shares with the store build that the tool can time
-    // standalone, understating the moved cost where the store covers
-    // more (q_bm25's df branch, q_rrf's dl/st branch)
-    "q_tfidf"              -> "scored", // store = the per-posting weighted frame
-    "q_sparse_cosine"      -> "unitv",  // store carries the unit weights
-    "q_bm25"               -> "st",     // tf -> dl -> stats chain lives in the store
-    "q_rrf"                -> "unitv",
-    // r17 (ADVICE r16): the IVF increment reads the cell-partitioned
-    // STANDING assignment store (prepare-materialized) while its
-    // DYNAMIC oracle re-derives every assignment from centroid
-    // literals in the 'assign' CTE — boundary declared so the split
-    // is timed; 'assign' also covers the (map-side, per-run) batch
-    // assignments, so the split is the documented upper bound on the
-    // moved cost, not an exact decomposition
-    "q_sim_ivf_incremental" -> "assign")
 }

@@ -1,13 +1,13 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
 
 import graft.ops.EventOps
 import graft.etl.Sinks
 import graft.Tables._
 import graft.EntrySupport._
+import graft.queries._
 
 /** Driver contract — see /root/repo/SURVEY.md §2.12 for the declared
   * query inventory. Every query is deterministic: total ORDER BY on a
@@ -35,16 +35,30 @@ object SparkEntry {
       .orderBy(col("ts_us"), col("event_id"))
   }
 
-  // ---------------------------------------------------------------------------
-  // Query bodies live in EntryQueriesA-D; oracle SQL in EntryOraclesA-C;
-  // shared fixtures in EntrySupport. Keys match SURVEY.md §2.12 exactly.
-  // ---------------------------------------------------------------------------
+  /** The declared-query registry: one [[Query]] record per query, filed
+    * by domain under `graft/queries/`; adding a query means adding one
+    * record to its domain file. The maps below are views of it; keys
+    * match SURVEY.md §2.12.
+    */
+  lazy val declared: Seq[Query] =
+    EventQueries.all ++ RelationalQueries.all ++ TextQueries.all ++
+      DedupQueries.all ++ SimQueries.all ++ CorpusQueries.all ++
+      MediaQueries.all ++ SinkQueries.all
 
   def queries: Map[String, (SparkSession, String) => DataFrame] =
-    EntryQueriesA.map ++ EntryQueriesB.map ++ EntryQueriesC.map ++ EntryQueriesD.map
+    declared.map { q =>
+      q.name -> ((spark: SparkSession, dir: String) => q.body(ensure(spark), dir))
+    }.toMap
 
   def oracleSql: Map[String, String] =
-    EntryOraclesA.map ++ EntryOraclesB.map ++ EntryOraclesC.map
+    declared.collect { case Query(n, _, Sql(sql), _, _, _) => n -> sql }.toMap
+
+  /** Queries whose body loads a model driver-side from a qtmp store. */
+  def modelStoreReaders: Set[String] = declared.filter(_.modelStore).map(_.name).toSet
+
+  /** Query name → the oracle CTE at its fixture boundary. */
+  def oracleFixtureCte: Map[String, String] =
+    declared.flatMap(q => q.fixtureCte.map(q.name -> _)).toMap
 
   /** One-time scratch materializations (the date-partitioned events
     * layout, the GA4 nested parquet). Queries run the same ensure*
@@ -60,7 +74,7 @@ object SparkEntry {
       tmpDir("events_by_date", sfDir), "event_date")
     Sinks.ensureWritten(ga4Frame(Tables.events(s, sfDir)), tmpDir("ga4", sfDir))
     Sinks.ensureWritten(chainFrame(s, sfDir, 500), tmpDir("chain_500", sfDir))
-    // materialized stage outputs (round 9): the CC keeper assignment
+    // materialized stage outputs: the CC keeper assignment
     // (dedup output — declared by q_dedup_cc, audited by
     // q_dup_cluster_stats) and the LM bigram count table (read by all
     // three LM scorers). Both are corpus-versioned artifacts a
@@ -99,138 +113,16 @@ object SparkEntry {
 
   /** Oracle SQL whose text depends on an engine-built MODEL (data, not
     * code): generated at Verify time against the actual sfDir and
-    * merged over [[oracleSql]] into oracle_sql.json. Today that is
-    * `q_sim_ann_kmeans` — the deterministic driver-local k-means
-    * training ([[ops.Sim.kmeansCentroidsSampledLocal]], identical call
-    * to the query's) yields centroid literals the oracle embeds, and
-    * DuckDB independently recomputes the entire multi-probe IVF search
-    * from them (same trick as `q_sim_lsh`'s pinned hyperplanes).
-    * Training QUALITY stays graded by KmeansIvfSpec's recall bound;
-    * this closes the search path's oracle gap.
+    * merged over [[oracleSql]] into oracle_sql.json. The pinned models
+    * are trained once per call, independently of the stores the query
+    * bodies read; DuckDB then recomputes the whole search or encode
+    * from the embedded literals. Training QUALITY stays graded by the
+    * specs (KmeansIvfSpec's recall bound and the like).
     */
   def oracleSqlDynamic(spark: SparkSession, sfDir: String): Map[String, String] = {
-    val s = ensure(spark)
-    // pqTrainLocal re-runs the identical deterministic centroid build
-    // internally, so `cents` serves all three oracles consistently.
-    val (cents, cbs) = ops.Sim.pqTrainLocal(
-      Tables.embeddings(s, sfDir), nCells = 8, m = 8, ks = 16,
-      iters = 4, sampleMod = 2)
-    Map(
-      "q_sim_ann_kmeans" ->
-        ops.Sim.ivfSearchOracleSql(cents, nQueries = 10, k = 5, nProbe = 2),
-      // identical SQL on purpose: the routed-HNSW query saturates its
-      // per-cell graph walks (efSearch ≥ every cell at verify scale),
-      // and exhaustive-within-probed-cells IS multi-probe IVF exact
-      // search — matching this oracle proves routing + graph build +
-      // scatter-gather merge lose nothing vs the cell-exhaustive scan
-      "q_sim_hnsw_routed" ->
-        ops.Sim.ivfSearchOracleSql(cents, nQueries = 10, k = 5, nProbe = 2),
-      // the incremental form's oracle is the SAME pinned-centroid
-      // search over standing ∪ planted batch: the store's standing
-      // assignments and the map-side batch assignments are both the
-      // pure argmax of the frozen model, so one assignment rule in SQL
-      // covers both sides — a hash match proves index maintenance
-      // (store + add) ≡ assigning the world fresh
-      "q_sim_ivf_incremental" ->
-        ops.Sim.ivfSearchOracleSql(cents, nQueries = 10, k = 5, nProbe = 2,
-          extraCorpusSql = ivfBatchSql),
-      // identical SQL on purpose (the q_sim_hnsw_routed precedent):
-      // the growing-segment search saturates its sealed-graph walks,
-      // and sealed-graphs + brute-forced growing segment ≡ multi-probe
-      // IVF exact search over standing ∪ batch
-      "q_sim_hnsw_growing" ->
-        ops.Sim.ivfSearchOracleSql(cents, nQueries = 10, k = 5, nProbe = 2,
-          extraCorpusSql = ivfBatchSql),
-      // identical again for the COMPACTED form: sealing the growing
-      // segment into per-cell graphs changes the physical tier, not
-      // the law — saturated walks over standing graphs + the loaded
-      // sealed segment ≡ the same exact search over standing ∪ batch
-      "q_sim_hnsw_sealed" ->
-        ops.Sim.ivfSearchOracleSql(cents, nQueries = 10, k = 5, nProbe = 2,
-          extraCorpusSql = ivfBatchSql),
-      "q_dedup_semantic" ->
-        ops.Sim.semanticDedupOracleSql(cents, minCos = 0.40),
-      // the incremental form's oracle is the SAME pinned-model SemDeDup
-      // re-run over standing ∪ planted batch, restricted to batch ids —
-      // a hash match IS the increment ≡ union keeper law cross-engine
-      "q_dedup_semantic_incremental" ->
-        ops.Sim.semanticDedupOracleSql(cents, minCos = 0.40,
-          extraCorpusSql = ivfBatchSql,
-          restrictSql = "WHERE s.vec_id >= 1000000"),
-      "q_sim_ann_pq" ->
-        ops.Sim.ivfPqSearchOracleSql(cents, cbs, nQueries = 10, k = 5,
-          nProbe = 2),
-      "q_sim_ann_pq_refine" ->
-        ops.Sim.ivfPqSearchOracleSql(cents, cbs, nQueries = 10, k = 5,
-          nProbe = 2, refine = 20),
-      "q_cluster_purity" ->
-        ops.Sim.clusterPurityOracleSql(cents),
-      "q_quality_classifier" -> {
-        // identical training call to the query body (deterministic:
-        // bounded sorted sample, zero init, fixed-order full-batch GD)
-        val docs = Tables.documents(s, sfDir)
-          .repartition(fanN(s, sfDir))
-        val (w, b) = ops.Text.trainQualityLrLocal(
-          ops.Text.qualityCorpus(docs), dim = 256)
-        ops.Text.qualityClassifierOracleSql(256, w, b)
-      },
-      "q_bpe_encode" -> {
-        // identical training call to the bpe_merges store build; the
-        // generated SQL re-runs the whole encode (wrap + nested
-        // replace chain) from raw text in DuckDB, planted rows mirrored
-        val merges = ops.Text.bpeTrain(
-          Tables.documents(s, sfDir)
-            .repartition(fanN(s, sfDir)),
-          nMerges = 32, minWordCount = 2L)
-        val extra = bpePlantedDocs(merges).map { case (id, t) =>
-          s"\n  UNION ALL SELECT $id AS doc_id, '${t.replace("'", "''")}' AS text"
-        }.mkString
-        ops.Text.bpeEncodeOracleSql(merges, extra)
-      },
-      "q_bpe_fertility" -> {
-        // same independent re-train; the oracle re-runs the encode and
-        // aggregates tokens/word per lang
-        val merges = ops.Text.bpeTrain(
-          Tables.documents(s, sfDir)
-            .repartition(fanN(s, sfDir)),
-          nMerges = 32, minWordCount = 2L)
-        ops.Text.bpeFertilityOracleSql(merges)
-      },
-      "q_spm_encode" -> {
-        // identical training call to the spm_model store build; the
-        // generated SQL re-runs the WHOLE Viterbi segmentation from
-        // raw text via a recursive-CTE DP, planted rows mirrored
-        val model = spmTrain(s, sfDir)
-        val extra = spmPlantedDocs(model).map { case (id, t) =>
-          s"\n  UNION ALL SELECT $id AS doc_id, '${t.replace("'", "''")}' AS text"
-        }.mkString
-        ops.Text.spmEncodeOracleSql(model, SpmMaxPieceLen, extra)
-      },
-      "q_spm_fertility" -> {
-        val model = spmTrain(s, sfDir)
-        ops.Text.spmFertilityOracleSql(model, SpmMaxPieceLen)
-      },
-      "q_spm_sample" -> {
-        // same independent re-train; the oracle re-runs the PERTURBED
-        // DP with the identical inlined integer-noise formula
-        val model = spmTrain(s, sfDir)
-        ops.Text.spmSampleOracleSql(model, SpmMaxPieceLen,
-          SpmSampleTauU6, epoch = 1)
-      },
-      "q_quality_votes_approx" ->
-        // the frozen threshold model is DATA: the same memoized
-        // 4-double slice the query scores with embeds as literals
-        ops.Text.qualityVotesFromOracleSql(qvApproxLocal(s, sfDir),
-          stopwords = Seq("the", "a")),
-      "q_spm_byte_fallback" -> {
-        // same independent re-train; the oracle re-runs the
-        // byte-fallback DP (strlen-priced unseen chars, dpu tally)
-        // with the planted unseen-character rows mirrored as literals
-        val model = spmTrain(s, sfDir)
-        val extra = spmFallbackPlantedDocs.map { case (id, t) =>
-          s"\n  UNION ALL SELECT $id AS doc_id, '${t.replace("'", "''")}' AS text"
-        }.mkString
-        ops.Text.spmEncodeFallbackOracleSql(model, SpmMaxPieceLen, extra)
-      })
+    val models = new PinnedModels(ensure(spark), sfDir)
+    declared.collect { case Query(n, _, Pinned(sql), _, _, _) =>
+      n -> sql(models)
+    }.toMap
   }
 }

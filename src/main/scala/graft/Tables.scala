@@ -158,26 +158,27 @@ object Tables {
       } catch { case _: Throwable => java.lang.Long.MAX_VALUE }
     })
 
+  /** Compressed input bytes per fan-out partition: see [[fanWidth]]. */
+  private val FanTargetBytes: Long = 256L * 1024
+
   /** DATA-PROPORTIONAL fan-out width for per-row-heavy map work
     * (tokenize, JSON/XML parse, codec decode, vector math) over
     * `bytes` of compressed columnar input: one round-robin partition
-    * per `spark.graft.fanout.targetBytes` (default 256 KiB), clamped
-    * to [1, defaultParallelism].
+    * per [[FanTargetBytes]] (256 KiB), clamped to
+    * [1, defaultParallelism].
     *
-    * Rationale (guide §2, VERDICT r17 #1): the task floor on this host
-    * is ~2-5 ms of scheduler/launch cost; 256 KiB of zstd parquet is
+    * Rationale: the per-task scheduler/launch floor is ~2-5 ms (measured
+    * on a 32-core host); 256 KiB of zstd parquet is
     * ~1 MB of raw text ≈ 20-100 ms of tokenize/parse/decode work per
     * task — an order of magnitude over the floor — while a
     * core-count-derived width shreds a sub-MB input into micro-tasks
     * whose launch overhead exceeds their work (the measured 8-vs-32
     * core inversion). At production scale the byte term exceeds any
     * core count and the clamp hands back exactly the old behavior:
-    * width = cluster parallelism. The target is a runtime SQL conf, so
-    * an A/B is one `spark.conf.set` on a live session, not a rebuild.
+    * width = cluster parallelism.
     */
   def fanWidth(spark: SparkSession, bytes: Long, targetMult: Double = 1.0): Int = {
-    val target = math.max(1L, (targetMult *
-      spark.conf.get("spark.graft.fanout.targetBytes", "262144").toLong).toLong)
+    val target = math.max(1L, (targetMult * FanTargetBytes).toLong)
     val byData =
       if (bytes >= java.lang.Long.MAX_VALUE - 1) Long.MaxValue
       else math.ceil(bytes.toDouble / math.max(1L, target)).toLong

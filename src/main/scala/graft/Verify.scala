@@ -1,7 +1,10 @@
 package graft
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+  * plus oracle_sql.json, for the driver's DuckDB compare, and
+  * declared.json, the names this run declared (the compare's
+  * denominator, so a query whose oracle SQL could not be built counts
+  * as a failure instead of dropping out). */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
@@ -34,9 +37,12 @@ object Verify {
       case c if c < ' ' => f"\\u${c.toInt}%04x"
       case c => c.toString
     } + "\""
+    Files.writeString(Paths.get(s"$outDir/declared.json"),
+      selected.keys.toSeq.sorted.map(q).mkString("[", ",", "]"))
     // model-dependent oracles (pinned-literal SQL generated from the
     // engine's own deterministic model build); a failure here must not
-    // zero the 135 static oracles
+    // zero the static oracles, and the compare reports the missing
+    // ones as NO-ORACLE against declared.json
     val dynamic =
       try SparkEntry.oracleSqlDynamic(spark, sfDir)
       catch { case e: Throwable =>
@@ -48,8 +54,8 @@ object Verify {
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     // fixture-boundary annotations for tools/time_oracle.py's split
-    // timings (see EntrySupport.oracleFixtureCte)
-    val cteJson = EntrySupport.oracleFixtureCte.toSeq.sortBy(_._1)
+    // timings (see the registry's fixtureCte)
+    val cteJson = SparkEntry.oracleFixtureCte.toSeq.sortBy(_._1)
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_fixture_cte.json"), cteJson)
     spark.stop()

@@ -363,8 +363,12 @@ object StreamingAggregates {
             state.remove()
             Iterator.empty
           } else {
+            // state whose timeout is already behind the watermark is
+            // dropped, as the timeout would have dropped it (see attribute)
+            val wm = state.getCurrentWatermarkMs()
+            def live(st: DecayState) = (st.lastUs + idleUs) / 1000L >= wm
             val sorted = rows.toSeq.sortBy(e => (e.ts_us, e.event_id))
-            var st = state.getOption.getOrElse(DecayState(Long.MinValue, 0.0, 0L))
+            var st = state.getOption.filter(live).getOrElse(DecayState(Long.MinValue, 0.0, 0L))
             val out = Seq.newBuilder[DecayOut]
             sorted.foreach { e =>
               val decayed =
@@ -373,8 +377,10 @@ object StreamingAggregates {
               st = DecayState(e.ts_us, decayed + e.value, st.nEvents + 1L)
               out += DecayOut(user, e.ts_us, st.nEvents, st.score)
             }
-            state.update(st)
-            state.setTimeoutTimestamp((st.lastUs + idleUs) / 1000L)
+            if (live(st)) {
+              state.update(st)
+              state.setTimeoutTimestamp((st.lastUs + idleUs) / 1000L)
+            } else state.remove()
             out.result().iterator
           }
       }
@@ -409,24 +415,33 @@ object StreamingAggregates {
             state.remove()
             Iterator(SessionOut(user, s.startUs, s.lastUs, s.nEvents))
           } else {
+            // a session whose close time is already behind the watermark
+            // is emitted as closed, as its timeout would have emitted it
+            val wm = state.getCurrentWatermarkMs()
+            def open(s: SessionState) = (s.lastUs + gapUs) / 1000L >= wm
+            def out(s: SessionState) = SessionOut(user, s.startUs, s.lastUs, s.nEvents)
             val sorted = rows.toSeq.sortBy(_.ts_us)
-            var closed = List.empty[SessionOut]
-            var cur = state.getOption
+            var closed = state.getOption.filterNot(open).map(out).toList
+            var cur = state.getOption.filter(open)
             sorted.foreach { e =>
               cur = cur match {
                 case Some(s) if e.ts_us - s.lastUs <= gapUs =>
                   Some(SessionState(s.startUs, e.ts_us, s.nEvents + 1))
                 case Some(s) =>
-                  closed ::= SessionOut(user, s.startUs, s.lastUs, s.nEvents)
+                  closed ::= out(s)
                   Some(SessionState(e.ts_us, e.ts_us, 1))
                 case None =>
                   Some(SessionState(e.ts_us, e.ts_us, 1))
               }
             }
-            cur.foreach { s =>
-              state.update(s)
-              // close the open session once the watermark passes last+gap
-              state.setTimeoutTimestamp((s.lastUs + gapUs) / 1000L)
+            cur match {
+              case Some(s) if open(s) =>
+                state.update(s)
+                // close the open session once the watermark passes last+gap
+                state.setTimeoutTimestamp((s.lastUs + gapUs) / 1000L)
+              case last =>
+                closed = last.map(out).toList ++ closed
+                state.remove()
             }
             closed.reverseIterator
           }

@@ -3,10 +3,10 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The driver contract's internal consistency: every declared query
-  * has an oracle, names are well-formed, and the flagship entry
-  * produces rows (the t1 gate). Scala's Map(...) silently keeps the
-  * last duplicate key, so a copy-paste slip would otherwise drop a
-  * query without any compile error.
+  * has an oracle, names are distinct and well-formed, and the flagship
+  * entry produces rows (the t1 gate). The derived maps silently keep
+  * the last of two records with one name, so a copy-paste slip would
+  * otherwise drop a query without any compile error.
   */
 class ContractSpec extends AnyFunSuite {
 
@@ -29,6 +29,13 @@ class ContractSpec extends AnyFunSuite {
     val spark = SparkTestSession.spark
     val dyn = SparkEntry.oracleSqlDynamic(spark, "/root/testdata/sf0.001").keySet
     assert(dyn === SparkEntry.queries.keySet -- SparkEntry.oracleSql.keySet)
+  }
+
+  test("registry names are distinct") {
+    // a Seq keeps a duplicate record that the derived Map would drop
+    val names = SparkEntry.declared.map(_.name)
+    assert(names.diff(names.distinct).isEmpty, "duplicate query names")
+    assert(names.size === SparkEntry.queries.size)
   }
 
   test("query names are well-formed") {

@@ -2,7 +2,7 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Pins [[EntrySupport.oracleFixtureCte]] — the bench-transparency
+/** Pins [[SparkEntry.oracleFixtureCte]] — the bench-transparency
   * annotation mapping each fixture-reading query to the oracle CTE at
   * its fixture boundary (tools/time_oracle.py times that prefix
   * standalone so BENCH's like-for-like ratios are auditable). A stale
@@ -14,7 +14,7 @@ class FixtureCteSpec extends AnyFunSuite {
 
   test("every annotated query is declared with an oracle (static or " +
       "dynamic)") {
-    EntrySupport.oracleFixtureCte.keys.foreach { q =>
+    SparkEntry.oracleFixtureCte.keys.foreach { q =>
       assert(SparkEntry.queries.contains(q), s"$q not in SparkEntry.queries")
     }
   }
@@ -25,7 +25,7 @@ class FixtureCteSpec extends AnyFunSuite {
     // time_oracle.py will actually see
     lazy val dynamic = SparkEntry.oracleSqlDynamic(
       SparkTestSession.spark, "/root/testdata/sf0.001")
-    EntrySupport.oracleFixtureCte.foreach { case (q, cte) =>
+    SparkEntry.oracleFixtureCte.foreach { case (q, cte) =>
       val sql = SparkEntry.oracleSql.getOrElse(q, dynamic(q))
       assert(("""(?s).*\b""" + cte + """\s+AS\s*\(.*""").r.matches(sql),
         s"$q: CTE '$cte' not found in oracle SQL")
@@ -33,7 +33,7 @@ class FixtureCteSpec extends AnyFunSuite {
   }
 
   test("every declared model-store reader is a declared query") {
-    EntrySupport.modelStoreReaders.foreach { q =>
+    SparkEntry.modelStoreReaders.foreach { q =>
       assert(SparkEntry.queries.contains(q), s"$q not in SparkEntry.queries")
     }
   }
@@ -50,6 +50,6 @@ class FixtureCteSpec extends AnyFunSuite {
       "q_bigram_lm", "q_lm_interp", "q_kn_bigram",
       "q_tfidf", "q_sparse_cosine", "q_bm25", "q_rrf",
       "q_sim_ivf_incremental")
-    assert(EntrySupport.oracleFixtureCte.keySet == expected)
+    assert(SparkEntry.oracleFixtureCte.keySet == expected)
   }
 }

@@ -20,8 +20,7 @@ class FixtureIntegritySpec extends AnyFunSuite {
     assert(names.exists(_.startsWith("graft/EntrySupport")), "EntrySupport (fixture defs)")
     assert(names.exists(_.startsWith("graft/Tables")), "Tables (corpus readers)")
     // query bodies must NOT churn the key — they only compose on fixtures
-    assert(!names.exists(_.startsWith("graft/EntryQueries")), "query bodies excluded")
-    assert(!names.exists(_.startsWith("graft/EntryOracles")), "oracle text excluded")
+    assert(!names.exists(_.startsWith("graft/queries/")), "query bodies and oracles excluded")
     assert(entries.size > 20, s"suspiciously few producer classes: ${entries.size}")
     assert(entries.forall(_._2.nonEmpty), "empty class bytes")
   }

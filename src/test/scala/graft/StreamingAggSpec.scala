@@ -16,6 +16,21 @@ class StreamingAggSpec extends AnyFunSuite {
     StructField("event_type", StringType),
     StructField("ts_us", LongType)))
 
+  /** Writes each frame as one parquet file under `base/src`, modified in
+    * order, so a `maxFilesPerTrigger=1` stream reads one per batch. */
+  private def landInOrder(base: String, files: Seq[org.apache.spark.sql.DataFrame]): Unit = {
+    val now = System.currentTimeMillis()
+    new java.io.File(s"$base/src").mkdirs()
+    files.zipWithIndex.foreach { case (df, i) =>
+      df.coalesce(1).write.parquet(s"$base/stage$i")
+      val part = new java.io.File(s"$base/stage$i").listFiles()
+        .find(_.getName.endsWith(".parquet")).get
+      val dst = new java.io.File(s"$base/src/f$i.parquet")
+      Files.copy(part.toPath, dst.toPath)
+      dst.setLastModified(now - 10000L + i * 5000L) // file order = arrival order
+    }
+  }
+
   test("watermarked tumbling counts finalize closed windows in append mode") {
     val base = Files.createTempDirectory("graft-sagg").toString
     val h = 3600L * 1000000
@@ -357,16 +372,7 @@ class StreamingAggSpec extends AnyFunSuite {
     val files = Seq(
       Seq(TouchInput(1L, 10L, t0, "click"), TouchInput(99L, 99L, t0 + 10 * hourUs, "view")),
       Seq(TouchInput(2L, 10L, t0 + 19 * hourUs / 2, "purchase")))
-    val now = System.currentTimeMillis()
-    new java.io.File(s"$base/src").mkdirs()
-    files.zipWithIndex.foreach { case (rows, i) =>
-      rows.toDF().coalesce(1).write.parquet(s"$base/stage$i")
-      val part = new java.io.File(s"$base/stage$i").listFiles()
-        .find(_.getName.endsWith(".parquet")).get
-      val dst = new java.io.File(s"$base/src/f$i.parquet")
-      Files.copy(part.toPath, dst.toPath)
-      dst.setLastModified(now - 10000L + i * 5000L) // file order = arrival order
-    }
+    landInOrder(base, files.map(_.toDF()))
 
     val src = spark.readStream.option("maxFilesPerTrigger", "1").schema(
       StructType(Seq(
@@ -386,6 +392,56 @@ class StreamingAggSpec extends AnyFunSuite {
     val streamed = spark.read.parquet(s"$base/sink").as[TouchOut].collect()
       .map(o => (o.event_id, o.last_touch_ts)).toMap
     assert(streamed === Map(2L -> None))
+  }
+
+  // The next two land user 1 at t0+10h (watermark t0+9h after the
+  // batch), then user 2 at t0 with a 1 h gap: user 2's state would time
+  // out at t0+1h, already behind the watermark when it is built.
+  test("streaming recency scores drop state whose timeout the watermark already passed") {
+    import StreamingAggregates.{DecayInput, DecayOut}
+    val base = Files.createTempDirectory("graft-sdecay-late").toString
+    val t0 = 1000L * 60 * 1000000
+    val hourUs = 3600L * 1000000
+    landInOrder(base, Seq(
+      Seq(DecayInput(1L, 1L, t0 + 10 * hourUs, 1.0)).toDF(),
+      Seq(DecayInput(2L, 2L, t0, 2.0)).toDF()))
+    val src = spark.readStream.option("maxFilesPerTrigger", "1").schema(StructType(Seq(
+      StructField("event_id", LongType), StructField("user_id", LongType),
+      StructField("ts_us", LongType), StructField("value", DoubleType))))
+      .parquet(s"$base/src").as[DecayInput]
+    StreamingAggregates.recencyScores(src, halflifeDays = 1.0, idleUs = hourUs)
+      .writeStream.format("parquet")
+      .option("path", s"$base/sink")
+      .option("checkpointLocation", s"$base/ckpt")
+      .outputMode(OutputMode.Append)
+      .trigger(Trigger.AvailableNow())
+      .start().awaitTermination()
+    val out = spark.read.parquet(s"$base/sink").as[DecayOut].collect()
+      .map(o => (o.user_id, o.ts_us, o.n_events, o.score)).toSet
+    assert(out === Set((1L, t0 + 10 * hourUs, 1L, 1.0), (2L, t0, 1L, 2.0)))
+  }
+
+  test("streaming sessionize emits a session whose close the watermark already passed") {
+    val base = Files.createTempDirectory("graft-sess-late").toString
+    val t0 = 1000L * 60 * 1000000
+    val hourUs = 3600L * 1000000
+    landInOrder(base, Seq(
+      Seq(SessionInput(1L, t0 + 10 * hourUs)).toDF(),
+      Seq(SessionInput(2L, t0)).toDF()))
+    val src = spark.readStream.option("maxFilesPerTrigger", "1").schema(
+      StructType(Seq(StructField("user_id", LongType), StructField("ts_us", LongType))))
+      .parquet(s"$base/src").as[SessionInput]
+    StreamingAggregates.sessionize(src, gapUs = hourUs)
+      .writeStream.format("parquet")
+      .option("path", s"$base/sink")
+      .option("checkpointLocation", s"$base/ckpt")
+      .outputMode(OutputMode.Append)
+      .trigger(Trigger.AvailableNow())
+      .start().awaitTermination()
+    // user 1's session is still open (closes at t0+11h)
+    val out = spark.read.parquet(s"$base/sink").as[SessionOut].collect()
+      .map(s => (s.user_id, s.start_us, s.end_us, s.n_events)).toSet
+    assert(out === Set((2L, t0, t0, 1L)))
   }
 
   test("streaming recency scores: incremental decay equals the smooth batch sum across batches") {
