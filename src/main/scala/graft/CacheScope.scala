@@ -10,55 +10,18 @@ import org.apache.spark.sql.DataFrame
   * the BASE table scans once for the whole run (a buffer pool, the same
   * advantage the DuckDB oracle gets from the OS page cache) but must
   * drop each query's own intermediates between timed samples —
-  * otherwise min-of-2 would time a cache read, not the operator.
+  * otherwise the min over samples would time a cache read, not the
+  * operator.
   * `spark.catalog.clearCache()` can't make that distinction; this
   * registry can.
   */
 object CacheScope {
   private val tracked = scala.collection.mutable.ArrayBuffer[DataFrame]()
-  // thread-local capture buffer: while a [[capturing]] block runs on
-  // this thread, every frame it registers is ALSO recorded here, so a
-  // construct-plan memo can learn which internal caches its build
-  // created without disturbing concurrent registrations from other
-  // threads (the bench's 8-way throughput mode constructs concurrently)
-  private val capture =
-    new ThreadLocal[List[scala.collection.mutable.ArrayBuffer[DataFrame]]] {
-      override def initialValue(): List[scala.collection.mutable.ArrayBuffer[DataFrame]] = Nil
-    }
 
   /** Persist `df` and remember it for the next [[flush]]. */
   def cached(df: DataFrame): DataFrame = synchronized {
     tracked += df
-    // record into EVERY active capture on this thread (a stack, so a
-    // nested memo build is visible to its enclosing memo too — each
-    // level re-arms the full set on its own hits; double re-arm is a
-    // no-op cache() + a second harmless unpersist)
-    capture.get().foreach(_ += df)
     df.cache()
-  }
-
-  /** Run `build` recording the frames it registers via [[cached]] on
-    * THIS thread — the construct-plan memo's capture hook
-    * ([[EntrySupport.memoPlan]]): a memo hit must re-register exactly
-    * these frames so the harness's per-sample flush discipline keeps
-    * applying to the operator's internal caches.
-    */
-  def capturing[T](build: => T): (T, Seq[DataFrame]) = {
-    // re-entrant: captures form a STACK — a nested capturing call (a
-    // memoized build that itself memoizes) pushes its own buffer while
-    // the enclosing one keeps recording, so the outer memo's internal-
-    // cache list stays complete and the finally pop restores the outer
-    // buffer instead of discarding it
-    val buf = scala.collection.mutable.ArrayBuffer[DataFrame]()
-    capture.set(buf :: capture.get())
-    try { val r = build; (r, buf.toList) }
-    finally {
-      capture.get() match {
-        case Nil      => capture.remove() // unreachable: we pushed above
-        case _ :: Nil => capture.remove()
-        case _ :: t   => capture.set(t)
-      }
-    }
   }
 
   /** Unpersist every tracked intermediate (blocking, so a bench sample
@@ -67,19 +30,5 @@ object CacheScope {
   def flush(): Unit = synchronized {
     tracked.foreach(_.unpersist(blocking = true))
     tracked.clear()
-  }
-
-  /** Like [[flush]], but hands the flushed frames back to the caller.
-    * The bench's statement-cached samples use this: the frames a query
-    * registered at construct time are re-`cache()`d before each cached
-    * sample and unpersisted right after, so every sample rebuilds the
-    * operator's internal caches (paying the build work the designed
-    * plan pays) and never reads a previous sample's leftovers.
-    */
-  def drain(): Seq[DataFrame] = synchronized {
-    val out = tracked.toList
-    tracked.foreach(_.unpersist(blocking = true))
-    tracked.clear()
-    out
   }
 }

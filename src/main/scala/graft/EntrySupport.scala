@@ -23,12 +23,12 @@ private[graft] object EntrySupport {
   }
 
   /** Data-proportional fan-out widths for the per-row-heavy map stages
-    * in query bodies (r18, guide §2): width tracks the source table's
+    * in query bodies: width tracks the source table's
     * BYTES (one partition per fanout-target of compressed parquet,
     * clamped to the session's parallelism), replacing the former
     * `defaultParallelism` — which shredded sub-MB corpora into one
     * micro-task per core and made the whole bench anti-scale from 8 to
-    * 32 cores (VERDICT r17 #1). At 100 TB the byte term saturates the
+    * 32 cores. At 100 TB the byte term saturates the
     * clamp and the width is the cluster parallelism, exactly as
     * before. [[fanN]] = documents-derived frames (tokenize/shingle/
     * decode tiers), [[fanEvN]] = events-derived feeds (JSON/XML/CSV
@@ -45,7 +45,7 @@ private[graft] object EntrySupport {
     * per row), and the written FILE COUNT is the read-back parse
     * parallelism ceiling (row formats don't re-split below file
     * boundaries once open-cost packing merges small files). Measured
-    * r18: the 8-file feed layout parsed 2-4-way and cost the intake
+    * on a 32-core host: the 8-file feed layout parsed 2-4-way and cost the intake
     * trio +0.35 s each vs the ~380 KB/file layout this multiplier
     * restores (still data-proportional: byte-driven below the clamp,
     * cluster-parallel at 100 TB).
@@ -69,8 +69,9 @@ private[graft] object EntrySupport {
     * that changes producer bytecode — new shingle hash, new JPEG
     * quantizer, new corpus perturbation — changes the key, so a stale
     * artifact from older logic can never be re-served to Verify or
-    * Bench (VERDICT r9 #1: the previous hand-bumped `qtmpVersion`
-    * green-washed CORRECTNESS if a producer change forgot the bump).
+    * Bench (a hand-bumped `qtmpVersion` alone would serve a stale
+    * artifact, and pass the correctness gate on it, whenever a producer
+    * change forgot the bump).
     * Over-invalidation (comment shifts move line-number tables) is
     * deliberate: the failure mode is a rebuild, never a stale read.
     */
@@ -213,7 +214,7 @@ private[graft] object EntrySupport {
     * (`q_dup_cluster_stats`) reads. Write-once per qtmp version +
     * sfDir: in production, dedup keepers are always materialized
     * before anything composes on them (the audit never re-runs the
-    * LSH → verify → fixpoint chain — VERDICT r8 #4), and at 100 TB
+    * LSH → verify → fixpoint chain), and at 100 TB
     * this parquet IS the handoff between the dedup stage and every
     * downstream consumer. Built by [[graft.SparkEntry.prepare]];
     * lazily ensured here so Verify needs no ordering.
@@ -236,7 +237,7 @@ private[graft] object EntrySupport {
     * banding, estimate audits, and exact verification are queries
     * over that store (every real LSH service — e.g. the Lee et al.
     * 2022 / RefinedWeb pipelines — materializes signatures before
-    * pairing). Five declared queries read it; before r9 each re-ran
+    * pairing). Five declared queries read it instead of each re-running
     * tokenize → shingle → md5 → fold from raw text.
     */
   private[graft] def ddfPerturbed(s: SparkSession, dir: String): DataFrame = {
@@ -455,7 +456,7 @@ private[graft] object EntrySupport {
     * LM scorer reads ([[graft.ops.Text.bigramCollapse]]) — the KenLM
     * count-table move: tokenize the corpus ONCE per version, serve
     * the counts to every model (`q_bigram_lm`, `q_lm_interp`,
-    * `q_kn_bigram` each re-built it per query before r9). Plain read:
+    * `q_kn_bigram`) instead of re-building them per query. Plain read:
     * each scorer scans it twice (vocab lookup build + instance fold),
     * and two parquet scans of a counts table are cheaper than a
     * cache-materialize job.
@@ -474,8 +475,8 @@ private[graft] object EntrySupport {
     * queries read — per (doc_id, token): tf, df, kept flag, tf·idf
     * weight, kept-vocab unit weight, precomputed BM25 contribution.
     * Built once per corpus version at the declared queries' similarity
-    * config (dfCapFrac 0.85, k1 1.2, b 0.75); before r11 q_tfidf /
-    * q_sparse_cosine / q_bm25 / q_rrf each re-ran the tokenize →
+    * config (dfCapFrac 0.85, k1 1.2, b 0.75), so q_tfidf /
+    * q_sparse_cosine / q_bm25 / q_rrf do not each re-run the tokenize →
     * collapse → weight chain per query. Spread on read — see
     * [[ddfPerturbed]].
     */
@@ -520,8 +521,7 @@ private[graft] object EntrySupport {
     * fingerprint), and the memo is per-JVM in-memory only, so there is
     * no stale-store risk. Feeding the memo back through each
     * operator's optional pre-collected parameter makes repeat
-    * constructs job-free — the statement-cache residual the round-12
-    * bench work left open — without changing a single result row
+    * constructs job-free without changing a single result row
     * (QueryModelMemoSpec pins memo-fed ≡ collect-path per operator).
     */
   private[graft] def embQueryLocal(s: SparkSession, dir: String,
@@ -572,39 +572,6 @@ private[graft] object EntrySupport {
     })
   private val dsirRatioMemo =
     new java.util.concurrent.ConcurrentHashMap[(String, Int), Seq[(Long, Long)]]
-
-  /** Construct-plan memo: queries whose per-construct cost is pure
-    * Catalyst work (eager analysis of a deeply-nested tree — the 5
-    * unrolled TextRank iterations) memoize the BUILT DataFrame per
-    * (name, dir) and return it on every later construct. This holds
-    * only the analyzed plan, never results: each action re-resolves
-    * cache substitution, so the harness's per-sample CacheScope.flush
-    * still forces full re-execution — what's skipped is exactly the
-    * driver-side plan building the statement cache already holds for
-    * every other query (r13 verdict item 1: the residual construct
-    * floor). The frames the build registered via CacheScope are
-    * captured and RE-REGISTERED on every memo hit, so per-sample
-    * flush/re-arm discipline keeps applying to the operator's internal
-    * caches. Rebuilds if the memoized frame belongs to a different
-    * (e.g. stopped) session.
-    */
-  private[graft] def memoPlan(s: SparkSession, name: String, dir: String)
-                             (build: => DataFrame): DataFrame = {
-    val key = (name, dir)
-    val hit = planMemo.get(key)
-    if (hit != null && (hit._1.sparkSession eq s)) {
-      // memo hit: re-register the internal caches under the current
-      // scope (idempotent persist; flushed by the harness per sample)
-      hit._2.foreach(graft.CacheScope.cached)
-      hit._1
-    } else {
-      val built = graft.CacheScope.capturing(build)
-      planMemo.put(key, built)
-      built._1
-    }
-  }
-  private val planMemo = new java.util.concurrent.ConcurrentHashMap[
-    (String, String), (DataFrame, Seq[DataFrame])]
 
   /** Memoized routed-query model for [[graft.ops.Hnsw.hnswTopKRouted]]
     * — each query's vector plus its nProbe best cells under the shared
@@ -660,7 +627,7 @@ private[graft] object EntrySupport {
   private val rfmCountMemo =
     new java.util.concurrent.ConcurrentHashMap[(String, Long), java.lang.Long]
 
-  /** Bucketed twin tables for the co-located join (round 12): orders
+  /** Bucketed twin tables for the co-located join: orders
     * and customer written ONCE as 8-bucket tables on the join key
     * (one file per bucket, sorted in-bucket), so the per-customer
     * pre-aggregate runs WITHOUT an exchange (bucketing satisfies the
@@ -886,9 +853,9 @@ private[graft] object EntrySupport {
   /** [[spmSegLocal]]'s BYTE-FALLBACK twin — (word, n_pieces, cost_u6,
     * n_fallback_pieces) for every corpus word type PLUS the fallback
     * planted-doc words, computed once by the operator's own fallback
-    * DP (r17: q_spm_encode already ran the memoized-vocab 1-job shape
-    * while q_spm_byte_fallback re-ran its DP in-plan per sample —
-    * same bounded-artifact rationale, same in-plan raise guard on any
+    * DP (so q_spm_byte_fallback runs the same memoized-vocab 1-job
+    * shape as q_spm_encode instead of re-running its DP in-plan per
+    * sample — same bounded-artifact rationale, same in-plan raise guard on any
     * missing word; SpmSpec pins memo-fed ≡ internal for the fallback
     * form too).
     */

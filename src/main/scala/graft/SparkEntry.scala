@@ -51,7 +51,7 @@ object SparkEntry {
     }.toMap
 
   def oracleSql: Map[String, String] =
-    declared.collect { case Query(n, _, Sql(sql), _, _, _) => n -> sql }.toMap
+    declared.collect { case Query(n, _, Sql(sql), _, _) => n -> sql }.toMap
 
   /** Queries whose body loads a model driver-side from a qtmp store. */
   def modelStoreReaders: Set[String] = declared.filter(_.modelStore).map(_.name).toSet
@@ -121,7 +121,7 @@ object SparkEntry {
     */
   def oracleSqlDynamic(spark: SparkSession, sfDir: String): Map[String, String] = {
     val models = new PinnedModels(ensure(spark), sfDir)
-    declared.collect { case Query(n, _, Pinned(sql), _, _, _) =>
+    declared.collect { case Query(n, _, Pinned(sql), _, _) =>
       n -> sql(models)
     }.toMap
   }

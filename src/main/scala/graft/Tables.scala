@@ -40,12 +40,12 @@ object Tables {
     // zero exchanges AND zero sorts; without this a corpus-sized index
     // would be re-sorted per nightly probe for no reason.
     "spark.sql.legacy.bucketedTableScan.outputOrdering" -> "true",
-    // Scan-task count derives from DATA SIZE, never from core count
-    // (r18, guide §2/§6): the default minPartitionNum is the session's
+    // Scan-task count derives from DATA SIZE, never from core count:
+    // the default minPartitionNum is the session's
     // defaultParallelism, so the same table scanned on a 32-core
     // driver becomes 32 splits and on an 8-core driver 8 splits —
     // task count tracking cores over a fixed input is exactly the
-    // anti-scaling VERDICT r17 measured (every sub-second query paid
+    // anti-scaling measured on a 32-core host (every sub-second query paid
     // 32-way task launch on KB-scale splits; the whole bench ran 24%
     // faster at 8 cores on the same binary). With the floor at 1,
     // split sizing is purely byte-driven — maxPartitionBytes (128 MB)
@@ -55,7 +55,7 @@ object Tables {
     // consumers comes from the data-proportional [[fanWidth]] spread,
     // not from shredding a megabyte scan 32 ways.
     "spark.sql.files.minPartitionNum" -> "1",
-    // Pack far fewer small files per scan split (r18, guide §6): every
+    // Pack far fewer small files per scan split: every
     // multi-file layout this engine writes gets its file count from
     // the data-proportional [[fanWidth]] — for row formats (JSONL/XML/
     // CSV feeds) that count IS the read-back parse-parallelism
@@ -71,7 +71,7 @@ object Tables {
     // parquet fixture dirs). At 100 TB, compacted 128 MB-1 GB files
     // exceed maxPartitionBytes and split by byte range — this knob
     // never touches them; pathological millions of tiny EXTERNAL
-    // files remain an upstream-compaction problem (guide §6), 4× more
+    // files remain an upstream-compaction problem, 4× more
     // tasks there than the 4 MB default would mint.
     "spark.sql.files.openCostInBytes" -> "16777216"
   )
@@ -144,8 +144,7 @@ object Tables {
   /** Bytes on disk under `path` (recursive), memoized — static inputs
     * and write-once fixtures by design; [[invalidatePath]] evicts when
     * a writer does rewrite. Unknown/unlistable paths report MaxValue,
-    * which makes [[fanWidth]] fall back to its parallelism cap (the
-    * pre-r18 behavior).
+    * which makes [[fanWidth]] fall back to its parallelism cap.
     */
   private val pathBytesCache =
     new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
@@ -255,7 +254,7 @@ object Tables {
     // outside the lambda, on every call; it is a cheap no-op when
     // nothing died.
     purgeDeadSessions()
-    // `spread` is a CAP (r18): callers pass their parallelism budget
+    // `spread` is a CAP: callers pass their parallelism budget
     // and the baked-in round-robin width is the data-proportional
     // fanWidth of the path's actual bytes — never more partitions
     // than the data warrants, never more than the caller's budget.
@@ -282,8 +281,8 @@ object Tables {
   /** Memoized CATALOG-table resolution — the bucketed fixture tables'
     * `spark.table(name)` pays catalog lookup + relation resolution +
     * file-index construction on every query construct; a
-    * catalog-backed warehouse resolves a static table once (r17 —
-    * measured as part of the bucketed family's 0.2-0.6 s per-construct
+    * catalog-backed warehouse resolves a static table once (measured
+    * as part of the bucketed family's 0.2-0.6 s per-construct
     * driver cost). Same session-keyed memo as [[readParquetCached]];
     * valid because every graft bucketed fixture is write-once
     * (EntrySupport.ensureBucketed) under a live session.
@@ -296,8 +295,8 @@ object Tables {
 
   /** Evict a [[tableCached]] memo entry — called by the one writer
     * (EntrySupport.ensureBucketed) on its write branch so the memo can
-    * never outlive a fixture rewrite (ADVICE r17: `invalidatePath`
-    * matches on path, which the `table:` keys don't carry).
+    * never outlive a fixture rewrite (`invalidatePath` matches on path,
+    * which the `table:` keys don't carry).
     */
   def invalidateTable(name: String): Unit =
     dfCache.keySet.removeIf(k => k._2 == s"table:$name")

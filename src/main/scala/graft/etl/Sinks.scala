@@ -14,122 +14,54 @@ import graft.ops.EventOps
   */
 object Sinks {
 
-  /** S4 — CSV export (`/root/reference/extract_bq.py:142-185`): write
-    * with header, then re-read with an explicit schema (never inferred —
-    * the reference's schemas are always fixed). Returns the re-read
-    * frame so round-trip fidelity is checkable.
+  /** S4 — format round trip (the reference's CSV export, and the ORC,
+    * JSON-lines and XML surfaces): write `df` to `dir` as `format`, then re-read it
+    * with the explicit `schema` — never inferred, the reference's
+    * schemas are always fixed, and inference would cost an extra pass
+    * and can widen types. Returns the re-read frame so round-trip
+    * fidelity is checkable. `options` go to both the writer and the
+    * reader: `header` for CSV, `rowTag` for XML. The JSON writer emits
+    * the shortest representation that parses back to the same IEEE
+    * double; the XML writer escapes markup characters in string values
+    * and omits elements for nulls, and the reader reverses both.
     */
-  def csvRoundTrip(df: DataFrame, dir: String, schema: StructType): DataFrame = {
-    df.write.mode("overwrite").option("header", "true").csv(dir)
-    df.sparkSession.read.schema(schema).option("header", "true").csv(dir)
+  def roundTrip(df: DataFrame, dir: String, schema: StructType, format: String,
+                options: Map[String, String] = Map.empty): DataFrame = {
+    df.write.mode("overwrite").options(options).format(format).save(dir)
+    df.sparkSession.read.schema(schema).options(options).format(format).load(dir)
   }
 
-  /** ORC round trip, same contract as [[csvRoundTrip]]: columnar
-    * alternative to parquet (same pushdown/pruning machinery in Spark,
-    * different footer/stripe layout), re-read with the explicit schema.
+  /** Options of the line-delimited XML feed [[permissiveRead]] takes:
+    * one `<row>…</row>` per line (`multiLine=false`). That is what keeps
+    * quarantine granularity at ONE ROW — the default whole-document
+    * parse dumps the entire remaining split into `_corrupt_record` at
+    * the first failure (and at 100 TB a line-delimited feed is also
+    * what makes the scan splittable at all, exactly like JSONL vs
+    * multi-line JSON).
     */
-  def orcRoundTrip(df: DataFrame, dir: String, schema: StructType): DataFrame = {
-    df.write.mode("overwrite").orc(dir)
-    df.sparkSession.read.schema(schema).orc(dir)
-  }
+  val xmlLineFeed: Map[String, String] = Map("rowTag" -> "row", "multiLine" -> "false")
 
-  /** JSON-lines round trip, same contract as [[csvRoundTrip]]: write
-    * newline-delimited JSON, re-read with the explicit schema (never
-    * inferred). Doubles survive exactly — the writer emits the
-    * shortest representation that parses back to the same IEEE double.
-    */
-  def jsonRoundTrip(df: DataFrame, dir: String, schema: StructType): DataFrame = {
-    df.write.mode("overwrite").json(dir)
-    df.sparkSession.read.schema(schema).json(dir)
-  }
-
-  /** PERMISSIVE JSON intake with corrupt-record routing — the
-    * real-world dirty-feed contract: malformed LINES (vs q_safe_cast's
-    * malformed CELLS) land in a `_corrupt_record` column instead of
-    * killing the read; good rows parse normally. The caller gets one
-    * frame with both, to count/route/quarantine.
+  /** PERMISSIVE intake with corrupt-record routing — the real-world
+    * dirty-feed contract for the JSONL, line-delimited XML
+    * ([[xmlLineFeed]]) and CSV surfaces: a malformed LINE, or a cell
+    * that fails its schema type (a non-numeric long), lands in a
+    * `_corrupt_record` column instead of killing the read; well-formed
+    * neighbors parse normally. The caller gets one frame with both, to
+    * count/route/quarantine.
     *
     * The cache is REQUIRED, not an optimization: Spark refuses queries
     * that reference only the internal corrupt-record column of an
-    * unmaterialized JSON scan (SPARK-21610) — persisting first is the
+    * unmaterialized scan (SPARK-21610) — persisting first is the
     * documented pattern.
     */
-  def jsonPermissiveRead(spark: org.apache.spark.sql.SparkSession, dir: String,
-                         schema: StructType): DataFrame = {
-    val withCorrupt = schema.add("_corrupt_record", org.apache.spark.sql.types.StringType)
+  def permissiveRead(spark: SparkSession, dir: String, schema: StructType, format: String,
+                     options: Map[String, String] = Map.empty): DataFrame =
     graft.CacheScope.cached(
-      spark.read.schema(withCorrupt)
+      spark.read.schema(schema.add("_corrupt_record", org.apache.spark.sql.types.StringType))
+        .options(options)
         .option("mode", "PERMISSIVE")
         .option("columnNameOfCorruptRecord", "_corrupt_record")
-        .json(dir))
-  }
-
-  /** XML round trip, same contract as [[csvRoundTrip]]: Spark 4 ships
-    * the (donated) spark-xml datasource natively, so XML is a
-    * first-class format surface beside CSV/JSON/ORC. Written with an
-    * explicit rowTag, re-read with the explicit schema (never
-    * inferred). The writer XML-escapes markup characters in string
-    * values and omits elements for nulls; the reader reverses both, so
-    * the trip is lossless for the scalar types used here.
-    */
-  def xmlRoundTrip(df: DataFrame, dir: String, schema: StructType,
-                   rowTag: String = "row"): DataFrame = {
-    df.write.mode("overwrite").option("rowTag", rowTag).format("xml").save(dir)
-    df.sparkSession.read.schema(schema).option("rowTag", rowTag)
-      .format("xml").load(dir)
-  }
-
-  /** PERMISSIVE XML intake with corrupt-record routing — the
-    * [[jsonPermissiveRead]] contract for the XML surface. The feed
-    * contract here is LINE-DELIMITED row elements (`multiLine=false`,
-    * one `<row>…</row>` per line): that is what keeps quarantine
-    * granularity at ONE ROW — the default whole-document parse dumps
-    * the entire remaining split into `_corrupt_record` at the first
-    * failure (and at 100 TB a line-delimited feed is also what makes
-    * the scan splittable at all, exactly like JSONL vs multi-line
-    * JSON). Malformed VALUES (a non-numeric long cell) route that row
-    * to `_corrupt_record`; well-formed neighbors are untouched —
-    * spec-pinned in SinksSpec.
-    *
-    * Cached for the same reason as the JSON twin: queries that touch
-    * only the corrupt-record column of an unmaterialized scan are
-    * rejected (SPARK-21610); persisting first is the documented
-    * pattern.
-    */
-  def xmlPermissiveRead(spark: org.apache.spark.sql.SparkSession, dir: String,
-                        schema: StructType, rowTag: String = "row"): DataFrame = {
-    val withCorrupt = schema.add("_corrupt_record", org.apache.spark.sql.types.StringType)
-    graft.CacheScope.cached(
-      spark.read.schema(withCorrupt)
-        .option("rowTag", rowTag)
-        .option("multiLine", "false")
-        .option("mode", "PERMISSIVE")
-        .option("columnNameOfCorruptRecord", "_corrupt_record")
-        .format("xml").load(dir))
-  }
-
-  /** PERMISSIVE CSV intake with corrupt-record routing — the
-    * [[jsonPermissiveRead]] contract for the CSV surface, completing
-    * the dirty-feed trio (JSONL / line-delimited XML / CSV). A row
-    * with a cell that fails its schema type (a non-numeric long)
-    * routes to `_corrupt_record`; well-formed neighbors parse
-    * normally. CSV is line-delimited by nature, so the scan splits at
-    * 100 TB exactly like the JSONL feed.
-    *
-    * Cached for the same reason as the JSON twin: queries that touch
-    * only the corrupt-record column of an unmaterialized scan are
-    * rejected (SPARK-21610); persisting first is the documented
-    * pattern.
-    */
-  def csvPermissiveRead(spark: org.apache.spark.sql.SparkSession, dir: String,
-                        schema: StructType): DataFrame = {
-    val withCorrupt = schema.add("_corrupt_record", org.apache.spark.sql.types.StringType)
-    graft.CacheScope.cached(
-      spark.read.schema(withCorrupt)
-        .option("mode", "PERMISSIVE")
-        .option("columnNameOfCorruptRecord", "_corrupt_record")
-        .csv(dir))
-  }
+        .format(format).load(dir))
 
   /** S5 — batched append: Spark writes one file per partition per
     * batch; append mode accumulates (the `execute_batch` analogue,

@@ -574,7 +574,7 @@ object Corpus {
     * `size(regexp_extract_all(s, pat, 0))` produced (both scan left to
     * right, non-overlapping; the pattern has no regex metacharacters)
     * without the regex engine pass or the match-array allocation per
-    * page (r17). Integer-exact: the length delta is always a multiple
+    * page. Integer-exact: the length delta is always a multiple
     * of the pattern length.
     */
   private def litCount(s: Column, pat: String): Column =
@@ -619,13 +619,13 @@ object Corpus {
     // regexp_replace: the five entity patterns contain no regex
     // metacharacters, so left-to-right non-overlapping literal
     // replacement is EXACTLY the same function — minus five java.regex
-    // engine passes over every page (r17, guide §1.2 step 2: per-task
-    // work after the job shape is right). Decode order unchanged —
+    // engine passes over every page (per-task work, trimmed once the
+    // job shape is right). Decode order unchanged —
     // &amp; still LAST (the double-decode guard). And ONE select over
     // composed Column vals instead of the former withColumn chain —
     // the identical optimized plan (CollapseProject folded the chain
     // into this projection anyway) minus six driver-side analysis
-    // passes per construct (r17; see crawlGate).
+    // passes per construct (see crawlGate).
     val bad = litCount(col("html"), "<script") =!=
       litCount(col("html"), "</script>")
     val nos = regexp_replace(
@@ -692,7 +692,7 @@ object Corpus {
     val robots = regexp_extract(col("html"),
       "<meta name=\"robots\" content=\"([^\"]*)\"", 1)
     // ONE select over composed Column vals instead of the former
-    // withColumn chain (r17): each withColumn constructed and analyzed
+    // withColumn chain: each withColumn constructed and analyzed
     // a whole new Dataset, and the optimizer's CollapseProject folded
     // them back into exactly this single projection every sample — so
     // the collapsed form is the identical optimized plan minus six
@@ -765,7 +765,7 @@ object Corpus {
     // gate ONCE (CacheScope-registered, flushed per bench sample; the
     // q_cooccur discipline). Store-fed deployments never execute this
     // function per run at all — it is the prepare-time index build and
-    // the in-plan equivalence-law form (r17).
+    // the in-plan equivalence-law form.
     val sg = graft.CacheScope.cached(incGated(standingPages, linkDensityPct))
     val canonIdx = sg
       .filter(col("passes") === 1L && col("canonical").isNotNull)
@@ -837,7 +837,7 @@ object Corpus {
     * `candidates` is a narrow single-column frame of the keys that can
     * match — derived by the CALLER from the shared gated frame, BEFORE
     * any window/probe stage, so a probe's hit-set subtree never
-    * contains another probe (r17: deriving candidates from the staged
+    * contains another probe (deriving candidates from the staged
     * batch made each hit-set build replay the upstream extraction,
     * window and earlier probe — 22 parquet scans in one bucketed-cycle
     * plan). The verdict logic upstream/downstream is identical under
@@ -855,7 +855,7 @@ object Corpus {
   private val broadcastIndexProbe: ProbeFn = (batch, idx, key, flag, _) =>
     batch.join(broadcast(idx.withColumn(flag, lit(1L))), Seq(key), "left")
 
-  /** The broadcast-budget fallback (VERDICT r16 #1) — a SEMI-JOIN
+  /** The broadcast-budget fallback — a SEMI-JOIN
     * REDUCTION: the index is a PRE-BUCKETED table on `key` (one
     * sorted bucket file per task — prepare-time DDL), and instead of
     * broadcasting it, the probe (1) collapses the caller-supplied
@@ -894,7 +894,7 @@ object Corpus {
     batch.join(broadcast(hits), Seq(key), "left")
   }
 
-  /** BOTH bucketed hit sets from ONE broadcast build (VERDICT r17 #3):
+  /** BOTH bucketed hit sets from ONE broadcast build:
     * under [[bucketedIndexProbe]] the canon and text hit-set builds
     * were two separate broadcast-exchange jobs, each re-reading the
     * materialized gate and its own bucketed store. Both candidate sets
@@ -963,7 +963,7 @@ object Corpus {
     * the batch (the broadcast probe is one linear join — no
     * duplication), so without
     * materialization the regex-heavy gate extraction re-executes once
-    * per probe subtree: measured r17 at sf0.1, the bucketed
+    * per probe subtree: measured at sf0.1 on a 32-core host, the bucketed
     * store/delta/cycle queries ran 1.01-1.51 s vs their broadcast
     * twins' 0.34-0.81 s, with the replayed extraction the dominant
     * delta (22 parquet scans in one bucketed-cycle plan). Materialize
@@ -1060,8 +1060,8 @@ object Corpus {
     * sort-merge probes — each against its own bucketed index directly
     * (a keyed union of the two stores would destroy their bucketing;
     * a per-kind branch split would push the kind filters below the
-    * distinct exchange and re-run the extraction per branch — the r16
-    * one-frame lesson). Cross-kind key collisions cannot corrupt the
+    * distinct exchange and re-run the extraction per branch, so the
+    * probes share one frame). Cross-kind key collisions cannot corrupt the
     * verdict: each probe sets its OWN flag and the final anti
     * predicate consults the flag only under its kind. The candidate
     * side shuffles ONCE — the second probe reuses the first's
@@ -1093,8 +1093,7 @@ object Corpus {
       .select(col("kind"), col("key"))
   }
 
-  /** Per-day index CLAIMS — the RETENTION-tier store rows (VERDICT
-    * r16 #7). The append-only `(kind, key)` indexes only ever grow;
+  /** Per-day index CLAIMS — the RETENTION-tier store rows. The append-only `(kind, key)` indexes only ever grow;
     * a GC-able store instead records, per ingest day, every key the
     * day's gate survivors CLAIM — `('canon', canonical)` for each
     * passing claimer, `('text', md5(text))` for each passing page —
@@ -1160,20 +1159,20 @@ object Corpus {
     incrementFromWith(canonIdx, textIdx, batchPages, linkDensityPct,
       BroadcastProbe)
 
-  /** The WHOLE nightly cycle as ONE run (VERDICT r16 #2): per-page
+  /** The WHOLE nightly cycle as ONE run: per-page
     * stage verdicts ([[webCorpusIncrementFrom]]'s contract, rows with
     * `part = 'verdict'`) AND the append-ready index write-back
     * ([[webCorpusIndexDelta]]'s contract, rows with `part = 'delta'`)
     * from a SINGLE linear plan — each page pays the regex-heavy gate +
     * canonical + text stages once and emits its verdict struct plus
     * its ≤ 2 candidate index keys through one array-explode. The
-    * candidate dedup is FREE (r17): the pipeline's own race ranks
+    * candidate dedup is FREE: the pipeline's own race ranks
     * (rn1 within each canonical group, rn2 within each text group)
     * already single out one row per live key, so each candidate emits
     * under a `rn1/rn2 === 1` guard — no post-explode window, no
     * `distinct` + branch split (a split's pushed filters would defeat
     * exchange reuse and re-run the extraction per output, the exact
-    * two-output trap the r16 index-delta rebuild closed). The
+    * two-output trap the index-delta rebuild avoids). The
     * standing anti check costs NOTHING extra: candidates
     * filter against standing AT EMISSION via the probe flags the
     * verdict pipeline already carries (authoritative under both probe
@@ -1220,7 +1219,7 @@ object Corpus {
     // exactly under its probe's canMatch predicate, where the flag is
     // authoritative under BOTH probe strategies) — no standing-key
     // union, no extra broadcast, no anti join. Candidate DEDUP is free
-    // too (r17): the staged frame already ranks every passing claimer
+    // too: the staged frame already ranks every passing claimer
     // within its canonical group (rn1 over `c:`+canonical) and every
     // canonical-stage survivor within its text group (rn2 over
     // `t:`+th), and the standing flags are GROUP-level (a canonical is
@@ -1292,14 +1291,14 @@ object Corpus {
                              probe: IndexProbe): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     // under the bucketed strategy both probes read ONE fused hit-set
-    // broadcast (r18)
+    // broadcast
     val (bg, p) = probeStage(probe, batchPages, linkDensityPct,
       fuseWith = Some((canonIdx, textIdx)))
     val b1 = incCanonStageFromGated(canonIdx, bg, p)
     // the in-batch text race keys on md5(text) — the SAME equality
     // relation the standing textIdx probe and the streaming twin
     // (StreamingCorpus.webCorpusStream stage 2) already use, so every
-    // form of the race shares one relation (ADVICE r16); it also
+    // form of the race shares one relation; it also
     // shuffles a 32-char key instead of the full text. The DuckDB
     // oracle keeps RAW-TEXT equality, so the hash match doubles as
     // evidence the md5 stand-in loses nothing on this corpus.

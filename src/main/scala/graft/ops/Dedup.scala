@@ -755,7 +755,7 @@ object Dedup {
       // the capped block arrives as 1-2 parquet splits; spread the
       // pairwise scoring so each task carries ≥ ~50k pair-scorings
       // (work is cap² pairs, DATA-proportional in the operator's own
-      // bound — never one micro-task per core, r18 guide §2)
+      // bound — never one micro-task per core)
       .repartition(math.max(1, math.min(
         embeddings.sparkSession.sparkContext.defaultParallelism,
         (cap.toLong * cap / 50000L).toInt)))
@@ -1210,17 +1210,16 @@ object Dedup {
     val cands = CacheScope.cached(lshCandidatesFromSigs(f, 16, 4))
     // the estimate formula is the shared jEstCol — the single home the
     // estimator query also compiles — so the MEASURED formula cannot
-    // drift from the served one (the estimator's join SHAPE differs
-    // since r10: it carries signatures through the banding join, while
+    // drift from the served one (the estimator's join SHAPE differs:
+    // it carries signatures through the banding join, while
     // the audit keeps the cached join-back form here)
     val est = estimatesForCandidates(f, cands, numHashes = 16)
     // exact truth computed ONLY for the audited (candidate) pairs and
     // with the df cap OFF — same uncapped values as the all-pairs form
     // restricted to candidates, at candidate-join cost (an audit pair
     // sharing zero shingles has exact J = 0 and simply produces no
-    // row; the left join fills it). The r8 form recomputed the FULL
-    // all-pairs inverted-index join just to left-join 2k rows out
-    // of it.
+    // row; the left join fills it), not the FULL all-pairs
+    // inverted-index join with 2k rows left-joined out of it.
     estimatorAuditFrom(est, exactJaccardForCandidates(f, cands).select(col("a"), col("b"), col("jaccard")))
   }
 
@@ -1269,7 +1268,7 @@ object Dedup {
     // exactly itself, so the diagonal count IS |shingles(source)|)
     // instead of a separate aggregation pass over the cached store.
     // One extra |srcSh| self-match rows through the join for one fewer
-    // full pass; the r4 sizes-into-signature precedent.
+    // full pass.
     import org.apache.spark.sql.expressions.Window
     val pairs = srcSh.as("x").join(srcSh.as("y"), Seq("h"))
       .filter(col("x.source") <= col("y.source"))
@@ -1278,12 +1277,11 @@ object Dedup {
     // the diagonal sizes reach the off-diagonal rows as WINDOWS over
     // the |sources|²/2-row pair frame (every source present in any
     // pair row has its self-match diagonal row, so the window max is
-    // never NULL), replacing the r15 shape's pairs cache + two
-    // broadcast size builds: 4 scheduler jobs → 2 (srcSh cache + one
-    // main pass), identical arithmetic (r17; guide §2.4 — two
-    // operations keyed the same way share one pass). The exchanges the
-    // windows add carry ≤ |sources|²/2 rows — noise next to two saved
-    // job launches.
+    // never NULL), instead of a pairs cache + two broadcast size
+    // builds: 4 scheduler jobs → 2 (srcSh cache + one main pass),
+    // identical arithmetic (two operations keyed the same way share
+    // one pass). The exchanges the windows add carry ≤ |sources|²/2
+    // rows — noise next to two saved job launches.
     val diagN = max(when(col("src_a") === col("src_b"), col("n_shared")))
     pairs
       .withColumn("n_a", diagN.over(Window.partitionBy(col("src_a"))))

@@ -370,7 +370,7 @@ object EventOps {
     val perUser = graft.CacheScope.cached(rfmPerUser(events, anchorUs))
     // ONE size probe shared by the three band passes: banding is
     // row-preserving, so |users| measured once on the cached aggregate
-    // serves every dimension (r8 paid the probe job 3×)
+    // serves every dimension (one probe job, not three)
     val nUsers = knownUsers.getOrElse(perUser.count())
     val banded = Seq(
       ("r_band", Seq(col("recency_days").asc, col("user_id").asc)),

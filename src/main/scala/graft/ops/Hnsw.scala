@@ -403,8 +403,8 @@ object Hnsw {
   }
 
   /** GROWING-SEGMENT search — the production incremental shape of the
-    * routed graph tier, and the "segment graphs" half of the round-15
-    * incremental-ANN residual (the vector-store design Milvus ships
+    * routed graph tier, and the "segment graphs" half of incremental
+    * ANN (the vector-store design Milvus ships
     * and faiss users hand-roll: SEALED segments carry graphs built
     * once per segment and never touched again; the GROWING segment —
     * the not-yet-sealed arriving batch — is small, so it is
@@ -451,8 +451,7 @@ object Hnsw {
       .select(col("q_id"), col("c_id"), col("cos_r"), col("rnk"))
   }
 
-  /** SEAL the growing segment (VERDICT r16 #4 — faiss/Milvus
-    * compaction): the accumulated batch builds its per-cell HNSW
+  /** SEAL the growing segment (faiss/Milvus compaction): the accumulated batch builds its per-cell HNSW
     * graphs ONCE off the frozen coarse quantizer and serializes them
     * as a sealed-segment store — one row per node `(cell, vec_id, v,
     * level, nbrs, is_entry)`, adjacency emitted verbatim after

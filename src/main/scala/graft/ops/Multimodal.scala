@@ -601,8 +601,7 @@ object Multimodal {
   }
 
   /** INCREMENTAL perceptual-hash image dedup — the media tier's
-    * nightly form (VERDICT r16 #3), completing the round-16 rule that
-    * every standing structure gets a batch-proportional maintenance
+    * nightly form, following the rule that every standing structure gets a batch-proportional maintenance
     * path: the standing corpus was decoded + hashed ONCE per corpus
     * version into the materialized [[phashBandIndex]] store; a batch
     * of new images decodes, hashes, and band-packs MAP-SIDE, and the

@@ -261,8 +261,8 @@ object Relational {
     // The size probe reads the input once uncached: on the window path
     // the input is then read exactly once more, so a cache would cost
     // more than the recompute (measured +0.2 s on q_ntile at sf0.1);
-    // the scale path below caches, because range-partitioning samples
-    // its child and then shuffles it — two more reads. Composite
+    // the scale path below caches its range-partitioned frame, which
+    // the offset count and the rank both read (scaleRowNumber). Composite
     // callers that band the same frame repeatedly (RFM's three
     // dimensions) pass `knownSize` so the probe job runs once, not
     // once per dimension — a row count is row-preserving under
@@ -302,8 +302,11 @@ object Relational {
   def scaleRowNumber(df: DataFrame, orderKeys: Seq[Column], out: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val parts = df.sparkSession.sparkContext.defaultParallelism
+    // only the ranged frame is cached: the offset count and the rank
+    // both read it; caching the input too would hold a second full copy
+    // of the rows to save the range sampler's one extra read
     val ranged = graft.CacheScope.cached(
-      graft.CacheScope.cached(df).repartitionByRange(parts, orderKeys: _*)
+      df.repartitionByRange(parts, orderKeys: _*)
         .withColumn("__pid", spark_partition_id()))
     // one row per partition — bounded by cluster parallelism, the
     // same documented collect family as broadcast model builds

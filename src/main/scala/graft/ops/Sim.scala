@@ -683,7 +683,7 @@ object Sim {
   }
 
   /** INCREMENTAL IVF search — the ANN twin of
-    * [[graft.ops.Dedup.incrementalNewDocs]] (round-15 growth edge #3):
+    * [[graft.ops.Dedup.incrementalNewDocs]]:
     * the standing corpus arrives PRE-ASSIGNED from the materialized
     * cell-partitioned index store (it is never re-assigned, never
     * reshuffled — the index was built once per corpus version), the
@@ -845,8 +845,7 @@ object Sim {
   }
 
   /** INCREMENTAL SemDeDup — the dedup twin of
-    * [[cosineTopKIvfIncrement]] (round-15 residual closed from the
-    * other side: same frozen coarse quantizer, same materialized
+    * [[cosineTopKIvfIncrement]] (same frozen coarse quantizer, same materialized
     * cell-partitioned standing store, now deciding keep/discard
     * instead of top-k): a batch of new vectors assigns map-side
     * ([[ivfAssign]]), scores against its cell's STANDING vectors (the

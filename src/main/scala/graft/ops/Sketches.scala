@@ -582,7 +582,7 @@ object Sketches {
       .groupBy(col("bucket"))
       .agg(sum(col("c")).as("c"), max(col("rep")).as("rep"))
     // the grand total folds as a window over the SAME bounded frame —
-    // a separate broadcast-build job for the scalar is the r10 dead-end
+    // a separate broadcast-build job for the scalar would cost one more job
     val wCum = Window.orderBy(col("bucket"))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val wAll = Window.orderBy(col("bucket"))

@@ -548,7 +548,7 @@ object Text {
     // instance total is Σ bc over the unpartitioned window (bounded:
     // the frame is vocabulary²-sized by Heaps' law; PlanShapeSpec
     // allowlists it). One broadcast exchange and ONE materialization
-    // job — the r8 form's lookup⋈uni merge built the uni side as its
+    // job — a lookup⋈uni merge would build the uni side as its
     // own broadcast job first (each job is a measured ~0.1-0.2 s of
     // fixed cost on this host).
     val wNext = org.apache.spark.sql.expressions.Window.partitionBy(col("next"))
@@ -1329,10 +1329,10 @@ object Text {
       case (_, Some(rows)) =>
         // the byte-fallback memo slice (graft.EntrySupport
         // .spmSegFbLocal): same bounded-artifact rationale as segRows
-        // with the fallback tally column `wu` aboard (r17 — the
-        // encode twin had the memoized-vocab 1-job shape, the
-        // fallback form re-ran its DP in-plan per sample for no
-        // semantic reason; SpmSpec pins memo-fed ≡ internal)
+        // with the fallback tally column `wu` aboard (the same
+        // memoized-vocab 1-job shape as the encode twin, instead of
+        // re-running the DP in-plan per sample; SpmSpec pins memo-fed
+        // ≡ internal)
         require(rows.map(_._1).distinct.size == rows.size,
           s"spm fbSegRows must be DISTINCT words, got ${rows.size} rows")
         val seg = spark.createDataset(rows).toDF("word", "wn", "wc_u6", "wu")
@@ -1904,8 +1904,9 @@ object Text {
     * boundary could tip the other way and swap adjacent ranks. No such
     * boundary score exists in the tested corpora — HybridRrfSpec pins
     * bit-equality there — and ties inside a rank order break on the
-    * exact integer c_id key either way. The r8 composition re-ran the
-    * tokenize → posting join → aggregate chain once per ranker).
+    * exact integer c_id key either way. Composing the three operators
+    * would re-run the tokenize → posting join → aggregate chain once
+    * per ranker).
     *
     * The two rankers disagree only on (a) the per-(q,c,token) score
     * term and (b) the candidate universe: tf·idf pairs meet through
@@ -1955,8 +1956,8 @@ object Text {
     // per-doc model columns (BM25 length over all tokens, cosine norm
     // over the kept vocabulary) ride ONE doc-partitioned window on the
     // already-doc-partitioned stream — no aggregate + join-back, no
-    // second pass (the r8 composition built a per-doc table and
-    // sort-merge-joined it back, recomputing it once per consumer)
+    // second pass (a per-doc table sort-merge-joined back would be
+    // recomputed once per consumer)
     def withPerDoc(t: DataFrame): DataFrame = t
       .join(broadcast(df), Seq("token"))
       .crossJoin(broadcast(nDocsT))
@@ -2476,7 +2477,7 @@ object Text {
     * without bound), and the fit is the algebraic regr_ pair —
     * map-side combinable. The corpus is touched once for the counts.
     *
-    * Rank strategy is size-gated (r18, guide §2.5/§5): under
+    * Rank strategy is size-gated: under
     * [[ZipfRankWindowMaxBytes]] of input the plain partition-less
     * window is cheapest and its single task holds only a bounded
     * corpus's vocabulary; past the gate the EXACT same rank comes from
@@ -2904,8 +2905,8 @@ object Text {
     * ONE tokenize pass and cached; both bucket histograms are
     * B-row aggregates (map-side combinable counts — fixed-size state,
     * like every sketch here); totals fold in-plan via a broadcast
-    * 1-row aggregate (no driver collect, so constructs stay job-free
-    * and statement-cacheable); the per-doc score is ONE doc-keyed
+    * 1-row aggregate (no driver collect, so constructs stay
+    * job-free); the per-doc score is ONE doc-keyed
     * aggregate after a broadcast join against the B-row ratio table.
     * Nothing pairs, nothing shuffles vectors — corpus-linear
     * throughout. Buckets use the md5 bridge (hashedBowVectors'

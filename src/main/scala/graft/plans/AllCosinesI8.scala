@@ -17,9 +17,9 @@ import org.apache.spark.sql.types._
   * scalar quantization at 100 TB is that the RESIDENT index is
   * 1 byte/element (8× smaller than the double math) and the scan
   * arithmetic is integer multiply-accumulate. Dequantizing the codes
-  * back to doubles before scoring — what the pre-round-8 SQ path did —
-  * pays full-precision memory AND full-precision compute plus the
-  * quantization error, i.e. the opposite of the trade SQ buys. This
+  * back to doubles before scoring pays full-precision memory AND
+  * full-precision compute plus the quantization error, i.e. the
+  * opposite of the trade SQ buys. This
   * kernel reads the byte codes directly from Tungsten array storage,
   * accumulates the dot in a long, and divides by the two code norms.
   *

@@ -25,7 +25,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * array per row, then PER SEGMENT a sliced array, a joined string,
   * and a hash — four allocations per 5-token window across the corpus,
   * and q_boilerplate's measured wall is exactly this map phase
-  * (~0.3-0.65 s over 125k segments at sf0.1, r12). Here token
+  * (~0.3-0.65 s over 125k segments at sf0.1). Here token
   * boundaries are byte offsets into the original UTF8String (a space
   * is the single byte 0x20 in UTF-8, never part of a multibyte
   * sequence, so byte scanning is exact); each segment's joined bytes

@@ -589,7 +589,6 @@ private[graft] object MediaQueries {
         |       min(doc_id) OVER (PARTITION BY doc_id % 64) AS keep_id
         |FROM documents
         |WHERE doc_id % 9 != 0 AND doc_id < 2000
-        |ORDER BY media_id""".stripMargin),
-      constructEffect = true)
+        |ORDER BY media_id""".stripMargin))
   )
 }

@@ -21,18 +21,13 @@ import graft.ops.{Sim, Text}
   *                        that the oracle recomputes from raw text; Verify
   *                        dumps it as oracle_fixture_cte.json so the
   *                        oracle's moved cost can be timed apart
-  * @param constructEffect building the DataFrame does the query's real
-  *                        per-run work (eager sink writes, the watermark
-  *                        read, checkpointed fixpoints), so Bench never
-  *                        serves it from its statement cache
   */
 private[graft] final case class Query(
     name: String,
     body: (SparkSession, String) => DataFrame,
     oracle: Oracle,
     modelStore: Boolean = false,
-    fixtureCte: Option[String] = None,
-    constructEffect: Boolean = false)
+    fixtureCte: Option[String] = None)
 
 private[graft] sealed trait Oracle
 

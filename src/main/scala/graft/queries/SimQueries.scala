@@ -374,7 +374,8 @@ private[graft] object SimQueries {
           queryModel = Some(hnswRoutedQueryLocal(s, dir, 10, 2)))
         .orderBy(col("q_id"), col("rnk"))
     }, Pinned(m =>
-      Sim.ivfSearchOracleSql(m.centroids, nQueries = 10, k = 5, nProbe = 2))),
+      Sim.ivfSearchOracleSql(m.centroids, nQueries = 10, k = 5, nProbe = 2)),
+      modelStore = true),
 
     Query("q_dedup_semantic_incremental", (s, dir) => {
       // SemDeDup's nightly form — the dedup twin of

@@ -57,8 +57,7 @@ private[graft] object SinkQueries {
         |batch2 AS (SELECT * FROM ev WHERE ts_us > (SELECT m FROM wm))
         |SELECT * FROM (
         |  SELECT * FROM batch1 UNION ALL SELECT * FROM batch2
-        |) ORDER BY event_id""".stripMargin),
-      constructEffect = true),
+        |) ORDER BY event_id""".stripMargin)),
 
     Query("q_sink_csv", (s, dir) => {
       // repartition BEFORE the json extraction: the cached events table
@@ -74,14 +73,13 @@ private[graft] object SinkQueries {
         StructField("event_id", LongType), StructField("user_id", LongType),
         StructField("event_date", StringType), StructField("ts_us", LongType),
         StructField("event_type", StringType), StructField("param_k", LongType)))
-      Sinks.csvRoundTrip(out, tmpDir("csv", dir), schema)
+      Sinks.roundTrip(out, tmpDir("csv", dir), schema, "csv", Map("header" -> "true"))
         .orderBy(col("event_id"))
     }, Sql(
       """SELECT event_id, user_id, strftime(ts, '%Y-%m-%d') AS event_date,
         |       epoch_us(ts) AS ts_us, event_type,
         |       CAST(json_extract_string(props, '$.k') AS BIGINT) AS param_k
-        |FROM events ORDER BY event_id""".stripMargin),
-      constructEffect = true),
+        |FROM events ORDER BY event_id""".stripMargin)),
 
     Query("q_sink_append", (s, dir) => {
       val ev = Tables.events(s, dir)
@@ -92,8 +90,7 @@ private[graft] object SinkQueries {
       s.read.parquet(sink).orderBy(col("event_id"))
     }, Sql(
       """SELECT event_id, user_id, epoch_us(ts) AS ts_us, event_type
-        |FROM events ORDER BY event_id""".stripMargin),
-      constructEffect = true),
+        |FROM events ORDER BY event_id""".stripMargin)),
 
     Query("q_sink_json", (s, dir) => {
       // Third format surface: newline-delimited JSON out, schema'd read
@@ -105,15 +102,14 @@ private[graft] object SinkQueries {
         StructField("event_id", LongType), StructField("user_id", LongType),
         StructField("ts_us", LongType), StructField("event_type", StringType),
         StructField("value_r", DoubleType)))
-      Sinks.jsonRoundTrip(out, tmpDir("json", dir), schema).orderBy(col("event_id"))
+      Sinks.roundTrip(out, tmpDir("json", dir), schema, "json").orderBy(col("event_id"))
     }, Sql(
       // Like q_sink_csv, the oracle restates the EXPECTED round-trip
       // content from the source table — an independent check that the
       // JSON write+read is lossless.
       """SELECT event_id, user_id, epoch_us(ts) AS ts_us, event_type,
         |       round(value, 4) AS value_r
-        |FROM events ORDER BY event_id""".stripMargin),
-      constructEffect = true),
+        |FROM events ORDER BY event_id""".stripMargin)),
 
     Query("q_sink_orc", (s, dir) => {
       // Fourth format surface: ORC out + schema'd read back — same
@@ -125,12 +121,11 @@ private[graft] object SinkQueries {
         StructField("event_id", LongType), StructField("user_id", LongType),
         StructField("ts_us", LongType), StructField("event_type", StringType),
         StructField("value_r", DoubleType)))
-      Sinks.orcRoundTrip(out, tmpDir("orc", dir), schema).orderBy(col("event_id"))
+      Sinks.roundTrip(out, tmpDir("orc", dir), schema, "orc").orderBy(col("event_id"))
     }, Sql(
       """SELECT event_id, user_id, epoch_us(ts) AS ts_us, event_type,
         |       round(value, 4) AS value_r
-        |FROM events ORDER BY event_id""".stripMargin),
-      constructEffect = true),
+        |FROM events ORDER BY event_id""".stripMargin)),
 
     Query("q_sink_xml", (s, dir) => {
       // Fifth format surface: XML out (Spark 4's native spark-xml
@@ -147,12 +142,11 @@ private[graft] object SinkQueries {
         StructField("event_id", LongType), StructField("user_id", LongType),
         StructField("ts_us", LongType), StructField("event_type", StringType),
         StructField("value_r", DoubleType)))
-      Sinks.xmlRoundTrip(out, tmpDir("xml", dir), schema).orderBy(col("event_id"))
+      Sinks.roundTrip(out, tmpDir("xml", dir), schema, "xml", Map("rowTag" -> "row")).orderBy(col("event_id"))
     }, Sql(
       """SELECT event_id, user_id, epoch_us(ts) AS ts_us, event_type,
         |       round(value, 4) AS value_r
-        |FROM events ORDER BY event_id""".stripMargin),
-      constructEffect = true),
+        |FROM events ORDER BY event_id""".stripMargin)),
 
     Query("q_merge_update", (s, dir) => {
       // MERGE with update-matched semantics: the pre-watermark profile
@@ -297,7 +291,7 @@ private[graft] object SinkQueries {
       val schema = StructType(Seq(
         StructField("event_id", LongType), StructField("event_type", StringType),
         StructField("user_id", LongType), StructField("ts_us", LongType)))
-      Sinks.jsonPermissiveRead(s, feed, schema)
+      Sinks.permissiveRead(s, feed, schema, "json")
         .groupBy(
           when(col("_corrupt_record").isNotNull, lit("corrupt"))
             .otherwise(col("event_type")).as("bucket"))
@@ -315,7 +309,7 @@ private[graft] object SinkQueries {
       // VALUE (a non-numeric event_id cell inside well-formed markup):
       // with multiLine=false the parser quarantines exactly that row to
       // _corrupt_record (a whole-document parse would swallow the rest
-      // of the split — see Sinks.xmlPermissiveRead). event_type is
+      // of the split — see Sinks.xmlLineFeed). event_type is
       // entity-escaped on construction so the feed itself stays
       // well-formed markup.
       val feed = tmpDir("dirty_xml", dir)
@@ -343,7 +337,7 @@ private[graft] object SinkQueries {
       val schema = StructType(Seq(
         StructField("event_id", LongType), StructField("event_type", StringType),
         StructField("user_id", LongType), StructField("ts_us", LongType)))
-      Sinks.xmlPermissiveRead(s, feed, schema)
+      Sinks.permissiveRead(s, feed, schema, "xml", Sinks.xmlLineFeed)
         .groupBy(
           when(col("_corrupt_record").isNotNull, lit("corrupt"))
             .otherwise(col("event_type")).as("bucket"))
@@ -379,7 +373,7 @@ private[graft] object SinkQueries {
       val schema = StructType(Seq(
         StructField("event_id", LongType), StructField("event_type", StringType),
         StructField("user_id", LongType), StructField("ts_us", LongType)))
-      Sinks.csvPermissiveRead(s, feed, schema)
+      Sinks.permissiveRead(s, feed, schema, "csv")
         .groupBy(
           when(col("_corrupt_record").isNotNull, lit("corrupt"))
             .otherwise(col("event_type")).as("bucket"))
@@ -408,8 +402,7 @@ private[graft] object SinkQueries {
     }, Sql(
       """SELECT event_id, user_id, epoch_us(ts) AS ts_us
         |FROM events WHERE user_id IS NOT NULL
-        |ORDER BY event_id""".stripMargin),
-      constructEffect = true),
+        |ORDER BY event_id""".stripMargin)),
 
     Query("q_pit_join", (s, dir) => {
       // point-in-time: each purchase looks up the SCD2 attribute

@@ -470,21 +470,12 @@ private[graft] object TextQueries {
         |FROM tok t LEFT JOIN vocab v USING (token)
         |GROUP BY t.doc_id ORDER BY t.doc_id""".stripMargin)),
 
-    Query("q_textrank", (s, dir) => {
-      // construct-plan memo: the 5 unrolled power iterations build a
-      // deeply-nested tree whose EAGER per-transform analysis was the
-      // query's measured cost (execute 0.4-0.6s, the
-      // rest driver-side construction) — memoized per (dir) so repeat
-      // constructs are a map lookup; execution still fully re-runs per
-      // sample (EntrySupport.memoPlan scaladoc)
-      memoPlan(s, "q_textrank", dir) {
-        Text.textrank(
-            Tables.documents(s, dir)
-              .repartition(fanN(s, dir)),
-            0.85, 5)
-          .orderBy(col("token"))
-      }
-    }, Sql(
+    Query("q_textrank", (s, dir) =>
+      Text.textrank(
+          Tables.documents(s, dir)
+            .repartition(fanN(s, dir)),
+          0.85, 5)
+        .orderBy(col("token")), Sql(
       """WITH t AS (
         |  SELECT list_filter(string_split(text, ' '), x -> x != '') AS toks
         |  FROM documents),

@@ -54,7 +54,7 @@ object StreamingCorpus {
   /** Streaming twin of the `q_xml_intake` PERMISSIVE quarantine: a
     * line-delimited XML feed (one rowTag element per line — the
     * contract that keeps quarantine granularity at one row, see
-    * [[graft.etl.Sinks.xmlPermissiveRead]]) arrives as text files;
+    * [[graft.etl.Sinks.xmlLineFeed]]) arrives as text files;
     * each line parses via `from_xml` with the corrupt-record field
     * in-schema (PERMISSIVE fills it per ROW, for malformed values and
     * malformed markup alike), and each micro-batch routes good typed

@@ -706,7 +706,7 @@ object ScaleStress {
           org.apache.spark.sql.types.LongType),
         org.apache.spark.sql.types.StructField("grp",
           org.apache.spark.sql.types.LongType)))
-      val got = etl.Sinks.xmlPermissiveRead(spark, feed, schema)
+      val got = etl.Sinks.permissiveRead(spark, feed, schema, "xml", etl.Sinks.xmlLineFeed)
       val agg = got.agg(
         sum(when(col("_corrupt_record").isNotNull, 1L).otherwise(0L)).as("bad"),
         sum(when(col("_corrupt_record").isNull, col("id"))).as("idsum"),

@@ -226,6 +226,21 @@ class Batch20OpsSpec extends AnyFunSuite {
     CacheScope.flush()
   }
 
+  test("scaleRowNumber caches once: one forced scale-path action adds one persisted RDD") {
+    val df = (1 to 97).map(i => ((i * 37) % 101, i.toLong)).toDF("v", "id")
+    val sc = spark.sparkContext
+    CacheScope.flush()
+    val before = sc.getPersistentRDDs.keySet
+    try {
+      graft.ops.Relational.testForceScaleNtile = true
+      graft.ops.Relational.bandedNtile(df, 5, Seq(col("v"), col("id")), "b")
+        .select("id", "b").collect()
+    } finally graft.ops.Relational.testForceScaleNtile = false
+    val added = sc.getPersistentRDDs.keySet -- before
+    CacheScope.flush()
+    assert(added.size === 1, s"persisted RDDs added: $added")
+  }
+
   // ---- vadSegments (q_audio_vad) -----------------------------------------
 
   test("vadSegments merges consecutive speech windows into one segment") {

@@ -30,7 +30,7 @@ class CsvIntakeSpec extends AnyFunSuite {
       "3,t3,1.5")
     spark.createDataset(lines).toDF("value")
       .coalesce(1).write.mode("overwrite").text(dir)
-    val got = Sinks.csvPermissiveRead(spark, dir, schema)
+    val got = Sinks.permissiveRead(spark, dir, schema, "csv")
     val good = got.filter(col("_corrupt_record").isNull)
       .select("event_id", "event_type").as[(Long, String)]
       .collect().sortBy(_._1)
@@ -45,7 +45,7 @@ class CsvIntakeSpec extends AnyFunSuite {
     val dir = Files.createTempDirectory("graft-csv").toString + "/nulls"
     spark.createDataset(Seq("7,t7,", "8,,0.25")).toDF("value")
       .coalesce(1).write.mode("overwrite").text(dir)
-    val got = Sinks.csvPermissiveRead(spark, dir, schema)
+    val got = Sinks.permissiveRead(spark, dir, schema, "csv")
       .filter(col("_corrupt_record").isNull)
       .select("event_id", "event_type", "value_r")
       .collect().sortBy(_.getLong(0))

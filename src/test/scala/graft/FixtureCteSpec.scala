@@ -38,6 +38,14 @@ class FixtureCteSpec extends AnyFunSuite {
     }
   }
 
+  test("every routed-HNSW query is a declared model-store reader") {
+    // each loads the pq_model store's coarse quantizer driver-side
+    // (pqModel(s, dir)._1), which Bench's plan walk cannot see
+    val routed = Set("q_sim_hnsw_routed", "q_sim_hnsw_growing", "q_sim_hnsw_sealed")
+    assert(routed.subsetOf(SparkEntry.modelStoreReaders),
+      s"missing: ${routed -- SparkEntry.modelStoreReaders}")
+  }
+
   test("the known fixture-reading lexical/LM family is annotated") {
     // the families whose Spark side reads a qtmp store while the
     // oracle recomputes from raw text (media derivation oracles are

@@ -30,7 +30,7 @@ class XmlSinkSpec extends AnyFunSuite {
       (2L, Some("plain"), Some(-0.25)),
       (3L, None: Option[String], None: Option[Double]))
       .toDF("event_id", "event_type", "value_r")
-    val back = Sinks.xmlRoundTrip(df, dir, schema)
+    val back = Sinks.roundTrip(df, dir, schema, "xml", Map("rowTag" -> "row"))
       .orderBy("event_id")
       .collect()
       .map(r => (r.getLong(0),
@@ -52,7 +52,7 @@ class XmlSinkSpec extends AnyFunSuite {
       "<row><event_id>3</event_id><event_type>t3</event_type><value_r>1.5</value_r></row>")
     spark.createDataset(lines).toDF("value")
       .coalesce(1).write.mode("overwrite").text(dir)
-    val got = Sinks.xmlPermissiveRead(spark, dir, schema)
+    val got = Sinks.permissiveRead(spark, dir, schema, "xml", Sinks.xmlLineFeed)
     val good = got.filter(col("_corrupt_record").isNull)
       .select("event_id", "event_type").as[(Long, String)]
       .collect().sortBy(_._1)
