@@ -36,28 +36,6 @@ object Bench {
     // the artifact as "shuffle_partitions".
     spark.conf.set("spark.sql.shuffle.partitions", math.min(8, cpus).toString)
     spark.sparkContext.setLogLevel("WARN")
-    // Host-capacity probe, published in the artifact: this host is
-    // capacity-throttled for hours at a time (measured 17-27 effective
-    // cores of 32 across runs, uniform per-query inflation), so the
-    // recorded run carries its own window context instead of leaving
-    // the reader to guess. 32 spin threads for ~1 s; effective cores =
-    // total work / best single thread.
-    def capacityProbe(ms: Long = 1000): Double = {
-      val n = 32
-      val counts = new Array[Long](n)
-      val until = System.nanoTime() + ms * 1000 * 1000
-      val ts = (0 until n).map { i =>
-        new Thread(() => {
-          var x = 0L
-          while (System.nanoTime() < until) { x += 1 }
-          counts(i) = x
-        })
-      }
-      ts.foreach(_.start()); ts.foreach(_.join())
-      val best = counts.max.toDouble
-      if (best <= 0) 0.0 else counts.sum / best
-    }
-    val effectiveCoresStart = capacityProbe()
     // Cumulative shuffle-write bytes across all tasks — snapshotted
     // around each query so shuffle-heavy operators are visible in the
     // output, not just slow ones. (Listener delivery is async; the
@@ -86,21 +64,23 @@ object Bench {
       spark.read.parquet(s"$sfDir/events.parquet").limit(1).collect()
     } catch { case _: Throwable => () }
     // Inputs are built and warmed BEFORE the timed region:
-    //  - prepare() materializes the derived scratch layouts
-    //    (date-partitioned events, the GA4 nested parquet) exactly once
-    //    — they are inputs, like the testdata itself, and shouldn't be
-    //    billed to whichever query touches them first;
+    //  - prepare() materializes every fixture store (EntrySupport.stores:
+    //    the date-partitioned events, the GA4 nested parquet, the stage
+    //    outputs and trained models) exactly once — they are inputs,
+    //    like the testdata itself, and shouldn't be billed to whichever
+    //    query touches them first;
     //  - the base table scans are pinned hot (a buffer pool — the same
     //    advantage the DuckDB oracle gets from the OS page cache).
     // Per-QUERY intermediates stay cold: operators register their own
     // caches in CacheScope and flush() drops them between samples, so
     // the min over samples times the operator, never a leftover cache
     // read.
-    // prepare() wall time is PUBLISHED (prepare_sec below): ~13 queries
-    // read prepare-materialized stage outputs, so a reader must be
-    // able to audit the moved cost instead of trusting prose. On a warm
-    // qtmp (the steady state) this is seconds of existence checks;
-    // after a producer-code change it is the full fixture rebuild.
+    // prepare() wall time is PUBLISHED (prepare_sec below): the
+    // fixture_readers queries read prepare-materialized stores, so a
+    // reader must be able to audit the moved cost instead of trusting
+    // prose. On a warm qtmp (the steady state) this is seconds of
+    // existence checks; after a producer-code change it is the full
+    // fixture rebuild.
     val prepareT0 = System.nanoTime()
     try SparkEntry.prepare(spark, sfDir) catch { case _: Throwable => () }
     val prepareSec = (System.nanoTime() - prepareT0) / 1e9
@@ -131,17 +111,17 @@ object Bench {
     val only = sys.env.get("SPARK_GRAFT_ONLY")
       .map(_.split(',').map(_.trim).filter(_.nonEmpty).toSet)
     val selected = only.fold(SparkEntry.queries)(ks => SparkEntry.queries.filter(kv => ks(kv._1)))
-    // True iff the query's analyzed plan scans a prepare-materialized
-    // qtmp artifact (fixture stores, scratch layouts) — detected from
-    // the plan itself, not a hand-maintained list, so the published
-    // flag can never drift from the code: a reader needs to see WHICH
-    // ratios have a prepare-moved input.
+    // True iff the query's analyzed plan scans a fixture store
+    // (EntrySupport.isStore) — detected from the plan itself, not a
+    // hand-maintained list, so the published flag can never drift from
+    // the code: a reader needs to see WHICH ratios have a prepare-moved
+    // input.
     def readsFixture(df: org.apache.spark.sql.DataFrame): Boolean =
       df != null && df.queryExecution.analyzed.collectFirst {
         case l: org.apache.spark.sql.execution.datasources.LogicalRelation
           if (l.relation match {
             case f: org.apache.spark.sql.execution.datasources.HadoopFsRelation =>
-              f.location.rootPaths.exists(_.toString.contains("/qtmp/"))
+              f.location.rootPaths.exists(p => EntrySupport.isStore(p.toUri.getPath, sfDir))
             case _ => false
           }) => true
       }.getOrElse(false)
@@ -167,17 +147,9 @@ object Bench {
     }
     val names = selected.keys.toSeq.sorted
     val st = names.map(n => n -> new QS).toMap
-    // Capacity track: a light probe every ~32 queries in every pass,
-    // published in the detail artifact — a mid-sweep host burst shows
-    // up AS A MEASUREMENT in the artifact instead of being inferred
-    // after the fact from which queries inflated together.
-    val capTrack = scala.collection.mutable.ArrayBuffer[(String, Int, Double)]()
-    def trackProbe(pass: String, i: Int): Unit =
-      if (i % 32 == 0) capTrack += ((pass, i, capacityProbe(300)))
     // cold pass — measures first-execution (codegen-compiling) time and
     // per-query shuffle volume; keeps the frame for the plan walk
-    names.zipWithIndex.foreach { case (n, i) =>
-      trackProbe("cold", i)
+    names.foreach { n =>
       CacheScope.flush()
       val s0 = shuffleWrite.get()
       val t0 = System.nanoTime()
@@ -196,8 +168,7 @@ object Bench {
     // that measured fine, and its fast-failure time could win the min.
     for (p <- 1 to 3) {
       val order = new scala.util.Random(0xC0FFEE + p).shuffle(names)
-      order.zipWithIndex.foreach { case (n, i) =>
-        trackProbe(s"steady$p", i)
+      order.foreach { n =>
         if (!errors.contains(n)) {
           CacheScope.flush()
           val j0 = jobCount.get()
@@ -262,19 +233,12 @@ object Bench {
     // instead of silently making it look faster; fatal errors (OOM)
     // propagate, and the Await is bounded so one hung query can't
     // stall the whole bench forever.
-    // Capacity probes AROUND the throughput passes: the start/end
-    // probes can't exonerate a noise-struck throughput number when the
-    // burst lands mid-bench (one run read 47.7 s against a 12.5 s
-    // baseline with no way to prove the window).
-    // Three readings: before pass 1, between passes, after pass 2.
-    val throughputProbes = scala.collection.mutable.ArrayBuffer[Double]()
     val throughputErrors = new AtomicLong
     val throughputWall: Double = {
       import scala.concurrent.{Await, ExecutionContext, Future, TimeoutException}
       import scala.concurrent.duration._
       import scala.util.control.NonFatal
       def onePass(): Double = {
-        throughputProbes += capacityProbe()
         CacheScope.flush()
         val pool = java.util.concurrent.Executors.newFixedThreadPool(8)
         implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
@@ -290,9 +254,7 @@ object Bench {
         finally pool.shutdown()
         (System.nanoTime() - t0) / 1e9
       }
-      val w = math.min(onePass(), onePass())
-      throughputProbes += capacityProbe()
-      w
+      math.min(onePass(), onePass())
     }
     CacheScope.flush()
     // Per-query DuckDB oracle seconds (tools/duckdb_sf01_times.json —
@@ -405,20 +367,13 @@ object Bench {
     val constructJson = constructMin
       .map { case (n, c) => "\"" + n + "\":" + f"$c%.4f" }
       .mkString("{", ",", "}")
-    // second probe AFTER the sweep: a throttle window that opened or
-    // closed mid-run shows up as a start/end delta
-    val effectiveCoresEnd = capacityProbe()
     val detailJson =
       s"""{"metric":"total","value":${f"$total%.3f"},"unit":"sec","sf":"$sfDir","aqe":$aqe,"shuffle_partitions":$shufflePartitions,""" +
-        s""""effective_cores_start":${f"$effectiveCoresStart%.1f"},""" +
-        s""""effective_cores_end":${f"$effectiveCoresEnd%.1f"},""" +
         s""""headline_procedure":"value: min of 3 steady samples (each pays Catalyst construct+analysis, timed apart as queries_construct_sec; randomized per-pass order) + end-of-run re-sample >= 0.4s",""" +
         s""""prepare_sec":${f"$prepareSec%.3f"},""" +
-        s""""capacity_track":${capTrack.map { case (p, i, c) => s"""{"p":"$p","i":$i,"c":${f"$c%.1f"}}""" }.mkString("[", ",", "]")},""" +
         s""""fixture_readers":$fixtureReadersJson,""" +
         s""""errors":$errJson,"cold_first_run_total":${f"$coldTotal%.3f"},""" +
         s""""throughput_8way_wall_sec":${f"$throughputWall%.3f"},""" +
-        s""""throughput_probe_cores":${throughputProbes.map(c => f"$c%.1f").mkString("[", ",", "]")},""" +
         s""""throughput_errors":${throughputErrors.get()},""" +
         s""""queries":${qJson(4)},"queries_cold_first_run":$coldJson,""" +
         s""""queries_median3":$med3Json,"jobs":$jobsJson,""" +
@@ -458,7 +413,7 @@ object Bench {
         if (duckTotal > 0 && isSf01)
           s""","oracle_total_sec":${f"$duckTotal%.2f"},"n_over_2x_and_ge_half_sec":${over2x.size}"""
         else ""
-      s"""{"metric":"total","value":${f"$total%.3f"},"unit":"sec","errors":$errJson,"sf":"$sfDir","aqe":$aqe,"shuffle_partitions":$shufflePartitions,"n_queries":${results.size},"queries_shown":"slowest $n of ${results.size}; full map in BENCH_DETAIL.json","cold_first_run_total":${f"$coldTotal%.3f"},"prepare_sec":${f"$prepareSec%.3f"},"effective_cores_start":${f"$effectiveCoresStart%.1f"},"effective_cores_end":${f"$effectiveCoresEnd%.1f"},"throughput_8way_wall_sec":${f"$throughputWall%.3f"},"throughput_probe_cores":${throughputProbes.map(c => f"$c%.1f").mkString("[", ",", "]")}$tpErr$oracleBit,"queries":$qs}"""
+      s"""{"metric":"total","value":${f"$total%.3f"},"unit":"sec","errors":$errJson,"sf":"$sfDir","aqe":$aqe,"shuffle_partitions":$shufflePartitions,"n_queries":${results.size},"queries_shown":"slowest $n of ${results.size}; full map in BENCH_DETAIL.json","cold_first_run_total":${f"$coldTotal%.3f"},"prepare_sec":${f"$prepareSec%.3f"},"throughput_8way_wall_sec":${f"$throughputWall%.3f"}$tpErr$oracleBit,"queries":$qs}"""
     }
     val line = Seq(40, 30, 20, 10, 0).iterator.map(headParts)
       .find(_.length <= 1700)

@@ -3,7 +3,6 @@ package graft
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.etl.Sinks
 import graft.ops.Dedup
 
 /** Shared fixtures for the declared queries and their oracles: session
@@ -136,18 +135,156 @@ private[graft] object EntrySupport {
         scala.reflect.io.Directory(f).deleteRecursively()
     }
 
+  /** The fixture root of this checkout: `target/qtmp` under the working
+    * directory, which is the project base for sbt's forked `run` and
+    * `Test` (Bench reads `tools/` relative to it as well). Each checkout
+    * keeps, and sweeps, only its own stores.
+    */
+  private[graft] val qtmpRoot: java.io.File = new java.io.File("target/qtmp").getAbsoluteFile
+
   private lazy val qtmpKey: String = {
     val key = s"$qtmpVersion-$producerFingerprint"
     // disk hygiene on first use (lazy val = once per JVM): repeated
     // edit cycles must not accumulate dead parquet
-    cleanStaleQtmp(new java.io.File("/root/repo/target/qtmp"), key)
+    cleanStaleQtmp(qtmpRoot, key)
     key
   }
 
+  /** `<root>/<key>/<tag>_<sf>`: a store's path, and the plain scratch
+    * path of the round-trip sink queries' own outputs (`csv`, `json`,
+    * `orc`, `xml`, `append`, `zorder_events`), which are not stores.
+    */
   private[graft] def tmpDir(tag: String, sfDir: String): String = {
     val sf = sfDir.replaceAll("[^A-Za-z0-9.]", "_")
-    s"/root/repo/target/qtmp/$qtmpKey/${tag}_$sf"
+    s"$qtmpRoot/$qtmpKey/${tag}_$sf"
   }
+
+  /** How a store lays its rows out on disk. */
+  private[graft] sealed trait Layout
+  private[graft] case object Parquet extends Layout
+  /** Raw text lines: a single `value` column. */
+  private[graft] case object TextLines extends Layout
+  /** Hive-style directories per value of `column`: the engine-side
+    * analogue of the reference's date-sharded `events_YYYYMMDD` table
+    * family (its `extract_bq.py:95-110`), so a predicate on the column
+    * prunes whole directories at planning time.
+    */
+  private[graft] final case class PartitionedBy(column: String) extends Layout
+  /** 8 buckets on `key`, sorted in-bucket, one file per bucket, and a
+    * session catalog table over them: every join or aggregate on the
+    * key reads the store exchange-free.
+    */
+  private[graft] final case class BucketedOn(key: String) extends Layout
+
+  /** A named fixture store: a deterministic input derived from the
+    * testdata (a layout, a stage output, a trained model), built once
+    * per producer fingerprint and sfDir, then read like the testdata
+    * itself. `spread` re-splits the read to the session's parallelism:
+    * a megabytes-sized store arrives as ONE split, and without the
+    * spread every downstream map stage serializes onto one core
+    * (measured 0.73 → 1.32 s on q_dedup_ngram when it was left out).
+    */
+  private[graft] final case class Store(tag: String, layout: Layout, spread: Boolean = false)(
+      val build: (SparkSession, String) => DataFrame)
+
+  /** A memo cell: computes outside the memo map's bin lock, so one
+    * memo's computation may read another memo, and concurrent callers
+    * of one key wait for the single computation. A failed computation
+    * leaves the cell empty, so the next call retries.
+    */
+  private final class Once(private var f: () => Any) {
+    lazy val value: Any = { val v = f(); f = null; v }
+  }
+
+  /** The one driver-local memo: one value per key per JVM. A key is a
+    * tuple of the memo's name and its inputs: the fingerprinted store
+    * path for values read from a store (a producer change re-keys
+    * them), `sfDir` plus parameters for values derived from the
+    * read-only testdata.
+    */
+  private val memos = new java.util.concurrent.ConcurrentHashMap[Any, Once]
+  private def memo[V](key: Any)(compute: => V): V =
+    memos.computeIfAbsent(key, _ => new Once(() => compute)).value.asInstanceOf[V]
+
+  /** The one write-once primitive: write `df` at `path` in `layout`
+    * unless a previous run completed there (the `_SUCCESS` marker),
+    * then evict any memoized relation over `path` (and the memoized
+    * catalog table of a bucketed store), since a rebuilt path must not
+    * be served through a stale file listing. `df` is by-name, so the
+    * frame is not even planned on the hit path.
+    *
+    * A per-path lock guards the check-then-write: the bench's 8-way
+    * throughput phase can race two lazily-materializing consumers of
+    * the same store in ONE JVM (e.g. after a failed prepare()); without
+    * the lock both see no marker and overwrite each other's in-flight
+    * files. Per path, not one global monitor: an in-flight write of one
+    * store must not stall every unrelated store's marker check. Writers
+    * in separate JVMs still need external coordination; the stores are
+    * per-checkout scratch, so the JVM-wide scope is the honest one.
+    */
+  private[graft] def writeOnce(s: SparkSession, path: String, layout: Layout)(
+      df: => DataFrame): Unit =
+    memo(("lock", path))(new Object).synchronized {
+      if (!new java.io.File(path, "_SUCCESS").exists()) {
+        layout match {
+          case Parquet => df.write.mode("overwrite").parquet(path)
+          case TextLines => df.write.mode("overwrite").text(path)
+          case PartitionedBy(c) => df.write.mode("overwrite").partitionBy(c).parquet(path)
+          case BucketedOn(key) =>
+            // repartition on the bucket key first: one task per bucket ⇒
+            // one file per bucket, which is what lets the read side trust
+            // the in-bucket sort and elide both exchange AND sort
+            df.repartition(Buckets, col(key))
+              .write.bucketBy(Buckets, key).sortBy(key)
+              .option("path", path).mode("overwrite").saveAsTable(bucketTable(path))
+            Tables.invalidateTable(bucketTable(path))
+        }
+        Tables.invalidatePath(path)
+      } else layout match {
+        case BucketedOn(key) if !s.catalog.tableExists(bucketTable(path)) =>
+          // re-registering pre-existing bucket files on a fresh session:
+          // derive the DDL schema FROM the files, never from a
+          // hand-maintained string — a hardcoded type that drifted from
+          // the written data would only surface on exactly this path, as
+          // a miscast the first-run saveAsTable branch never exhibits
+          val ddlSchema = s.read.parquet(path).schema.toDDL
+          s.sql(s"CREATE TABLE IF NOT EXISTS ${bucketTable(path)} ($ddlSchema) USING parquet " +
+            s"CLUSTERED BY ($key) SORTED BY ($key) INTO $Buckets BUCKETS LOCATION '$path'")
+        case _ => ()
+      }
+    }
+
+  private val Buckets = 8
+  /** The catalog name of the bucketed store at `path` (catalog entries
+    * are in-memory per session; the files persist under the key).
+    */
+  private def bucketTable(path: String): String =
+    "graft_b_" + java.security.MessageDigest.getInstance("MD5")
+      .digest(path.getBytes("UTF-8")).map(b => f"$b%02x").mkString.take(8)
+
+  /** Materialize `st` for `sfDir` (write-once) and return its path. */
+  private[graft] def materialize(st: Store, s: SparkSession, sfDir: String): String = {
+    val path = tmpDir(st.tag, sfDir)
+    writeOnce(s, path, st.layout)(st.build(s, sfDir))
+    path
+  }
+
+  /** `st`'s rows for `sfDir`, materialized on first use: a bucketed
+    * store through its catalog table, any other as a memoized parquet
+    * read.
+    */
+  private[graft] def readStore(st: Store, s: SparkSession, sfDir: String): DataFrame = {
+    val path = materialize(st, s, sfDir)
+    st.layout match {
+      case BucketedOn(_) => Tables.tableCached(s, bucketTable(path))
+      case _ => Tables.readParquetCached(s, path,
+        if (st.spread) s.sparkContext.defaultParallelism else 0)
+    }
+  }
+
+  /** True iff `path` is a registered store's path for `sfDir`. */
+  private[graft] def isStore(path: String, sfDir: String): Boolean =
+    stores.exists(st => tmpDir(st.tag, sfDir) == path)
 
   /** documents ∪ suffix-perturbed copies (high-Jaccard near-dups).
     * Repartitioned: the small parquet arrives as 1-2 splits, which
@@ -190,44 +327,30 @@ private[graft] object EntrySupport {
   }
 
   /** The chain corpus is a deterministic derived FIXTURE (like the
-    * date-partitioned layout and the GA4 parquet): materialized
-    * write-once, then read from parquet — the per-doc tokenize+slice
-    * construction is an input, not part of the operator under test.
-    * Cached because the CC pipeline consumes it twice (shingles +
-    * final keeper join).
+    * date-partitioned layout and the GA4 parquet): the per-doc
+    * tokenize+slice construction is an input, not part of the operator
+    * under test. Its consumers read it plainly (no repartition, no
+    * cache): they are cheap scans, and on this corpus size the
+    * exchange + cache-materialize action cost more in job launches
+    * than the md5 pipeline they would parallelize.
     */
-  private[graft] def chainCorpus(s: SparkSession, dir: String, cap: Long): DataFrame = {
-    val path = tmpDir(s"chain_$cap", dir)
-    Sinks.ensureWritten(chainFrame(s, dir, cap), path)
-    // Plain read, no repartition, no cache: the fixture is pre-written
-    // by prepare(), its consumers are two cheap scans (shingle pipeline
-    // + final keeper join), and on this corpus size the repartition
-    // exchange + cache-materialize action cost more in job launches
-    // than the md5 pipeline they parallelize. (The old ~2.5 s
-    // single-core profile predates prepare() — it was timing the
-    // tokenize+slice CONSTRUCTION, which is now write-once.)
-    Tables.readParquetCached(s, path)
-  }
+  private[graft] val Chain500 = Store("chain_500", Parquet)((s, dir) => chainFrame(s, dir, 500))
 
   /** The materialized CC keeper assignment over the chain corpus —
     * the dedup OUTPUT that `q_dedup_cc` declares and the audit
-    * (`q_dup_cluster_stats`) reads. Write-once per qtmp version +
-    * sfDir: in production, dedup keepers are always materialized
-    * before anything composes on them (the audit never re-runs the
-    * LSH → verify → fixpoint chain), and at 100 TB
+    * (`q_dup_cluster_stats`) reads. In production, dedup keepers are
+    * always materialized before anything composes on them (the audit
+    * never re-runs the LSH → verify → fixpoint chain), and at 100 TB
     * this parquet IS the handoff between the dedup stage and every
-    * downstream consumer. Built by [[graft.SparkEntry.prepare]];
-    * lazily ensured here so Verify needs no ordering.
+    * downstream consumer.
     */
-  private[graft] def ccKeepers(s: SparkSession, dir: String): DataFrame = {
-    val path = tmpDir("cc_keepers_500", dir)
-    Sinks.ensureWritten(
-      Dedup.ccKeepersFromEdges(
-        Dedup.verifiedNearDupPairsFromFrame(ddfChain(s, dir), minJaccard = 0.7),
-        ddfChain(s, dir).select(col("doc_id"))),
-      path)
-    Tables.readParquetCached(s, path)
+  private[graft] val CcKeepers500 = Store("cc_keepers_500", Parquet) { (s, dir) =>
+    Dedup.ccKeepersFromEdges(
+      Dedup.verifiedNearDupPairsFromFrame(ddfChain(s, dir), minJaccard = 0.7),
+      ddfChain(s, dir).select(col("doc_id")))
   }
+  private[graft] def ccKeepers(s: SparkSession, dir: String): DataFrame =
+    readStore(CcKeepers500, s, dir)
 
   /** The materialized per-doc dedup frame over the FULL perturbed
     * corpus — (doc_id, hs shingle-hash array, sz, minhashes), i.e.
@@ -240,16 +363,10 @@ private[graft] object EntrySupport {
     * pairing). Five declared queries read it instead of each re-running
     * tokenize → shingle → md5 → fold from raw text.
     */
-  private[graft] def ddfPerturbed(s: SparkSession, dir: String): DataFrame = {
-    val path = tmpDir("ddf_perturbed", dir)
-    Sinks.ensureWritten(Dedup.docDedupFrame(perturbedCorpus(s, dir), 16), path)
-    // spread: the frame parquet is megabytes, so the scan arrives as
-    // ONE split — without the repartition every downstream explode /
-    // band / join map stage serializes onto one core (same rationale
-    // as perturbedCorpus; measured 0.73 → 1.32 s on q_dedup_ngram
-    // when this was left out)
-    Tables.readParquetCached(s, path, s.sparkContext.defaultParallelism)
-  }
+  private[graft] val DdfPerturbed = Store("ddf_perturbed", Parquet, spread = true)(
+    (s, dir) => Dedup.docDedupFrame(perturbedCorpus(s, dir), 16))
+  private[graft] def ddfPerturbed(s: SparkSession, dir: String): DataFrame =
+    readStore(DdfPerturbed, s, dir)
 
   /** The cap-bounded slice of [[ddfPerturbed]]: per-doc rows are
     * independent, so filtering the materialized frame to the capped
@@ -263,32 +380,26 @@ private[graft] object EntrySupport {
   /** [[ddfPerturbed]]'s twin over the chain corpus (cap 500) — read by
     * the containment query and by the CC keeper fixture build.
     */
-  private[graft] def ddfChain(s: SparkSession, dir: String): DataFrame = {
-    val path = tmpDir("ddf_chain_500", dir)
-    Sinks.ensureWritten(Dedup.docDedupFrame(chainCorpus(s, dir, 500), 16), path)
-    // spread on read — see ddfPerturbed
-    Tables.readParquetCached(s, path, s.sparkContext.defaultParallelism)
-  }
+  private[graft] val DdfChain500 = Store("ddf_chain_500", Parquet, spread = true)(
+    (s, dir) => Dedup.docDedupFrame(readStore(Chain500, s, dir), 16))
+  private[graft] def ddfChain(s: SparkSession, dir: String): DataFrame =
+    readStore(DdfChain500, s, dir)
 
   /** Materialized SimHash fingerprint tables — the at-ingest form
     * (crawl dedup stores one fingerprint per document, Manku et al.
     * 2007): one over the exact-dup corpus (hamming-0 clustering), one
     * over the first 1000 documents (the hamming-≤k banding query).
     */
-  private[graft] def simhashFpsExactDup(s: SparkSession, dir: String): DataFrame = {
-    val path = tmpDir("simhash_fps_exactdup", dir)
-    Sinks.ensureWritten(Dedup.simhashFps(exactDupCorpus(s, dir)), path)
-    Tables.readParquetCached(s, path, s.sparkContext.defaultParallelism)
-  }
+  private[graft] val SimhashFpsExactDup = Store("simhash_fps_exactdup", Parquet, spread = true)(
+    (s, dir) => Dedup.simhashFps(exactDupCorpus(s, dir)))
+  private[graft] def simhashFpsExactDup(s: SparkSession, dir: String): DataFrame =
+    readStore(SimhashFpsExactDup, s, dir)
 
-  private[graft] def simhashFpsDocs1k(s: SparkSession, dir: String): DataFrame = {
-    val path = tmpDir("simhash_fps_1k", dir)
-    Sinks.ensureWritten(
-      Dedup.simhashFps(Tables.documents(s, dir).filter(col("doc_id") < 1000)
-        .select(col("doc_id"), col("text"))),
-      path)
-    Tables.readParquetCached(s, path, s.sparkContext.defaultParallelism)
-  }
+  private[graft] val SimhashFps1k = Store("simhash_fps_1k", Parquet, spread = true)(
+    (s, dir) => Dedup.simhashFps(Tables.documents(s, dir).filter(col("doc_id") < 1000)
+      .select(col("doc_id"), col("text"))))
+  private[graft] def simhashFpsDocs1k(s: SparkSession, dir: String): DataFrame =
+    readStore(SimhashFps1k, s, dir)
 
   /** The materialized JPEG media table — deterministic per-8×8-block-
     * constant gray rasters ENCODED once by the real baseline encoder
@@ -298,31 +409,30 @@ private[graft] object EntrySupport {
     * precedent as the GA4 parquet and the chain corpus); the operator
     * under test is the DECODE, which runs fully per query.
     */
+  private[graft] val JpegMedia = Store("jpeg_media", Parquet, spread = true) { (s, dir) =>
+    import s.implicits._
+    Tables.documents(s, dir).select(col("doc_id")).as[Long]
+      .repartition(fanN(s, dir))
+      .map { id =>
+        val wb = (2 + id % 3).toInt; val hb = (2 + id % 2).toInt
+        val w = wb * 8; val h = hb * 8
+        val base = (60 + (id % 80) * 2).toInt
+        val y = new Array[Byte](w * h)
+        var p = 0
+        while (p < w * h) {
+          val bk = (p / w / 8) * wb + (p % w) / 8
+          y(p) = (base + 2 * bk).toByte
+          p += 1
+        }
+        val bytes0 = graft.ops.Jpeg.encodeGray(w, h, y)
+        val bytes = if (id % 9 == 0) bytes0.take(10) else bytes0
+        graft.ops.Multimodal.MediaRow(id, "image", bytes, bytes.length.toLong, "jpeg")
+      }.toDF()
+  }
   private[graft] def jpegMedia(s: SparkSession, dir: String)
       : org.apache.spark.sql.Dataset[graft.ops.Multimodal.MediaRow] = {
     import s.implicits._
-    val path = tmpDir("jpeg_media", dir)
-    Sinks.ensureWritten(
-      Tables.documents(s, dir).select(col("doc_id")).as[Long]
-        .repartition(fanN(s, dir))
-        .map { id =>
-          val wb = (2 + id % 3).toInt; val hb = (2 + id % 2).toInt
-          val w = wb * 8; val h = hb * 8
-          val base = (60 + (id % 80) * 2).toInt
-          val y = new Array[Byte](w * h)
-          var p = 0
-          while (p < w * h) {
-            val bk = (p / w / 8) * wb + (p % w) / 8
-            y(p) = (base + 2 * bk).toByte
-            p += 1
-          }
-          val bytes0 = graft.ops.Jpeg.encodeGray(w, h, y)
-          val bytes = if (id % 9 == 0) bytes0.take(10) else bytes0
-          graft.ops.Multimodal.MediaRow(id, "image", bytes, bytes.length.toLong, "jpeg")
-        }.toDF(),
-      path)
-    Tables.readParquetCached(s, path, s.sparkContext.defaultParallelism)
-      .as[graft.ops.Multimodal.MediaRow]
+    readStore(JpegMedia, s, dir).as[graft.ops.Multimodal.MediaRow]
   }
 
   /** The PNG twin of [[jpegMedia]]: deterministic gray rasters
@@ -334,34 +444,33 @@ private[graft] object EntrySupport {
     * streams. Payload construction is input-building (same precedent
     * as jpegMedia); the operator under test is the DECODE.
     */
+  private[graft] val PngMedia = Store("png_media", Parquet, spread = true) { (s, dir) =>
+    import s.implicits._
+    Tables.documents(s, dir).select(col("doc_id")).as[Long]
+      .repartition(fanN(s, dir))
+      .map { id =>
+        val w = (12 + (id % 7) * 4).toInt // multiple of 4: x%4 offsets balance
+        val h = (10 + (id % 5) * 6).toInt // even: y%2 offsets balance
+        val base = (40 + id % 150).toInt
+        val y = new Array[Byte](w * h)
+        var p = 0
+        while (p < w * h) {
+          y(p) = (base + (p % w) % 4 + 2 * ((p / w) % 2)).toByte
+          p += 1
+        }
+        val bytes0 = graft.ops.Png.encodeGray(w, h, y)
+        val bytes =
+          if (id % 11 == 0) bytes0.take(25)
+          else if (id % 13 == 0) {
+            val b = bytes0.clone(); b(b.length - 1) = (b(b.length - 1) ^ 1).toByte; b
+          } else bytes0
+        graft.ops.Multimodal.MediaRow(id, "image", bytes, bytes.length.toLong, "png")
+      }.toDF()
+  }
   private[graft] def pngMedia(s: SparkSession, dir: String)
       : org.apache.spark.sql.Dataset[graft.ops.Multimodal.MediaRow] = {
     import s.implicits._
-    val path = tmpDir("png_media", dir)
-    Sinks.ensureWritten(
-      Tables.documents(s, dir).select(col("doc_id")).as[Long]
-        .repartition(fanN(s, dir))
-        .map { id =>
-          val w = (12 + (id % 7) * 4).toInt // multiple of 4: x%4 offsets balance
-          val h = (10 + (id % 5) * 6).toInt // even: y%2 offsets balance
-          val base = (40 + id % 150).toInt
-          val y = new Array[Byte](w * h)
-          var p = 0
-          while (p < w * h) {
-            y(p) = (base + (p % w) % 4 + 2 * ((p / w) % 2)).toByte
-            p += 1
-          }
-          val bytes0 = graft.ops.Png.encodeGray(w, h, y)
-          val bytes =
-            if (id % 11 == 0) bytes0.take(25)
-            else if (id % 13 == 0) {
-              val b = bytes0.clone(); b(b.length - 1) = (b(b.length - 1) ^ 1).toByte; b
-            } else bytes0
-          graft.ops.Multimodal.MediaRow(id, "image", bytes, bytes.length.toLong, "png")
-        }.toDF(),
-      path)
-    Tables.readParquetCached(s, path, s.sparkContext.defaultParallelism)
-      .as[graft.ops.Multimodal.MediaRow]
+    readStore(PngMedia, s, dir).as[graft.ops.Multimodal.MediaRow]
   }
 
   /** One planted 8×8 black/white raster of the q_media_phash_band
@@ -442,15 +551,12 @@ private[graft] object EntrySupport {
     * written once per corpus version at prepare (the decode + hash of
     * the standing corpus is paid here, never per nightly run).
     */
-  private[graft] def mediaBandIdx(s: SparkSession, dir: String): DataFrame = {
-    val path = tmpDir("media_band_idx", dir)
-    Sinks.ensureWritten(
-      graft.ops.Multimodal.phashBandIndex(
-        graft.ops.Multimodal.averageHash(phashMedia(s, dir), size = 8).toDF(),
-        hashBits = 64, bands = 4),
-      path)
-    Tables.readParquetCached(s, path)
-  }
+  private[graft] val MediaBandIdx = Store("media_band_idx", Parquet)((s, dir) =>
+    graft.ops.Multimodal.phashBandIndex(
+      graft.ops.Multimodal.averageHash(phashMedia(s, dir), size = 8).toDF(),
+      hashBits = 64, bands = 4))
+  private[graft] def mediaBandIdx(s: SparkSession, dir: String): DataFrame =
+    readStore(MediaBandIdx, s, dir)
 
   /** The materialized (doc_id, prev, next, c) bigram collapse every
     * LM scorer reads ([[graft.ops.Text.bigramCollapse]]) — the KenLM
@@ -461,14 +567,10 @@ private[graft] object EntrySupport {
     * and two parquet scans of a counts table are cheaper than a
     * cache-materialize job.
     */
-  private[graft] def lmCollapse(s: SparkSession, dir: String): DataFrame = {
-    val path = tmpDir("lm_collapse", dir)
-    Sinks.ensureWritten(
-      graft.ops.Text.bigramCollapse(
-        Tables.documents(s, dir).repartition(fanN(s, dir))),
-      path)
-    Tables.readParquetCached(s, path)
-  }
+  private[graft] val LmCollapse = Store("lm_collapse", Parquet)((s, dir) =>
+    graft.ops.Text.bigramCollapse(Tables.documents(s, dir).repartition(fanN(s, dir))))
+  private[graft] def lmCollapse(s: SparkSession, dir: String): DataFrame =
+    readStore(LmCollapse, s, dir)
 
   /** The materialized impact-style posting store
     * ([[graft.ops.Text.postingStoreFrame]]) the lexical retrieval
@@ -480,13 +582,10 @@ private[graft] object EntrySupport {
     * collapse → weight chain per query. Spread on read — see
     * [[ddfPerturbed]].
     */
-  private[graft] def tokPostings(s: SparkSession, dir: String): DataFrame = {
-    val path = tmpDir("tok_postings", dir)
-    Sinks.ensureWritten(
-      graft.ops.Text.postingStoreFrame(Tables.documents(s, dir), dfCapFrac = 0.85),
-      path)
-    Tables.readParquetCached(s, path, s.sparkContext.defaultParallelism)
-  }
+  private[graft] val TokPostings = Store("tok_postings", Parquet, spread = true)((s, dir) =>
+    graft.ops.Text.postingStoreFrame(Tables.documents(s, dir), dfCapFrac = 0.85))
+  private[graft] def tokPostings(s: SparkSession, dir: String): DataFrame =
+    readStore(TokPostings, s, dir)
 
   /** Driver-local query slice of the posting store — the retrieval
     * queries' search-request side (docs 0..nQ-1's postings: q_id,
@@ -502,17 +601,14 @@ private[graft] object EntrySupport {
     */
   private[graft] def tokPostingsQueryLocal(s: SparkSession, dir: String, nQ: Int): DataFrame = {
     import s.implicits._
-    val path = tmpDir("tok_postings", dir)
-    val rows = qSliceMemo.computeIfAbsent((path, nQ), { _ =>
+    val rows = memo(("tok_postings_q", tmpDir(TokPostings.tag, dir), nQ)) {
       tokPostings(s, dir).filter(col("doc_id") < nQ)
         .select(col("doc_id"), col("token"), col("wn"))
         .collect().map(r => (r.getLong(0), r.getString(1),
           if (r.isNullAt(2)) None else Some(r.getDouble(2)))).toSeq
-    })
+    }
     rows.toDF("q_id", "token", "qw")
   }
-  private val qSliceMemo =
-    new java.util.concurrent.ConcurrentHashMap[(String, Int), Seq[(Long, String, Option[Double])]]
 
   /** Driver-local query-vector slice of the embeddings table (vec_id <
     * nQ, id-ascending) — the bounded model-build collect every ANN
@@ -526,15 +622,13 @@ private[graft] object EntrySupport {
     */
   private[graft] def embQueryLocal(s: SparkSession, dir: String,
                                    nQ: Int): IndexedSeq[(Long, Array[Double])] =
-    embSliceMemo.computeIfAbsent((dir, nQ), { _ =>
+    memo(("emb_q", dir, nQ)) {
       Tables.embeddings(s, dir)
         .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
         .filter(col("vec_id") < nQ).orderBy(col("vec_id"))
         .collect()
         .map(r => (r.getLong(0), r.getSeq[Double](1).toArray)).toIndexedSeq
-    })
-  private val embSliceMemo = new java.util.concurrent.ConcurrentHashMap[
-    (String, Int), IndexedSeq[(Long, Array[Double])]]
+    }
 
   /** Driver-local labeled holdout slice (vec_id % modulus == 0,
     * id-ascending) — knnLabelVote's query-matrix model build. Same
@@ -542,7 +636,7 @@ private[graft] object EntrySupport {
     */
   private[graft] def embHoldoutLocal(s: SparkSession, dir: String,
                                      modulus: Int): IndexedSeq[(Long, Int, Array[Double])] =
-    embHoldoutMemo.computeIfAbsent((dir, modulus), { _ =>
+    memo(("emb_holdout", dir, modulus)) {
       Tables.embeddings(s, dir)
         .select(col("vec_id"), col("label"),
           col("embedding").cast("array<double>").as("v"))
@@ -551,9 +645,7 @@ private[graft] object EntrySupport {
         .collect()
         .map(r => (r.getLong(0), r.getInt(1), r.getSeq[Double](2).toArray))
         .toIndexedSeq
-    })
-  private val embHoldoutMemo = new java.util.concurrent.ConcurrentHashMap[
-    (String, Int), IndexedSeq[(Long, Int, Array[Double])]]
+    }
 
   /** Memoized DSIR bucket-ratio model — the B-row (bucket, loglr_u6)
     * table [[graft.ops.Text.dsirWeightsFrom]] replays as a
@@ -566,12 +658,10 @@ private[graft] object EntrySupport {
     */
   private[graft] def dsirRatioLocal(s: SparkSession, dir: String,
                                     buckets: Int): Seq[(Long, Long)] =
-    dsirRatioMemo.computeIfAbsent((dir, buckets), { _ =>
+    memo(("dsir_ratio", dir, buckets)) {
       graft.ops.Text.dsirRatio(
         Tables.documents(s, dir), col("lang") === "en", buckets)
-    })
-  private val dsirRatioMemo =
-    new java.util.concurrent.ConcurrentHashMap[(String, Int), Seq[(Long, Long)]]
+    }
 
   /** Memoized routed-query model for [[graft.ops.Hnsw.hnswTopKRouted]]
     * — each query's vector plus its nProbe best cells under the shared
@@ -583,12 +673,10 @@ private[graft] object EntrySupport {
     */
   private[graft] def hnswRoutedQueryLocal(s: SparkSession, dir: String,
       nQ: Int, nProbe: Int): IndexedSeq[(Long, Array[Double], Array[Int])] =
-    hnswRoutedMemo.computeIfAbsent((dir, nQ, nProbe), { _ =>
+    memo(("hnsw_routed", dir, nQ, nProbe)) {
       graft.ops.Hnsw.routedQueryModel(
         Tables.embeddings(s, dir), pqModel(s, dir)._1, nQ, nProbe).toIndexedSeq
-    })
-  private val hnswRoutedMemo = new java.util.concurrent.ConcurrentHashMap[
-    (String, Int, Int), IndexedSeq[(Long, Array[Double], Array[Int])]]
+    }
 
   /** Memoized row count of a raw testdata table — the size a
     * [[graft.ops.Relational.bandedNtile]] consumer probes to pick its
@@ -600,20 +688,14 @@ private[graft] object EntrySupport {
     */
   private[graft] def tableCountLocal(s: SparkSession, dir: String,
                                      table: String): Long =
-    tableCountMemo.computeIfAbsent((dir, table),
-      _ => Tables.table(s, dir, table).count())
-  private val tableCountMemo =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), java.lang.Long]
+    memo(("table_count", dir, table))(Tables.table(s, dir, table).count())
 
   /** Memoized count of docs carrying at least one bigram (the
     * interp-LM scorer's output row count) — the banding probe for the
     * perplexity-band query, same family as [[tableCountLocal]].
     */
   private[graft] def lmDocCountLocal(s: SparkSession, dir: String): Long =
-    lmDocCountMemo.computeIfAbsent(dir,
-      _ => lmCollapse(s, dir).select(col("doc_id")).distinct().count())
-  private val lmDocCountMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]
+    memo(("lm_doc_count", dir))(lmCollapse(s, dir).select(col("doc_id")).distinct().count())
 
   /** Memoized |users| of the RFM per-user aggregate at an anchor —
     * [[graft.ops.EventOps.rfmSegments]]'s single banding probe. Keyed
@@ -622,10 +704,9 @@ private[graft] object EntrySupport {
     */
   private[graft] def rfmUserCountLocal(s: SparkSession, dir: String,
                                        anchorUs: Long): Long =
-    rfmCountMemo.computeIfAbsent((dir, anchorUs),
-      _ => graft.ops.EventOps.rfmPerUser(Tables.events(s, dir), anchorUs).count())
-  private val rfmCountMemo =
-    new java.util.concurrent.ConcurrentHashMap[(String, Long), java.lang.Long]
+    memo(("rfm_user_count", dir, anchorUs)) {
+      graft.ops.EventOps.rfmPerUser(Tables.events(s, dir), anchorUs).count()
+    }
 
   /** Bucketed twin tables for the co-located join: orders
     * and customer written ONCE as 8-bucket tables on the join key
@@ -642,48 +723,14 @@ private[graft] object EntrySupport {
     * shape (zero custkey exchanges) and the row-for-row equivalence
     * with the plain shuffled join.
     */
-  private[graft] def bucketedOrdersCustomer(s: SparkSession, dir: String): (DataFrame, DataFrame) = {
-    val oPath = tmpDir("bucket_orders", dir)
-    val cPath = tmpDir("bucket_customer", dir)
-    def fp(p: String) = java.security.MessageDigest.getInstance("MD5")
-      .digest(p.getBytes("UTF-8")).map(b => f"$b%02x").mkString.take(8)
-    val oName = s"graft_b_orders_${fp(oPath)}"
-    val cName = s"graft_b_customer_${fp(cPath)}"
-    ensureBucketed(s,
-      Tables.table(s, dir, "orders")
-        .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice")),
-      "o_custkey", oPath, oName)
-    ensureBucketed(s,
-      Tables.table(s, dir, "customer")
-        .select(col("c_custkey"), col("c_nationkey"), col("c_acctbal")),
-      "c_custkey", cPath, cName)
-    (Tables.tableCached(s, oName), Tables.tableCached(s, cName))
-  }
-
-  private def ensureBucketed(s: SparkSession, df: => DataFrame, key: String,
-                             path: String, name: String,
-                             nBuckets: Int = 8): Unit = synchronized {
-    val marker = new java.io.File(path, "_SUCCESS")
-    if (!marker.exists()) {
-      // repartition on the bucket key first: one task per bucket ⇒ one
-      // file per bucket, which is what lets the read side trust the
-      // in-bucket sort and elide both exchange AND sort
-      df.repartition(nBuckets, col(key))
-        .write.bucketBy(nBuckets, key).sortBy(key)
-        .option("path", path).mode("overwrite").saveAsTable(name)
-      Tables.invalidatePath(path)
-      Tables.invalidateTable(name)
-    } else if (!s.catalog.tableExists(name)) {
-      // re-registering pre-existing bucket files on a fresh session:
-      // derive the DDL schema FROM the files, never from a
-      // hand-maintained string — a hardcoded type that drifted from
-      // the written data would only surface on exactly this path, as
-      // a miscast the first-run saveAsTable branch never exhibits
-      val ddlSchema = s.read.parquet(path).schema.toDDL
-      s.sql(s"CREATE TABLE IF NOT EXISTS $name ($ddlSchema) USING parquet " +
-        s"CLUSTERED BY ($key) SORTED BY ($key) INTO $nBuckets BUCKETS LOCATION '$path'")
-    }
-  }
+  private[graft] val BucketOrders = Store("bucket_orders", BucketedOn("o_custkey"))((s, dir) =>
+    Tables.table(s, dir, "orders")
+      .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice")))
+  private[graft] val BucketCustomer = Store("bucket_customer", BucketedOn("c_custkey"))((s, dir) =>
+    Tables.table(s, dir, "customer")
+      .select(col("c_custkey"), col("c_nationkey"), col("c_acctbal")))
+  private[graft] def bucketedOrdersCustomer(s: SparkSession, dir: String): (DataFrame, DataFrame) =
+    (readStore(BucketOrders, s, dir), readStore(BucketCustomer, s, dir))
 
   /** The GA4-shaped nested table (the reference's actual N1 input,
     * `/root/reference/extract_bq.py:155-164`): `event_params` is
@@ -717,11 +764,71 @@ private[graft] object EntrySupport {
       params.as("event_params"))
   }
 
-  private[graft] def ga4Table(s: SparkSession, dir: String): DataFrame = {
-    val ga4 = tmpDir("ga4", dir)
-    Sinks.ensureWritten(ga4Frame(Tables.events(s, dir)), ga4)
-    Tables.readParquetCached(s, ga4)
+  private[graft] val Ga4 = Store("ga4", Parquet)((s, dir) => ga4Frame(Tables.events(s, dir)))
+  private[graft] def ga4Table(s: SparkSession, dir: String): DataFrame = readStore(Ga4, s, dir)
+
+  /** The date-partitioned events layout (the reference's sharded
+    * `events_YYYYMMDD` family): one directory per `event_date`.
+    */
+  private[graft] val EventsByDate = Store("events_by_date", PartitionedBy("event_date"))((s, dir) =>
+    Tables.events(s, dir).withColumn(
+      "event_date", date_format(timestamp_micros(col("ts_us")), "yyyy-MM-dd")))
+
+  /** The deliberately-dirty intake feeds of the PERMISSIVE trio
+    * (`q_json_intake`, `q_xml_intake`, `q_csv_intake`): the events
+    * table as text lines in which every 13th record is malformed, so
+    * the oracles state the quarantine counts straight from the clean
+    * table. Fan-out: the regenerated events parquet arrives as ONE
+    * split, and a single-file feed would serialize the permissive parse
+    * (the whole cost of those queries) onto one core.
+    */
+  private[graft] val DirtyJsonl = Store("dirty_jsonl", TextLines)((s, dir) =>
+    Tables.events(s, dir).select(
+      when(col("event_id") % 13 === 0, lit("{broken json line"))
+        .otherwise(to_json(struct(
+          col("event_id"), col("event_type"),
+          col("user_id"), col("ts_us")))).as("value"))
+      .repartition(fanEvHeavyN(s, dir)))
+
+  /** Line-delimited XML: the malformed record carries a non-numeric
+    * event_id cell inside well-formed markup, and event_type is
+    * entity-escaped so the feed itself stays well-formed.
+    */
+  private[graft] val DirtyXml = Store("dirty_xml", TextLines) { (s, dir) =>
+    val esc = (c: Column) =>
+      regexp_replace(regexp_replace(regexp_replace(c,
+        lit("&"), lit("&amp;")), lit("<"), lit("&lt;")), lit(">"), lit("&gt;"))
+    // a NULL field omits its element (the writer convention; reads
+    // back as NULL) — concat over a raw NULL would null the LINE and
+    // break the text sink
+    val elem = (name: String, v: Column) =>
+      when(v.isNull, lit("")).otherwise(
+        concat(lit(s"<$name>"), v, lit(s"</$name>")))
+    Tables.events(s, dir).select(concat(
+      lit("<row>"),
+      elem("event_id",
+        when(col("event_id") % 13 === 0, concat(lit("x"), col("event_id")))
+          .otherwise(col("event_id").cast("string"))),
+      elem("event_type", esc(col("event_type"))),
+      elem("user_id", col("user_id").cast("string")),
+      elem("ts_us", col("ts_us").cast("string")),
+      lit("</row>")).as("value"))
+      .repartition(fanEvHeavyN(s, dir))
   }
+
+  /** CSV: the malformed line carries a non-numeric event_id cell.
+    * event_type values are comma-free, so the unquoted writer is
+    * unambiguous; a NULL user_id writes as an empty cell (reads back
+    * NULL) — concat_ws would DROP the cell and shift the row.
+    */
+  private[graft] val DirtyCsv = Store("dirty_csv", TextLines)((s, dir) =>
+    Tables.events(s, dir).select(concat_ws(",",
+      when(col("event_id") % 13 === 0, concat(lit("x"), col("event_id")))
+        .otherwise(col("event_id").cast("string")),
+      col("event_type"),
+      coalesce(col("user_id").cast("string"), lit("")),
+      col("ts_us").cast("string")).as("value"))
+      .repartition(fanEvHeavyN(s, dir)))
 
   /** Materialized trained quality-classifier model — (idx, w) rows,
     * idx −1 carrying the bias ([[graft.ops.Text.trainQualityLrLocal]],
@@ -735,29 +842,25 @@ private[graft] object EntrySupport {
     * and the dynamic oracle re-trains INDEPENDENTLY at Verify time,
     * so a drifted store fails the hash gate rather than hiding.
     */
-  private[graft] def qualityModel(s: SparkSession, dir: String)
-      : (Array[Double], Double) = {
+  private[graft] val QualityLr = Store("quality_lr", Parquet) { (s, dir) =>
     import s.implicits._
-    val path = tmpDir("quality_lr", dir)
-    qualityModelMemo.computeIfAbsent(path, { _ =>
-      Sinks.ensureWritten({
-        val docs = Tables.documents(s, dir)
-          .repartition(fanN(s, dir))
-        val (w, b) = graft.ops.Text.trainQualityLrLocal(
-          graft.ops.Text.qualityCorpus(docs), dim = 256)
-        (w.zipWithIndex.map { case (x, i) => (i, x) }.toSeq :+ ((-1, b)))
-          .toDF("idx", "w")
-      }, path)
-      val rows = s.read.parquet(path).collect()
+    val docs = Tables.documents(s, dir)
+      .repartition(fanN(s, dir))
+    val (w, b) = graft.ops.Text.trainQualityLrLocal(
+      graft.ops.Text.qualityCorpus(docs), dim = 256)
+    (w.zipWithIndex.map { case (x, i) => (i, x) }.toSeq :+ ((-1, b)))
+      .toDF("idx", "w")
+  }
+  private[graft] def qualityModel(s: SparkSession, dir: String)
+      : (Array[Double], Double) =
+    memo(("quality_lr", tmpDir(QualityLr.tag, dir))) {
+      val rows = s.read.parquet(materialize(QualityLr, s, dir)).collect()
         .map(r => (r.getInt(0), r.getDouble(1)))
       val w = new Array[Double](256)
       var b = 0.0
       rows.foreach { case (i, x) => if (i < 0) b = x else w(i) = x }
       (w, b)
-    })
-  }
-  private val qualityModelMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, (Array[Double], Double)]
+    }
 
   /** Materialized trained BPE merge list — (rank, a, b) rows from
     * [[graft.ops.Text.bpeTrain]] (deterministic: exact vocab-weighted
@@ -768,22 +871,18 @@ private[graft] object EntrySupport {
     * oracle re-trains at Verify time with the identical call, so a
     * drifted store fails the hash gate rather than hiding.
     */
-  private[graft] def bpeMerges(s: SparkSession, dir: String): Seq[(String, String)] = {
+  private[graft] val BpeMerges = Store("bpe_merges", Parquet) { (s, dir) =>
     import s.implicits._
-    val path = tmpDir("bpe_merges", dir)
-    bpeMergesMemo.computeIfAbsent(path, { _ =>
-      Sinks.ensureWritten({
-        val m = graft.ops.Text.bpeTrain(
-          Tables.documents(s, dir).repartition(fanN(s, dir)),
-          nMerges = 32, minWordCount = 2L)
-        m.zipWithIndex.map { case ((a, b), i) => (i, a, b) }.toDF("rank", "a", "b")
-      }, path)
-      s.read.parquet(path).collect().sortBy(_.getInt(0))
-        .map(r => (r.getString(1), r.getString(2))).toSeq
-    })
+    val m = graft.ops.Text.bpeTrain(
+      Tables.documents(s, dir).repartition(fanN(s, dir)),
+      nMerges = 32, minWordCount = 2L)
+    m.zipWithIndex.map { case ((a, b), i) => (i, a, b) }.toDF("rank", "a", "b")
   }
-  private val bpeMergesMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, Seq[(String, String)]]
+  private[graft] def bpeMerges(s: SparkSession, dir: String): Seq[(String, String)] =
+    memo(("bpe_merges", tmpDir(BpeMerges.tag, dir))) {
+      s.read.parquet(materialize(BpeMerges, s, dir)).collect().sortBy(_.getInt(0))
+        .map(r => (r.getString(1), r.getString(2))).toSeq
+    }
 
   /** The SPM training configuration both the store build and the
     * dynamic oracle's independent re-train share — ONE definition so
@@ -812,18 +911,15 @@ private[graft] object EntrySupport {
     * reasoning — the dynamic oracle re-trains at Verify time with the
     * identical call, so a drifted store fails the hash gate.
     */
-  private[graft] def spmModel(s: SparkSession, dir: String): Seq[(String, Long)] = {
+  private[graft] val SpmModel = Store("spm_model", Parquet) { (s, dir) =>
     import s.implicits._
-    val path = tmpDir("spm_model", dir)
-    spmModelMemo.computeIfAbsent(path, { _ =>
-      Sinks.ensureWritten(
-        spmTrain(s, dir).toDF("piece", "cost_u6"), path)
-      s.read.parquet(path).collect()
-        .map(r => (r.getString(0), r.getLong(1))).sortBy(_._1).toSeq
-    })
+    spmTrain(s, dir).toDF("piece", "cost_u6")
   }
-  private val spmModelMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, Seq[(String, Long)]]
+  private[graft] def spmModel(s: SparkSession, dir: String): Seq[(String, Long)] =
+    memo(("spm_model", tmpDir(SpmModel.tag, dir))) {
+      s.read.parquet(materialize(SpmModel, s, dir)).collect()
+        .map(r => (r.getString(0), r.getLong(1))).sortBy(_._1).toSeq
+    }
 
   /** Memoized pre-segmented vocabulary — (word, n_pieces, cost_u6) for
     * every corpus word type PLUS the planted-doc words, computed ONCE
@@ -836,7 +932,7 @@ private[graft] object EntrySupport {
     * raises loudly on any word the slice misses.
     */
   private[graft] def spmSegLocal(s: SparkSession, dir: String): Seq[(String, Long, Long)] =
-    spmSegMemo.computeIfAbsent(dir, { _ =>
+    memo(("spm_seg", dir)) {
       import s.implicits._
       val model = spmModel(s, dir)
       val words = Tables.documents(s, dir).select(col("text"))
@@ -846,9 +942,7 @@ private[graft] object EntrySupport {
       graft.ops.Text.spmSegmentFrame(words, model, SpmMaxPieceLen)
         .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
         .sortBy(_._1).toSeq
-    })
-  private val spmSegMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, Seq[(String, Long, Long)]]
+    }
 
   /** [[spmSegLocal]]'s BYTE-FALLBACK twin — (word, n_pieces, cost_u6,
     * n_fallback_pieces) for every corpus word type PLUS the fallback
@@ -860,7 +954,7 @@ private[graft] object EntrySupport {
     * form too).
     */
   private[graft] def spmSegFbLocal(s: SparkSession, dir: String): Seq[(String, Long, Long, Long)] =
-    spmSegFbMemo.computeIfAbsent(dir, { _ =>
+    memo(("spm_seg_fb", dir)) {
       import s.implicits._
       val model = spmModel(s, dir)
       val words = Tables.documents(s, dir).select(col("text"))
@@ -872,9 +966,7 @@ private[graft] object EntrySupport {
         .collect()
         .map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getLong(3)))
         .sortBy(_._1).toSeq
-    })
-  private val spmSegFbMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, Seq[(String, Long, Long, Long)]]
+    }
 
   /** [[spmSegLocal]]'s SAMPLED twin — the per-(tau, epoch) perturbed
     * segmentation of the corpus vocabulary (q_spm_sample's model
@@ -883,7 +975,7 @@ private[graft] object EntrySupport {
     */
   private[graft] def spmSampleSegLocal(s: SparkSession, dir: String,
       tauU6: Long, epoch: Int): Seq[(String, Long, Long)] =
-    spmSampleSegMemo.computeIfAbsent((dir, tauU6, epoch), { _ =>
+    memo(("spm_sample_seg", dir, tauU6, epoch)) {
       val words = Tables.documents(s, dir)
         .select(explode(graft.ops.Dedup.tokens(col("text"))).as("word"))
         .distinct()
@@ -891,9 +983,7 @@ private[graft] object EntrySupport {
           SpmMaxPieceLen, tauU6, epoch)
         .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
         .sortBy(_._1).toSeq
-    })
-  private val spmSampleSegMemo = new java.util.concurrent.ConcurrentHashMap[
-    (String, Long, Int), Seq[(String, Long, Long)]]
+    }
 
   /** Adversarial planted docs for q_spm_encode — piece-concatenation
     * words (the DP must choose pieces over chars), an out-of-vocab
@@ -967,21 +1057,20 @@ private[graft] object EntrySupport {
     * every search; this is that artifact. Same memo/round-trip
     * reasoning as [[qualityModel]].
     */
-  private[graft] def pqModel(s: SparkSession, dir: String)
-      : (graft.ops.Sim.Centroids, graft.ops.Sim.Codebooks) = {
+  private[graft] val PqModel = Store("pq_model", Parquet) { (s, dir) =>
     import s.implicits._
-    val path = tmpDir("pq_model", dir)
-    pqModelMemo.computeIfAbsent(path, { _ =>
-      Sinks.ensureWritten({
-        val (cents, cbs) = graft.ops.Sim.pqTrainLocal(
-          Tables.embeddings(s, dir), nCells = 8, m = 8, ks = 16,
-          iters = 4, sampleMod = 2)
-        (cents.map { case (id, v) => ("cent", id.toInt, 0, v.toSeq) } ++
-          cbs.zipWithIndex.flatMap { case (codes, j) =>
-            codes.zipWithIndex.map { case (cv, c) => ("cb", j, c, cv.toSeq) }
-          }).toDF("kind", "i", "j", "vec")
-      }, path)
-      val rows = s.read.parquet(path).collect()
+    val (cents, cbs) = graft.ops.Sim.pqTrainLocal(
+      Tables.embeddings(s, dir), nCells = 8, m = 8, ks = 16,
+      iters = 4, sampleMod = 2)
+    (cents.map { case (id, v) => ("cent", id.toInt, 0, v.toSeq) } ++
+      cbs.zipWithIndex.flatMap { case (codes, j) =>
+        codes.zipWithIndex.map { case (cv, c) => ("cb", j, c, cv.toSeq) }
+      }).toDF("kind", "i", "j", "vec")
+  }
+  private[graft] def pqModel(s: SparkSession, dir: String)
+      : (graft.ops.Sim.Centroids, graft.ops.Sim.Codebooks) =
+    memo(("pq_model", tmpDir(PqModel.tag, dir))) {
+      val rows = s.read.parquet(materialize(PqModel, s, dir)).collect()
         .map(r => (r.getString(0), r.getInt(1), r.getInt(2),
           r.getSeq[Double](3).toArray))
       val cents: graft.ops.Sim.Centroids = rows.filter(_._1 == "cent")
@@ -992,10 +1081,7 @@ private[graft] object EntrySupport {
           .sortBy(_._3).map(_._4).toSeq
       }
       (cents, cbs)
-    })
-  }
-  private val pqModelMemo = new java.util.concurrent.ConcurrentHashMap[
-    String, (graft.ops.Sim.Centroids, graft.ops.Sim.Codebooks)]
+    }
 
   /** The planted link-farm block q_html_extract appends to every
     * doc_id % 7 == 3 page — ONE definition interpolated into both the
@@ -1015,13 +1101,10 @@ private[graft] object EntrySupport {
     * store; the declared query exercises the read + map-side batch
     * assignment + union search path.
     */
-  private[graft] def ivfAssignedStore(s: SparkSession, dir: String): DataFrame = {
-    val path = tmpDir("ivf_assigned_8", dir)
-    Sinks.ensurePartitioned(
-      graft.ops.Sim.ivfAssign(Tables.embeddings(s, dir), pqModel(s, dir)._1),
-      path, "cell")
-    Tables.readParquetCached(s, path)
-  }
+  private[graft] val IvfAssigned8 = Store("ivf_assigned_8", PartitionedBy("cell"))((s, dir) =>
+    graft.ops.Sim.ivfAssign(Tables.embeddings(s, dir), pqModel(s, dir)._1))
+  private[graft] def ivfAssignedStore(s: SparkSession, dir: String): DataFrame =
+    readStore(IvfAssigned8, s, dir)
 
   /** The planted incremental embedding BATCH `q_sim_ivf_incremental`
     * assigns and searches: reversed copies (+1M, vec_id % 3 == 0 —
@@ -1050,14 +1133,11 @@ private[graft] object EntrySupport {
     * query walks this store, proving seal → persist → load → search
     * loses nothing vs the growing tier.
     */
-  private[graft] def hnswSealedStore(s: SparkSession, dir: String): DataFrame = {
-    val path = tmpDir("hnsw_sealed_seg", dir)
-    Sinks.ensureWritten(
-      graft.ops.Hnsw.hnswSealSegment(ivfBatch(s, dir), pqModel(s, dir)._1,
-        m = 8, efConstruction = 64),
-      path)
-    Tables.readParquetCached(s, path)
-  }
+  private[graft] val HnswSealedSeg = Store("hnsw_sealed_seg", Parquet)((s, dir) =>
+    graft.ops.Hnsw.hnswSealSegment(ivfBatch(s, dir), pqModel(s, dir)._1,
+      m = 8, efConstruction = 64))
+  private[graft] def hnswSealedStore(s: SparkSession, dir: String): DataFrame =
+    readStore(HnswSealedSeg, s, dir)
 
   /** [[ivfBatch]] as UNION ALL branches for the dynamic oracle's
     * corpus CTE. */
@@ -1079,14 +1159,12 @@ private[graft] object EntrySupport {
     * approx_percentile's merge order is not canonical across runs.
     */
   private[graft] def qvApproxLocal(s: SparkSession, dir: String): (Double, Double, Double, Double) =
-    qvApproxMemo.computeIfAbsent(dir, { _ =>
+    memo(("qv_approx", dir)) {
       graft.ops.Text.qualityVotesMediansApprox(
         Tables.documents(s, dir).select(col("doc_id"), col("text"))
           .repartition(fanN(s, dir)),
         stopwords = Seq("the", "a"))
-    })
-  private val qvApproxMemo = new java.util.concurrent.ConcurrentHashMap[
-    String, (Double, Double, Double, Double)]
+    }
 
   /** The planted standing-corpus HTML frame shared by
     * `q_web_corpus_incremental` (in-plan indexes), `q_web_corpus_store`
@@ -1163,14 +1241,17 @@ private[graft] object EntrySupport {
     * re-derive them from the standing corpus per run). Returns the two
     * skinny frames read back from parquet.
     */
-  private[graft] def wcIndexes(s: SparkSession, dir: String): (DataFrame, DataFrame) = {
-    val cp = tmpDir("wc_canon_idx", dir)
-    val tp = tmpDir("wc_text_idx", dir)
-    lazy val built = graft.ops.Corpus.webCorpusIndexes(wcStandingPages(s, dir))
-    Sinks.ensureWritten(built._1, cp)
-    Sinks.ensureWritten(built._2, tp)
-    (Tables.readParquetCached(s, cp), Tables.readParquetCached(s, tp))
-  }
+  private[graft] val WcCanonIdx = Store("wc_canon_idx", Parquet)(wcCanonBuild)
+  private[graft] val WcTextIdx = Store("wc_text_idx", Parquet)(wcTextBuild)
+  private[graft] def wcIndexes(s: SparkSession, dir: String): (DataFrame, DataFrame) =
+    (readStore(WcCanonIdx, s, dir), readStore(WcTextIdx, s, dir))
+  // Each build calls webCorpusIndexes for its half; the two calls plan
+  // the same gate frame, so while its CacheScope cache lives, the
+  // second build reads the first one's cached gate.
+  private def wcCanonBuild(s: SparkSession, dir: String): DataFrame =
+    graft.ops.Corpus.webCorpusIndexes(wcStandingPages(s, dir))._1
+  private def wcTextBuild(s: SparkSession, dir: String): DataFrame =
+    graft.ops.Corpus.webCorpusIndexes(wcStandingPages(s, dir))._2
 
   /** The standing-index store of [[wcIndexes]] written as BUCKETED
     * tables on their key (8 buckets, sorted — the `q_bucket_join`
@@ -1180,16 +1261,19 @@ private[graft] object EntrySupport {
     * budget, bought once at prepare so every nightly probe reads the
     * standing side exchange-free forever.
     */
-  private[graft] def wcIndexesBucketed(s: SparkSession, dir: String): (DataFrame, DataFrame) = {
-    val cp = tmpDir("wc_canon_idx_b", dir)
-    val tp = tmpDir("wc_text_idx_b", dir)
-    def fp(p: String) = java.security.MessageDigest.getInstance("MD5")
-      .digest(p.getBytes("UTF-8")).map(b => f"$b%02x").mkString.take(8)
-    val cName = s"graft_b_wc_canon_${fp(cp)}"
-    val tName = s"graft_b_wc_text_${fp(tp)}"
-    lazy val built = graft.ops.Corpus.webCorpusIndexes(wcStandingPages(s, dir))
-    ensureBucketed(s, built._1, "canonical", cp, cName)
-    ensureBucketed(s, built._2, "th", tp, tName)
-    (Tables.tableCached(s, cName), Tables.tableCached(s, tName))
-  }
+  private[graft] val WcCanonIdxB = Store("wc_canon_idx_b", BucketedOn("canonical"))(wcCanonBuild)
+  private[graft] val WcTextIdxB = Store("wc_text_idx_b", BucketedOn("th"))(wcTextBuild)
+  private[graft] def wcIndexesBucketed(s: SparkSession, dir: String): (DataFrame, DataFrame) =
+    (readStore(WcCanonIdxB, s, dir), readStore(WcTextIdxB, s, dir))
+
+  /** Every store, in the order [[graft.SparkEntry.prepare]] builds them
+    * (a build reads the stores it derives from through their accessors,
+    * so the order only sets when each is paid).
+    */
+  private[graft] lazy val stores: Seq[Store] = Seq(
+    EventsByDate, Ga4, Chain500, DdfPerturbed, DdfChain500, CcKeepers500,
+    LmCollapse, JpegMedia, PngMedia, SimhashFpsExactDup, SimhashFps1k,
+    QualityLr, PqModel, BpeMerges, SpmModel, TokPostings,
+    BucketOrders, BucketCustomer, WcCanonIdx, WcTextIdx, WcCanonIdxB, WcTextIdxB,
+    MediaBandIdx, IvfAssigned8, HnswSealedSeg, DirtyJsonl, DirtyXml, DirtyCsv)
 }

@@ -4,7 +4,6 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.ops.EventOps
-import graft.etl.Sinks
 import graft.Tables._
 import graft.EntrySupport._
 import graft.queries._
@@ -60,56 +59,23 @@ object SparkEntry {
   def oracleFixtureCte: Map[String, String] =
     declared.flatMap(q => q.fixtureCte.map(q.name -> _)).toMap
 
-  /** One-time scratch materializations (the date-partitioned events
-    * layout, the GA4 nested parquet). Queries run the same ensure*
-    * calls lazily; Bench calls this BEFORE the timed region so layout
-    * construction — an input, like the testdata itself — isn't billed
-    * to whichever query happens to touch it first.
+  /** Materialize every registered fixture store, then warm the
+    * driver-side model memos the queries read at construct. Queries
+    * materialize their stores lazily too; Bench calls this BEFORE the
+    * timed region so store construction — an input, like the testdata
+    * itself — isn't billed to whichever query happens to touch it
+    * first.
     */
   def prepare(spark: SparkSession, sfDir: String): Unit = {
     val s = ensure(spark)
-    Sinks.ensurePartitioned(
-      Tables.events(s, sfDir).withColumn(
-        "event_date", date_format(timestamp_micros(col("ts_us")), "yyyy-MM-dd")),
-      tmpDir("events_by_date", sfDir), "event_date")
-    Sinks.ensureWritten(ga4Frame(Tables.events(s, sfDir)), tmpDir("ga4", sfDir))
-    Sinks.ensureWritten(chainFrame(s, sfDir, 500), tmpDir("chain_500", sfDir))
-    // materialized stage outputs: the CC keeper assignment
-    // (dedup output — declared by q_dedup_cc, audited by
-    // q_dup_cluster_stats) and the LM bigram count table (read by all
-    // three LM scorers). Both are corpus-versioned artifacts a
-    // production pipeline writes once per dataset, not per consumer.
-    ddfPerturbed(s, sfDir)
-    ddfChain(s, sfDir)
-    ccKeepers(s, sfDir)
-    lmCollapse(s, sfDir)
-    jpegMedia(s, sfDir)
-    pngMedia(s, sfDir)
-    simhashFpsExactDup(s, sfDir)
-    simhashFpsDocs1k(s, sfDir)
+    EntrySupport.stores.foreach(materialize(_, s, sfDir))
     qualityModel(s, sfDir)
     pqModel(s, sfDir)
     bpeMerges(s, sfDir)
     spmModel(s, sfDir)
-    tokPostings(s, sfDir)
     tokPostingsQueryLocal(s, sfDir, 10)
     tokPostingsQueryLocal(s, sfDir, 20)
-    bucketedOrdersCustomer(s, sfDir)
-    wcIndexes(s, sfDir)
-    wcIndexesBucketed(s, sfDir)
-    mediaBandIdx(s, sfDir)
-    ivfAssignedStore(s, sfDir)
-    hnswSealedStore(s, sfDir)
-    Sinks.ensureTextWritten(
-      Tables.events(s, sfDir).select(
-        when(col("event_id") % 13 === 0, lit("{broken json line"))
-          .otherwise(to_json(struct(
-            col("event_id"), col("event_type"),
-            col("user_id"), col("ts_us")))).as("value"))
-        .repartition(fanEvHeavyN(s, sfDir)),
-      tmpDir("dirty_jsonl", sfDir))
   }
-
 
   /** Oracle SQL whose text depends on an engine-built MODEL (data, not
     * code): generated at Verify time against the actual sfDir and

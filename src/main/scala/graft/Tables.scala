@@ -285,7 +285,7 @@ object Tables {
     * as part of the bucketed family's 0.2-0.6 s per-construct
     * driver cost). Same session-keyed memo as [[readParquetCached]];
     * valid because every graft bucketed fixture is write-once
-    * (EntrySupport.ensureBucketed) under a live session.
+    * (EntrySupport.writeOnce) under a live session.
     */
   def tableCached(spark: SparkSession, name: String): DataFrame = {
     purgeDeadSessions()
@@ -294,7 +294,7 @@ object Tables {
   }
 
   /** Evict a [[tableCached]] memo entry — called by the one writer
-    * (EntrySupport.ensureBucketed) on its write branch so the memo can
+    * (EntrySupport.writeOnce) on its write branch so the memo can
     * never outlive a fixture rewrite (`invalidatePath` matches on path,
     * which the `table:` keys don't carry).
     */

@@ -45,8 +45,7 @@ object Dedup {
     docShingles0(corpus).distinct()
 
   /** [[docShingles]] BEFORE the distinct — for callers that fold the
-    * dedup into a partition pass they already pay (see
-    * [[ngramContainmentPairs]]).
+    * dedup into a partition pass they already pay.
     */
   private[graft] def docShingles0(corpus: DataFrame): DataFrame =
     corpus
@@ -133,39 +132,17 @@ object Dedup {
   def ngramJaccardPairsCapped(corpus: DataFrame, threshold: Double, dfCap: Long): DataFrame =
     ngramJaccardPairs(corpus, threshold, dfCap)
 
-  /** Asymmetric CONTAINMENT pairs (Broder's other resemblance measure):
-    * c(A→B) = |A∩B| / |A| — near 1 when A is (mostly) inside B even if
-    * B is far larger, which Jaccard misses (a quoted paragraph inside
-    * a long page has high containment, low J). Same inverted-index
-    * join as [[ngramJaccardPairs]]; reports both directions, keeps
-    * pairs where either exceeds `threshold`.
-    */
-  def ngramContainmentPairs(corpus: DataFrame, threshold: Double): DataFrame = {
-    // Cache with carried sizes + exchange-free self-join, like
-    // [[ngramJaccardPairs]], without the df cap: containment is exactly
-    // the measure where a COMMON fragment (boilerplate header, quoted
-    // paragraph) is the signal. The shingle DISTINCT and the per-doc
-    // size window share ONE doc-keyed partition pass — hash(doc_id)
-    // satisfies the (doc_id, shingle) distinct's clustering (subset
-    // key) and is exactly the window's requirement, so only the final
-    // h-repartition (which makes the self-join exchange-free) adds a
-    // second shuffle.
-    val w = org.apache.spark.sql.expressions.Window
-    val sh = CacheScope.cached(
-      docShingles0(corpus)
-        .repartition(col("doc_id")).distinct()
-        .withColumn("sz", count(lit(1)).over(w.partitionBy(col("doc_id"))))
-        .withColumn("h",
-          expr("cast(conv(substring(md5(cast(shingle as binary)), 1, 8), 16, 10) as bigint) % 2147483647"))
-        .select(col("doc_id"), col("sz"), col("h"))
-        .repartition(col("h")))
-    containmentFromHashed(sh, threshold)
-  }
-
-  /** [[ngramContainmentPairs]] over a pre-built per-doc dedup frame:
-    * `explode(hs)` + the carried `sz` reproduce the hashed rows with
-    * zero tokenize/md5 work; only the h-repartition that makes the
-    * self-join exchange-free remains.
+  /** Asymmetric CONTAINMENT pairs (Broder's other resemblance measure)
+    * over a pre-built per-doc dedup frame: c(A→B) = |A∩B| / |A| — near
+    * 1 when A is (mostly) inside B even if B is far larger, which
+    * Jaccard misses (a quoted paragraph inside a long page has high
+    * containment, low J). Same inverted-index join as
+    * [[ngramJaccardPairs]], without the df cap: containment is exactly
+    * the measure where a COMMON fragment (boilerplate header, quoted
+    * paragraph) is the signal. Reports both directions, keeps pairs
+    * where either exceeds `threshold`. `explode(hs)` + the carried `sz`
+    * give the hashed rows with zero tokenize/md5 work; only the
+    * h-repartition that makes the self-join exchange-free remains.
     */
   def ngramContainmentPairsFromFrame(frame: DataFrame, threshold: Double): DataFrame =
     containmentFromHashed(

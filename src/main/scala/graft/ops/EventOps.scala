@@ -54,14 +54,6 @@ object EventOps {
   def newerThan(events: DataFrame, watermarkUs: Long): DataFrame =
     events.filter(col("ts_us") > lit(watermarkUs))
 
-  /** P6/S2 — inclusive-exclusive time-range restriction; at 100 TB with
-    * a date-partitioned layout this predicate is what partition pruning
-    * keys off (the `_TABLE_SUFFIX BETWEEN` analogue,
-    * `/root/reference/extract_bq.py:110`).
-    */
-  def timeRange(events: DataFrame, loUs: Long, hiUs: Long): DataFrame =
-    events.filter(col("ts_us") >= lit(loUs) && col("ts_us") < lit(hiUs))
-
   /** N1 on the GA4 array-of-struct shape: extract
     * `value.string_value` of the LAST element whose `key` matches —
     * last-match-wins because the reference's row loop keeps overwriting

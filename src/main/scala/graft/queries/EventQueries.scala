@@ -6,7 +6,6 @@ import org.apache.spark.sql.types._
 
 import graft.{Tables}
 import graft.ops.{EventOps, Relational, TimeFns}
-import graft.etl.Sinks
 import graft.Tables._
 import graft.EntrySupport._
 
@@ -27,17 +26,12 @@ private[graft] object EventQueries {
         |FROM events ORDER BY event_id""".stripMargin)),
 
     Query("q_prune_dates", (s, dir) => {
-      // Materialize the date-partitioned layout once (the reference's
-      // sharded events_YYYYMMDD family), then filter on the PARTITION
-      // column: the scan's PartitionFilters prune whole day-directories
-      // at planning time — at 100 TB this is the difference between
-      // reading 10 days and reading 10 years.
-      val part = tmpDir("events_by_date", dir)
-      Sinks.ensurePartitioned(
-        Tables.events(s, dir).withColumn(
-          "event_date", date_format(timestamp_micros(col("ts_us")), "yyyy-MM-dd")),
-        part, "event_date")
-      Tables.readParquetCached(s, part)
+      // Filter the date-partitioned store (the reference's sharded
+      // events_YYYYMMDD family) on its PARTITION column: the scan's
+      // PartitionFilters prune whole day-directories at planning time —
+      // at 100 TB this is the difference between reading 10 days and
+      // reading 10 years.
+      readStore(EventsByDate, s, dir)
         .filter(col("event_date") >= "2024-01-10" && col("event_date") < "2024-01-20")
         .select(col("event_id"), col("ts_us"), col("event_date").cast("string").as("event_date"))
         .orderBy(col("event_id"))

@@ -276,18 +276,7 @@ private[graft] object SinkQueries {
       // _corrupt_record (the quarantine column) instead of failing the
       // read; the oracle knows the derivation, so it states the same
       // bucket counts straight from the clean table.
-      val feed = tmpDir("dirty_jsonl", dir)
-      // feed fan-out: the regenerated events parquet arrives as ONE
-      // split, and a single-file JSONL feed would serialize the
-      // permissive parse (the whole cost of this query) onto one core
-      Sinks.ensureTextWritten(
-        Tables.events(s, dir).select(
-          when(col("event_id") % 13 === 0, lit("{broken json line"))
-            .otherwise(to_json(struct(
-              col("event_id"), col("event_type"),
-              col("user_id"), col("ts_us")))).as("value"))
-          .repartition(fanEvHeavyN(s, dir)),
-        feed)
+      val feed = materialize(DirtyJsonl, s, dir)
       val schema = StructType(Seq(
         StructField("event_id", LongType), StructField("event_type", StringType),
         StructField("user_id", LongType), StructField("ts_us", LongType)))
@@ -309,31 +298,8 @@ private[graft] object SinkQueries {
       // VALUE (a non-numeric event_id cell inside well-formed markup):
       // with multiLine=false the parser quarantines exactly that row to
       // _corrupt_record (a whole-document parse would swallow the rest
-      // of the split — see Sinks.xmlLineFeed). event_type is
-      // entity-escaped on construction so the feed itself stays
-      // well-formed markup.
-      val feed = tmpDir("dirty_xml", dir)
-      val esc = (c: Column) =>
-        regexp_replace(regexp_replace(regexp_replace(c,
-          lit("&"), lit("&amp;")), lit("<"), lit("&lt;")), lit(">"), lit("&gt;"))
-      // a NULL field omits its element (the writer convention; reads
-      // back as NULL) — concat over a raw NULL would null the LINE and
-      // break the text sink
-      val elem = (name: String, v: Column) =>
-        when(v.isNull, lit("")).otherwise(
-          concat(lit(s"<$name>"), v, lit(s"</$name>")))
-      Sinks.ensureTextWritten(
-        Tables.events(s, dir).select(concat(
-          lit("<row>"),
-          elem("event_id",
-            when(col("event_id") % 13 === 0, concat(lit("x"), col("event_id")))
-              .otherwise(col("event_id").cast("string"))),
-          elem("event_type", esc(col("event_type"))),
-          elem("user_id", col("user_id").cast("string")),
-          elem("ts_us", col("ts_us").cast("string")),
-          lit("</row>")).as("value"))
-          .repartition(fanEvHeavyN(s, dir)),
-        feed)
+      // of the split — see Sinks.xmlLineFeed).
+      val feed = materialize(DirtyXml, s, dir)
       val schema = StructType(Seq(
         StructField("event_id", LongType), StructField("event_type", StringType),
         StructField("user_id", LongType), StructField("ts_us", LongType)))
@@ -357,19 +323,7 @@ private[graft] object SinkQueries {
       // dirty-feed trio (q_json_intake / q_xml_intake). Every 13th
       // line carries a non-numeric event_id cell; PERMISSIVE type
       // enforcement quarantines exactly that line to _corrupt_record.
-      // event_type values are comma-free, so the unquoted writer is
-      // unambiguous; a NULL user_id writes as an empty cell (reads
-      // back NULL) — concat_ws would DROP the cell and shift the row.
-      val feed = tmpDir("dirty_csv", dir)
-      Sinks.ensureTextWritten(
-        Tables.events(s, dir).select(concat_ws(",",
-          when(col("event_id") % 13 === 0, concat(lit("x"), col("event_id")))
-            .otherwise(col("event_id").cast("string")),
-          col("event_type"),
-          coalesce(col("user_id").cast("string"), lit("")),
-          col("ts_us").cast("string")).as("value"))
-          .repartition(fanEvHeavyN(s, dir)),
-        feed)
+      val feed = materialize(DirtyCsv, s, dir)
       val schema = StructType(Seq(
         StructField("event_id", LongType), StructField("event_type", StringType),
         StructField("user_id", LongType), StructField("ts_us", LongType)))

@@ -129,7 +129,7 @@ object ScaleStress {
     println(f"[scale] IVF-PQ+refine recall@$k = ${pqHits.toDouble / (nQ * k)}%.3f")
     CacheScope.flush()
 
-    // 6c. SQ8 flat scan at the same 1M x 64-d: the round-8 rebuild —
+    // 6c. SQ8 flat scan at the same 1M x 64-d: the int8 rebuild —
     //     the resident index is (id, scale, int8 codes) ONLY (8 bytes
     //     + d bytes/vector vs 8d for the double math), the shortlist
     //     runs integer dots through graft_all_cos_i8, and refine reads
@@ -146,7 +146,7 @@ object ScaleStress {
     println(f"[scale] SQ8+refine recall@$k = ${sqHits.toDouble / (nQ * k)}%.3f (shortlist=64)")
     CacheScope.flush()
 
-    // 6c2. JL random-projection tier at the same 1M x 64-d (round 12):
+    // 6c2. JL random-projection tier at the same 1M x 64-d:
     //      the resident index is outDim=16 doubles/vector (4x smaller),
     //      shortlist by projected cosine, exact refine from the base
     //      table. Recall vs brute is the JL-epsilon number at scale.
@@ -328,7 +328,7 @@ object ScaleStress {
       assert(full == nDupDocs / 4 * 3 - 3, "segment first-seen attribution drifted")
     }
 
-    // 10e. FULL ExactSubstr (round 9) at full width: ~26M positions
+    // 10e. FULL ExactSubstr at full width: ~26M positions
     //      through the gram-keyed count/first-occurrence window and
     //      the per-doc interval merge. Planted exact: a clique doc's
     //      25 base-gram positions (grams fully inside the shared
@@ -369,7 +369,7 @@ object ScaleStress {
       println(s"[scale]   rank-1 = clique sibling for $top1/16 queries")
       assert(top1 == 16, "BM25 relevance drifted at scale")
     }
-    // 10e. df-cap SENSITIVITY SWEEP (r13 verdict item 7): the Zipf-hot
+    // 10e. df-cap SENSITIVITY SWEEP: the Zipf-hot
     //      tail tokens (df = nDocs/4 — idf ≈ 0, ~nDocs/4 posting-join
     //      rows per query term) are what a df-cap prunes at 100 TB.
     //      Measured, not asserted: recall@5 vs the uncapped baseline
@@ -480,7 +480,7 @@ object ScaleStress {
         assert(k == nGroups * 4, "image CC keeper counts drifted")
       }
 
-      // 11c. Round-17 INCREMENTAL media dedup at the same 200k standing
+      // 11c. INCREMENTAL media dedup at the same 200k standing
       //      corpus: the band index MATERIALIZED once (the decode+hash
       //      is paid per corpus version), then a planted batch — one
       //      exact copy per group keeper (+10M → exactly 5 standing
@@ -685,7 +685,7 @@ object ScaleStress {
       CacheScope.flush()
     }
 
-    // 12. Dirty-XML intake (round 10) at nDocs lines through the
+    // 12. Dirty-XML intake at nDocs lines through the
     //     PERMISSIVE row-granular parse: every 13th line carries a
     //     poisoned long cell. Quarantine must be EXACTLY those rows,
     //     and the surviving ids must sum exactly — the checksum that
@@ -719,7 +719,7 @@ object ScaleStress {
         agg.getLong(1) == expSum, "XML quarantine drifted at scale")
       CacheScope.flush()
     }
-    // 14. BPE tokenizer (round 10): train on a bounded slice (the
+    // 14. BPE tokenizer: train on a bounded slice (the
     //     dup-cluster prefix — its word histogram is
     //     clusters x 32 types by construction, and minWordCount=4
     //     prunes anything rarer; production tokenizers train on a
@@ -756,7 +756,7 @@ object ScaleStress {
         expr.size == ref.size, "BPE encode drifted at scale")
       CacheScope.flush()
     }
-    // 14b. Round-14 unigram-LM tokenizer at nDocs scale: training is
+    // 14b. Unigram-LM tokenizer at nDocs scale: training is
     //      HISTOGRAM-bounded (the Heaps lever — the trainer touches
     //      word TYPES, not occurrences), the Viterbi DP runs once per
     //      distinct word (vocab-many times however Zipf-heavy the
@@ -809,7 +809,7 @@ object ScaleStress {
         "SPM encode drifted at scale")
       CacheScope.flush()
     }
-    // 15. Mergeable sketches (round 11) at nDocs scale — fixed-state
+    // 15. Mergeable sketches at nDocs scale — fixed-state
     //     invariants: HLL registers stay 64/group whatever the
     //     cardinality (exact count EXACT, estimate within 3 sigma of
     //     the m=64 error), CMS never undercounts and surfaces the
@@ -831,7 +831,7 @@ object ScaleStress {
       assert(hll.values.forall { case (ex, est) =>
         math.abs(est - ex) / ex <= 0.39 }, s"HLL estimate out of band: $hll")
       CacheScope.flush()
-      // register-only form (round 12): folds off RAW rows with no
+      // register-only form: folds off RAW rows with no
       // distinct — estimates must be BIT-identical to the audit form's
       val hllRaw = ops.Sketches.hllRegistersOnly(keyed, "g", "k")
         .collect().map(r => r.getString(0) -> r.getDouble(1)).toMap
@@ -852,8 +852,8 @@ object ScaleStress {
           // even ids repeat a history key, odd ids are fresh
           when(col("id") % 2 === 0, concat(lit("k"), expr("id div 2")))
             .otherwise(concat(lit("fresh"), col("id"))).as("bk0"))
-      // sized for the history cardinality (round 12; the r11 default
-      // m=1024 saturated at this scale — correct but pricing nothing):
+      // sized for the history cardinality (a default m=1024
+      // saturated at this scale — correct but pricing nothing):
       // the fp-rate assertion below only holds in the sized regime
       val bl = ops.Sketches.bloomDedupFlags(hist, batch, col("bk0"), "event_id",
           m = ops.Sketches.bloomBits(half))
@@ -897,7 +897,7 @@ object ScaleStress {
       }
       CacheScope.flush()
     }
-    // 16. Round-12 operators at nDocs scale: group MinHash Jaccard
+    // 16. Group-sketch operators at nDocs scale: group MinHash Jaccard
     //     (planted overlap structure as the HLL overlap case: groups
     //     0/1 share exactly the even keys, cross-parity disjoint),
     //     DP counts (exact true counts + bounded noise at any group
@@ -971,7 +971,7 @@ object ScaleStress {
       spark.sql("DROP TABLE IF EXISTS scale_b_cust")
       CacheScope.flush()
     }
-    // 17. Round-13 Theta/KMV set algebra at nDocs scale: the same
+    // 17. Theta/KMV set algebra at nDocs scale: the same
     //     planted structure as the overlap cases (groups 0/1 = the
     //     even keys, 2/3 = the odd keys; cross-parity disjoint), so
     //     union/intersection truths are exact by construction. Sketch
@@ -1009,7 +1009,7 @@ object ScaleStress {
         s"theta disjoint union estimate out of band: ${th(("0", "2"))}")
       CacheScope.flush()
     }
-    // 18. Round-13 DSIR importance weights at nDocs scale: planted
+    // 18. DSIR importance weights at nDocs scale: planted
     //     two-domain corpus — every 5th doc is the 'en' target and
     //     draws half its tokens from a 40-word target-only vocabulary,
     //     the rest draw from a disjoint 40-word background vocabulary,
@@ -1043,7 +1043,7 @@ object ScaleStress {
         s"dsir failed to separate the planted domains: $sep")
       CacheScope.flush()
     }
-    // 19. Round-14 HTML extraction at nDocs pages: every 13th page
+    // 19. HTML extraction at nDocs pages: every 13th page
     //     carries an UNCLOSED <script> (quarantine), every id%7==3
     //     non-quarantined page a 40-anchor link farm over a tiny body
     //     (guaranteed over the 30% density gate), the rest prose with
@@ -1080,7 +1080,7 @@ object ScaleStress {
       assert(byStatus("ok")._2 == expOk, s"decode proof failed: $byStatus")
       CacheScope.flush()
     }
-    // 20. Round-15 crawl-to-shards CAPSTONE at nDocs pages — the full
+    // 20. Crawl-to-shards CAPSTONE at nDocs pages — the full
     //     q_web_corpus chain (fused crawlGate projection → canonical
     //     keeper → exact text dedup → Gopher gate → per-shard packing,
     //     all synthetic-key windows) with EVERY stage's planted count
@@ -1193,7 +1193,7 @@ object ScaleStress {
       assert(out("kept")._3 < 2048L, s"offset_in escaped budget: ${out("kept")._3}")
       CacheScope.flush()
     }
-    // 21. Round-15 INCREMENTAL capstone: the case-20 standing corpus
+    // 21. INCREMENTAL capstone: the case-20 standing corpus
     //     (nDocs pages) + a nDocs/10 batch of impersonating copies
     //     (clean head, the original's exact body — text_dup iff the
     //     original was alive through the canonical stage, KEPT iff the
@@ -1287,7 +1287,7 @@ object ScaleStress {
         s"increment dropped rows: $got")
       CacheScope.flush()
 
-      // 22. Round-16 STORE-FED incremental capstone
+      // 22. STORE-FED incremental capstone
       //     (q_web_corpus_store's shape at scale): the two standing
       //     indexes MATERIALIZED once to parquet — the per-corpus-
       //     version build a production pipeline amortizes — then the
@@ -1343,7 +1343,7 @@ object ScaleStress {
         CacheScope.flush()
       }
 
-      // 24. Round-17 BUCKETED standing-index probe — the broadcast-
+      // 24. BUCKETED standing-index probe — the broadcast-
       //     budget fallback (q_web_corpus_store_bucketed /
       //     q_web_corpus_index_delta_bucketed at scale): the same two
       //     indexes written ONCE as bucketed tables, the same batch
@@ -1398,7 +1398,7 @@ object ScaleStress {
       }
     }
 
-    // 23. Round-16 incremental IVF maintenance at 1M x 64-d: train the
+    // 23. Incremental IVF maintenance at 1M x 64-d: train the
     //     coarse quantizer once, MATERIALIZE the standing assignment
     //     store partitioned by cell (the faiss inverted lists as a
     //     parquet layout), then time the nightly add+search: a ~1k
@@ -1443,7 +1443,7 @@ object ScaleStress {
       CacheScope.flush()
     }
 
-    // 25. Round-17 SEAL of the growing segment (the compaction,
+    // 25. SEAL of the growing segment (the compaction,
     //     q_sim_hnsw_sealed's shape at scale): the accumulated ~1k
     //     batch builds + serializes its per-cell graphs in time ∝ the
     //     SEGMENT — the 1M standing corpus never appears in the seal
@@ -1488,7 +1488,7 @@ object ScaleStress {
       CacheScope.flush()
     }
 
-    // 26. SPM memoized-vocab slice builds (VERDICT r17 #5): the spm
+    // 26. SPM memoized-vocab slice builds: the spm
     //     queries replay (word, n_pieces, cost) slices memoized once
     //     per corpus version (EntrySupport.spmSegLocal /
     //     spmSegFbLocal), so the bench no longer times the build —

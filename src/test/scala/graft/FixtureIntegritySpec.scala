@@ -2,11 +2,12 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The qtmp fixture-integrity guard (VERDICT r9 #1): materialized
-  * stage outputs are keyed on a FINGERPRINT of the producing bytecode,
-  * so a change to fixture-producing logic re-keys the store and forces
-  * a rebuild — a stale artifact can never be re-served to the
-  * correctness gate behind an unchanged hand-bumped version string.
+/** The qtmp fixture-integrity guard: materialized stores are keyed on
+  * a FINGERPRINT of the producing bytecode, so a change to
+  * fixture-producing logic re-keys the store and forces a rebuild — a
+  * stale artifact can never be re-served to the correctness gate behind
+  * an unchanged hand-bumped version string. Each checkout owns its own
+  * root, and `SparkEntry.prepare` writes every registered store once.
   */
 class FixtureIntegritySpec extends AnyFunSuite {
 
@@ -16,8 +17,9 @@ class FixtureIntegritySpec extends AnyFunSuite {
     assert(names.exists(_.startsWith("graft/ops/Dedup")), "Dedup (ddf/cc producers)")
     assert(names.exists(_.startsWith("graft/ops/Text")), "Text (lm_collapse producer)")
     assert(names.exists(_.startsWith("graft/ops/Jpeg")), "Jpeg (media payload producer)")
-    assert(names.exists(_.startsWith("graft/etl/Sinks")), "Sinks (write-once protocol)")
-    assert(names.exists(_.startsWith("graft/EntrySupport")), "EntrySupport (fixture defs)")
+    assert(names.exists(_.startsWith("graft/etl/Sinks")), "Sinks (sink layer)")
+    assert(names.exists(_.startsWith("graft/EntrySupport")),
+      "EntrySupport (fixture stores and the write-once protocol)")
     assert(names.exists(_.startsWith("graft/Tables")), "Tables (corpus readers)")
     // query bodies must NOT churn the key — they only compose on fixtures
     assert(!names.exists(_.startsWith("graft/queries/")), "query bodies and oracles excluded")
@@ -54,10 +56,9 @@ class FixtureIntegritySpec extends AnyFunSuite {
   }
 
   test("a producer change orphans the old artifact instead of re-serving it") {
-    // Simulate round N -> round N+1 with changed producer logic: the
-    // write-once store under the OLD key holds a poisoned artifact;
-    // the NEW key's path must come up empty and rebuild from current
-    // code — exactly the regression the r9 judge probed by hand.
+    // Simulate a build with changed producer logic: the write-once
+    // store under the OLD key holds a poisoned artifact; the NEW key's
+    // path must come up empty and rebuild from current code.
     val spark = SparkTestSession.spark
     val root = java.nio.file.Files.createTempDirectory("qtmp_guard").toFile
     def dirFor(fp: String) = new java.io.File(root, s"v2-$fp/fix_sf").getPath
@@ -65,11 +66,13 @@ class FixtureIntegritySpec extends AnyFunSuite {
     val fpNew = EntrySupport.fingerprintOf(Seq("graft/ops/A.class" -> Array[Byte](2)))
     assert(fpOld !== fpNew)
     import spark.implicits._
-    graft.etl.Sinks.ensureWritten(Seq(("stale", 1L)).toDF("tag", "v"), dirFor(fpOld))
+    EntrySupport.writeOnce(spark, dirFor(fpOld), EntrySupport.Parquet)(
+      Seq(("stale", 1L)).toDF("tag", "v"))
     assert(new java.io.File(dirFor(fpOld), "_SUCCESS").exists())
     // the re-keyed path ignores the stale artifact and builds fresh
     assert(!new java.io.File(dirFor(fpNew), "_SUCCESS").exists())
-    graft.etl.Sinks.ensureWritten(Seq(("fresh", 2L)).toDF("tag", "v"), dirFor(fpNew))
+    EntrySupport.writeOnce(spark, dirFor(fpNew), EntrySupport.Parquet)(
+      Seq(("fresh", 2L)).toDF("tag", "v"))
     val got = spark.read.parquet(dirFor(fpNew)).as[(String, Long)].collect()
     assert(got.toSeq === Seq(("fresh", 2L)))
     // hygiene pass drops the orphaned key entirely
@@ -77,5 +80,40 @@ class FixtureIntegritySpec extends AnyFunSuite {
     assert(!new java.io.File(root, s"v2-$fpOld").exists(), "orphan must be deleted")
     assert(new java.io.File(dirFor(fpNew), "_SUCCESS").exists(), "current key kept")
     scala.reflect.io.Directory(root).deleteRecursively()
+  }
+
+  test("a sweep of one checkout's qtmp root leaves a sibling root's keys alone") {
+    assert(EntrySupport.qtmpRoot === new java.io.File("target/qtmp").getAbsoluteFile)
+    assert(EntrySupport.tmpDir("probe", "sf").startsWith(EntrySupport.qtmpRoot.getPath + "/"),
+      "stores live under this checkout's root")
+    val base = java.nio.file.Files.createTempDirectory("qtmp_roots").toFile
+    val (mine, sibling) = (new java.io.File(base, "a/target/qtmp"), new java.io.File(base, "b/target/qtmp"))
+    for (root <- Seq(mine, sibling); key <- Seq("v2-old", "v2-new"))
+      assert(new java.io.File(root, s"$key/fix_sf").mkdirs())
+    EntrySupport.cleanStaleQtmp(mine, "v2-new")
+    assert(!new java.io.File(mine, "v2-old").exists(), "own stale key swept")
+    assert(new java.io.File(mine, "v2-new/fix_sf").isDirectory, "own current key kept")
+    for (key <- Seq("v2-old", "v2-new"))
+      assert(new java.io.File(sibling, s"$key/fix_sf").isDirectory, s"sibling's $key untouched")
+    scala.reflect.io.Directory(base).deleteRecursively()
+  }
+
+  test("prepare writes every registered store once; a second prepare rewrites nothing") {
+    val spark = SparkTestSession.spark
+    val dir = "/root/testdata/sf0.001"
+    def markers = EntrySupport.stores.map { st =>
+      st.tag -> new java.io.File(EntrySupport.tmpDir(st.tag, dir), "_SUCCESS")
+    }
+    SparkEntry.prepare(spark, dir)
+    val missing = markers.collect { case (t, m) if !m.isFile => t }
+    assert(missing.isEmpty, s"stores without a marker after prepare: $missing")
+    assert(Seq("dirty_xml", "dirty_csv").forall(t => markers.exists(_._1 == t)))
+    // Bench's fixture_readers flag: a store's path is a store, a
+    // round-trip sink query's own output is not
+    assert(EntrySupport.stores.forall(st => EntrySupport.isStore(EntrySupport.tmpDir(st.tag, dir), dir)))
+    assert(!EntrySupport.isStore(EntrySupport.tmpDir("csv", dir), dir))
+    val before = markers.map { case (t, m) => t -> m.lastModified() }
+    SparkEntry.prepare(spark, dir)
+    assert(markers.map { case (t, m) => t -> m.lastModified() } === before)
   }
 }
