@@ -2,7 +2,7 @@ package graft.etl
 
 import java.nio.file.{Files, Paths, StandardCopyOption}
 import java.util.concurrent.ConcurrentHashMap
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.ops.EventOps
 
@@ -82,21 +82,19 @@ object Incremental {
     * exercised in PostgresDialectSpec), or a test double. The sink
     * returns rows actually inserted (cursor.rowcount semantics).
     *
-    * The deduplicated batch is materialized once with
-    * `localCheckpoint`, at the partition count AQE picks from its size:
-    * a 2,000-row batch lands in one partition. A `cache()` would keep
-    * `spark.sql.shuffle.partitions` partitions however few rows they
-    * hold, because AQE may not change the output partitioning of a plan
-    * being cached (`spark.sql.optimizer.canChangeCachedPlanOutputPartitioning`
-    * is off by default), and every sink task and parquet file downstream
-    * would inherit that width. One job counts the batch and takes its
-    * max timestamp, materializing it on the way.
+    * The sink gets the deduplicated batch lazy, so the run is one Spark
+    * query. The first action over the batch fills in its observed row
+    * count and max `tsCol`, so it must read every row (a write, not an
+    * `isEmpty` peek). With no barrier in the plan, Catalyst's constraint
+    * inference puts `tsCol > wm` on the sink side of a keyed anti-join on
+    * `tsCol`. A sink that never runs the batch leaves the observation
+    * empty ([[Sinks.observed]]), and the run aggregates the batch itself.
     *
-    * Recovery trade-off: a lost cache block is rebuilt from lineage, a
-    * lost local-checkpoint block is not, so losing an executor fails
-    * the run. That is safe here: the run fails before the watermark
-    * advances, so the rerun re-fetches the same rows and the keyed sink
-    * skips the ones already committed.
+    * Task retries: the observation sits right above the dedup window, so
+    * under the parquet sink's broadcast anti-join it is in the result stage
+    * (accumulators applied once per partition); a sink that shuffles the
+    * batch again (`jdbcUpsert`) puts it in a map stage, where a re-execution
+    * can over-count `rowsFetched`. The watermark is a `max`, which a repeat keeps.
     */
   def runOnceTo(
       spark: SparkSession,
@@ -112,16 +110,17 @@ object Incremental {
     try {
       val wm = readWatermark(statePath, defaultWatermarkUs)
       val fresh = transform(source.filter(col(tsCol) > lit(wm)))
-      val batch = EventOps
-        .dedupFirstWrite(fresh, keys, tsCol, keys.head)
-        .localCheckpoint(eager = false)
-      val stats = batch.agg(count(lit(1)), max(col(tsCol))).head()
-      val inserted = try sink(batch) finally Sinks.release(batch)
+      val fetched = Observation()
+      val (rows, maxTs) = (count(lit(1)).as("rows"), max(col(tsCol)).as("max_ts"))
+      val batch = EventOps.dedupFirstWrite(fresh, keys, tsCol, keys.head)
+        .observe(fetched, rows, maxTs)
+      val inserted = sink(batch)
+      val got = Sinks.observed(fetched).getOrElse(batch.agg(rows, maxTs).head())
       // Advance only forward, only after the sink write committed —
       // mirrors flask_server.py:204-207 ordering.
-      val newWm = if (stats.isNullAt(1)) wm else math.max(wm, stats.getLong(1))
+      val newWm = if (got.isNullAt(1)) wm else math.max(wm, got.getLong(1))
       if (newWm > wm) writeWatermark(statePath, newWm)
-      Some(RunResult(stats.getLong(0), inserted, newWm))
+      Some(RunResult(got.getLong(0), inserted, newWm))
     } finally running.remove(flight)
   }
 }

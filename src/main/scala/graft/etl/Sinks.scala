@@ -1,8 +1,13 @@
 package graft.etl
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.execution.LogicalRDD
+import java.nio.file.{Files, Paths, StandardCopyOption}
+import scala.concurrent.Await
+import scala.concurrent.duration._
+import scala.util.Try
+import org.apache.spark.sql.{Column, DataFrame, Observation, Row, SparkSession}
+import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
+import org.apache.commons.io.FileUtils
 import graft.ops.EventOps
 
 /** Sink protocols (SURVEY.md §2.1 S4-S6). Parquet/CSV directories stand
@@ -76,19 +81,18 @@ object Sinks {
   /** Small-file compaction: rewrite a directory into `numFiles`
     * right-sized parquet files. Long-running append pipelines (the
     * incremental upsert sink) accumulate a file or two per run, one per
-    * data-sized partition of the run's batch (see [[upsertAppend]]);
+    * data-sized partition of the run's write (see [[upsertAppend]]);
     * at scale the fix is a periodic compaction pass sized so each file
     * is ~128MB-1GB. Writes to a temp dir then swaps, so a crash
     * mid-compact never loses the sink.
     */
   def compact(spark: SparkSession, dir: String, numFiles: Int): Unit = {
-    import java.nio.file.{Files, Paths}
     val tmp = dir + ".compacting"
     spark.read.parquet(dir).repartition(numFiles)
       .write.mode("overwrite").parquet(tmp)
     val target = Paths.get(dir)
     val backup = Paths.get(dir + ".old")
-    if (Files.exists(backup)) delete(backup.toFile)
+    FileUtils.deleteQuietly(backup.toFile)
     // Files.move throws on failure (unlike File.renameTo, which returns
     // false and would let a failed swap fall through to the backup
     // delete below — losing the only copy of the sink).
@@ -102,12 +106,7 @@ object Sinks {
     if (!Files.isDirectory(target) || !Files.exists(target.resolve("_SUCCESS")))
       throw new IllegalStateException(
         s"compact: swapped target $dir is missing or incomplete; backup kept at $backup")
-    delete(backup.toFile)
-  }
-
-  private def delete(f: java.io.File): Unit = {
-    if (f.isDirectory) f.listFiles().foreach(delete)
-    f.delete()
+    FileUtils.deleteQuietly(backup.toFile)
   }
 
   /** Conflict-skip insert statement for a SQL dialect: the statement
@@ -291,38 +290,42 @@ object Sinks {
     * already in the sink. Returns the number of rows appended (the
     * reference's `cursor.rowcount`, `/root/reference/flask_server.py:197`).
     *
-    * The anti-join result is materialized before the append, since
-    * appending while the lazy plan still scans the sink dir would race
-    * with itself. It is materialized with `localCheckpoint`, at the
-    * partition count AQE picks from its size, so a run appends a file or
-    * two; a `cache()` would keep `spark.sql.shuffle.partitions`
-    * partitions (see [[Incremental.runOnceTo]]) and append up to one file
-    * per partition. A lost checkpoint block fails the upsert instead of
-    * being recomputed; the caller's watermark has not moved then, and a
-    * rerun skips the keys already appended.
+    * One action writes the anti-join of `incoming` against the sink's
+    * keys (read with `incoming`'s key schema, so no footer is read for
+    * inference) into a `_`-prefixed staging directory, which readers of
+    * `dir` skip, and observes its row count. The files move into `dir`
+    * only when that count is above 0: a run with nothing new adds no
+    * file, and the query never writes where it reads. A lazy `incoming`
+    * keeps its filters (see [[Incremental.runOnceTo]]), and AQE sizes the
+    * write from the data, so a run appends a file or two.
     */
   def upsertAppend(spark: SparkSession, incoming: DataFrame, dir: String, keys: Seq[String]): Long = {
-    val exists = new java.io.File(dir).exists()
+    val sink = Paths.get(dir)
+    val existed = Files.exists(sink)
     val fresh =
-      if (!exists) incoming
-      else EventOps.newKeysOnly(incoming, spark.read.parquet(dir), keys)
-    val staged = fresh.localCheckpoint(eager = false)
+      if (!existed) incoming
+      else EventOps.newKeysOnly(incoming,
+        spark.read.schema(StructType(keys.map(incoming.schema(_)))).parquet(dir), keys)
+    val staging = sink.resolve(s"_staging-${java.util.UUID.randomUUID()}")
+    val written = Observation()
     try {
-      val n = staged.count()
-      if (n > 0) staged.write.mode("append").parquet(dir)
+      fresh.observe(written, count(lit(1))).write.parquet(staging.toString)
+      val n = observed(written).fold(spark.read.parquet(staging.toString).count())(_.getLong(0))
+      if (n > 0) staging.toFile.listFiles().foreach(f =>
+        Files.move(f.toPath, sink.resolve(f.getName), StandardCopyOption.REPLACE_EXISTING))
       n
-    } finally release(staged)
+    } finally {
+      FileUtils.deleteQuietly(staging.toFile)
+      if (!existed) sink.toFile.delete() // only when empty: no rows, no sink
+    }
   }
 
-  /** Drops the blocks of a frame made by `localCheckpoint` once its last
-    * reader is done, as `unpersist` does for a cached frame; otherwise
-    * they stay until the driver garbage-collects the frame.
+  /** `obs`'s metrics once its action has reported them, waiting at most
+    * 100 ms (observations complete on the listener bus); None when no
+    * action ran its frame or its plan lost the metrics.
     */
-  private[etl] def release(checkpointed: DataFrame): Unit =
-    checkpointed.queryExecution.logical.foreach {
-      case r: LogicalRDD => r.rdd.unpersist(blocking = false)
-      case _ =>
-    }
+  private[etl] def observed(obs: Observation): Option[Row] =
+    Try(Await.result(obs.future, 100.millis)).toOption.filter(_.length > 0)
 
   /** Z-order (Morton-curve) layout write: cluster rows so each output
     * file covers a small rectangle of the (c1, c2) value space instead
@@ -356,8 +359,6 @@ object Sinks {
     */
   def zorderedWrite(df: DataFrame, c1: String, c2: String, dir: String,
                     nFiles: Int): Unit = {
-    import org.apache.spark.sql.functions._
-    import org.apache.spark.sql.Column
     val b = df.agg(
       min(col(c1)).cast("double").as("lo1"), max(col(c1)).cast("double").as("hi1"),
       min(col(c2)).cast("double").as("lo2"), max(col(c2)).cast("double").as("hi2"))

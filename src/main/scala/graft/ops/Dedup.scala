@@ -250,16 +250,16 @@ object Dedup {
   }
 
   /** The fused per-doc dedup frame: (doc_id, hs array<bigint>, sz,
-    * minhashes) in ONE aggregation over the codegen'd
-    * [[hashedShingles]] rows — collect_list gathers the shingle-hash
-    * array, the `numHashes` permutation mins and the set size ride in
-    * the same groupBy, so the whole frame costs a single exchange and
-    * keeps md5 + permutations inside codegen (a pure-HOF array form
-    * was measured ~4× slower: md5/fold inside interpreted lambdas).
-    * `explode(hs)` reproduces [[hashedShingles]]' rows exactly
-    * (multiset-identical — the distinct is on the shingle STRING).
-    * One cache of this frame feeds LSH candidates, set sizes, AND the
-    * exact-verify join in [[verifiedNearDupPairs]].
+    * minhashes) in ONE aggregation over the codegen'd [[hashedShingles]]
+    * rows — collect_list gathers the shingle-hash array (sorted, as AQE
+    * and the reducer count change the order rows arrive in), the
+    * `numHashes` permutation mins and the set size ride in the same
+    * groupBy, so the whole frame costs a single exchange and keeps md5 +
+    * permutations inside codegen (a pure-HOF array form was measured ~4×
+    * slower: md5/fold inside interpreted lambdas). `explode(hs)`
+    * reproduces [[hashedShingles]]' rows exactly (multiset-identical —
+    * the distinct is on the shingle STRING). One cache of this frame feeds
+    * LSH candidates, set sizes, AND the exact-verify join in [[verifiedNearDupPairs]].
     */
   private[graft] def docDedupFrame(corpus: DataFrame, numHashes: Int): DataFrame = {
     val mins = (0 until numHashes).map { s =>
@@ -267,7 +267,7 @@ object Dedup {
     }
     hashedShingles(corpus)
       .groupBy(col("doc_id"))
-      .agg(collect_list(col("h")).as("hs"),
+      .agg(array_sort(collect_list(col("h"))).as("hs"),
         mins :+ count(lit(1)).as("sz"): _*)
       .withColumn("minhashes", array((0 until numHashes).map(i => col(s"mh$i")): _*))
       .select(col("doc_id"), col("hs"), col("sz"), col("minhashes"))

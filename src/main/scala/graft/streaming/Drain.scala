@@ -46,9 +46,9 @@ private[streaming] object Drain {
     * stateful query, so that the state store keeps its partitioning, and
     * that reaches the `foreachBatch` body too, though the micro-batch
     * there is an already planned, stateless frame. Without AQE a sink
-    * materializes the batch at `spark.sql.shuffle.partitions` and appends
-    * up to one file per partition; with the starting session's setting
-    * it appends a data-sized count (see [[graft.etl.Sinks.upsertAppend]]).
+    * writes the batch in `spark.sql.shuffle.partitions` files at most;
+    * with the starting session's setting, in a data-sized count (see
+    * [[graft.etl.Sinks.upsertAppend]]).
     */
   def foreachBatch(stream: DataFrame, checkpointDir: String)(body: DataFrame => Unit): StreamingQuery = {
     val aqe = stream.sparkSession.conf.get(AqeKey)

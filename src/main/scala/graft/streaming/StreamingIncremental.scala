@@ -32,11 +32,11 @@ object StreamingIncremental {
 
   /** Start one drain-available run.
     *
-    * `sink` lands each deduplicated micro-batch and returns the rows it
-    * inserted — the [[graft.etl.Incremental.runOnceTo]] contract. Any
-    * keyed idempotent sink gives exactly-once contents (at-least-once
-    * delivery × key-conflict-skip), even across checkpoint loss, where
-    * a full replay re-offers every row and the sink skips them all:
+    * `sink` writes each deduplicated micro-batch, a lazy frame, and
+    * returns the rows it inserted ([[graft.etl.Incremental.runOnceTo]]'s
+    * contract). Any keyed idempotent sink gives exactly-once contents
+    * (at-least-once delivery × key-conflict-skip), even across checkpoint
+    * loss, where a full replay re-offers every row and the sink skips them all:
     *  - parquet: `b => Sinks.upsertAppend(b.sparkSession, b, dir, keys)`;
     *  - a relational database, the reference's actual shape (BigQuery
     *    export → Postgres upsert, the reference's `extract_bq.py:216-258`):

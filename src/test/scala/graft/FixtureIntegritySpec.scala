@@ -116,4 +116,27 @@ class FixtureIntegritySpec extends AnyFunSuite {
     SparkEntry.prepare(spark, dir)
     assert(markers.map { case (t, m) => t -> m.lastModified() } === before)
   }
+
+  test("the dedup-frame stores are a pure function of their key: AQE on and AQE off " +
+      "at 4 reducers build the same rows, array order included") {
+    val spark = SparkTestSession.spark
+    val dir = "/root/testdata/sf0.001"
+    val stores = Seq(EntrySupport.DdfPerturbed, EntrySupport.DdfChain500)
+    def build(aqe: Boolean, reducers: Int): Seq[Seq[Seq[Any]]] = {
+      val settings = Seq("spark.sql.adaptive.enabled" -> aqe.toString,
+        "spark.sql.shuffle.partitions" -> reducers.toString)
+      val prior = settings.map { case (k, _) => k -> spark.conf.get(k) }
+      settings.foreach { case (k, v) => spark.conf.set(k, v) }
+      try stores.map(_.build(spark, dir).orderBy("doc_id").collect().map(_.toSeq).toSeq)
+      finally prior.foreach { case (k, v) => spark.conf.set(k, v) }
+    }
+    val verifySession = build(aqe = true, spark.sparkContext.defaultParallelism)
+    val benchSession = build(aqe = false, 4)
+    for ((st, (a, b)) <- stores.zip(verifySession.zip(benchSession))) {
+      assert(a.nonEmpty, s"${st.tag} built no rows")
+      val (rows, differ) = (a.size, a.zip(b).count { case (x, y) => x != y })
+      assert(rows === b.size, s"${st.tag}: row counts differ")
+      assert(differ === 0, s"${st.tag}: $differ of $rows rows differ between the two sessions")
+    }
+  }
 }

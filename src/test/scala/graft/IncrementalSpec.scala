@@ -5,6 +5,7 @@ import java.util.concurrent.{CountDownLatch, TimeUnit}
 import scala.concurrent.{Await, Future}
 import scala.concurrent.ExecutionContext.Implicits.global
 import scala.concurrent.duration._
+import scala.jdk.CollectionConverters._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.etl.{Incremental, Sinks}
 
@@ -141,6 +142,58 @@ class IncrementalSpec extends AnyFunSuite {
     assert(rerun.rowsInserted === 0L)
     assert(rerun.newWatermarkUs === clean.newWatermarkUs)
     assert(sinkRows(sink) === sinkRows(cleanSink))
+  }
+
+  /** Every file and directory under `dir`, as paths relative to it. */
+  private def tree(dir: String): Set[String] = {
+    val root = java.nio.file.Paths.get(dir)
+    if (!Files.exists(root)) Set.empty
+    else {
+      val s = Files.walk(root)
+      try s.iterator().asScala.map(root.relativize(_).toString).toSet finally s.close()
+    }
+  }
+
+  test("a parquet run with no new rows appends no part file") {
+    val base = tmp()
+    val (state, sink) = (s"$base/wm.txt", s"$base/sink")
+    Incremental.runOnce(spark, stream, "ts_us", keys, state, sink, 0L)
+    val before = tree(sink)
+    val r = Incremental.runOnce(spark, stream, "ts_us", keys, state, sink, 0L).get
+    assert(r.rowsInserted === 0L)
+    assert(tree(sink) === before, "the empty run changed the sink directory")
+    // nothing to append into a sink that does not exist leaves it absent
+    val absent = s"$base/absent"
+    assert(Incremental.runOnce(spark, stream, "ts_us", keys, state, absent, 0L).get.rowsFetched === 0L)
+    assert(!Files.exists(java.nio.file.Paths.get(absent)))
+  }
+
+  test("a streaming drain whose last micro-batch has no data appends no part file") {
+    val base = tmp()
+    val (src, sink, ckpt) = (s"$base/src", s"$base/sink", s"$base/ckpt")
+    val t0 = System.currentTimeMillis() * 1000L
+    stream.select($"user_id", $"event_type", ($"ts_us" + t0).as("ts_us"))
+      .coalesce(1).write.parquet(src)
+    val calls = scala.collection.mutable.ArrayBuffer[(Long, Int)]()
+    val schema = stream.schema
+    graft.streaming.StreamingIncremental.start(spark, src, schema, "ts_us", keys, ckpt, b => {
+      val files = partFiles(sink)
+      val n = Sinks.upsertAppend(b.sparkSession, b, sink, keys)
+      calls += ((n, partFiles(sink) - files))
+      n
+    }).awaitTermination()
+    assert(calls.map(_._1).sum === 6L)
+    assert(calls.last._1 === 0L, s"the drain's last micro-batch carried data: $calls")
+    calls.filter(_._1 == 0L).foreach(c => assert(c._2 === 0, s"an empty micro-batch appended: $calls"))
+    assert(!tree(sink).exists(_.startsWith("_staging")), "a staging directory was left behind")
+  }
+
+  test("a sink that never reads its batch still gets the fetched count and watermark") {
+    val base = tmp()
+    val run = Future(Incremental.runOnceTo(spark, stream, "ts_us", keys, s"$base/wm.txt", 0L, _ => 0L))
+    val r = Await.result(run, 2.minutes).get
+    assert(r === Incremental.RunResult(6L, 0L, 600L))
+    assert(Incremental.readWatermark(s"$base/wm.txt", 0L) === 600L)
   }
 
   /** Starts a run on `state` whose sink holds until `release` opens;

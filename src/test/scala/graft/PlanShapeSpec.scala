@@ -551,6 +551,72 @@ class PlanShapeSpec extends AnyFunSuite {
     CacheScope.flush()
   }
 
+  test("incremental runOnce into parquet: one write query, the watermark bound " +
+      "pushed into the sink scan, at most 3 jobs") {
+    import java.util.concurrent.{LinkedBlockingQueue, TimeUnit}
+    import java.util.concurrent.atomic.AtomicInteger
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import org.apache.spark.sql.execution.{FileSourceScanExec, LogicalRDD, QueryExecution}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.datasources.InsertIntoHadoopFsRelationCommand
+    import org.apache.spark.sql.util.QueryExecutionListener
+    import graft.etl.Incremental
+    val base = java.nio.file.Files.createTempDirectory("graft-plan-inc").toString
+    val (state, sink) = (s"$base/wm.txt", s"$base/sink")
+    val keys = Seq("user_id", "event_type", "ts_us")
+    // a file source: over an in-memory one the optimizer folds the
+    // watermark filter into the rows, and no constraint is left to infer
+    (1 to 60).map(i => (i % 7L, Seq("click", "view", "buy")(i % 3), 10L * i))
+      .toDF("user_id", "event_type", "ts_us").write.parquet(s"$base/src")
+    val events = spark.read.parquet(s"$base/src")
+    Incremental.runOnce(spark, events.filter($"ts_us" <= 450L), "ts_us", keys, state, sink, 0L)
+    // rolled back, as a crash after the sink commit leaves it: the sink
+    // holds rows newer than the watermark, so AQE cannot drop the
+    // anti-join for an empty sink side
+    Incremental.writeWatermark(state, 300L)
+    // the traced run: its jobs carry the group, and its write query
+    // reaches the listener after its jobs (both on the shared queue)
+    val sc = spark.sparkContext
+    val group = s"plan-shape-${java.util.UUID.randomUUID()}"
+    val jobs = new AtomicInteger
+    val writes = new LinkedBlockingQueue[QueryExecution]
+    val jobListener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group))
+          jobs.incrementAndGet()
+    }
+    val writeListener = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        if (qe.logical.isInstanceOf[InsertIntoHadoopFsRelationCommand]) writes.add(qe)
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    sc.addSparkListener(jobListener)
+    spark.listenerManager.register(writeListener)
+    val (run, write) = try {
+      sc.setJobGroup(group, "parquet runOnce")
+      val r = try Incremental.runOnce(spark, events, "ts_us", keys, state, sink, 0L).get
+      finally sc.clearJobGroup()
+      (r, writes.poll(60, TimeUnit.SECONDS))
+    } finally {
+      spark.listenerManager.unregister(writeListener)
+      sc.removeSparkListener(jobListener)
+    }
+    assert(run === Incremental.RunResult(30L, 15L, 600L))
+    assert(write != null, "the run's write query never reached the listener")
+    assert(write.analyzed.collectFirst { case r: LogicalRDD => r }.isEmpty,
+      s"the write reads a materialized batch:\n${write.analyzed}")
+    val helper = new AdaptiveSparkPlanHelper {}
+    val sinkFilters = helper.collectWithSubqueries(write.executedPlan) {
+      case scan: FileSourceScanExec
+          if scan.relation.location.rootPaths.exists(_.toUri.getPath.endsWith("/sink")) =>
+        scan.metadata.getOrElse("PushedFilters", "")
+    }
+    assert(sinkFilters.nonEmpty, s"no sink scan in the write plan:\n${write.executedPlan}")
+    assert(sinkFilters.forall(_.contains("GreaterThan(ts_us,300)")),
+      s"the watermark bound is not pushed into the sink scan: $sinkFilters")
+    assert(jobs.get <= 3, s"the run launched ${jobs.get} jobs")
+  }
+
   // Every public op that owns a graft.plans kernel must reach it in a
   // session built WITHOUT spark.sql.extensions: the kernels are plain
   // Columns over their expressions, never resolved by name, so no
