@@ -95,8 +95,8 @@ object Tables {
   /** The one local session builder: `local[cpus]`, one shuffle
     * partition per core, no UI, [[builderConfigs]], and a throwaway
     * warehouse dir so `saveAsTable` targets (bucketed indexes) never
-    * land in the working directory. Smoke, Verify, Bench, ScaleStress
-    * and the test session all build through here; a caller that wants
+    * land in the working directory. Smoke, Verify, Bench and the test
+    * session all build through here; a caller that wants
     * a different runtime SQL conf sets it on the returned session.
     */
   def localSession(cpus: Int): SparkSession = {

@@ -21,33 +21,27 @@ import graft.CacheScope
   *
   * Hash choice: md5 of the UTF-8 shingle/token — slower than xxhash64
   * but bit-identical in every engine (the DuckDB oracle reproduces it),
-  * which makes the whole pipeline correctness-checkable end to end. At
-  * 100 TB replace the `md5(...)`-prefix expressions with `xxhash64` —
-  * one line per site, same structure.
+  * which makes the whole pipeline correctness-checkable end to end.
+  * The xxhash64 swap for 100 TB is noted once, on [[hashedShingles]].
   */
 object Dedup {
 
   /** Whitespace tokens, empties dropped. Map-side HOF, no explode. */
   def tokens(text: Column): Column = filter(split(text, " "), t => t =!= "")
 
-  /** (doc_id, shingle) pairs: distinct 3-gram token shingles, one row
-    * each. Docs shorter than 3 tokens collapse to one partial shingle
-    * (concat_ws skips the NULL tails) — mirrored exactly by the DuckDB
-    * oracle.
+  /** (doc_id, shingle) rows: the 3-gram token shingles of each doc,
+    * one row per occurrence, NOT yet distinct — callers fold the dedup
+    * into a partition pass they already pay. Docs shorter than 3
+    * tokens collapse to one partial shingle (concat_ws skips the NULL
+    * tails) — mirrored exactly by the DuckDB oracle.
     *
     * Shape: explode a position sequence and index the token array with
     * `try_element_at` (codegen'd array access, NOT an interpreted HOF
-    * lambda) — fully map-side, so the only shuffle is the distinct.
-    * The previous posexplode + lead/lead window form paid an extra
-    * full shuffle+sort on doc_id for the same output.
+    * lambda) — fully map-side. The previous posexplode + lead/lead
+    * window form paid an extra full shuffle+sort on doc_id for the
+    * same output.
     */
-  def docShingles(corpus: DataFrame): DataFrame =
-    docShingles0(corpus).distinct()
-
-  /** [[docShingles]] BEFORE the distinct — for callers that fold the
-    * dedup into a partition pass they already pay.
-    */
-  private[graft] def docShingles0(corpus: DataFrame): DataFrame =
+  private[graft] def docShingles(corpus: DataFrame): DataFrame =
     corpus
       .select(col("doc_id"), tokens(col("text")).as("toks"))
       .select(col("doc_id"), col("toks"),
@@ -186,6 +180,15 @@ object Dedup {
     * it (and the corpus feeding it) exactly ONCE and caches it:
     * signatures, set sizes, and exact-verify then all read the same
     * 16-byte-per-row frame instead of re-tokenizing the corpus each.
+    *
+    * The md5 → xxhash64 swap: md5 keeps every hash in this package
+    * bit-identical in DuckDB, which has no bit-compatible xxhash64, so
+    * the declared queries and their oracles run md5. At 100 TB replace
+    * the md5-prefix expression with `pmod(xxhash64(shingle),
+    * 2147483647)`: one 64-bit mix in whole-stage codegen, folded into
+    * the same 31-bit domain the permutation family expects, and exact
+    * duplicates still always collide. Every other md5 site here (gram
+    * keys, content hashes, fingerprints) takes the same one-line swap.
     */
   def hashedShingles(corpus: DataFrame): DataFrame =
     // doc_id partition FIRST: hash(doc_id) satisfies the clustering of
@@ -197,28 +200,11 @@ object Dedup {
     // shingles are near-unique within a doc, so the volumes are the
     // same; the h-keyed consumers (inverted-index join) pay their own
     // exchange either way.
-    docShingles0(corpus)
+    docShingles(corpus)
       .repartition(col("doc_id")).distinct()
       .withColumn("h",
       expr("cast(conv(substring(md5(cast(shingle as binary)), 1, 8), 16, 10) as bigint) % 2147483647"))
       .select(col("doc_id"), col("h"))
-
-  /** The PRODUCTION hash path: xxhash64 shingle hashes (single 64-bit
-    * mix, whole-stage codegen) folded into the same 31-bit domain the
-    * permutation family expects. Not oracle-mirrorable — DuckDB has no
-    * bit-compatible xxhash64 — so its contract is law-based
-    * (DedupProps: exact duplicates always collide) rather than
-    * value-based. Swapping [[hashedShingles]] → this is the documented
-    * one-line md5→xxhash64 substitution for 100 TB runs.
-    */
-  def hashedShinglesFast(corpus: DataFrame): DataFrame =
-    docShingles(corpus)
-      .select(col("doc_id"), pmod(xxhash64(col("shingle")), lit(2147483647L)).as("h"))
-
-  /** [[minhashLshCandidates]] on the xxhash64 path. */
-  def minhashLshCandidatesFast(corpus: DataFrame, numHashes: Int = 16, bands: Int = 4): DataFrame =
-    lshCandidatesFromSigs(
-      minhashSignaturesFromHashed(hashedShinglesFast(corpus), numHashes), numHashes, bands)
 
   /** MAP-SIDE MinHash signature: the whole signature from the text
     * column in one projection — no explode, no groupBy, NO SHUFFLE.
@@ -761,8 +747,8 @@ object Dedup {
     * aggregations partial-agg map-side. No join back to the corpus.
     * At 100 TB, swap the raw gram string for `xxhash64(gram)` (8-byte
     * shuffle keys; collisions only ever OVERCOUNT duplication, the
-    * safe direction for a filter) — same one-line substitution as
-    * [[hashedShinglesFast]].
+    * safe direction for a filter) — the swap noted on
+    * [[hashedShingles]].
     */
   def substringDupScores(corpus: DataFrame, n: Int): DataFrame = {
     import org.apache.spark.sql.expressions.Window
@@ -824,8 +810,8 @@ object Dedup {
     * ride windows over the gram partition (no join), then a per-doc
     * window pass for the interval merge (doc-keyed, partial). At
     * 100 TB: hash the gram to 8 bytes (xxhash64 — overcounting on
-    * collision is the safe direction, same note as
-    * [[hashedShinglesFast]]) and range-partition the gram sort; the
+    * collision is the safe direction; the swap noted on
+    * [[hashedShingles]]) and range-partition the gram sort; the
     * per-doc merge state is one (position, running-end) pair.
     *
     * Position keys pack as doc_id·2²⁰ + i for the cross-engine
@@ -962,7 +948,7 @@ object Dedup {
     * op takes any DataFrame so both work); batch-side left-semi-shaped
     * join on the 16-byte hash + one min-doc_id window within the
     * batch's hash groups. md5 keeps the oracle bit-portable; swap
-    * xxhash64 at scale (same note as [[hashedShinglesFast]]).
+    * xxhash64 at scale (the swap noted on [[hashedShingles]]).
     */
   /** The standing corpus's content-hash index — the ONLY projection of
     * the corpus that incremental dedup (batch or streaming) ever
@@ -1237,7 +1223,7 @@ object Dedup {
     // hashing would shuffle the full shingle text for an outcome the
     // hashed distinct already delivers.
     val srcSh = graft.CacheScope.cached(
-      docShingles0(docs.select(col("source").as("doc_id"), col("text")))
+      docShingles(docs.select(col("source").as("doc_id"), col("text")))
         .withColumn("h", xxhash64(col("shingle")))
         .select(col("doc_id").as("source"), col("h")).distinct())
     // per-source set sizes FOLD INTO the pair aggregation: keep the

@@ -65,8 +65,8 @@ object Sim {
     * ordered left-fold dot per component against a literal sign row,
     * scaled by 1/√outDim so norms are preserved in expectation. Each
     * component is one compiled [[dot]], because an interpreted
-    * transform-over-matrix fold measured 1G lambda calls at the 1M×64
-    * ScaleStress build (24.6 s vs SQ8's 13 s).
+    * transform-over-matrix fold pays one lambda call per (vector,
+    * component, input dim) — d·outDim calls per vector.
     */
   private[graft] def rpProject(emb: Column, inDim: Int, outDim: Int): Column = {
     val scale = 1.0 / math.sqrt(outDim.toDouble)

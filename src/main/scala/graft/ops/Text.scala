@@ -1223,14 +1223,14 @@ object Text {
     * per occurrence: word TYPES are Heaps-bounded, so the DP runs
     * vocab-many times however Zipf-heavy the corpus, and occurrences
     * pick their result up by broadcast join ([[spmEncodeDocs]]) — the
-    * same economics as [[oovRate]]'s df table. BOUNDARY (measured in
-    * ScaleStress): an ADVERSARIAL open vocabulary — ids/hashes
-    * embedded in tokens, so word types grow with the corpus — makes
-    * the per-type DP the dominant cost (6.3M types at 200k synthetic
-    * docs ran ~11 min); real text saturates by Heaps' law, and for
-    * id-laden feeds pre-normalize (digit-fold / hash-bucket rare
-    * words — the minWordCount training lever's encode counterpart)
-    * before encoding.
+    * same economics as [[oovRate]]'s df table. BOUNDARY: an
+    * ADVERSARIAL open vocabulary — ids/hashes embedded in tokens, so
+    * word types grow with the corpus — makes the per-type DP the
+    * dominant cost, because its work tracks word types, not
+    * occurrences; real text saturates by Heaps' law, and for id-laden
+    * feeds pre-normalize (digit-fold / hash-bucket rare words — the
+    * minWordCount training lever's encode counterpart) before
+    * encoding.
     */
   private[graft] def spmSegmentFrame(words: DataFrame,
                                      model: Seq[(String, Long)],
@@ -1812,14 +1812,15 @@ object Text {
     * doc lengths (rides the collapse, map-side), and the posting
     * lists; the query term sets broadcast through the posting join so
     * the corpus side never shuffles; per-(q,c) partial sums map-side;
-    * rank window per query. The same df-cap/prefix levers apply at
-    * 100 TB.
+    * rank window per query. At 100 TB the df-cap lever lives in the
+    * posting store: [[postingStoreFrame]] flags the tokens in more
+    * than `dfCapFrac` of all docs (idf ≈ 0, join fan-out ≈ N per query
+    * term) as not `kept`, and [[bm25TopKFrom]] over the kept postings
+    * drops them before the query join.
     */
   def bm25TopK(documents: DataFrame, nQueries: Int, k: Int,
-               k1: Double = 1.2, b: Double = 0.75,
-               dfCapFrac: Double = 1.0): DataFrame = {
+               k1: Double = 1.2, b: Double = 0.75): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    require(dfCapFrac > 0.0 && dfCapFrac <= 1.0, "df cap must be a fraction of N")
     val byDoc = documents.repartition(col("doc_id"))
     val tf = graft.CacheScope.cached(byDoc
       .select(col("doc_id"), explode(Dedup.tokens(col("text"))).as("token"))
@@ -1840,14 +1841,6 @@ object Text {
       .join(dl, Seq("doc_id"))
       .join(broadcast(df), Seq("token"))
       .crossJoin(broadcast(stats))
-      // df-cap posting bound (the tfidfCosineTopK lever, off by
-      // default so the declared query's plan is untouched): tokens in
-      // more than dfCapFrac·N docs — idf ≈ 0, join fan-out ≈ N per
-      // query term — drop BEFORE the query join. The recall trade is
-      // MEASURED, not asserted: ScaleStress's df-cap sweep publishes
-      // recall@k vs wall at multiple cap settings over a Zipf-hot tail
-      .transform(t => if (dfCapFrac < 1.0)
-        t.filter(col("df") <= col("__n") * dfCapFrac) else t)
       .join(broadcast(q), Seq("token"))
       .filter(col("q_id") =!= col("doc_id"))
       .groupBy(col("q_id"), col("doc_id"))
@@ -2607,7 +2600,7 @@ object Text {
     * window per doc (partitioned by doc_id — embarrassingly
     * parallel); the distinct collapses each run of windows sharing a
     * minimum. md5-domain hashes for oracle parity, xxhash64 at scale
-    * (same swap note as [[Dedup.hashedShinglesFast]]).
+    * (the swap noted on [[Dedup.hashedShingles]]).
     */
   def winnow(documents: DataFrame, k: Int, w: Int): DataFrame = {
     import org.apache.spark.sql.expressions.Window

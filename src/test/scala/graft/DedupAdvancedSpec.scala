@@ -61,21 +61,25 @@ class DedupAdvancedSpec extends AnyFunSuite {
     // brute-force popcount neighborhood over the fingerprints must
     // equal the banded result EXACTLY — bit-band LSH is an execution
     // strategy with 100% recall, not an approximation
-    val docs = (0L until 40L)
+    val toy = (0L until 40L)
       .map(i => (i, (0 until 6).map(j => s"tok${(i * 7 + j * j) % 13}").mkString(" ")))
       .toDF("doc_id", "text")
-    val fps = Dedup.simhashFps(docs).collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val k = 2
-    val expected = fps.keys.map { d =>
-      val nbr = fps.keys.filter(o => o != d &&
-        java.lang.Long.bitCount(fps(d) ^ fps(o)) <= k).toSeq
-      d -> ((nbr.size.toLong, if (nbr.isEmpty) d else math.min(d, nbr.min)))
-    }.toMap
-    val got = Dedup.simhashBandStats(docs, k).collect()
-      .map(r => r.getLong(0) -> ((r.getLong(2), r.getLong(3)))).toMap
-    assert(got === expected)
-    CacheScope.flush()
+    // ... and the planted 4-clique corpus over many input partitions,
+    // whose one-token tails flip a few near-tied bits per member
+    for (docs <- Seq(toy, ScaleInvariantsSpec.textCorpus(spark, 1200L, 300L))) {
+      val fps = Dedup.simhashFps(docs).collect()
+        .map(r => r.getLong(0) -> r.getLong(1)).toMap
+      val k = 2
+      val expected = fps.keys.map { d =>
+        val nbr = fps.keys.filter(o => o != d &&
+          java.lang.Long.bitCount(fps(d) ^ fps(o)) <= k).toSeq
+        d -> ((nbr.size.toLong, if (nbr.isEmpty) d else math.min(d, nbr.min)))
+      }.toMap
+      val got = Dedup.simhashBandStats(docs, k).collect()
+        .map(r => r.getLong(0) -> ((r.getLong(2), r.getLong(3)))).toMap
+      assert(got === expected)
+      CacheScope.flush()
+    }
   }
 
   test("simhashBandStats at k=0 reproduces simhashClusters' keepers") {

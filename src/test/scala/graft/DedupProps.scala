@@ -45,14 +45,6 @@ object DedupProps extends Properties("Dedup") {
         .collect().exists(r => r.getLong(0) == 0L && r.getLong(1) == 1000L)
     }
 
-  property("identical docs are never missed on the xxhash64 production path either") =
-    Prop.forAll(genCorpus) { docs =>
-      import spark.implicits._
-      val corpus = (docs :+ (1000L, docs.head._2)).toDF("doc_id", "text")
-      Dedup.minhashLshCandidatesFast(corpus)
-        .collect().exists(r => r.getLong(0) == 0L && r.getLong(1) == 1000L)
-    }
-
   property("simhash clustering is a partition: keep_id is a member with min id") =
     Prop.forAll(genCorpus) { docs =>
       import spark.implicits._

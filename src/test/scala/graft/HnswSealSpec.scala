@@ -40,6 +40,26 @@ class HnswSealSpec extends AnyFunSuite {
     assert(sealedRes.length === growing.length && sealedRes.length === 50)
     assert(sealedRes.toSeq === growing.toSeq,
       "the sealed tier must answer exactly like the growing tier")
+
+    // the planted lattice over many input partitions: the sealed
+    // segment alone (an empty standing side, which both tiers share)
+    // against the growing tier under the lattice's own frozen model
+    val (lat, latCents, latBatch) = ScaleInvariantsSpec.latticeIncrement(spark)
+    Hnsw.hnswSealSegment(latBatch, latCents, m = 8, efConstruction = 64)
+      .write.parquet(s"$base/lattice")
+    assert(spark.read.parquet(s"$base/lattice").count() === latBatch.count(),
+      "one sealed node per segment vector")
+    val latQm = Some(Hnsw.routedQueryModel(lat, latCents, 10, 4).toSeq)
+    val noStanding = lat.filter(lit(false))
+    val latSealed = Hnsw.hnswTopKRoutedSealedFrom(noStanding, spark.read.parquet(s"$base/lattice"),
+        latCents, nQueries = 10, k = 5, nProbe = 4, m = 8, efConstruction = 64,
+        efSearch = 1 << 20, queryModel = latQm)
+      .collect().map(_.toString).sorted.toSeq
+    val latGrowing = Hnsw.hnswTopKRoutedGrowing(noStanding, latBatch, latCents,
+        nQueries = 10, k = 5, nProbe = 4, m = 8, efConstruction = 64,
+        efSearch = 1 << 20, queryModel = latQm)
+      .collect().map(_.toString).sorted.toSeq
+    assert(latSealed.nonEmpty && latSealed === latGrowing)
   }
 
   test("the sealed store is structurally sound and sealing is " +

@@ -37,6 +37,20 @@ class IvfIncrementSpec extends AnyFunSuite {
       .collect().map(_.toString).sorted.toSeq
     assert(inc === rebuild)
     assert(inc.nonEmpty)
+
+    // the planted lattice over many input partitions, under its own
+    // frozen model: its small-id vectors are near-collinear, so rank-1
+    // ties at cos 1.0 resolve by c_id on both sides
+    val (lat, latCents, latBatch) = ScaleInvariantsSpec.latticeIncrement(spark)
+    val storeDir = java.nio.file.Files.createTempDirectory("graft-ivf-lattice").toString
+    Sim.ivfAssign(lat, latCents).write.mode("overwrite").partitionBy("cell").parquet(storeDir)
+    val latInc = Sim.cosineTopKIvfIncrement(spark.read.parquet(storeDir), latBatch, latCents,
+        nQueries = 10, k = 5, nProbe = 4)
+      .collect().map(_.toString).sorted.toSeq
+    val latRebuild = Sim.cosineTopKIvfFrom(lat.unionByName(latBatch), latCents,
+        nQueries = 10, k = 5, nProbe = 4)
+      .collect().map(_.toString).sorted.toSeq
+    assert(latInc === latRebuild && latInc.size === 50)
   }
 
   test("a planted exact copy is its original's top hit at cos 1.0") {

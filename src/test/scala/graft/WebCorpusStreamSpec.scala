@@ -121,8 +121,7 @@ class WebCorpusStreamSpec extends AnyFunSuite {
     assert(streamedDeltas === batchDeltas,
       "streamed first-claim deltas must equal the batch write-back set")
     // this planted batch adds text keys only (its canonicals are all
-    // standing-claimed — ScaleStress case 22 measures "+0 canon" for
-    // the same classes); the canon-delta side is exercised by the
+    // standing-claimed); the canon-delta side is exercised by the
     // day-2 test's planted fresh canonical
     assert(batchDeltas.nonEmpty && batchDeltas.forall(_._1 == "text"))
   }
