@@ -579,7 +579,9 @@ private[graft] object EntrySupport {
     * Built once per corpus version at the declared queries' similarity
     * config (dfCapFrac 0.85, k1 1.2, b 0.75), so q_tfidf /
     * q_sparse_cosine / q_bm25 / q_rrf do not each re-run the tokenize →
-    * collapse → weight chain per query. Spread on read — see
+    * collapse → weight chain per query. The cap bounds the tf·idf
+    * rankers only: BM25 scores every posting, `kept` or not, as
+    * q_bm25's uncapped oracle does. Spread on read — see
     * [[ddfPerturbed]].
     */
   private[graft] val TokPostings = Store("tok_postings", Parquet, spread = true)((s, dir) =>

@@ -1297,7 +1297,7 @@ object Corpus {
     val b1 = incCanonStageFromGated(canonIdx, bg, p)
     // the in-batch text race keys on md5(text) — the SAME equality
     // relation the standing textIdx probe and the streaming twin
-    // (StreamingCorpus.webCorpusStream stage 2) already use, so every
+    // (StreamingCorpus.webCorpusStreamCycle stage 2) already use, so every
     // form of the race shares one relation; it also
     // shuffles a 32-char key instead of the full text. The DuckDB
     // oracle keeps RAW-TEXT equality, so the hash match doubles as

@@ -202,9 +202,23 @@ object Dedup {
     // exchange either way.
     docShingles(corpus)
       .repartition(col("doc_id")).distinct()
-      .withColumn("h",
-      expr("cast(conv(substring(md5(cast(shingle as binary)), 1, 8), 16, 10) as bigint) % 2147483647"))
+      .withColumn("h", shingleHash(col("shingle")))
       .select(col("doc_id"), col("h"))
+
+  /** The 31-bit shingle hash: the first 32 bits of md5, mod 2³¹−1. */
+  private[graft] def shingleHash(shingle: Column): Column =
+    Sketches.h32(shingle, 0) % 2147483647L
+
+  /** Permutation `s` of the MinHash family over a 31-bit shingle hash:
+    * (a_s·h + b_s) mod (2³¹−1) with a_s = 101s + 37 and b_s = 97s + 13,
+    * fixed literals the DuckDB oracle restates.
+    */
+  private[graft] def minhashPerm(h: Column, s: Int): Column =
+    (lit((37 + 101 * s).toLong) * h + lit((13 + 97 * s).toLong)) % 2147483647L
+
+  /** The `numHashes` per-seed signature minima `mh0..` over rows of `h`. */
+  private def minhashMins(numHashes: Int): Seq[Column] =
+    (0 until numHashes).map(s => min(minhashPerm(col("h"), s)).as(s"mh$s"))
 
   /** MAP-SIDE MinHash signature: the whole signature from the text
     * column in one projection — no explode, no groupBy, NO SHUFFLE.
@@ -227,12 +241,9 @@ object Dedup {
         try_element_at(toks, i + 1),
         try_element_at(toks, i + 2),
         try_element_at(toks, i + 3))))
-    val hashes = transform(shingles, s =>
-      conv(substring(md5(s.cast("binary")), 1, 8), 16, 10).cast("long") % 2147483647L)
-    array((0 until numHashes).map { s =>
-      array_min(transform(hashes, h =>
-        (lit((37 + 101 * s).toLong) * h + lit((13 + 97 * s).toLong)) % 2147483647L))
-    }: _*)
+    val hashes = transform(shingles, shingleHash(_))
+    array((0 until numHashes).map(s =>
+      array_min(transform(hashes, minhashPerm(_, s)))): _*)
   }
 
   /** The fused per-doc dedup frame: (doc_id, hs array<bigint>, sz,
@@ -247,22 +258,16 @@ object Dedup {
     * the distinct is on the shingle STRING). One cache of this frame feeds
     * LSH candidates, set sizes, AND the exact-verify join in [[verifiedNearDupPairs]].
     */
-  private[graft] def docDedupFrame(corpus: DataFrame, numHashes: Int): DataFrame = {
-    val mins = (0 until numHashes).map { s =>
-      min(expr(s"((${37 + 101 * s} * h + ${13 + 97 * s}) % 2147483647)")).as(s"mh$s")
-    }
+  private[graft] def docDedupFrame(corpus: DataFrame, numHashes: Int): DataFrame =
     hashedShingles(corpus)
       .groupBy(col("doc_id"))
       .agg(array_sort(collect_list(col("h"))).as("hs"),
-        mins :+ count(lit(1)).as("sz"): _*)
+        minhashMins(numHashes) :+ count(lit(1)).as("sz"): _*)
       .withColumn("minhashes", array((0 until numHashes).map(i => col(s"mh$i")): _*))
       .select(col("doc_id"), col("hs"), col("sz"), col("minhashes"))
-  }
 
   private def minhashSignaturesFromHashed(hashed: DataFrame, numHashes: Int): DataFrame = {
-    val mins = (0 until numHashes).map { s =>
-      min(expr(s"((${37 + 101 * s} * h + ${13 + 97 * s}) % 2147483647)")).as(s"mh$s")
-    }
+    val mins = minhashMins(numHashes)
     // shingle-set size rides in the SAME aggregation — same grouping
     // key, so exact-verify's |A|,|B| terms cost no second shuffle of
     // the (much larger) hashed-shingle table

@@ -5,14 +5,10 @@ import org.apache.spark.sql.functions._
 
 /** Multimodal-column handling: image/audio/video payloads ride through
   * the engine as opaque `binary` columns with typed metadata; decode /
-  * feature-extraction runs per-partition so a real codec would be
-  * loaded once per executor task, not once per row.
-  *
-  * No media codec ships in this environment, so [[StubCodec]] is a
-  * clearly-marked DETERMINISTIC FAKE — it fabricates "features" from
-  * byte statistics. The Spark-side plumbing (schema, partitioning,
-  * batch shape, per-partition decoder lifecycle) is real and tested;
-  * swapping in a true decoder touches only `StubCodec.decode`.
+  * feature-extraction runs per-partition, so a codec is set up once
+  * per executor task, not once per row. The codecs are pure JVM — PPM
+  * and WAV here, JPEG and PNG in their own files — each with a
+  * malformed-input quarantine.
   */
 object Multimodal {
 
@@ -24,37 +20,12 @@ object Multimodal {
       n_bytes: Long,
       format: String)
 
-  /** Per-item features from the (stub) decoder. */
+  /** Per-item features from a decoder (n_frames 0 = quarantined). */
   final case class MediaFeatures(
       media_id: Long,
       kind: String,
       n_frames: Int,
       features: Array[Double])
-
-  /** STUB — stands in for an image/audio/video codec. Deterministic:
-    * derives pseudo-features from byte content so tests can pin exact
-    * values. A production build replaces this object with JNI/FFI codec
-    * bindings; everything else is unchanged.
-    */
-  object StubCodec {
-    def decode(row: MediaRow): MediaFeatures = {
-      val frames = row.kind match {
-        case "video" => 8
-        case "audio" => 4
-        case _ => 1
-      }
-      // fake per-frame "feature": mean byte value of each frame slice
-      val n = row.bytes.length.max(1)
-      val feats = (0 until frames).map { f =>
-        val from = f * n / frames
-        val until = ((f + 1) * n / frames).max(from + 1).min(n)
-        val slice = row.bytes.slice(from, until)
-        if (slice.isEmpty) 0.0
-        else slice.map(b => (b & 0xff).toDouble).sum / slice.length
-      }.toArray
-      MediaFeatures(row.media_id, row.kind, frames, feats)
-    }
-  }
 
   /** REAL image codec for binary PPM (P6) — pure JVM, no native libs,
     * so this environment can exercise a genuine decode → resize →
@@ -62,8 +33,7 @@ object Multimodal {
     * formats (ASCII header `P6 <w> <h> <maxval>` then raw RGB24), but
     * the pipeline shape it drives here — header parse, malformed-input
     * quarantine, nearest-neighbour resample, channel statistics — is
-    * exactly what the JNI/FFI JPEG/PNG codec slot ([[StubCodec]]'s
-    * docstring) plugs into.
+    * the one the JPEG and PNG codecs plug into.
     */
   object PpmCodec {
 
@@ -740,20 +710,6 @@ object Multimodal {
           slice.sum / slice.length
         }.toArray
       f.copy(features = pooled)
-    }
-  }
-
-  /** Per-partition decode: the codec is "opened" once per partition
-    * (the expensive part for a real codec), then streamed over rows.
-    * At scale, partition sizing (`maxPartitionBytes`) bounds decoder
-    * memory; rows never collect to the driver.
-    */
-  def decodeFeatures(media: Dataset[MediaRow]): Dataset[MediaFeatures] = {
-    val spark = media.sparkSession
-    import spark.implicits._
-    media.mapPartitions { rows =>
-      // real codec: open native handles here, close in a TaskCompletionListener
-      rows.map(StubCodec.decode)
     }
   }
 }

@@ -513,7 +513,7 @@ object Sim {
     *
     *  1. centroids: the first `nCells` vectors, deterministically, so
     *     the DuckDB oracle can mirror the exact cells (the TRAINED
-    *     model is [[kmeansCentroids]] + [[cosineTopKIvfKmeans]],
+    *     model is [[kmeansCentroidsSampledLocal]] + [[cosineTopKIvfKmeans]],
     *     spec-checked by recall instead);
     *  2. assign every vector to its best centroid by cosine — a pure
     *     MAP-SIDE argmax over the driver-resident centroid array: no
@@ -534,64 +534,28 @@ object Sim {
     searchCells(withNorm, cents, nQueries, k, nProbe = 1)
   }
 
-  /** Deterministic seeded Lloyd's k-means for IVF centroid training —
-    * replaces the first-N placeholder when cells should follow the
-    * data's actual clusters.
+  /** Deterministic Lloyd's k-means for IVF centroid training, on a
+    * bounded sample and driver-local — the coarse-quantizer training
+    * shape faiss uses in production: a coarse quantizer needs only
+    * ~100·k training vectors regardless of corpus size, so collect a
+    * deterministic modulo-sample (vec_id % sampleMod == 0, BOUNDED by
+    * the caller's choice of sampleMod — the model build input,
+    * k×dim-ish, never data-sized; sampleMod = 1 trains on every
+    * vector) and iterate entirely at the driver: ONE Spark job for the
+    * sample instead of one per Lloyd round.
     *
-    *  - init: `k` vectors at evenly-spaced vec_ids (seed-stride
-    *    deterministic, not first-k which over-samples one neighborhood
-    *    when ids correlate with content);
-    *  - assign: the same map-side cosine argmax as search (so training
-    *    optimizes exactly the metric search uses);
-    *  - update: per-cell coordinate means via ONE groupBy with `dim`
-    *    avg aggregates (map-side partial agg; the shuffle carries
-    *    k×dim doubles, not vectors), rounded to 9dp so run-to-run
-    *    float-order jitter can't flip boundary assignments;
-    *  - empty cells keep their previous centroid.
+    *  - init: `k` sample vectors at evenly-spaced positions (stride,
+    *    not first-k, which over-samples one neighborhood when ids
+    *    correlate with content);
+    *  - assign: the search's cosine argmax (score DESC, cent_id ASC via
+    *    6dp rounding), so training optimizes exactly the metric search
+    *    uses;
+    *  - update: per-cell coordinate means rounded to 9dp, so float
+    *    jitter can't flip boundary assignments; empty cells keep their
+    *    previous centroid.
     *
-    * Each iteration is one Spark job; the model (k×dim doubles) lives
-    * at the driver like MLlib's KMeansModel.
-    */
-  def kmeansCentroids(embeddings: DataFrame, k: Int, iters: Int): Centroids = {
-    val withNorm = CacheScope.cached(withNormed(embeddings))
-    val n = withNorm.count()
-    val stride = math.max(n / k, 1L)
-    val initIds = (0 until k).map(i => i * stride)
-    var cents: Centroids = withNorm
-      .filter(col("vec_id").isin(initIds: _*))
-      .select(col("vec_id"), col("v")).collect()
-      .map(r => (r.getLong(0), r.getSeq[Double](1).toArray)).sortBy(_._1)
-      .zipWithIndex.map { case ((_, v), i) => (i.toLong, v) }.toSeq
-    val dim = cents.head._2.length
-    for (_ <- 0 until iters) {
-      val assigned = withNorm.withColumn(
-        "cell", argmaxCell(cents)(col("v"), col("nrm")))
-      val aggs = (0 until dim).map(i =>
-        round(avg(col("v").getItem(i)), 9).as(s"c$i"))
-      val rows = assigned.groupBy(col("cell")).agg(aggs.head, aggs.tail: _*).collect()
-      val byCell = rows.map(r =>
-        r.getLong(0) -> (0 until dim).map(i => r.getDouble(1 + i)).toArray).toMap
-      cents = cents.map { case (id, old) => (id, byCell.getOrElse(id, old)) }
-    }
-    cents
-  }
-
-  /** Bounded-sample, driver-local Lloyd's — the coarse-quantizer
-    * training shape faiss uses in production: a coarse quantizer needs
-    * only ~100·k training vectors regardless of corpus size, so
-    * collect a deterministic modulo-sample (vec_id % sampleMod == 0,
-    * BOUNDED by the caller's choice of sampleMod — the model build
-    * input, k×dim-ish, never data-sized) and iterate entirely at the
-    * driver: ONE Spark job for the sample instead of one per Lloyd
-    * round. Same metric, argmax tiebreak (score DESC, cent_id ASC via
-    * 6dp rounding), stride init, and 9dp mean rounding as
-    * [[kmeansCentroids]] (cell quality is graded by the recall spec,
-    * not bit-parity between the two trainings — driver and partial-agg
-    * float summation orders differ). Prefer [[kmeansCentroids]] when
-    * the full corpus must be
-    * the training set (distributed assignment, k×dim-doubles shuffle
-    * per round); prefer this when training a coarse quantizer, where
-    * the sample is the contract.
+    * The model (k×dim doubles) lives at the driver like MLlib's
+    * KMeansModel.
     */
   def kmeansCentroidsSampledLocal(embeddings: DataFrame, k: Int, iters: Int,
                                   sampleMod: Int): Centroids = {

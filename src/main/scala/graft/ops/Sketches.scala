@@ -27,51 +27,74 @@ object Sketches {
   /** 32-bit hash from an md5 prefix: chunk 0 = hex chars 1-8,
     * chunk 1 = 9-16 — both engines state it identically.
     */
-  private def h32(c: Column, chunk: Int): Column =
+  private[graft] def h32(c: Column, chunk: Int): Column =
     conv(substring(md5(c.cast("binary")), 1 + 8 * chunk, 8), 16, 10).cast("long")
 
-  /** HyperLogLog distinct count per group, m = 64 registers (p = 6):
-    * register index = h₁ mod 64, rank = leading-zero count of the
+  /** Slot `seed` of a string key in a `width`-slot table: the first 32
+    * bits of md5("seed|key") mod width — a count-min row's bucket and a
+    * Bloom hash's bit position. Folding the seed into the md5 INPUT
+    * makes every seed an independent full digest, not a chunk of one.
+    */
+  private[graft] def hashSlot(seed: Column, key: Column, width: Int): Column =
+    h32(concat(seed.cast("string"), lit("|"), key), 0) % width
+
+  private val hllM = 64
+
+  /** A string key's HLL register as (idx, rho) columns: idx = h₁ mod 64
+    * (m = 64 registers, p = 6), rho = the leading-zero count of the
     * 32-bit h₂ + 1 (via `33 − length(bin(w))` — exact integer binary
-    * log, no float boundary), per-register MAX, the m=64 bias constant
-    * α = 0.709, and the standard small-range (linear counting)
-    * correction. The exact distinct count rides the same single
-    * exchange chain — each distinct key lands in exactly one register,
-    * so Σ per-register key-counts = the exact answer — making the
-    * relative error a free output column instead of a second
-    * aggregation pass.
+    * log, no float boundary).
+    */
+  private[graft] def hllRegister(k: Column): (Column, Column) = {
+    val w = h32(k, 1)
+    (h32(k, 0) % hllM, when(w === 0L, lit(33L)).otherwise(lit(33L) - length(bin(w))))
+  }
+
+  /** The HLL estimate of a register frame (one row per hit register,
+    * column `mj`) grouped by `keys`: α·m²/Z with the m = 64 bias
+    * constant α = 0.709 and Z = Σ 2^−mj over all m registers (a
+    * never-hit register adds 2⁰), or the small-range linear count
+    * m·ln(m/V) when that is ≤ 2.5m and V > 0 registers were never hit.
+    * Unrounded, in column `est`; `audit` aggregates ride the same fold.
+    */
+  private[graft] def hllEstimate(regs: DataFrame, keys: Seq[String],
+                                 audit: Column*): DataFrame = {
+    // registers never hit (mj >= 1 when present)
+    val v = lit(hllM.toDouble) - count(lit(1))
+    val aggs = audit ++ Seq(
+      (lit(0.709 * hllM * hllM) / (v + sum(pow(lit(2.0), -col("mj"))))).as("__e"),
+      v.as("__v"))
+    regs.groupBy(keys.map(col): _*).agg(aggs.head, aggs.tail: _*)
+      .withColumn("est",
+        when(col("__e") <= 2.5 * hllM && col("__v") > 0,
+          lit(hllM.toDouble) * log(lit(hllM.toDouble) / col("__v")))
+          .otherwise(col("__e")))
+      .drop("__e", "__v")
+  }
+
+  /** HyperLogLog distinct count per group: each key's register
+    * ([[hllRegister]]), per-register MAX, and the α / linear-counting
+    * estimate ([[hllEstimate]]). The exact distinct count rides the
+    * same single exchange chain — each distinct key lands in exactly
+    * one register, so Σ per-register key-counts = the exact answer —
+    * making the relative error a free output column instead of a
+    * second aggregation pass.
     *
     * Shape: distinct (group, key) → (group, idx) register fold →
     * (group) estimate fold. One exchange chain; register state is 64
     * values per group at ANY cardinality — the whole point.
     */
   def hllDistinct(df: DataFrame, groupCol: String, keyCol: String): DataFrame = {
-    val m = 64
-    val dk = df
+    val (idx, rho) = hllRegister(col("k"))
+    val regs = df
       .filter(col(groupCol).isNotNull && col(keyCol).isNotNull)
       .select(col(groupCol).as("g"), col(keyCol).cast("string").as("k"))
       .distinct()
-    val w = h32(col("k"), 1)
-    val regs = dk
-      .select(col("g"),
-        (h32(col("k"), 0) % m).as("idx"),
-        when(w === 0L, lit(33L)).otherwise(lit(33L) - length(bin(w))).as("rho"))
+      .select(col("g"), idx.as("idx"), rho.as("rho"))
       .groupBy(col("g"), col("idx"))
       .agg(max(col("rho")).as("mj"), count(lit(1)).as("nk"))
-    val z = (lit(m.toDouble) - count(lit(1))) + sum(pow(lit(2.0), -col("mj")))
-    val v = lit(m.toDouble) - count(lit(1)) // registers never hit (mj >= 1 when present)
-    regs.groupBy(col("g"))
-      .agg(
-        sum(col("nk")).as("n_exact"),
-        ((lit(0.709 * m * m) / z)).as("__e"),
-        v.as("__v"))
-      .select(
-        col("g").as(groupCol),
-        col("n_exact"),
-        round(
-          when(col("__e") <= 2.5 * m && col("__v") > 0,
-            lit(m.toDouble) * log(lit(m.toDouble) / col("__v")))
-            .otherwise(col("__e")), 4).as("hll_est_r"))
+    hllEstimate(regs, Seq("g"), sum(col("nk")).as("n_exact"))
+      .select(col("g").as(groupCol), col("n_exact"), round(col("est"), 4).as("hll_est_r"))
       .withColumn("rel_err_r",
         round(abs(col("hll_est_r") - col("n_exact")) / col("n_exact"), 4))
   }
@@ -90,26 +113,13 @@ object Sketches {
     * Returns (group, hll_est_r) only — the honest sketch output.
     */
   def hllRegistersOnly(df: DataFrame, groupCol: String, keyCol: String): DataFrame = {
-    val m = 64
-    val k = col(keyCol).cast("string")
-    val w = h32(k, 1)
-    df.filter(col(groupCol).isNotNull && col(keyCol).isNotNull)
-      .select(col(groupCol).as("g"),
-        (h32(k, 0) % m).as("idx"),
-        when(w === 0L, lit(33L)).otherwise(lit(33L) - length(bin(w))).as("rho"))
+    val (idx, rho) = hllRegister(col(keyCol).cast("string"))
+    val regs = df.filter(col(groupCol).isNotNull && col(keyCol).isNotNull)
+      .select(col(groupCol).as("g"), idx.as("idx"), rho.as("rho"))
       .groupBy(col("g"), col("idx"))
       .agg(max(col("rho")).as("mj"))
-      .groupBy(col("g"))
-      .agg(
-        ((lit(0.709 * m * m) /
-          ((lit(m.toDouble) - count(lit(1))) + sum(pow(lit(2.0), -col("mj")))))).as("__e"),
-        (lit(m.toDouble) - count(lit(1))).as("__v"))
-      .select(
-        col("g").as(groupCol),
-        round(
-          when(col("__e") <= 2.5 * m && col("__v") > 0,
-            lit(m.toDouble) * log(lit(m.toDouble) / col("__v")))
-            .otherwise(col("__e")), 4).as("hll_est_r"))
+    hllEstimate(regs, Seq("g"))
+      .select(col("g").as(groupCol), round(col("est"), 4).as("hll_est_r"))
   }
 
   /** Register-only batch count-min — counters fold DIRECTLY from raw
@@ -126,7 +136,7 @@ object Sketches {
     df.filter(col(keyCol).isNotNull)
       .select(col(keyCol).cast("string").as("k"),
         explode(sequence(lit(0L), lit((d - 1).toLong))).as("j"))
-      .withColumn("b", h32(concat(col("j").cast("string"), lit("|"), col("k")), 0) % w)
+      .withColumn("b", hashSlot(col("j"), col("k"), w))
       .groupBy(col("j"), col("b"))
       .agg(sum(lit(1L)).as("c"))
 
@@ -143,7 +153,7 @@ object Sketches {
                      d: Int = 4, w: Int = 64): DataFrame =
     probes
       .select(col("k"), explode(sequence(lit(0L), lit((d - 1).toLong))).as("j"))
-      .withColumn("b", h32(concat(col("j").cast("string"), lit("|"), col("k")), 0) % w)
+      .withColumn("b", hashSlot(col("j"), col("k"), w))
       .join(broadcast(counters), Seq("j", "b"), "left")
       .groupBy(col("k"))
       .agg(min(coalesce(col("c"), lit(0L))).as("cms_est"))
@@ -154,8 +164,8 @@ object Sketches {
     * distributed sketch at all), so |A∩B| estimates by
     * inclusion-exclusion est(A) + est(B) − est(A∪B). The exact
     * intersection (a key self-join — the thing the sketch avoids at
-    * 100 TB) rides along as the audit column; estimates use the same
-    * m=64 / α=0.709 / linear-counting math as [[hllDistinct]], summed
+    * 100 TB) rides along as the audit column; estimates are
+    * [[hllEstimate]]'s, summed
     * UNROUNDED before the final 4dp round. Inclusion-exclusion error
     * compounds three estimates, so small overlaps can read negative —
     * the documented sketch behavior, not a defect.
@@ -171,29 +181,15 @@ object Sketches {
     * |groups|² (tiny) and broadcasts.
     */
   def hllOverlap(df: DataFrame, groupCol: String, keyCol: String): DataFrame = {
-    val m = 64
     val dk = graft.CacheScope.cached(df
       .filter(col(groupCol).isNotNull && col(keyCol).isNotNull)
       .select(col(groupCol).as("g"), col(keyCol).cast("string").as("k"))
       .distinct())
-    val w = h32(col("k"), 1)
+    val (idx, rho) = hllRegister(col("k"))
     // per-group register frame: G·64 rows, the sketch's entire state
-    val sregs = graft.CacheScope.cached(dk.select(col("g"),
-      (h32(col("k"), 0) % m).as("idx"),
-      when(w === 0L, lit(33L)).otherwise(lit(33L) - length(bin(w))).as("rho"))
+    val sregs = graft.CacheScope.cached(dk.select(col("g"), idx.as("idx"), rho.as("rho"))
       .groupBy(col("g"), col("idx")).agg(max(col("rho")).as("mj")))
-    // UNROUNDED estimate from a register frame grouped by `keys`
-    def estimate(regs: DataFrame, keys: Seq[String]): DataFrame = {
-      val z = (lit(m.toDouble) - count(lit(1))) + sum(pow(lit(2.0), -col("mj")))
-      val v = lit(m.toDouble) - count(lit(1))
-      regs.groupBy(keys.map(col): _*)
-        .agg((lit(0.709 * m * m) / z).as("__e"), v.as("__v"))
-        .select(keys.map(col) :+
-          when(col("__e") <= 2.5 * m && col("__v") > 0,
-            lit(m.toDouble) * log(lit(m.toDouble) / col("__v")))
-            .otherwise(col("__e")).as("est"): _*)
-    }
-    val single = estimate(sregs, Seq("g"))
+    val single = hllEstimate(sregs, Seq("g"))
     val gs = dk.select(col("g")).distinct()
     val pairs = gs.select(col("g").as("ga"))
       .crossJoin(gs.select(col("g").as("gb")))
@@ -203,7 +199,7 @@ object Sketches {
     // (pair, idx) — bit-identical to re-folding the keys per pair
     val tagged = sregs.join(broadcast(pairs),
       col("g") === col("ga") || col("g") === col("gb"))
-    val estAb = estimate(
+    val estAb = hllEstimate(
       tagged.groupBy(col("ga"), col("gb"), col("idx")).agg(max(col("mj")).as("mj")),
       Seq("ga", "gb")).withColumnRenamed("est", "est_ab")
     val exact = dk.select(col("g").as("ga"), col("k"))
@@ -422,7 +418,7 @@ object Sketches {
         .agg(count(lit(1)).as("cnt")))
     val hashed = tc.select(col("k"), col("cnt"),
       explode(sequence(lit(0), lit(d - 1))).as("j"))
-      .withColumn("b", h32(concat(col("j").cast("string"), lit("|"), col("k")), 0) % w)
+      .withColumn("b", hashSlot(col("j"), col("k"), w))
     val counters = hashed.groupBy(col("j"), col("b"))
       .agg(sum(col("cnt")).as("c"))
     val est = hashed
@@ -480,14 +476,12 @@ object Sketches {
   def bloomDedupFlags(history: DataFrame, batch: DataFrame,
                       keyExpr: Column, idCol: String,
                       m: Int, k: Int = 3): DataFrame = {
-    // any k works: each hash index i folds into the md5 INPUT
-    // ("i|key"), so the k hash functions are independent full digests,
-    // not chunks of one digest
+    // any k works: each hash index is an independent digest (hashSlot)
     require(k >= 1 && m >= 2, "bloom filter needs at least one hash and two bits")
     def positions(df: DataFrame, extra: Seq[Column]): DataFrame = df
       .select((extra :+ keyExpr.cast("string").as("bk")): _*)
       .withColumn("i", explode(sequence(lit(0), lit(k - 1))))
-      .withColumn("pos", h32(concat(col("i").cast("string"), lit("|"), col("bk")), 0) % m)
+      .withColumn("pos", hashSlot(col("i"), col("bk"), m))
     val bits = positions(history, Seq.empty).select(col("pos")).distinct()
     val histKeys = history.select(keyExpr.cast("string").as("bk")).distinct()
     positions(batch, Seq(col(idCol)))
@@ -529,17 +523,26 @@ object Sketches {
   }
 
   /** The (g, bucket, c, rep) frame both HDR forms fold from: values
-    * quantize to cents, bucket = 8·bitlength + the 3 sub-bits under
-    * the leading one (values < 16 cents keep their own bucket).
-    * mant = the top 4 bits (leading one included, so 8..15); guarded
-    * to vc >= 16 so the shift amount blen−4 is never negative (expr
-    * form: the Scala shiftright API only takes a literal count, the
-    * SQL builtin takes a column).
+    * quantize to cents ([[hdrBucketed]]).
     */
   private def hdrBucketFrame(df: DataFrame, groupCol: String,
                              valueCol: String): DataFrame = df
     .filter(col(groupCol).isNotNull && col(valueCol).isNotNull && col(valueCol) >= 0)
     .select(col(groupCol).as("g"), floor(col(valueCol) * 100).cast("long").as("vc"))
+    .transform(hdrBucketed)
+    .groupBy(col("g"), col("bucket"))
+    .agg(count(lit(1)).as("c"), max(col("rep")).as("rep"))
+
+  /** Adds each row's HDR `bucket` and representative `rep` (the bucket
+    * midpoint, in value units) to a frame of non-negative cents `vc`:
+    * bucket = 8·bitlength + the 3 sub-bits under the leading one
+    * (values < 16 cents keep their own bucket). mant = the top 4 bits
+    * (leading one included, so 8..15); guarded to vc >= 16 so the
+    * shift amount blen−4 is never negative (expr form: the Scala
+    * shiftright API only takes a literal count, the SQL builtin takes
+    * a column).
+    */
+  private[graft] def hdrBucketed(vc: DataFrame): DataFrame = vc
     .withColumn("blen", length(bin(col("vc"))).cast("long"))
     .withColumn("mant",
       when(col("vc") >= 16,
@@ -553,8 +556,6 @@ object Sketches {
           (expr("shiftleft(mant, cast(blen - 4 as int))").cast("double") +
             expr("shiftleft(mant + 1, cast(blen - 4 as int))").cast("double"))
             / 2.0 / 100.0))
-    .groupBy(col("g"), col("bucket"))
-    .agg(count(lit(1)).as("c"), max(col("rep")).as("rep"))
 
   private def hdrQCols(qs: Seq[Double]): Seq[Column] = qs.map { q =>
     val tag = (q * 100).round.toInt

@@ -1687,41 +1687,12 @@ object Text {
        |GROUP BY t.lang ORDER BY lang""".stripMargin
 
   /** TF-IDF top terms per document: tf = in-doc term count, idf =
-    * ln(N/df) with df from the same corpus, top `k` terms by score
-    * (ties to the lexicographically first token). Three aggregations
-    * sharing one exploded-token pass: (doc,token) tf, token df derived
-    * FROM tf (already one row per doc-token — no second corpus scan),
-    * and the scalar doc count via crossJoin(broadcast). The final
-    * per-doc rank window partitions by doc_id — scales with docs, not
-    * vocabulary.
+    * ln(N/df) with N = all docs and df from the same corpus, top `k`
+    * terms by score (ties to the lexicographically first token).
+    * [[tfidfTopTermsFrom]] over an uncapped [[postingStoreFrame]].
     */
-  def tfidfTopTerms(documents: DataFrame, k: Int): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    // ONE up-front hash partition on doc_id, then the whole per-doc
-    // pipeline is exchange-free: HashPartitioning(doc_id) satisfies the
-    // clustering requirement of the (doc_id, token) aggregation (subset
-    // key), the broadcast joins preserve the streamed side's layout,
-    // and the rank window re-uses it too — so where the old plan paid
-    // three exchanges (tf hash, df hash, window re-hash), this one pays
-    // the doc partition plus only the VOCABULARY-sized df aggregation,
-    // which comes back as a broadcast. Both branches share the one
-    // repartition exchange (ReuseExchange — AQE not required).
-    val byDoc = documents.repartition(col("doc_id"))
-    val tf = byDoc
-      .select(col("doc_id"), explode(Dedup.tokens(col("text"))).as("token"))
-      .groupBy(col("doc_id"), col("token"))
-      .agg(count(lit(1)).as("tf"))
-    val df = tf.groupBy(col("token")).agg(count(lit(1)).as("df"))
-    val nDocs = documents.agg(countDistinct(col("doc_id")).cast("double").as("__n"))
-    val w = Window.partitionBy(col("doc_id"))
-      .orderBy(col("tfidf").desc, col("token").asc)
-    tf.join(broadcast(df), Seq("token"))
-      .crossJoin(broadcast(nDocs))
-      .withColumn("tfidf", round(col("tf") * log(col("__n") / col("df")), 4))
-      .withColumn("rnk", row_number().over(w).cast("long"))
-      .filter(col("rnk") <= k)
-      .select(col("doc_id"), col("token"), col("tf"), col("df"), col("tfidf"), col("rnk"))
-  }
+  def tfidfTopTerms(documents: DataFrame, k: Int): DataFrame =
+    tfidfTopTermsFrom(postingStoreFrame(documents, 1.0), k)
 
   /** Sparse TF-IDF cosine retrieval over the inverted index — the
     * LEXICAL twin of [[graft.ops.Sim.cosineTopK]]'s dense-embedding
@@ -1731,7 +1702,7 @@ object Text {
     * materializing vectors — pairs meet through the posting lists of
     * their shared tokens (Bayardo et al., WWW 2007 "Scaling Up All
     * Pairs Similarity Search"), so two docs with no token in common
-    * cost literally nothing.
+    * cost literally nothing. Query docs are doc_id < nQueries.
     *
     * The df cap is the classic posting-list bound: a token in more
     * than `dfCapFrac` of all docs is dropped BEFORE pair generation
@@ -1742,56 +1713,12 @@ object Text {
     * levers at scale, in order: Bayardo prefix filtering, then LSH
     * over the sparse vectors.
     *
-    * Shape: ONE tokenize pass → (doc, token) tf; vocabulary-sized df
-    * table broadcast back; per-doc norms fold map-side on the
-    * doc-partitioned tf stream; the query side (doc_id < nQueries) is
-    * broadcast so the corpus-side posting list streams through the
-    * pair join without shuffling; the (q, c) partial products
-    * partial-aggregate map-side. Rank window partitions by query.
+    * [[tfidfCosineTopKFrom]] over a [[postingStoreFrame]] capped at
+    * `dfCapFrac`.
     */
   def tfidfCosineTopK(documents: DataFrame, nQueries: Int, k: Int,
-                      dfCapFrac: Double): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    require(dfCapFrac > 0.0 && dfCapFrac <= 1.0, "df cap must be a fraction of N")
-    // one up-front doc_id hash partition (the tfidfTopTerms trick):
-    // tf's (doc_id, token) group, the norm fold, and the unit join all
-    // reuse it — the only other exchanges are vocabulary-sized
-    val byDoc = documents.repartition(col("doc_id"))
-    // the tokenize+explode collapse is CACHED: df, norms, the unit
-    // posting list, and the query slice all read it — without the
-    // cache each branch re-tokenizes the corpus (the bigramLogProb
-    // lesson)
-    val tf = graft.CacheScope.cached(byDoc
-      .select(col("doc_id"), explode(Dedup.tokens(col("text"))).as("token"))
-      .groupBy(col("doc_id"), col("token"))
-      .agg(count(lit(1)).as("tf")))
-    val df = tf.groupBy(col("token")).agg(count(lit(1)).as("df"))
-    val nDocs = documents.agg(countDistinct(col("doc_id")).cast("double").as("__n"))
-    val weighted = tf.join(broadcast(df), Seq("token"))
-      .crossJoin(broadcast(nDocs))
-      .filter(col("df") <= col("__n") * dfCapFrac)
-      .withColumn("w", col("tf") * log(col("__n") / col("df")))
-    val norms = weighted.groupBy(col("doc_id"))
-      .agg(sqrt(sum(col("w") * col("w"))).as("nrm"))
-    val unit = weighted.join(norms, Seq("doc_id"))
-      .select(col("doc_id"), col("token"), (col("w") / col("nrm")).as("wn"))
-    val q = unit.filter(col("doc_id") < nQueries)
-      .select(col("doc_id").as("q_id"), col("token"), col("wn").as("qw"))
-    val scored = unit
-      .join(broadcast(q), Seq("token"))
-      .filter(col("q_id") =!= col("doc_id"))
-      .groupBy(col("q_id"), col("doc_id"))
-      .agg(
-        count(lit(1)).as("n_common"),
-        round(sum(col("wn") * col("qw")), 4).as("cos_r"))
-    val w = Window.partitionBy(col("q_id"))
-      .orderBy(col("cos_r").desc, col("doc_id").asc)
-    scored
-      .withColumn("rnk", row_number().over(w).cast("long"))
-      .filter(col("rnk") <= k)
-      .select(col("q_id"), col("doc_id").as("c_id"), col("n_common"),
-        col("cos_r"), col("rnk"))
-  }
+                      dfCapFrac: Double): DataFrame =
+    tfidfCosineTopKFrom(postingStoreFrame(documents, dfCapFrac), nQueries, k)
 
   /** BM25 retrieval over the inverted index (Robertson et al., TREC-3;
     * the Lucene/Elasticsearch default and the lexical baseline every
@@ -1807,54 +1734,14 @@ object Text {
     * with the Lucene idf = ln(1 + (N−df+0.5)/(df+0.5)), which is
     * positive even for df > N/2 tokens.
     *
-    * Shape: same skeleton as [[tfidfCosineTopK]] — ONE cached
-    * (doc,token,tf) collapse feeds df (vocabulary-sized, broadcast),
-    * doc lengths (rides the collapse, map-side), and the posting
-    * lists; the query term sets broadcast through the posting join so
-    * the corpus side never shuffles; per-(q,c) partial sums map-side;
-    * rank window per query. At 100 TB the df-cap lever lives in the
-    * posting store: [[postingStoreFrame]] flags the tokens in more
-    * than `dfCapFrac` of all docs (idf ≈ 0, join fan-out ≈ N per query
-    * term) as not `kept`, and [[bm25TopKFrom]] over the kept postings
-    * drops them before the query join.
+    * [[bm25TopKFrom]] over an uncapped [[postingStoreFrame]]. BM25
+    * scores every posting, `kept` or not, so a store's df cap never
+    * changes a BM25 answer; a caller that wants the cap filters `kept`
+    * itself.
     */
   def bm25TopK(documents: DataFrame, nQueries: Int, k: Int,
-               k1: Double = 1.2, b: Double = 0.75): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val byDoc = documents.repartition(col("doc_id"))
-    val tf = graft.CacheScope.cached(byDoc
-      .select(col("doc_id"), explode(Dedup.tokens(col("text"))).as("token"))
-      .groupBy(col("doc_id"), col("token"))
-      .agg(count(lit(1)).as("tf")))
-    val df = tf.groupBy(col("token")).agg(count(lit(1)).as("df"))
-    val dl = tf.groupBy(col("doc_id")).agg(sum(col("tf")).as("dl"))
-    val stats = dl.agg(
-      countDistinct(col("doc_id")).cast("double").as("__n"),
-      avg(col("dl")).as("__avgdl"))
-    val q = tf.filter(col("doc_id") < nQueries)
-      .select(col("doc_id").as("q_id"), col("token"))
-    val idf = log(lit(1.0) +
-      (col("__n") - col("df") + 0.5) / (col("df") + 0.5))
-    val norm = col("tf") * (k1 + 1.0) /
-      (col("tf") + lit(k1) * (lit(1.0 - b) + lit(b) * col("dl") / col("__avgdl")))
-    val scored = tf
-      .join(dl, Seq("doc_id"))
-      .join(broadcast(df), Seq("token"))
-      .crossJoin(broadcast(stats))
-      .join(broadcast(q), Seq("token"))
-      .filter(col("q_id") =!= col("doc_id"))
-      .groupBy(col("q_id"), col("doc_id"))
-      .agg(
-        count(lit(1)).as("n_common"),
-        round(sum(idf * norm), 4).as("bm25_r"))
-    val w = Window.partitionBy(col("q_id"))
-      .orderBy(col("bm25_r").desc, col("doc_id").asc)
-    scored
-      .withColumn("rnk", row_number().over(w).cast("long"))
-      .filter(col("rnk") <= k)
-      .select(col("q_id"), col("doc_id").as("c_id"), col("n_common"),
-        col("bm25_r"), col("rnk"))
-  }
+               k1: Double = 1.2, b: Double = 0.75): DataFrame =
+    bm25TopKFrom(postingStoreFrame(documents, 1.0, k1, b), nQueries, k)
 
   /** Reciprocal-rank fusion (Cormack et al., SIGIR 2009) — the
     * standard way hybrid retrieval combines rankers with incomparable
@@ -1885,113 +1772,24 @@ object Text {
       .filter(col("fused_rnk") <= k)
   }
 
-  /** Hybrid retrieval fused into ONE pass: the tf·idf-cosine ranking
-    * ([[tfidfCosineTopK]]) and the BM25 ranking ([[bm25TopK]]) computed
-    * as two score columns of the SAME (q_id, c_id) aggregate over one
-    * shared posting join, ranked twice (two window sorts over one
-    * query-partitioned exchange of the model-sized aggregate), then
-    * RRF-fused ([[rrfFuse]] semantics — identical to running the three
-    * operators separately up to rounding-boundary ties: the fused plan
-    * sums conditional 0.0 terms in a different join/partition order,
-    * so a float score landing EXACTLY on a round(...,4)/round(...,6)
-    * boundary could tip the other way and swap adjacent ranks. No such
-    * boundary score exists in the tested corpora — HybridRrfSpec pins
-    * bit-equality there — and ties inside a rank order break on the
-    * exact integer c_id key either way. Composing the three operators
-    * would re-run the tokenize → posting join → aggregate chain once
-    * per ranker).
-    *
-    * The two rankers disagree only on (a) the per-(q,c,token) score
-    * term and (b) the candidate universe: tf·idf pairs meet through
-    * KEPT tokens only (df ≤ dfCapFrac·N — the posting-bound lever, see
-    * [[tfidfCosineTopK]]), BM25 through any shared token. The fused
-    * join streams ALL shared tokens and carries the kept predicate as
-    * a column: cosine contributions and the kept-token count fold
-    * conditionally, and the cosine rank orders kept-pairs first so
-    * row numbers over the superset equal row numbers over the tf·idf
-    * frame exactly — candidates sharing only capped tokens can never
-    * steal a cosine rank.
-    *
-    * Shape: ONE tokenize into the cached (doc, token, tf) collapse;
-    * df / scalar stats vocabulary- and driver-sized broadcasts; the
-    * per-doc (length, norm) frame folds on the doc-partitioned
-    * collapse with no exchange; the broadcast query side streams the
-    * posting join corpus-side shuffle-free; per-(q,c) partials
-    * map-side. Same 100 TB levers as the parents (df cap, Bayardo
-    * prefix filter next).
+  /** Hybrid retrieval: the tf·idf-cosine ranking ([[tfidfCosineTopK]])
+    * and the BM25 ranking ([[bm25TopK]]) RRF-fused ([[rrfFuse]]
+    * semantics) in one pass — [[hybridRrfTopKFrom]] over a
+    * [[postingStoreFrame]] capped at `dfCapFrac`. HybridRrfSpec pins it
+    * equal to the three operators composed, row for row.
     */
   def hybridRrfTopK(documents: DataFrame, nQueries: Int, kPer: Int,
                     kFused: Int, dfCapFrac: Double, k1: Double = 1.2,
-                    b: Double = 0.75, c: Double = 60.0): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    require(dfCapFrac > 0.0 && dfCapFrac <= 1.0, "df cap must be a fraction of N")
-    val byDoc = documents.repartition(col("doc_id"))
-    val tf = graft.CacheScope.cached(byDoc
-      .select(col("doc_id"), explode(Dedup.tokens(col("text"))).as("token"))
-      .groupBy(col("doc_id"), col("token"))
-      .agg(count(lit(1)).as("tf")))
-    val df = tf.groupBy(col("token")).agg(count(lit(1)).as("df"))
-    // tf·idf's N counts ALL docs (empty ones included — its oracle
-    // counts over `documents`); BM25's N counts token-BEARING docs
-    // (its oracle counts over the length table). Keep both. BM25's
-    // scalars fold from the collapse in ONE pass: avg(dl) over the
-    // per-doc length table = Σtf / #docs exactly (integer sums, same
-    // double division), so no per-doc intermediate is materialized
-    // just to average it.
-    val nDocsT = documents.agg(countDistinct(col("doc_id")).cast("double").as("__nt"))
-    val stats = tf.agg(
-      countDistinct(col("doc_id")).cast("double").as("__n"),
-      (sum(col("tf")).cast("double") /
-        countDistinct(col("doc_id")).cast("double")).as("__avgdl"))
-    val kept = col("df") <= col("__nt") * dfCapFrac
-    val w = col("tf") * log(col("__nt") / col("df"))
-    val byDocW = Window.partitionBy(col("doc_id"))
-    // per-doc model columns (BM25 length over all tokens, cosine norm
-    // over the kept vocabulary) ride ONE doc-partitioned window on the
-    // already-doc-partitioned stream — no aggregate + join-back, no
-    // second pass (a per-doc table sort-merge-joined back would be
-    // recomputed once per consumer)
-    def withPerDoc(t: DataFrame): DataFrame = t
-      .join(broadcast(df), Seq("token"))
-      .crossJoin(broadcast(nDocsT))
-      .withColumn("dl", sum(col("tf")).over(byDocW))
-      .withColumn("nrm",
-        sqrt(sum(when(kept, w * w).otherwise(lit(0.0))).over(byDocW)))
-    // ONE broadcast query frame serves both rankers: the token set
-    // (BM25's query) with the kept-vocab unit weight (tf·idf's query;
-    // null on capped tokens — a query doc with no kept token has no
-    // kept rows, so the nrm division never sees a zero). Built from
-    // the nQueries-doc slice alone: a doc's norm depends only on its
-    // own rows, so the full per-doc table is never needed here.
-    val q = withPerDoc(tf.filter(col("doc_id") < nQueries))
-      .select(col("doc_id").as("q_id"), col("token"),
-        when(kept, w / col("nrm")).as("qw"))
-    val idf = log(lit(1.0) + (col("__n") - col("df") + 0.5) / (col("df") + 0.5))
-    val bmNorm = col("tf") * (k1 + 1.0) /
-      (col("tf") + lit(k1) * (lit(1.0 - b) + lit(b) * col("dl") / col("__avgdl")))
-    // the (q_id, doc_id) aggregate clusters under the same doc_id
-    // partitioning the windows used — corpus side: zero exchanges from
-    // scan to scored
-    val scored = withPerDoc(tf)
-      .crossJoin(broadcast(stats))
-      .join(broadcast(q), Seq("token"))
-      .filter(col("q_id") =!= col("doc_id"))
-      .groupBy(col("q_id"), col("doc_id"))
-      .agg(
-        round(sum(when(kept, (w / col("nrm")) * col("qw")).otherwise(lit(0.0))), 4)
-          .as("cos_r"),
-        sum(when(kept && col("qw").isNotNull, 1L).otherwise(0L)).as("n_kept"),
-        round(sum(idf * bmNorm), 4).as("bm25_r"))
-    fuseScored(scored, kPer, kFused, c)
-  }
+                    b: Double = 0.75, c: Double = 60.0): DataFrame =
+    hybridRrfTopKFrom(postingStoreFrame(documents, dfCapFrac, k1, b),
+      nQueries, kPer, kFused, c)
 
-  /** The fusion back-half shared by [[hybridRrfTopK]] and
-    * [[hybridRrfTopKFrom]]: rank the (q_id, doc_id, cos_r, n_kept,
-    * bm25_r) aggregate twice and RRF-fuse. Kept-pairs-first ordering:
-    * rows with n_kept = 0 exist only in the BM25 universe, so they
-    * sort after every genuine tf·idf candidate and the row numbers of
-    * the n_kept > 0 prefix reproduce tfidfCosineTopK's ranking
-    * bit-for-bit.
+  /** The fusion back-half of [[hybridRrfTopKFrom]]: rank the (q_id,
+    * doc_id, cos_r, n_kept, bm25_r) aggregate twice and RRF-fuse.
+    * Kept-pairs-first ordering: rows with n_kept = 0 exist only in the
+    * BM25 universe, so they sort after every genuine tf·idf candidate
+    * and the row numbers of the n_kept > 0 prefix reproduce
+    * tfidfCosineTopK's ranking bit-for-bit.
     */
   private def fuseScored(scored: DataFrame, kPer: Int, kFused: Int,
                          c: Double): DataFrame = {
@@ -2035,10 +1833,9 @@ object Text {
     * time — the store is versioned by its similarity config exactly as
     * a search index is.
     *
-    * Weight definitions match [[hybridRrfTopK]] term for term: tf·idf
-    * N counts ALL docs (`__nt`), BM25's N counts token-BEARING docs
-    * (`__n`), avgdl = Σtf / #token-bearing docs, cosine norms fold
-    * over the kept vocabulary only.
+    * Weight definitions: tf·idf N counts ALL docs (`__nt`), BM25's N
+    * counts token-BEARING docs (`__n`), avgdl = Σtf / #token-bearing
+    * docs, cosine norms fold over the kept vocabulary only.
     */
   def postingStoreFrame(documents: DataFrame, dfCapFrac: Double,
                         k1: Double = 1.2, b: Double = 0.75): DataFrame = {
@@ -2091,12 +1888,12 @@ object Text {
 
   /** [[tfidfCosineTopK]] over the posting store (kept rows carry their
     * unit weights): broadcast-query posting join + rank window — two
-    * jobs where the raw form paid six; ONE when the bounded query
-    * slice arrives as a driver-local frame (`qSlice`: columns q_id /
-    * token / qw, the search-request side of the retrieval call — 100 TB
-    * of corpus scales the store, never the query set, so holding the
-    * slice driver-side is the same sanctioned bounded-input pattern as
-    * Sim's query matrices, and its broadcast needs no scan job).
+    * jobs; ONE when the bounded query slice arrives as a driver-local
+    * frame (`qSlice`: columns q_id / token / qw, the search-request
+    * side of the retrieval call — 100 TB of corpus scales the store,
+    * never the query set, so holding the slice driver-side is the same
+    * sanctioned bounded-input pattern as Sim's query matrices, and its
+    * broadcast needs no scan job).
     */
   def tfidfCosineTopKFrom(store: DataFrame, nQueries: Int, k: Int,
                           qSlice: Option[DataFrame] = None): DataFrame = {
@@ -2124,8 +1921,11 @@ object Text {
 
   /** [[bm25TopK]] over the posting store (per-posting `bm_w` is the
     * whole score term): broadcast-query posting join + rank window —
-    * two jobs where the raw form paid five; ONE with a driver-local
-    * `qSlice` (see [[tfidfCosineTopKFrom]]'s bounded-query note).
+    * two jobs; ONE with a driver-local `qSlice` (see
+    * [[tfidfCosineTopKFrom]]'s bounded-query note). Every posting
+    * scores, `kept` or not: the store's df cap bounds the tf·idf
+    * rankers only, and a caller that wants it here passes
+    * `store.filter(col("kept"))`.
     */
   def bm25TopKFrom(store: DataFrame, nQueries: Int, k: Int,
                    qSlice: Option[DataFrame] = None): DataFrame = {
@@ -2150,12 +1950,23 @@ object Text {
   }
 
   /** [[hybridRrfTopK]] over the posting store: both rankers' per-token
-    * terms are store columns, so the whole hybrid is a broadcast-query
-    * posting join + the shared fusion back-half — two jobs where the
-    * raw fused form paid five. Semantics identical (the query-side
-    * unit weight `qw` is NULL exactly on capped tokens, so the
-    * kept-conditional sums and the n_kept ordering behave as in the
-    * raw form).
+    * terms are store columns, so the whole hybrid is ONE broadcast-query
+    * posting join + the fusion back-half ([[fuseScored]]) — the two
+    * rankings are two score columns of the same (q_id, c_id) aggregate,
+    * where composing the three operators would run the posting join
+    * once per ranker.
+    *
+    * The rankers disagree only on the per-token score term and the
+    * candidate universe: tf·idf pairs meet through KEPT tokens only,
+    * BM25 through any shared token. The join streams ALL shared tokens
+    * and carries the kept predicate as a column (the query-side unit
+    * weight `qw` is NULL exactly on capped tokens): cosine terms and
+    * the kept-token count fold conditionally, and the cosine rank
+    * orders kept-pairs first, so candidates sharing only capped tokens
+    * can never steal a cosine rank. Equal to the composed form up to
+    * rounding-boundary ties: the sums run in a different order, so a
+    * score landing EXACTLY on a round(...,4)/round(...,6) boundary
+    * could tip the other way (none does in the tested corpora).
     */
   def hybridRrfTopKFrom(store: DataFrame, nQueries: Int, kPer: Int,
                         kFused: Int, c: Double = 60.0,
@@ -2614,8 +2425,7 @@ object Text {
         concat_ws(" ",
           (0 until k).map(i => try_element_at(col("toks"), col("pos") + i)): _*)
           .as("gram"))
-      .withColumn("h",
-        expr("cast(conv(substring(md5(cast(gram as binary)), 1, 8), 16, 10) as bigint) % 2147483647"))
+      .withColumn("h", Dedup.shingleHash(col("gram")))
     val frame = Window.partitionBy(col("doc_id")).orderBy(col("pos"))
       .rowsBetween(Window.currentRow, w - 1)
     val perDoc = Window.partitionBy(col("doc_id"))
@@ -2828,23 +2638,14 @@ object Text {
         when(col("z") >= 0, 1).otherwise(0).as("pred"))
   }
 
-  /** The full gate: plant the labeled corpus, train on the bounded
-    * sample, score everything map-side.
-    */
-  def qualityClassifier(documents: DataFrame, dim: Int = 256,
-                        sampleMod: Int = 1, maxPerClass: Int = 1000)
-      : DataFrame = {
-    val corpus = qualityCorpus(documents)
-    val (w, b) = trainQualityLrLocal(corpus, dim, sampleMod, maxPerClass)
-    qualityScoreFrom(corpus, dim, w, b)
-  }
-
-  /** Pinned-weights DuckDB oracle for [[qualityClassifier]] — the
-    * `q_sim_lsh` trick: the trained model is DATA, so the oracle
-    * embeds the weight doubles as literals (Scala's toString is the
-    * shortest round-trip form, so DuckDB parses back the identical
-    * binary double) and independently recomputes corpus, features,
-    * fold, sigmoid, and the z ≥ 0 decision.
+  /** Pinned-weights DuckDB oracle for q_quality_classifier, the trained
+    * gate ([[qualityCorpus]] → [[trainQualityLrLocal]] →
+    * [[qualityScoreFrom]]) — the `q_sim_lsh` trick: the trained model
+    * is DATA, so the oracle embeds the weight doubles as literals
+    * (Scala's toString is the shortest round-trip form, so DuckDB
+    * parses back the identical binary double) and independently
+    * recomputes corpus, features, fold, sigmoid, and the z ≥ 0
+    * decision.
     */
   def qualityClassifierOracleSql(dim: Int, w: Array[Double], b: Double)
       : String = {

@@ -39,8 +39,8 @@ package graft
   *  - [[graft.ops.Mutations]] — dimension maintenance: MERGE
   *    upsert-with-update, SCD2 history build, snapshot CDC diff.
   *  - [[graft.ops.Multimodal]] — binary media columns, typed metadata,
-  *    byte-range chunk planning, per-partition decode behind a
-  *    clearly-stubbed codec.
+  *    byte-range chunk planning, per-partition decode through pure-JVM
+  *    PPM, WAV, JPEG and PNG codecs.
   *  - [[graft.ops.TypedOps]] — the typed `Dataset[Event]` tier: typed
   *    aggregators, column-vs-lambda filters, mapGroups.
   *  - [[graft.ops.TopK]] — exact top-k per group as a bounded-state

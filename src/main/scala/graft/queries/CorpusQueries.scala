@@ -446,7 +446,7 @@ private[graft] object CorpusQueries {
         |FROM b ORDER BY doc_id""".stripMargin)),
 
     Query("q_quality_classifier", (s, dir) => {
-      // trained quality gate (Text.qualityClassifier): logistic
+      // trained quality gate (Text.qualityScoreFrom): logistic
       // regression over length-normalized hashed-BoW features, trained
       // driver-locally on a bounded per-class sample of the planted
       // clean/spam corpus, scored map-side with the weights as column

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery}
 import org.apache.spark.sql.types.StructType
+import graft.ops.Sketches
 
 /** Streaming aggregation surfaces (SURVEY §2.10): watermarked tumbling
   * windows with append-mode finalization, and custom keyed state via
@@ -34,9 +35,10 @@ object StreamingAggregates {
     * is THE streaming distinct answer at scale). Register update is a
     * plain MAX aggregate (monotone, map-side combinable), so the
     * watermarked append-mode window finalizes registers like any other
-    * aggregate; the sink holds (window, group, idx, mj) rows and the
-    * serving layer projects estimates with the batch operator's α /
-    * linear-counting math — StreamingAggSpec pins that the projected
+    * aggregate; registers are the batch operators' own
+    * ([[graft.ops.Sketches.hllRegister]]), the sink holds (window,
+    * group, idx, mj) rows and the serving layer projects estimates
+    * with the batch α / linear-counting math — StreamingAggSpec pins that the projected
     * estimate equals [[graft.ops.Sketches.hllDistinct]] EXACTLY on the
     * same data (identical registers ⇒ identical estimate, not merely
     * within error).
@@ -51,16 +53,11 @@ object StreamingAggregates {
       checkpointDir: String,
       sinkDir: String,
       lateness: String = "1 hour"): StreamingQuery = {
-    def h(chunk: Int) = conv(substring(
-      md5(col(keyCol).cast("string").cast("binary")), 1 + 8 * chunk, 8), 16, 10)
-      .cast("long")
-    val w2 = h(1)
-    val rho = when(w2 === 0L, lit(33L)).otherwise(lit(33L) - length(bin(w2)))
+    val (idx, rho) = Sketches.hllRegister(col(keyCol).cast("string"))
     Drain.toParquet(
       Drain.watermarked(spark, sourceDir, schema, tsMicrosCol, lateness,
           col(groupCol).isNotNull && col(keyCol).isNotNull)
-        .groupBy(window(col("__event_time"), "1 hour"), col(groupCol),
-          (h(0) % 64).as("idx"))
+        .groupBy(window(col("__event_time"), "1 hour"), col(groupCol), idx.as("idx"))
         .agg(max(rho).as("mj"))
         .select(col("window.start").as("win_start"), col(groupCol),
           col("idx"), col("mj")),
@@ -93,9 +90,7 @@ object StreamingAggregates {
       Drain.watermarked(spark, sourceDir, schema, tsMicrosCol, lateness, col(keyCol).isNotNull)
         .select(col("__event_time"), col(keyCol).cast("string").as("k"),
           explode(sequence(lit(0), lit(d - 1))).as("j"))
-        .withColumn("b",
-          conv(substring(md5(concat(col("j").cast("string"), lit("|"), col("k"))
-            .cast("binary")), 1, 8), 16, 10).cast("long") % w)
+        .withColumn("b", Sketches.hashSlot(col("j"), col("k"), w))
         .groupBy(window(col("__event_time"), "1 hour"), col("j"), col("b"))
         .agg(count(lit(1)).as("c"))
         .select(col("window.start").as("win_start"), col("j"), col("b"), col("c")),
@@ -130,9 +125,7 @@ object StreamingAggregates {
       Drain.watermarked(spark, sourceDir, schema, tsMicrosCol, lateness, col(keyCol).isNotNull)
         .select(col("__event_time"), col(keyCol).cast("string").as("bk"),
           explode(sequence(lit(0), lit(k - 1))).as("i"))
-        .withColumn("pos",
-          conv(substring(md5(concat(col("i").cast("string"), lit("|"), col("bk"))
-            .cast("binary")), 1, 8), 16, 10).cast("long") % m)
+        .withColumn("pos", Sketches.hashSlot(col("i"), col("bk"), m))
         .groupBy(window(col("__event_time"), "1 hour"), col("pos"))
         .agg(count(lit(1)).as("n_keys"))
         .select(col("window.start").as("win_start"), col("pos"), col("n_keys")),
@@ -140,9 +133,8 @@ object StreamingAggregates {
 
   /** Streaming HDR-histogram buckets per tumbling window — the
     * quantile twin completing the sketch family: values quantize to
-    * cents and bucket with the SAME integer-only log-linear math as
-    * the batch [[graft.ops.Sketches.hdrQuantiles]] (8·bitlength + the
-    * 3 sub-bits under the leading one), maintained as a plain
+    * cents and bucket through [[graft.ops.Sketches.hdrBucketed]], the
+    * batch [[graft.ops.Sketches.hdrQuantiles]]' own bucketing, maintained as a plain
     * watermarked (window, group, bucket) count — bounded at ~8·64
     * rows per (window, group) at ANY value cardinality. The sink
     * holds finalized (win_start, group, bucket, c, rep) rows; the
@@ -166,19 +158,7 @@ object StreamingAggregates {
           col(groupCol).isNotNull && col(valueCol).isNotNull && col(valueCol) >= 0)
         .select(col("__event_time"), col(groupCol).as("g"),
           floor(col(valueCol) * 100).cast("long").as("vc"))
-        .withColumn("blen", length(bin(col("vc"))).cast("long"))
-        .withColumn("mant",
-          when(col("vc") >= 16,
-            expr("shiftright(vc, cast(blen - 4 as int))")).otherwise(lit(0L)))
-        .withColumn("bucket",
-          when(col("vc") < 16, col("vc"))
-            .otherwise(col("blen") * 8 + (col("mant") - 8)))
-        .withColumn("rep",
-          when(col("vc") < 16, col("vc").cast("double") / 100.0)
-            .otherwise(
-              (expr("shiftleft(mant, cast(blen - 4 as int))").cast("double") +
-                expr("shiftleft(mant + 1, cast(blen - 4 as int))").cast("double"))
-                / 2.0 / 100.0))
+        .transform(Sketches.hdrBucketed)
         .groupBy(window(col("__event_time"), "1 hour"), col("g"), col("bucket"))
         .agg(count(lit(1)).as("c"), max(col("rep")).as("rep"))
         .select(col("window.start").as("win_start"), col("g"),

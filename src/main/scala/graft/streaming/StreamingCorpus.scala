@@ -278,7 +278,7 @@ object StreamingCorpus {
   /** Runs `body` with Spark's multi-stateful-operator analyzer guard
     * (`spark.sql.streaming.statefulOperator.checkCorrectness.enabled`)
     * disabled, restoring the session's prior value afterwards — the
-    * opt-in scope for starting [[webCorpusStream]] (whose chained
+    * opt-in scope for starting [[webCorpusStreamCycle]] (whose chained
     * append-mode stages are proven safe in its scaladoc) without
     * stripping the guard from every other streaming query the session
     * later builds. Wrap BOTH the plan construction and the
@@ -297,7 +297,8 @@ object StreamingCorpus {
     }
   }
 
-  /** The STREAMING end-to-end crawl capstone: [[canonicalFirstSeen]]'s
+  /** The STREAMING end-to-end crawl capstone, and the full nightly
+    * cycle as one continuous query: [[canonicalFirstSeen]]'s
     * canonical race CHAINED INTO [[incrementalDedup]]'s text-hash first-seen state in
     * ONE streaming query, probing the SAME materialized standing
     * indexes as the batch increment
@@ -332,6 +333,24 @@ object StreamingCorpus {
     * batch)` row for row, across arbitrary micro-batch splits — the
     * streaming twin of the increment ≡ union law.
     *
+    * The streamed index write-back: besides its verdict (doc_id, ts_us,
+    * stage, tok_cnt), each row carries `delta_canon` / `delta_text`,
+    * non-NULL exactly on the row whose claim FIRST admitted that key
+    * (stage 1 flags the arrival that takes a canonical's keeper slot against
+    * standing index ∪ stream state; stage 2 flags the arrival whose
+    * text hash first survives both) — so the keys with a non-NULL
+    * delta column are precisely [[graft.ops.Corpus.webCorpusIndexDelta]]'s
+    * append set: the batch form admits a canonical iff ANY gate
+    * survivor claims it (rank-free) and a text hash iff any
+    * canonical-stage survivor carries it, which is "a first such
+    * arrival exists", and the standing anti-join is the broadcast
+    * index probe both stages already consult. The sink routes verdict
+    * columns to the verdict store and the non-NULL delta values to
+    * the per-kind index appends — WebCorpusStreamSpec pins streamed
+    * deltas ≡ batch deltas across micro-batch splits, day-2 junction
+    * included. No new state: the claim flag rides the same boolean
+    * the races already keep.
+    *
     * On `statefulOperator.checkCorrectness`: Spark's analyzer cannot
     * see inside a flatMapGroupsWithState, so it conservatively rejects
     * any stateful operator downstream of one — the hazard it guards
@@ -351,35 +370,6 @@ object StreamingCorpus {
     * [[withChainedStatefulGuardDisabled]], which restores the prior
     * session value the moment the query is running. The spec proves
     * the semantics across batch splits under exactly that scope.
-    */
-  def webCorpusStream(
-      pages: DataFrame,
-      tsMicrosCol: String,
-      canonIdx: DataFrame,
-      textIdx: DataFrame,
-      linkDensityPct: Int = 30,
-      lateness: String = "1 hour"): DataFrame =
-    webCorpusStreamCycle(pages, tsMicrosCol, canonIdx, textIdx,
-      linkDensityPct, lateness)
-      .select(col("doc_id"), col("ts_us"), col("stage"), col("tok_cnt"))
-
-  /** [[webCorpusStream]] PLUS the streamed index write-back — the full
-    * nightly cycle as one continuous query: each verdict row also
-    * carries `delta_canon` / `delta_text`, non-NULL exactly on the row whose claim FIRST admitted that key (stage 1
-    * flags the arrival that takes a canonical's keeper slot against
-    * standing index ∪ stream state; stage 2 flags the arrival whose
-    * text hash first survives both) — so the keys with a non-NULL
-    * delta column are precisely [[graft.ops.Corpus.webCorpusIndexDelta]]'s
-    * append set: the batch form admits a canonical iff ANY gate
-    * survivor claims it (rank-free) and a text hash iff any
-    * canonical-stage survivor carries it, which is "a first such
-    * arrival exists", and the standing anti-join is the broadcast
-    * index probe both stages already consult. The sink routes verdict
-    * columns to the verdict store and the non-NULL delta values to
-    * the per-kind index appends — WebCorpusStreamSpec pins streamed
-    * deltas ≡ batch deltas across micro-batch splits, day-2 junction
-    * included. No new state: the claim flag rides the same boolean
-    * the races already keep.
     */
   def webCorpusStreamCycle(
       pages: DataFrame,

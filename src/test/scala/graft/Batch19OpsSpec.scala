@@ -6,9 +6,8 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.ops.{Dedup, Multimodal, Relational, Sim, Text}
 
-/** Batch 19: segment-level exact dedup, sparse TF-IDF cosine
-  * retrieval, Kneser-Ney bigram scoring, l-diversity gate, SQ8 ANN,
-  * perceptual average-hash.
+/** Batch 19: segment-level exact dedup, Kneser-Ney bigram scoring,
+  * l-diversity gate, SQ8 ANN, perceptual average-hash.
   */
 class Batch19OpsSpec extends AnyFunSuite {
 
@@ -56,35 +55,6 @@ class Batch19OpsSpec extends AnyFunSuite {
     val out = Dedup.segmentDedup(docs, w = 2).collect().head
     assert(out.getLong(1) === 3L) // [t1 t2][t3 t4][t5]
     assert(out.getLong(2) === 0L)
-  }
-
-  // ---- tfidfCosineTopK ---------------------------------------------------
-
-  test("tfidfCosineTopK: identical docs rank first with cosine 1; disjoint docs never pair") {
-    val docs = Seq(
-      (0L, "apple banana cherry"),
-      (5L, "apple banana cherry"), // exact copy of the query doc
-      (6L, "apple banana date"),   // partial overlap
-      (7L, "xx yy zz")             // disjoint — must not appear
-    ).toDF("doc_id", "text")
-    val out = Text.tfidfCosineTopK(docs, nQueries = 1, k = 3, dfCapFrac = 1.0)
-      .collect().map(r => (r.getLong(1), r.getDouble(3), r.getLong(4)))
-    assert(out.map(_._1).toSet === Set(5L, 6L))
-    val top = out.find(_._3 == 1L).get
-    assert(top._1 === 5L && top._2 === 1.0)
-  }
-
-  test("tfidfCosineTopK: df cap drops universal tokens from pairing") {
-    val docs = Seq(
-      (0L, "common rare1"),
-      (1L, "common rare2"),
-      (2L, "common rare3"),
-      (3L, "common rare4")
-    ).toDF("doc_id", "text")
-    // 'common' is in 4/4 docs; cap at 0.5 prunes it — no shared tokens
-    // remain, so the query has NO candidates at all
-    val out = Text.tfidfCosineTopK(docs, nQueries = 1, k = 3, dfCapFrac = 0.5)
-    assert(out.count() === 0L)
   }
 
   // ---- knBigramLogProb ---------------------------------------------------

@@ -2,67 +2,16 @@ package graft
 
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import graft.ops.{Multimodal, Sim, Text}
+import graft.ops.{Multimodal, Sim}
 
-/** Batch 20: BM25 retrieval, reciprocal-rank fusion, MaxSim late
-  * interaction, perceptual-hash banding. (saltedJoin — now also a
-  * declared query — keeps its own SaltedJoinSpec.)
+/** Batch 20: MaxSim late interaction, perceptual-hash banding. (BM25
+  * and reciprocal-rank fusion live in PostingStoreSpec; saltedJoin —
+  * now also a declared query — keeps its own SaltedJoinSpec.)
   */
 class Batch20OpsSpec extends AnyFunSuite {
 
   private val spark = SparkTestSession.spark
   import spark.implicits._
-
-  // ---- bm25TopK ----------------------------------------------------------
-
-  test("bm25TopK: tf saturates and length normalization penalizes bulk") {
-    val docs = Seq(
-      (0L, "apple"),                                  // the query: one term
-      (5L, "apple pear"),                             // tf=1, short
-      (6L, "apple apple apple apple pear pear pear pear"), // tf=4, long
-      (7L, "pear plum")                               // no match
-    ).toDF("doc_id", "text")
-    val out = Text.bm25TopK(docs, nQueries = 1, k = 3)
-      .collect().map(r => r.getLong(1) -> r.getDouble(3)).toMap
-    assert(!out.contains(7L))
-    // saturation+length norm: 4 mentions in a 4x longer doc must score
-    // LESS than 4x the single mention — and with k1=1.2 the two land
-    // close; assert the bound rather than a brittle ordering
-    assert(out(6L) < 4 * out(5L))
-    assert(out(5L) > 0.0 && out(6L) > 0.0)
-  }
-
-  test("bm25TopK matches a hand-computed score") {
-    val docs = Seq(
-      (0L, "a b"),
-      (5L, "a c"),
-      (6L, "c d")
-    ).toDF("doc_id", "text")
-    val out = Text.bm25TopK(docs, nQueries = 1, k = 3)
-      .collect().map(r => r.getLong(1) -> r.getDouble(3)).toMap
-    // corpus: N=3 docs, all dl=2, avgdl=2. Query tokens {a, b}.
-    // doc 5 matches only 'a': df(a)=2 ⇒ idf=ln(1+(3-2+0.5)/(2.5))=ln(1.6)
-    // tf=1 ⇒ norm = 1*2.2/(1+1.2*(0.25+0.75*2/2)) = 2.2/2.2 = 1
-    val expected = BigDecimal(math.log(1.0 + 1.5 / 2.5))
-      .setScale(4, BigDecimal.RoundingMode.HALF_UP).toDouble
-    assert(out(5L) === expected)
-    assert(!out.contains(6L)) // shares no query token
-  }
-
-  // ---- rrfFuse -----------------------------------------------------------
-
-  test("rrfFuse: appearing in both lists beats a single top rank") {
-    val r1 = Seq((0L, 10L, 1L), (0L, 11L, 2L)).toDF("q_id", "c_id", "rnk")
-    val r2 = Seq((0L, 12L, 1L), (0L, 11L, 2L)).toDF("q_id", "c_id", "rnk")
-    val out = Text.rrfFuse(Seq(r1, r2), c = 60.0, k = 3)
-      .collect().map(r => (r.getLong(1), r.getLong(2), r.getLong(4))).toList
-      .sortBy(_._3)
-    // candidate 11 is rank-2 in BOTH lists: 2/62 > 1/61 of the
-    // single-list rank-1s — fusion puts consensus first
-    assert(out.head._1 === 11L && out.head._2 === 2L)
-    // the two single-list candidates tie on score; id tiebreak
-    assert(out.map(_._1) === List(11L, 10L, 12L))
-  }
 
   // ---- maxSimTopK --------------------------------------------------------
 

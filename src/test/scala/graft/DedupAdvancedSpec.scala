@@ -1,7 +1,7 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import graft.ops.{Dedup, Multimodal}
+import graft.ops.Dedup
 
 /** Near-dup + multimodal operator semantics on hand-checkable fixtures. */
 class DedupAdvancedSpec extends AnyFunSuite {
@@ -90,25 +90,6 @@ class DedupAdvancedSpec extends AnyFunSuite {
       .map(r => r.getLong(0) -> r.getLong(3)).toMap
     assert(banded === cl)
     CacheScope.flush()
-  }
-
-  test("stub media decode: frame counts per kind, deterministic features") {
-    val docs = Seq(
-      (0L, "abcdabcdabcdabcd", "en", "s", 16L),
-      (1L, "zzzz", "en", "s", 4L),
-      (2L, "qqqq", "en", "s", 4L)
-    ).toDF("doc_id", "text", "lang", "source", "n_chars")
-    val media = Multimodal.mediaFromDocuments(docs)
-    val feats = Multimodal.decodeFeatures(media)
-      .collect().map(f => f.media_id -> f).toMap
-    assert(feats(0L).kind === "image" && feats(0L).n_frames === 1)
-    assert(feats(1L).kind === "audio" && feats(1L).n_frames === 4)
-    assert(feats(2L).kind === "video" && feats(2L).n_frames === 8)
-    // mean byte of "zzzz" slices is 'z' = 122 in every frame
-    assert(feats(1L).features.forall(_ === 122.0))
-    // decode is deterministic
-    val again = Multimodal.decodeFeatures(media).collect().map(f => f.media_id -> f.features.toSeq).toMap
-    assert(again === feats.map { case (k, v) => k -> v.features.toSeq })
   }
 
   test("df-capped Jaccard equals the uncapped form when loose, never overestimates when tight") {

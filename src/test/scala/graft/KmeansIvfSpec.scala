@@ -63,7 +63,7 @@ class KmeansIvfSpec extends AnyFunSuite {
   }
 
   test("k-means training finds the blobs: every blob ends as a non-empty cell") {
-    val cents = Sim.kmeansCentroids(emb, k = 8, iters = 4)
+    val cents = Sim.kmeansCentroidsSampledLocal(emb, k = 8, iters = 4, sampleMod = 1)
     assert(cents.size === 8)
     // trained centroids must be distinct directions (untrained collapse
     // would leave duplicates / stale inits)

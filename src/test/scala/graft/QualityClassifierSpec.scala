@@ -4,7 +4,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.ops.Text
 
-/** The trained quality gate (Text.qualityClassifier — the GPT-3/CCNet
+/** The trained quality gate (Text.qualityScoreFrom — the GPT-3/CCNet
   * classifier-filter shape: LR over length-normalized hashed-BoW,
   * driver-trained on a bounded sample, scored map-side). The oracle
   * gate proves score arithmetic under PINNED weights; these specs
