@@ -58,29 +58,14 @@ object Incremental {
 
   final case class RunResult(rowsFetched: Long, rowsInserted: Long, newWatermarkUs: Long)
 
-  /** One incremental run. `transform` is the pluggable extraction step
-    * (N1 etc.); `keys` is the natural dedup key. Returns None if another
-    * run with the same `statePath` is in flight (HTTP 409 analogue,
-    * `/root/reference/flask_server.py:270-271`).
-    */
-  def runOnce(
-      spark: SparkSession,
-      source: DataFrame,
-      tsCol: String,
-      keys: Seq[String],
-      statePath: String,
-      sinkDir: String,
-      defaultWatermarkUs: Long,
-      transform: DataFrame => DataFrame = identity): Option[RunResult] =
-    runOnceTo(spark, source, tsCol, keys, statePath, defaultWatermarkUs,
-      batch => Sinks.upsertAppend(spark, batch, sinkDir, keys), transform)
-
-  /** [[runOnce]] with a pluggable idempotent sink — the same watermark
-    * / dedup / advance-after-commit protocol feeding any conflict-skip
-    * writer: the parquet upsertAppend (default above), a live-Postgres
-    * [[Sinks.copyUpsertPostgres]] (the reference's actual target,
-    * exercised in PostgresDialectSpec), or a test double. The sink
-    * returns rows actually inserted (cursor.rowcount semantics).
+  /** One incremental run: the watermark / dedup / advance-after-commit
+    * protocol feeding a conflict-skip writer — the parquet
+    * `batch => Sinks.upsertAppend(spark, batch, dir, keys)`,
+    * [[Sinks.jdbcUpsert]], or a test double. The sink returns rows
+    * actually inserted (cursor.rowcount semantics). `transform` is the
+    * pluggable extraction step (N1 etc.); `keys` is the natural dedup
+    * key. Returns None if another run with the same `statePath` is in
+    * flight (HTTP 409 analogue, the reference's `flask_server.py:270-271`).
     *
     * The sink gets the deduplicated batch lazy, so the run is one Spark
     * query. The first action over the batch fills in its observed row

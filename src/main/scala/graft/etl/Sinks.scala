@@ -78,37 +78,6 @@ object Sinks {
   def overwrite(df: DataFrame, dir: String): Unit =
     df.write.mode("overwrite").parquet(dir)
 
-  /** Small-file compaction: rewrite a directory into `numFiles`
-    * right-sized parquet files. Long-running append pipelines (the
-    * incremental upsert sink) accumulate a file or two per run, one per
-    * data-sized partition of the run's write (see [[upsertAppend]]);
-    * at scale the fix is a periodic compaction pass sized so each file
-    * is ~128MB-1GB. Writes to a temp dir then swaps, so a crash
-    * mid-compact never loses the sink.
-    */
-  def compact(spark: SparkSession, dir: String, numFiles: Int): Unit = {
-    val tmp = dir + ".compacting"
-    spark.read.parquet(dir).repartition(numFiles)
-      .write.mode("overwrite").parquet(tmp)
-    val target = Paths.get(dir)
-    val backup = Paths.get(dir + ".old")
-    FileUtils.deleteQuietly(backup.toFile)
-    // Files.move throws on failure (unlike File.renameTo, which returns
-    // false and would let a failed swap fall through to the backup
-    // delete below — losing the only copy of the sink).
-    Files.move(target, backup)
-    try Files.move(Paths.get(tmp), target)
-    catch { case e: Throwable =>
-      Files.move(backup, target) // roll back: restore the original sink
-      throw e
-    }
-    // Only drop the backup once the swapped-in sink is really there.
-    if (!Files.isDirectory(target) || !Files.exists(target.resolve("_SUCCESS")))
-      throw new IllegalStateException(
-        s"compact: swapped target $dir is missing or incomplete; backup kept at $backup")
-    FileUtils.deleteQuietly(backup.toFile)
-  }
-
   /** Conflict-skip insert statement for a SQL dialect: the statement
     * text plus the row fields to bind, in bind order.
     */
@@ -191,99 +160,6 @@ object Sinks {
       }
     }
     inserted.value
-  }
-
-  /** Warehouse-scale Postgres load — the form the reference's
-    * row-batched `execute_batch(INSERT ... ON CONFLICT)` loop
-    * (`/root/reference/extract_bq.py:247-252`) takes at 100 TB: each
-    * partition streams CSV through `COPY ... FROM STDIN` into an
-    * UNLOGGED staging table (PostgreSQL's bulk fast path — no WAL, no
-    * per-row round trip, concurrent COPY writers are safe), then ONE
-    * set-based `INSERT ... SELECT ... ON CONFLICT (keys) DO NOTHING`
-    * moves staging into the target atomically and reports the inserted
-    * count (the reference's `cursor.rowcount` accounting, exactly).
-    *
-    * Transport is the `psql` CLI pipe (this sandbox ships a real
-    * PostgreSQL 15 but no pgJDBC jar); production swaps the pipe for
-    * the JDBC `CopyManager` — the byte stream and the SQL are
-    * identical. Returns rows inserted into the TARGET (conflicts
-    * skipped), like [[jdbcUpsert]].
-    *
-    * CSV contract: every non-null field is quoted (embedded quotes
-    * doubled), nulls are unquoted empty (COPY csv's NULL spelling) —
-    * lossless for arbitrary strings including delimiters/newlines.
-    */
-  def copyUpsertPostgres(df: DataFrame, psqlArgs: Seq[String], table: String,
-                         keys: Seq[String]): Long = {
-    import scala.sys.process._
-    val cols = df.schema.fieldNames.toSeq
-    val colList = cols.mkString(", ")
-    // Unique per-call staging name: a fixed `${table}_stage` would let
-    // two concurrent loads into the same target (a streaming drain plus
-    // an ad-hoc batch) DROP/clobber each other's staging mid-COPY and
-    // silently lose rows. Callers here are serialized (Incremental's
-    // single-flight guard, AvailableNow triggers), but the sink must not
-    // depend on that.
-    val staging = s"${table}_stg_${java.util.UUID.randomUUID().toString.take(13).replace("-", "")}"
-    // PostgreSQL truncates identifiers to 63 bytes with only a NOTICE —
-    // a long target name would silently truncate the unique suffix away
-    // and re-open the concurrent-clobber hole. Fail loudly instead.
-    require(staging.getBytes("UTF-8").length <= 63,
-      s"copyUpsertPostgres: staging identifier '$staging' exceeds PostgreSQL's " +
-        "63-byte limit — use a shorter target table name")
-    def psql(sql: String): String =
-      (Seq("psql") ++ psqlArgs ++
-        Seq("-X", "-t", "-A", "-v", "ON_ERROR_STOP=1", "-c", sql)).!!.trim
-    psql(s"DROP TABLE IF EXISTS $staging")
-    psql(s"CREATE UNLOGGED TABLE $staging (LIKE $table INCLUDING DEFAULTS)")
-    try {
-      val argsSer = psqlArgs // serializable capture for the task closure
-      df.foreachPartition { rows: Iterator[org.apache.spark.sql.Row] =>
-        if (rows.hasNext) {
-          val cmd = Seq("psql") ++ argsSer ++ Seq("-X", "-v", "ON_ERROR_STOP=1",
-            "-c", s"COPY $staging ($colList) FROM STDIN WITH (FORMAT csv)")
-          val pb = new java.lang.ProcessBuilder(cmd: _*)
-            .redirectOutput(java.lang.ProcessBuilder.Redirect.DISCARD)
-            .redirectError(java.lang.ProcessBuilder.Redirect.INHERIT)
-          val proc = pb.start()
-          val out = new java.io.BufferedWriter(
-            new java.io.OutputStreamWriter(proc.getOutputStream, "UTF-8"))
-          // Whitelisted types only: primitives/temporals render to
-          // PG-parseable unambiguous text; anything else (binary's
-          // '[B@...', WrappedArray, struct Rows) would silently corrupt
-          // the COPY stream — fail loudly instead.
-          def field(v: Any): String = v match {
-            case null => ""
-            case s: String => "\"" + s.replace("\"", "\"\"") + "\""
-            case _: java.lang.Long | _: java.lang.Integer | _: java.lang.Short |
-                 _: java.lang.Byte | _: java.lang.Double | _: java.lang.Float |
-                 _: java.lang.Boolean | _: java.math.BigDecimal |
-                 _: java.sql.Timestamp | _: java.sql.Date |
-                 _: java.time.Instant | _: java.time.LocalDate |
-                 _: java.time.LocalDateTime => v.toString
-            case other => sys.error(
-              s"copyUpsertPostgres: unsupported field type ${other.getClass.getName}" +
-                " — cast to a primitive/temporal/string column before the sink")
-          }
-          rows.foreach { r =>
-            out.write((0 until r.length).map(i => field(r.get(i))).mkString(","))
-            out.write("\n")
-          }
-          out.close()
-          val rc = proc.waitFor()
-          require(rc == 0, s"COPY writer exited $rc")
-        }
-      }
-      val res = psql(
-        s"""INSERT INTO $table ($colList)
-           |SELECT $colList FROM $staging
-           |ON CONFLICT (${keys.mkString(", ")}) DO NOTHING""".stripMargin)
-      // psql prints the command tag "INSERT 0 <n>" even under -t -A —
-      // the reference's cursor.rowcount, read from the same place
-      "INSERT\\s+\\d+\\s+(\\d+)".r.findFirstMatchIn(res)
-        .map(_.group(1).toLong)
-        .getOrElse(sys.error(s"unexpected INSERT tag: '$res'"))
-    } finally psql(s"DROP TABLE IF EXISTS $staging")
   }
 
   /** S6 — idempotent upsert: append only rows whose natural key is not

@@ -168,8 +168,7 @@ object Corpus {
     */
   def weightedSample(docs: DataFrame, domainCol: String,
                      weights: Map[String, Double]): DataFrame = {
-    val u = conv(substring(md5(col("doc_id").cast("string")), 9, 8), 16, 10)
-      .cast("double") / lit(4294967296.0)
+    val u = Sketches.h32(col("doc_id").cast("string"), 1).cast("double") / lit(4294967296.0)
     val w = weights.foldLeft(lit(0.0)) { case (acc, (dom, wt)) =>
       when(col(domainCol) === dom, wt).otherwise(acc)
     }
@@ -190,8 +189,7 @@ object Corpus {
     */
   def assignSplit(docs: DataFrame, cuts: Seq[(String, Double)]): DataFrame = {
     require(cuts.nonEmpty && cuts.last._2 >= 1.0, "last cut must cover [.., 1.0]")
-    val u = conv(substring(md5(col("doc_id").cast("string")), 9, 8), 16, 10)
-      .cast("double") / lit(4294967296.0)
+    val u = Sketches.h32(col("doc_id").cast("string"), 1).cast("double") / lit(4294967296.0)
     val expr0: Column = cuts.init.foldRight(lit(cuts.last._1): Column) {
       case ((label, hi), rest) => when(u < hi, label).otherwise(rest)
     }

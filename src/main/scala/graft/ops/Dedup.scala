@@ -123,9 +123,6 @@ object Dedup {
       .select(col("a"), col("b"), col("jaccard"))
   }
 
-  def ngramJaccardPairsCapped(corpus: DataFrame, threshold: Double, dfCap: Long): DataFrame =
-    ngramJaccardPairs(corpus, threshold, dfCap)
-
   /** Asymmetric CONTAINMENT pairs (Broder's other resemblance measure)
     * over a pre-built per-doc dedup frame: c(A→B) = |A∩B| / |A| — near
     * 1 when A is (mostly) inside B even if B is far larger, which
@@ -157,23 +154,6 @@ object Dedup {
       .filter(col("cont_a") >= threshold || col("cont_b") >= threshold)
       .select(col("a"), col("b"), col("cont_a"), col("cont_b"))
   }
-
-  /** MinHash signatures via the standard one-hash + permutation
-    * scheme: each shingle is md5'd ONCE to a 31-bit base hash, then
-    * `numHashes` linear permutations `(a_s·h + b_s) mod (2^31−1)` give
-    * the per-seed hash family. The permutation constants are fixed
-    * literals so the DuckDB oracle reproduces signatures bit-for-bit.
-    *
-    * Shape: explode shingles, hash each row once (whole-stage codegen),
-    * then ONE groupBy(doc) carrying `numHashes` `min` aggregates —
-    * partial aggregation collapses each task's rows to one signature
-    * per doc before the shuffle, so network traffic is docs×16 longs
-    * regardless of corpus size. (A nested-HOF formulation computes the
-    * md5 chain once per seed and drops out of codegen — measured 40×
-    * slower; don't go back to it.)
-    */
-  def minhashSignatures(corpus: DataFrame, numHashes: Int): DataFrame =
-    minhashSignaturesFromHashed(hashedShingles(corpus), numHashes)
 
   /** (doc_id, h) — the 31-bit shingle hashes every stage downstream of
     * shingling consumes. Factored out so a composed pipeline computes
@@ -223,7 +203,7 @@ object Dedup {
   /** MAP-SIDE MinHash signature: the whole signature from the text
     * column in one projection — no explode, no groupBy, NO SHUFFLE.
     * Same shingles (distinct 3-grams), same md5→31-bit base hash, same
-    * permutation family as the batch [[minhashSignatures]], so the two
+    * permutation family as [[docDedupFrame]]'s `minhashes`, so the two
     * forms produce IDENTICAL arrays (law-tested in DedupProps).
     *
     * This is the form Structured Streaming needs (a streaming source
@@ -266,25 +246,14 @@ object Dedup {
       .withColumn("minhashes", array((0 until numHashes).map(i => col(s"mh$i")): _*))
       .select(col("doc_id"), col("hs"), col("sz"), col("minhashes"))
 
-  private def minhashSignaturesFromHashed(hashed: DataFrame, numHashes: Int): DataFrame = {
-    val mins = minhashMins(numHashes)
-    // shingle-set size rides in the SAME aggregation — same grouping
-    // key, so exact-verify's |A|,|B| terms cost no second shuffle of
-    // the (much larger) hashed-shingle table
-    hashed.groupBy(col("doc_id"))
-      .agg(mins.head, mins.tail :+ count(lit(1)).as("sz"): _*)
-      .withColumn("minhashes", array((0 until numHashes).map(s => col(s"mh$s")): _*))
-      .select(col("doc_id"), col("minhashes"), col("sz"))
-  }
-
   /** MinHash + LSH banding: split the signature into `bands` bands of
     * `numHashes/bands` rows; docs sharing any (band, band-signature)
     * bucket become candidate pairs. One shuffle on the bucket key; the
     * classic sub-quadratic dedup at corpus scale.
     */
   def minhashLshCandidates(corpus: DataFrame, numHashes: Int = 16, bands: Int = 4): DataFrame =
-    lshCandidatesFromSigs(
-      CacheScope.cached(minhashSignatures(corpus, numHashes)), numHashes, bands)
+    minhashLshCandidatesFromFrame(
+      CacheScope.cached(docDedupFrame(corpus, numHashes)), numHashes, bands)
 
   /** [[minhashLshCandidates]] over a pre-built signature frame
     * (doc_id, minhashes) — the at-ingest materialized-signatures path.
@@ -328,10 +297,8 @@ object Dedup {
     * candidacy and exact verification (E[est] = J, sd ≈ √(J(1−J)/16)).
     */
   def minhashJaccardEstimates(corpus: DataFrame, numHashes: Int = 16, bands: Int = 4): DataFrame =
-    // one MAP-SIDE signature computation (zero exchanges to build the
-    // cache): both sides of the banded self-join read it
     minhashJaccardEstimatesFromFrame(
-      CacheScope.cached(minhashSignatures(corpus, numHashes)), numHashes, bands)
+      CacheScope.cached(docDedupFrame(corpus, numHashes)), numHashes, bands)
 
   /** [[minhashJaccardEstimates]] over a pre-built signature frame
     * (doc_id, minhashes — e.g. a materialized [[docDedupFrame]]).
@@ -623,7 +590,7 @@ object Dedup {
   def simhashFps(corpus: DataFrame): DataFrame = {
     val tok = corpus
       .select(col("doc_id"), explode(array_distinct(tokens(col("text")))).as("token"))
-      .withColumn("h", conv(substring(md5(col("token").cast("binary")), 1, 8), 16, 10).cast("long"))
+      .withColumn("h", Sketches.h32(col("token"), 0))
     // One groupBy(doc) with 32 conditional-sum aggregates — no ×32 row
     // explosion, map-side partial aggregation, same math as the
     // per-(doc,bit) formulation the oracle uses.
@@ -1213,7 +1180,7 @@ object Dedup {
     * per shingle only over the sources containing it (≤ |sources|,
     * here 20), so the join output is Σ_h |sources(h)|², never N².
     * Output is |sources|²/2 rows. The same df-cap guard as
-    * [[ngramJaccardPairsCapped]] applies if a boilerplate shingle
+    * [[ngramJaccardPairs]] applies if a boilerplate shingle
     * lands in every source: cap sources-per-shingle before the join.
     */
   def sourceOverlapMatrix(docs: DataFrame): DataFrame = {

@@ -668,48 +668,4 @@ object Multimodal {
         col("pos").cast("long").as("chunk_idx"),
         (col("col") * chunkBytes).as("offset"),
         least(lit(chunkBytes), col("n_bytes") - col("col") * chunkBytes).as("chunk_bytes"))
-
-  /** Frame sampling on the RAW payload: cut the byte stream into
-    * `nFrames` equal chunks and keep every `stride`-th one — the
-    * "sample 1 frame per second" primitive, done with byte arithmetic
-    * the real codec would replace with keyframe offsets. Pure
-    * map-side.
-    */
-  def frameSample(media: Dataset[MediaRow], nFrames: Int, stride: Int): Dataset[MediaFrame] = {
-    val spark = media.sparkSession
-    import spark.implicits._
-    media.flatMap { row =>
-      val n = row.bytes.length
-      if (n == 0) Iterator.empty
-      else (0 until nFrames by stride).iterator.map { f =>
-        val from = f * n / nFrames
-        val until = math.max(from + 1, (f + 1) * n / nFrames).min(n)
-        MediaFrame(row.media_id, f, row.bytes.slice(from, until))
-      }
-    }
-  }
-
-  final case class MediaFrame(media_id: Long, frame_no: Int, frame_bytes: Array[Byte])
-
-  /** "Resize" on extracted features: average-pool a feature vector
-    * down to `dim` buckets — the stand-in for image resize /
-    * spectrogram pooling; the arithmetic and batch shape are what a
-    * real pre-processing stage does between decode and model input.
-    */
-  def resizeFeatures(features: Dataset[MediaFeatures], dim: Int): Dataset[MediaFeatures] = {
-    val spark = features.sparkSession
-    import spark.implicits._
-    features.map { f =>
-      val n = f.features.length
-      val pooled =
-        if (n == 0) Array.fill(dim)(0.0)
-        else (0 until dim).map { d =>
-          val from = d * n / dim
-          val until = math.max(from + 1, (d + 1) * n / dim).min(n)
-          val slice = f.features.slice(from, until)
-          slice.sum / slice.length
-        }.toArray
-      f.copy(features = pooled)
-    }
-  }
 }

@@ -89,10 +89,6 @@ object Png {
   def encodeGray(width: Int, height: Int, y: Array[Byte]): Array[Byte] =
     encodeRaster(width, height, 0, y)
 
-  /** Encode an 8-bit RGB raster (colour type 2). */
-  def encodeRgb(img: Multimodal.PpmCodec.Image): Array[Byte] =
-    encodeRaster(img.width, img.height, 2, img.rgb)
-
   // ---------------------------------------------------------------- decode
 
   /** Decode a PNG stream; None quarantines malformed / out-of-scope

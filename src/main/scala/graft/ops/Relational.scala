@@ -109,17 +109,6 @@ object Relational {
     events.groupBy(col("event_type"))
       .agg(countDistinct(col("user_id")).as("n_users"))
 
-  /** The 100 TB form of [[distinctUsersPerType]]: HyperLogLog++ sketch
-    * (`approx_count_distinct`) — one shuffle of fixed-size sketches
-    * instead of a second expand-shuffle on (group, user), at a bounded
-    * relative error (`rsd`, default 5%). Not oracle-checked (sketch
-    * internals differ across engines); the spec pins the error bound
-    * against the exact count.
-    */
-  def approxDistinctUsersPerType(events: DataFrame, rsd: Double = 0.05): DataFrame =
-    events.groupBy(col("event_type"))
-      .agg(approx_count_distinct(col("user_id"), rsd).as("n_users_approx"))
-
   /** As-of join: for every `left` row, the single most recent `right`
     * row with the same `key` and `right.ts <= left.ts` (latest ts wins;
     * ties on ts broken by the largest `tieBreak`). The
@@ -154,33 +143,6 @@ object Relational {
     val w = Window.partitionBy(col(key))
       .orderBy(col(ts).asc, col("__side").asc,
         col("__rpay").getField(tieBreak).asc_nulls_first)
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    all
-      .withColumn("asof", last(col("__rpay"), ignoreNulls = true).over(w))
-      .filter(col("__side") === 1)
-      .drop("__side", "__rpay")
-  }
-
-  /** Forward as-of join: for every `left` row, the EARLIEST `right`
-    * row with the same `key` and `right.ts >= left.ts` (ties on ts to
-    * the smallest `tieBreak`) — "next maintenance window", "next
-    * price tick". Same union+window shape as [[asofJoin]], with the
-    * scan direction reversed: ordered by ts DESC, right rows first at
-    * equal ts, tieBreak DESC, so the running `last` seen at a left
-    * row is the minimal (ts, tieBreak) at-or-after it.
-    */
-  def asofJoinForward(left: DataFrame, right: DataFrame, key: String, ts: String,
-                      tieBreak: String, rightCols: Seq[String]): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val r = right.select(
-      col(key), col(ts),
-      struct(rightCols.map(col): _*).as("__rpay"),
-      lit(0).as("__side"))
-    val l = left.withColumn("__side", lit(1))
-    val all = l.unionByName(r, allowMissingColumns = true)
-    val w = Window.partitionBy(col(key))
-      .orderBy(col(ts).desc, col("__side").asc,
-        col("__rpay").getField(tieBreak).desc_nulls_first)
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     all
       .withColumn("asof", last(col("__rpay"), ignoreNulls = true).over(w))
@@ -408,9 +370,9 @@ object Relational {
     * Cost: the only corpus-sized pass is the first distinct; the
     * ×windowDays expansion runs on active PAIRS (≪ raw events), and the
     * final count groups by day — tiny. For 100 TB or 90-day windows,
-    * use [[rollingDistinctHllDaily]]: per-day HLL sketches (fixed bytes
-    * per day) merged over the window — per-day cost becomes
-    * sketch-merge instead of pair-expansion, at ~2% error.
+    * merge per-day HLL sketches (fixed bytes per day) over the window
+    * instead — per-day cost becomes sketch-merge instead of
+    * pair-expansion, at the sketch's bounded error.
     */
   def rollingDistinctDaily(events: DataFrame, idCol: String, tsUsCol: String,
                            windowDays: Int): DataFrame = {
@@ -428,32 +390,6 @@ object Relational {
       .groupBy(col("rd"))
       .agg(count_distinct(col(idCol)).as("n_ids"))
       .select(date_format(col("rd"), "yyyy-MM-dd").as("day"), col("n_ids"))
-  }
-
-  /** Sketch form of [[rollingDistinctDaily]]: one Apache DataSketches
-    * HLL per (day) — a single corpus pass producing |days| fixed-size
-    * binaries — then each report day unions the sketches of its
-    * trailing window and reads the estimate. The union runs on the
-    * tiny per-day table, so a 90-day window over years of data costs
-    * |days|·window sketch merges, independent of corpus size — the
-    * standard streaming-warehouse shape for sliding distinct counts.
-    */
-  def rollingDistinctHllDaily(events: DataFrame, idCol: String, tsUsCol: String,
-                              windowDays: Int): DataFrame = {
-    val daily = events
-      .filter(col(idCol).isNotNull)
-      .groupBy(to_date(timestamp_micros(col(tsUsCol))).as("d"))
-      .agg(hll_sketch_agg(col(idCol)).as("sk"))
-    val expanded = daily.select(
-      col("sk"), explode(sequence(col("d"), date_add(col("d"), windowDays - 1))).as("rd"))
-    val spine = daily.agg(min(col("d")).as("lo"), max(col("d")).as("hi"))
-      .select(explode(sequence(col("lo"), col("hi"))).as("rd"))
-    spine
-      .join(expanded, Seq("rd"), "left")
-      .groupBy(col("rd"))
-      .agg(hll_sketch_estimate(hll_union_agg(col("sk"))).as("n_est"))
-      .select(date_format(col("rd"), "yyyy-MM-dd").as("day"),
-        coalesce(col("n_est"), lit(0L)).as("n_est"))
   }
 
   /** Per-group linear trend: OLS slope/intercept/R² of `yCol` against
@@ -689,7 +625,7 @@ object Relational {
     */
   private def laplaceSeeded(tag: String, groupCols: Seq[String], b: Double): Column = {
     val key = concat_ws("|", lit(tag) +: groupCols.map(c => col(c).cast("string")): _*)
-    val h = conv(substring(md5(key.cast("binary")), 1, 8), 16, 10).cast("double")
+    val h = Sketches.h32(key, 0).cast("double")
     val u = (h + 0.5) / 4294967296.0 - 0.5
     -(lit(b)) * signum(u) * log(lit(1.0) - abs(u) * 2.0)
   }

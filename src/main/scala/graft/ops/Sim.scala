@@ -24,15 +24,6 @@ object Sim {
 
   def norm(a: Column): Column = sqrt(dot(a, a))
 
-  /** L2-normalize an array<double> embedding (unit length; zero vector
-    * stays zero). After this, dot product IS cosine — normalize once
-    * at ingest, save a sqrt per comparison forever.
-    */
-  def l2Normalize(a: Column): Column = {
-    val n = norm(a)
-    when(n === 0.0, a).otherwise(transform(a, x => x / n))
-  }
-
   /** Johnson–Lindenstrauss random projection to `outDim` dimensions
     * with a DETERMINISTIC ±1 sign matrix (Achlioptas 2003: Rademacher
     * entries preserve pairwise distances like Gaussian ones): the sign
@@ -156,9 +147,9 @@ object Sim {
     * ROUNDED score with doc-id tiebreak so results are reproducible
     * across engines and runs.
     *
-    * 100 TB path: pre-bucket candidates with LSH
-    * ([[cosineTopKLsh]]) or IVF ([[cosineTopKIvf]]) and score only the
-    * probed buckets — turns O(Q×N) into O(Q×N/buckets).
+    * 100 TB path: pre-bucket candidates with IVF ([[cosineTopKIvf]])
+    * and score only the probed cells — turns O(Q×N) into
+    * O(Q×N/cells).
     */
   def cosineTopK(embeddings: DataFrame, nQueries: Int, k: Int): DataFrame = {
     val asDouble = embeddings.select(
@@ -1294,8 +1285,7 @@ object Sim {
     * bucketing is deterministic across runs and executors. Identical
     * vectors always share a bucket; recall for near-but-not-identical
     * pairs is tuned by nPlanes (fewer planes = bigger buckets = higher
-    * recall, more work) and multi-probe (see [[cosineTopKLsh]]'s
-    * `nProbe`).
+    * recall, more work).
     */
   /** The deterministic Gaussian hyperplane family behind
     * [[hyperplaneLshBuckets]] — factored out so the DuckDB oracle for
@@ -1315,44 +1305,6 @@ object Sim {
       when(dot(v, typedlit(p)) > 0.0, lit(1L << i)).otherwise(0L)
     }.reduce(_ + _)
     embeddings.select(col("vec_id"), v.as("v"), bucket.as("bucket"))
-  }
-
-  /** LSH-bucketed approximate top-k: score a query only against
-    * candidates sharing one of its probed buckets. Same shape as
-    * [[cosineTopKIvf]] but the partitioner is data-independent (no
-    * centroid build step) — the right choice when the corpus drifts
-    * faster than you want to re-train centroids.
-    *
-    * `probeHamming1 = true` turns on multi-probe: each query also
-    * searches the `nPlanes` buckets at Hamming distance 1 from its own
-    * signature (the sign bits most likely to have flipped for a true
-    * neighbor). Recall rises at the cost of probing nPlanes+1 buckets —
-    * still N·(nPlanes+1)/2^nPlanes of the corpus, sub-linear for
-    * nPlanes ≥ 4. Candidates live in exactly one bucket and probe
-    * buckets are distinct, so no pair-dedup pass is needed.
-    */
-  def cosineTopKLsh(embeddings: DataFrame, nQueries: Int, k: Int, nPlanes: Int,
-                    probeHamming1: Boolean = false): DataFrame = {
-    val bucketed = CacheScope.cached(
-      hyperplaneLshBuckets(embeddings, dim = 64, nPlanes = nPlanes)
-        .withColumn("nrm", norm(col("v"))))
-    val probes =
-      if (!probeHamming1) array(col("bucket"))
-      else array(col("bucket") +:
-        (0 until nPlanes).map(i => col("bucket").bitwiseXOR(lit(1L << i))): _*)
-    val queries = bucketed.filter(col("vec_id") < nQueries).select(
-      col("vec_id").as("q_id"), col("v").as("qv"), col("nrm").as("qn"),
-      explode(probes).as("bucket"))
-    val scored = bucketed
-      .join(broadcast(queries), Seq("bucket"))
-      .filter(col("q_id") =!= col("vec_id"))
-      .select(
-        col("q_id"), col("vec_id").as("c_id"),
-        round(dot(col("qv"), col("v")) / (col("qn") * col("nrm")), 4).as("cos_r"))
-    val w = Window.partitionBy(col("q_id")).orderBy(col("cos_r").desc, col("c_id").asc)
-    scored
-      .withColumn("rnk", row_number().over(w).cast("long"))
-      .filter(col("rnk") <= k)
   }
 
   /** Hard-negative mining for contrastive training: for each query

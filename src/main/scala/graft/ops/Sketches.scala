@@ -140,24 +140,6 @@ object Sketches {
       .groupBy(col("j"), col("b"))
       .agg(sum(lit(1L)).as("c"))
 
-  /** CMS point estimates for a bounded probe-key frame (column `k`)
-    * against a counter frame from [[cmsCountersFromRaw]]: min over
-    * the d per-row counters, the standard one-sided-overcount read.
-    * LEFT join + zero-fill: a bucket that was never incremented has no
-    * counter row but its value is 0 — an inner join would silently
-    * drop it and make an UNSEEN probe key read the min of its other
-    * (collided) buckets, breaking the one-sided-error contract in the
-    * only direction CMS promises never to be wrong about.
-    */
-  def cmsEstimateFor(counters: DataFrame, probes: DataFrame,
-                     d: Int = 4, w: Int = 64): DataFrame =
-    probes
-      .select(col("k"), explode(sequence(lit(0L), lit((d - 1).toLong))).as("j"))
-      .withColumn("b", hashSlot(col("j"), col("k"), w))
-      .join(broadcast(counters), Seq("j", "b"), "left")
-      .groupBy(col("k"))
-      .agg(min(coalesce(col("c"), lit(0L))).as("cms_est"))
-
   /** HLL set algebra — audience overlap between groups WITHOUT the
     * exact intersection join: union registers are per-index MAXIMA of
     * the member groups' registers (the mergeability that makes HLL a

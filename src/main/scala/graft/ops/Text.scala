@@ -16,20 +16,10 @@ object Text {
     * `xxhash64(text)` so the shuffle carries 8 bytes/row, then resolve
     * the (astronomically unlikely) hash collisions with one confirm
     * pass. Here we group by the text itself because the DuckDB oracle
-    * has no xxhash64; [[exactDedupByHash]] below is the scale form.
+    * has no xxhash64.
     */
   def exactDedup(documents: DataFrame): DataFrame =
     documents.groupBy(col("text"))
-      .agg(min(col("doc_id")).as("keep_id"), count(lit(1)).as("n_copies"))
-      .select(col("keep_id"), col("n_copies"))
-
-  /** Scale form of exact dedup: 8-byte hash shuffle instead of full
-    * text. Used by the bench/entry paths; not oracle-checked (DuckDB
-    * lacks xxhash64).
-    */
-  def exactDedupByHash(documents: DataFrame): DataFrame =
-    documents.withColumn("h", xxhash64(col("text")))
-      .groupBy(col("h"))
       .agg(min(col("doc_id")).as("keep_id"), count(lit(1)).as("n_copies"))
       .select(col("keep_id"), col("n_copies"))
 
@@ -436,6 +426,30 @@ object Text {
         round(avg(log(col("freq") / col("__total"))), 4).as("logprob"))
   }
 
+  /** The (doc_id, prev, next, c) collapse every bigram-LM scorer reads
+    * ([[bigramLogProbFrom]], [[interpolatedLogProbFrom]],
+    * [[knBigramLogProbFrom]]): the tokenize+explode pass runs once, and
+    * every model table the scorers build from it is vocabulary-sized.
+    * Trade-off, measured: the collapse shuffles a near-instance-sized
+    * (doc, prev, next) table once, where a two-pass form shuffled only
+    * partial-aggregated vocab/doc rows but tokenized the corpus twice —
+    * 2× scan CPU dominated. A harness materializes it once as a parquet
+    * fixture (the warehouse move: the n-gram count table is computed
+    * once per corpus version and every LM scorer reads it); the corpus
+    * forms cache it.
+    */
+  def bigramCollapse(documents: DataFrame): DataFrame =
+    documents
+      .select(col("doc_id"), Dedup.tokens(col("text")).as("toks"))
+      .filter(size(col("toks")) >= 2)
+      .select(col("doc_id"), col("toks"),
+        explode(sequence(lit(1), size(col("toks")) - 1)).as("i"))
+      .select(col("doc_id"),
+        try_element_at(col("toks"), col("i")).as("prev"),
+        try_element_at(col("toks"), col("i") + 1).as("next"))
+      .groupBy(col("doc_id"), col("prev"), col("next"))
+      .agg(count(lit(1)).as("c"))
+
   /** Bigram conditional log-probability per document — the next step
     * up from [[unigramLogProb]] on the KenLM-style fluency ladder:
     * score = mean over the doc's bigram instances of
@@ -454,43 +468,8 @@ object Text {
     * instances and drop out, mirroring any engine's inner-join
     * semantics.
     */
-  /** The shared (doc_id, prev, next, c) collapse every bigram-LM
-    * scorer reads ([[bigramLogProb]], [[interpolatedLogProb]],
-    * [[knBigramLogProb]]): the expensive tokenize+explode pass runs
-    * exactly ONCE and is cached; every model table the scorers build
-    * from it is vocabulary-sized. Trade-off, measured: the collapse
-    * shuffles a near-instance-sized (doc, prev, next) table once,
-    * where the two-pass form shuffled only partial-aggregated
-    * vocab/doc rows but tokenized the corpus twice — 2× scan CPU
-    * dominated. At 100 TB flip the trade back (two scans, zero
-    * instance shuffle) by dropping the collapse and joining the raw
-    * instance stream against the broadcast lookup: same algebra,
-    * identical results.
-    */
-  private def docBigramCollapse(documents: DataFrame): DataFrame =
-    graft.CacheScope.cached(bigramCollapse(documents))
-
-  /** The uncached collapse PLAN — public so a harness can materialize
-    * it once as a parquet fixture (the warehouse move: the n-gram
-    * count table is computed once per corpus version and every LM
-    * scorer reads it) and feed the *From scorers below. At 100 TB this
-    * materialization IS the production shape — Google/KenLM count
-    * tables are built in one MapReduce and served to every consumer.
-    */
-  def bigramCollapse(documents: DataFrame): DataFrame =
-    documents
-      .select(col("doc_id"), Dedup.tokens(col("text")).as("toks"))
-      .filter(size(col("toks")) >= 2)
-      .select(col("doc_id"), col("toks"),
-        explode(sequence(lit(1), size(col("toks")) - 1)).as("i"))
-      .select(col("doc_id"),
-        try_element_at(col("toks"), col("i")).as("prev"),
-        try_element_at(col("toks"), col("i") + 1).as("next"))
-      .groupBy(col("doc_id"), col("prev"), col("next"))
-      .agg(count(lit(1)).as("c"))
-
   def bigramLogProb(documents: DataFrame): DataFrame =
-    bigramLogProbFrom(docBigramCollapse(documents))
+    bigramLogProbFrom(graft.CacheScope.cached(bigramCollapse(documents)))
 
   /** [[bigramLogProb]] over a pre-built (doc_id, prev, next, c)
     * collapse ([[bigramCollapse]]) — identical algebra, zero tokenize
@@ -533,7 +512,7 @@ object Text {
     * instance-keyed join-back.
     */
   def interpolatedLogProb(documents: DataFrame, lambda: Double): DataFrame =
-    interpolatedLogProbFrom(docBigramCollapse(documents), lambda)
+    interpolatedLogProbFrom(graft.CacheScope.cached(bigramCollapse(documents)), lambda)
 
   /** [[interpolatedLogProb]] over a pre-built collapse. */
   def interpolatedLogProbFrom(docBi: DataFrame, lambda: Double): DataFrame = {
@@ -593,7 +572,7 @@ object Text {
     * top-K vocabulary first (Heaps' law keeps it broadcastable).
     */
   def knBigramLogProb(documents: DataFrame, discount: Double): DataFrame =
-    knBigramLogProbFrom(docBigramCollapse(documents), discount)
+    knBigramLogProbFrom(graft.CacheScope.cached(bigramCollapse(documents)), discount)
 
   /** [[knBigramLogProb]] over a pre-built collapse. */
   def knBigramLogProbFrom(docBi: DataFrame, discount: Double): DataFrame = {
@@ -1456,9 +1435,8 @@ object Text {
     val nonEmpty = words.filter(length(w) > 0)
     def noise(i: Column, l: Column): Column =
       if (tauU6 <= 1L) lit(0L)
-      else conv(substring(md5(concat_ws("|", w, i.cast("string"),
-          l.cast("string"), lit(epoch.toString)).cast("binary")), 1, 8), 16, 10)
-        .cast("long") % tauU6
+      else Sketches.h32(concat_ws("|", w, i.cast("string"),
+          l.cast("string"), lit(epoch.toString)), 0) % tauU6
     val dp = aggregate(
       sequence(lit(1), length(w)),
       array(struct(lit(0L).as("cp"), lit(0L).as("c"), lit(0L).as("n"))),
@@ -1986,21 +1964,6 @@ object Text {
     fuseScored(scored, kPer, kFused, c)
   }
 
-  /** Polynomial rolling hash over the raw character stream
-    * (Rabin-Karp base 31 mod 2³¹−1) — the classic incremental document
-    * fingerprint. Sequential by definition, so it's an `aggregate`
-    * left fold; fine as a per-document map-side pass, but prefer
-    * [[fingerprints]] (sortable bottom-k sketch) when fingerprints
-    * need to be comparable under edits.
-    */
-  def rollingHash(documents: DataFrame): DataFrame =
-    documents.select(
-      col("doc_id"),
-      expr(
-        """aggregate(split(text, ''), cast(0 as bigint),
-          |          (acc, c) -> (acc * 31 + ascii(c)) % 2147483647)""".stripMargin)
-        .as("rhash"))
-
   /** Document fingerprint: the 4 lexicographically-smallest md5s of the
     * distinct token set, dash-joined — a bottom-k sketch; equal
     * fingerprints ⇒ near-identical token sets. Map-side only.
@@ -2185,52 +2148,6 @@ object Text {
         when(col("doc_id") === col("keep_id"), 1L).otherwise(0L).as("keep"))
   }
 
-  /** Deflate compression ratio per document — the classic
-    * "compressibility" quality signal (Gopher and CCNet both gate on
-    * it): highly repetitive/templated text compresses far below
-    * natural prose, random noise barely compresses at all. Pure
-    * per-partition computation over a broadcast-free codec — the
-    * THIRD sanctioned `mapPartitions` site (after BPE apply and the
-    * media codec): DEFLATE is inherently imperative byte-level state,
-    * there is no Catalyst expression for it, and no oracle mirrors it
-    * (DuckDB has no zlib surface) — so its contract is LAW-based
-    * (CompressionSpec: repetition ⇒ low ratio, shuffled vocabulary ⇒
-    * higher ratio, ratio bounds) rather than value-based, and it is
-    * deliberately NOT a declared query.
-    */
-  def compressionRatio(documents: DataFrame): DataFrame = {
-    val spark = documents.sparkSession
-    import spark.implicits._
-    val in = documents.select(col("doc_id"), col("text"))
-      .as[(Long, String)]
-    in.mapPartitions { rows =>
-      val deflater = new java.util.zip.Deflater(java.util.zip.Deflater.BEST_SPEED)
-      val buf = new Array[Byte](1 << 16)
-      val mapped = rows.map { case (id, text) =>
-        val bytes = text.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-        deflater.reset()
-        deflater.setInput(bytes)
-        deflater.finish()
-        var out = 0
-        while (!deflater.finished()) out += deflater.deflate(buf)
-        val ratio = if (bytes.isEmpty) 1.0 else out.toDouble / bytes.length
-        (id, bytes.length.toLong, out.toLong,
-          math.rint(ratio * 10000) / 10000)
-      }
-      // release the native zlib stream when the partition is exhausted —
-      // finalizer-only cleanup accumulates off-heap memory on long-lived
-      // executors running many tasks
-      new Iterator[(Long, Long, Long, Double)] {
-        def hasNext: Boolean = {
-          val h = mapped.hasNext
-          if (!h) deflater.end()
-          h
-        }
-        def next(): (Long, Long, Long, Double) = mapped.next()
-      }
-    }.toDF("doc_id", "n_bytes", "n_deflate", "ratio_r")
-  }
-
   /** Per-source KL divergence from the corpus unigram distribution —
     * D(P_src ‖ P_corpus) = Σ_t p_s(t)·ln(p_s(t)/p_c(t)) — the
     * distributional twin of [[Dedup.sourceOverlapMatrix]]'s set
@@ -2357,7 +2274,7 @@ object Text {
       col("doc_id"), explode(Dedup.tokens(col("text"))).as("token"))
     toks
       .withColumn("bucket",
-        expr("cast(conv(substring(md5(cast(token as binary)), 1, 8), 16, 10) as bigint)") % dim)
+        Sketches.h32(col("token"), 0) % dim)
       .withColumn("sign",
         expr("cast(conv(substring(md5(cast(token as binary)), 9, 1), 16, 10) as bigint)") % 2 * 2 - 1)
       .groupBy(col("doc_id"), col("bucket"))
@@ -2728,8 +2645,7 @@ object Text {
     * ([[hashedBowVectors]]' convention), shared like [[dsirGrams]].
     */
   private[graft] def dsirBucket(gram: Column, buckets: Int): Column =
-    conv(substring(md5(gram.cast("binary")), 1, 8), 16, 10)
-      .cast("long") % buckets
+    Sketches.h32(gram, 0) % buckets
 
   def dsirWeights(documents: DataFrame, targetPred: Column,
                   buckets: Int): DataFrame = {

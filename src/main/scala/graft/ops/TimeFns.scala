@@ -21,23 +21,6 @@ object TimeFns {
   def parseMultiFormat(c: Column): Column =
     coalesce(parseFormats.map(f => try_to_date(c, f)): _*)
 
-  /** F1 strict variant — the reference's ACTUAL error contract: a
-    * value matching no format RAISES
-    * (`/root/reference/extract_bq.py:286-288` `raise ValueError`)
-    * instead of nulling out. For validating CLIs/intake jobs that must
-    * fail fast on bad input; [[parseMultiFormat]] stays the
-    * NULL-coalescing form for bulk intake where a null-count check
-    * downstream is the right failure mode. NULL input stays NULL
-    * (nothing to validate); only a NON-null unparseable string faults
-    * the task.
-    */
-  def parseMultiFormatStrict(c: Column): Column =
-    when(c.isNull, lit(null).cast("date"))
-      .otherwise(coalesce(
-        (parseFormats.map(f => try_to_date(c, f)) :+
-          raise_error(concat(lit("date string matches no supported format: "), c))
-            .cast("date")): _*))
-
   /** F2 — `YYYY-MM-DD` → `YYYYMMDD` shard-suffix reformat
     * (`/root/reference/extract_bq.py:99-100`).
     */

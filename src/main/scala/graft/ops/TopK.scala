@@ -52,32 +52,6 @@ object TopK {
     override def outputEncoder: Encoder[Seq[(Double, Long)]] = bufferEncoder
   }
 
-  /** DataFrame-level exact top-k per group with built-in aggregates:
-    * rows become (score, id) structs, collect_list gathers each
-    * group's structs, and sort+slice applies ONLY AFTER the final
-    * merge — the partial buffers are NOT bounded; they grow with the
-    * partition's rows for a group. The hard O(k)-state form is the
-    * typed [[TopKAggregator]] (whose reduce/merge cap every partial at
-    * k — that is the 100 TB shape); this expression form is the
-    * DataFrame-friendly middle when groups are modest: codegen-friendly
-    * expressions, one shuffle of per-group arrays, exact results.
-    *
-    * Built-ins used: struct ordering on (score DESC, id ASC) is
-    * expressed by packing (-score, id) so the natural ASC struct sort
-    * gives the right order without a custom ordering.
-    */
-  def topKPerGroup(df: DataFrame, groupCol: String, scoreCol: String,
-                   idCol: String, k: Int): DataFrame =
-    df.groupBy(col(groupCol))
-      .agg(slice(array_sort(collect_list(
-        struct((-col(scoreCol)).as("ns"), col(idCol).cast("long").as("id")))), 1, k).as("top"))
-      .select(col(groupCol), posexplode(col("top")).as(Seq("i", "t")))
-      .select(
-        col(groupCol),
-        (col("i") + 1).cast("long").as("rnk"),
-        (-col("t.ns")).as(scoreCol),
-        col("t.id").as(idCol))
-
   /** Typed top-k per group on the bounded-state [[TopKAggregator]]:
     * the Dataset-world form whose partial state is HARD-capped at k
     * entries per group per task — the one to reach for when groups are

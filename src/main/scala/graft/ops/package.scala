@@ -10,10 +10,10 @@ package graft
   *    seasonality profile, source/sink reconciliation, JSON key
   *    profiling.
   *  - [[graft.ops.Relational]] — joins (broadcast/semi/anti/full,
-  *    salted-skew, merge-asof both directions, binned range), windows,
-  *    rollup, distinct (exact + HLL), equal-count bands (ntile),
+  *    salted-skew, merge-asof, binned range), windows,
+  *    rollup, distinct, equal-count bands (ntile),
   *    date-spine gap fill, forward fill (LOCF), trailing-window
-  *    rolling distinct (exact + HLL-sketch), per-group OLS trend,
+  *    rolling distinct, per-group OLS trend,
   *    MAD outliers, trailing EWMA, key-skew profiling.
   *  - [[graft.ops.TimeFns]] — multi-format date parsing (reference
   *    fallback order), formatting, arithmetic, epoch-micros bridges.
@@ -27,7 +27,7 @@ package graft
   *    path), SimHash, embedding near-dup, connected-component keepers,
   *    substring-level duplication scores.
   *  - [[graft.ops.Sim]] — cosine top-k (brute force, IVF, trained
-  *    k-means IVF, hyperplane LSH with multi-probe), normalization,
+  *    k-means IVF, hyperplane LSH buckets),
   *    quantization, on the codegen'd `graft.plans` kernels (dot, IVF
   *    cell ranking, PQ encoding, all-cosines scans).
   *  - [[graft.ops.Corpus]] — corpus assembly: deterministic
@@ -41,14 +41,12 @@ package graft
   *  - [[graft.ops.Multimodal]] — binary media columns, typed metadata,
   *    byte-range chunk planning, per-partition decode through pure-JVM
   *    PPM, WAV, JPEG and PNG codecs.
-  *  - [[graft.ops.TypedOps]] — the typed `Dataset[Event]` tier: typed
-  *    aggregators, column-vs-lambda filters, mapGroups.
   *  - [[graft.ops.TopK]] — exact top-k per group as a bounded-state
   *    custom `Aggregator` (shuffle ≤ groups·k rows; 1.7× over window
-  *    rank at 4M×40k-groups) plus the DataFrame collect+slice form.
+  *    rank at 4M×40k-groups).
   *
   * Sinks/lifecycle live in `graft.etl` (CSV/JSON round trips, append,
-  * compaction, JDBC conflict-skip upsert, incremental watermark loop);
+  * JDBC conflict-skip upsert, incremental watermark loop);
   * streaming twins in `graft.streaming`.
   */
 package object ops

@@ -116,8 +116,7 @@ private[graft] object RelationalQueries {
     Query("q_percentile", (s, dir) => {
       // Exact interpolated percentiles (both engines use linear
       // interpolation). At 100 TB swap for approx_percentile
-      // (t-digest-style sketch, single pass, mergeable) — same
-      // substitution contract as approxDistinctUsersPerType.
+      // (t-digest-style sketch, single pass, mergeable).
       Tables.events(s, dir).groupBy(col("event_type"))
         .agg(
           round(expr("percentile(value, 0.5)"), 4).as("p50"),
@@ -689,8 +688,7 @@ private[graft] object RelationalQueries {
         |FROM g ORDER BY event_id""".stripMargin)),
 
     Query("q_rolling_distinct", (s, dir) => {
-      // trailing 7-day active users per day — sketch twin
-      // Relational.rollingDistinctHllDaily is spec-pinned within 2%
+      // trailing 7-day active users per day
       Relational.rollingDistinctDaily(Tables.events(s, dir), "user_id", "ts_us",
           windowDays = 7)
         .orderBy(col("day"))

@@ -1,120 +1,19 @@
 package graft.streaming
 
-import scala.jdk.CollectionConverters._
-
 import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery}
-import org.apache.spark.sql.types.{StringType, StructType}
+import org.apache.spark.sql.types.StructType
 
-import graft.etl.Sinks
 import graft.ops.{Corpus, Dedup}
 
-/** Continuous training-corpus intake — the streaming twin of
-  * [[graft.ops.Corpus.buildCorpus]]'s front half: documents arrive as
-  * files, exact content duplicates are dropped within the lateness
-  * horizon (BOUNDED state: content-hash keys expire with the
-  * watermark), the Gopher quality gate rides map-side on each
-  * micro-batch, and the keyed idempotent sink absorbs re-deliveries —
-  * so arbitrarily-late replays of the same content never land twice.
-  *
-  * At 100 TB this is the shape that matters: dedup state is
-  * hash-per-recent-doc (not the corpus), the gate adds zero shuffles,
-  * and the sink anti-join prunes to the batch's key set. Downstream
-  * (shuffle-shard, packing) runs as a periodic batch job over the
-  * sink — packing is corpus-order-dependent, so it belongs in the
-  * batch half, not per micro-batch.
+/** Continuous training-corpus intake: the streaming twins of the
+  * corpus operators, each pinned by a spec equal to its batch operator
+  * on the same rows. State is bounded by the watermark (hash- or
+  * key-per-recent-doc, not the corpus), and each drain runs on
+  * `Trigger.AvailableNow` (see [[Drain]]).
   */
 object StreamingCorpus {
-
-  /** Drain-available run. `schema` must contain `doc_id`, `text`, and
-    * `tsMicrosCol` (ingest time, epoch micros).
-    */
-  def start(
-      spark: SparkSession,
-      sourceDir: String,
-      schema: StructType,
-      tsMicrosCol: String,
-      checkpointDir: String,
-      sinkDir: String,
-      lateness: String = "1 hour"): StreamingQuery = {
-    val src = Drain.watermarked(spark, sourceDir, schema, tsMicrosCol, lateness)
-      .withColumn("text_hash", md5(col("text").cast("binary")))
-      .dropDuplicatesWithinWatermark("text_hash")
-    Drain.foreachBatch(Corpus.gopherPass(src).drop("__event_time"), checkpointDir) { batch =>
-      // the micro-batch arrives in the dedup state's hash partitioning
-      // (`spark.sql.shuffle.partitions` of them, one file each), which a
-      // plain repartition on the same key keeps; a rebalance shuffles,
-      // so AQE sizes the append from the data
-      Sinks.upsertAppend(batch.sparkSession, batch.hint("rebalance", col("text_hash")),
-        sinkDir, Seq("text_hash"))
-    }
-  }
-
-  /** Streaming twin of the `q_xml_intake` PERMISSIVE quarantine: a
-    * line-delimited XML feed (one rowTag element per line — the
-    * contract that keeps quarantine granularity at one row, see
-    * [[graft.etl.Sinks.xmlLineFeed]]) arrives as text files;
-    * each line parses via `from_xml` with the corrupt-record field
-    * in-schema (PERMISSIVE fills it per ROW, for malformed values and
-    * malformed markup alike), and each micro-batch routes good typed
-    * rows to the parquet sink and corrupt RAW LINES to the quarantine
-    * sink — nothing is dropped, nothing kills the stream.
-    *
-    * Scale shape: the parse is map-side and the routing is two
-    * filters over one persisted batch — zero shuffles, no streaming
-    * state beyond the file-source log, so the twin costs the same per
-    * byte at 100 TB as at test scale.
-    */
-  def dirtyXmlIntake(
-      spark: SparkSession,
-      sourceDir: String,
-      schema: StructType,
-      checkpointDir: String,
-      goodSink: String,
-      quarantineSink: String,
-      rowTag: String = "row"): StreamingQuery =
-    dirtyIntake(spark, sourceDir, schema, checkpointDir, goodSink, quarantineSink)(
-      (line, s, opts) => from_xml(line, s, (opts + ("rowTag" -> rowTag)).asJava))
-
-  /** Streaming twin of the `q_csv_intake` PERMISSIVE quarantine — the
-    * [[dirtyXmlIntake]] contract for CSV: each text line parses via
-    * `from_csv` with the corrupt-record field in-schema, good typed
-    * rows append to the parquet sink and corrupt RAW LINES to the
-    * quarantine sink. Same scale shape: map-side parse, two filters
-    * over one persisted batch, zero shuffles, no state beyond the
-    * file-source log.
-    */
-  def dirtyCsvIntake(
-      spark: SparkSession,
-      sourceDir: String,
-      schema: StructType,
-      checkpointDir: String,
-      goodSink: String,
-      quarantineSink: String): StreamingQuery =
-    dirtyIntake(spark, sourceDir, schema, checkpointDir, goodSink, quarantineSink)(
-      from_csv(_, _, _))
-
-  /** The dirty-intake body both twins share: each text line parses via
-    * `parse(line, schema + corrupt-record field, PERMISSIVE options)`,
-    * and each micro-batch routes good typed rows to `goodSink` and
-    * corrupt raw lines to `quarantineSink`.
-    */
-  private def dirtyIntake(
-      spark: SparkSession,
-      sourceDir: String,
-      schema: StructType,
-      checkpointDir: String,
-      goodSink: String,
-      quarantineSink: String)(
-      parse: (Column, StructType, Map[String, String]) => Column): StreamingQuery = {
-    val opts = Map("mode" -> "PERMISSIVE", "columnNameOfCorruptRecord" -> "_corrupt_record")
-    val parsed = spark.readStream.text(sourceDir)
-      .select(col("value"), parse(col("value"), schema.add("_corrupt_record", StringType), opts).as("r"))
-      .select(col("value"), col("r.*"))
-    route(parsed, col("_corrupt_record").isNotNull, checkpointDir, goodSink, quarantineSink)(
-      _.drop("value", "_corrupt_record"), _.select(col("value")))
-  }
 
   /** Drains `stream`, persisting each micro-batch once and splitting it:
     * rows where `bad` is false append through `good` to `goodSink`, rows
@@ -143,8 +42,8 @@ object StreamingCorpus {
     * streaming frame; each micro-batch routes EXTRACTABLE rows — both
     * `status = 'ok'` AND `status = 'chrome'`, with the full extracted
     * text and the status column as the downstream filter — to the good
-    * sink, and quarantined doc_ids to the quarantine sink (the
-    * dirtyXmlIntake routing contract). Chrome pages are content-gate
+    * sink, and quarantined doc_ids to the quarantine sink ([[route]]).
+    * Chrome pages are content-gate
     * FAILURES in the batch semantics; they ride the good sink because
     * their extraction is valid and some consumers re-gate at a
     * different link-density threshold — a consumer that wants only

@@ -40,10 +40,7 @@ object StreamingIncremental {
     *  - parquet: `b => Sinks.upsertAppend(b.sparkSession, b, dir, keys)`;
     *  - a relational database, the reference's actual shape (BigQuery
     *    export → Postgres upsert, the reference's `extract_bq.py:216-258`):
-    *    `b => Sinks.jdbcUpsert(b, url, table, keys, dialect)`;
-    *  - the Postgres bulk path, per-batch COPY into unlogged staging plus
-    *    one set-based ON CONFLICT insert:
-    *    `b => Sinks.copyUpsertPostgres(b, psqlArgs, table, keys)`.
+    *    `b => Sinks.jdbcUpsert(b, url, table, keys, dialect)`.
     *
     * @param transform extraction step applied per micro-batch (N1 etc.)
     * @param keys natural dedup key (reference: user, ts, event name)

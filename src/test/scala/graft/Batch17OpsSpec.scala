@@ -117,24 +117,4 @@ class Batch17OpsSpec extends AnyFunSuite {
   }
 
   // ---- compressionRatio ----------------------------------------------------
-
-  test("compressionRatio: repetition compresses far below varied text; bounds hold") {
-    val docs = Seq(
-      (1L, Seq.fill(200)("spam").mkString(" ")),
-      (2L, (1 to 200).map(i => s"w${i * 7919 % 99991}").mkString(" ")))
-      .toDF("doc_id", "text")
-    val out = Text.compressionRatio(docs).orderBy("doc_id").collect()
-      .map(r => r.getLong(0) -> r.getDouble(r.fieldIndex("ratio_r"))).toMap
-    assert(out(1L) < 0.1, s"pure repetition should crush: ${out(1L)}")
-    assert(out(2L) > out(1L) * 3, s"varied text must compress much worse: $out")
-    assert(out.values.forall(r => r > 0.0 && r < 1.5))
-  }
-
-  test("compressionRatio: deterministic across partitionings") {
-    val docs = (1L to 50L).map(i => (i, s"text body $i " * 10)).toDF("doc_id", "text")
-    val a = Text.compressionRatio(docs).collect().map(r => r.getLong(0) -> r.getDouble(3)).toMap
-    val b = Text.compressionRatio(docs.repartition(7)).collect()
-      .map(r => r.getLong(0) -> r.getDouble(3)).toMap
-    assert(a === b)
-  }
 }

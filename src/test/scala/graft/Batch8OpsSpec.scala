@@ -114,18 +114,6 @@ class Batch8OpsSpec extends AnyFunSuite {
     assert(out.last === ("1970-01-10", 1L))
   }
 
-  test("rollingDistinctHllDaily tracks the exact form within 2% on real data") {
-    val ev = Tables.events(spark, "/root/testdata/sf0.001")
-    val exact = Relational.rollingDistinctDaily(ev, "user_id", "ts_us", 7)
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    val est = Relational.rollingDistinctHllDaily(ev, "user_id", "ts_us", 7)
-      .collect().map(r => r.getString(0) -> r.getLong(1).toDouble).toMap
-    assert(est.keySet === exact.keySet)
-    exact.foreach { case (day, n) =>
-      assert(math.abs(est(day) - n) <= math.max(1.0, 0.02 * n), s"$day: $n vs ${est(day)}")
-    }
-  }
-
   test("substringDupScores: cross-doc and self repeats flag positions; unique text scores 0") {
     // n=2 grams. doc 1: "a b c" -> grams "a b", "b c". doc 2: "a b d"
     // -> "a b", "b d". "a b" occurs twice (cross-doc) -> 1 dup position

@@ -1,41 +1,11 @@
 package graft
 
-import java.nio.file.Files
 import org.scalatest.funsuite.AnyFunSuite
-import graft.etl.Sinks
 
 class CompactSpec extends AnyFunSuite {
 
   private val spark = SparkTestSession.spark
   import spark.implicits._
-
-  test("the upsert-append lifecycle survives periodic compaction") {
-    import java.nio.file.Files
-    import graft.etl.Sinks
-    val sink = Files.createTempDirectory("graft-life").toString + "/sink"
-    // five incremental batches with overlaps: the keyed upsert dedups
-    var expected = Set.empty[(Long, String)]
-    for (b <- 0 until 5) {
-      val rows = (b * 20 until b * 20 + 30).map(i => (i.toLong, s"p$i")) // 10-row overlap
-      expected ++= rows
-      Sinks.upsertAppend(spark, rows.toDF("k", "payload"), sink, Seq("k"))
-    }
-    val before = spark.read.parquet(sink).collect()
-      .map(r => (r.getLong(0), r.getString(1))).toSet
-    assert(before === expected)
-    val filesBefore = new java.io.File(sink).listFiles().count(_.getName.endsWith(".parquet"))
-    // periodic maintenance: compact, then keep upserting
-    Sinks.compact(spark, sink, numFiles = 2)
-    val filesAfter = new java.io.File(sink).listFiles().count(_.getName.endsWith(".parquet"))
-    assert(filesAfter < filesBefore && filesAfter <= 2)
-    assert(spark.read.parquet(sink).collect()
-      .map(r => (r.getLong(0), r.getString(1))).toSet === expected)
-    // the sink keeps accepting idempotent upserts after the swap
-    val n = Sinks.upsertAppend(spark,
-      Seq((0L, "dup"), (999L, "new")).toDF("k", "payload"), sink, Seq("k"))
-    assert(n === 1L)
-    assert(spark.read.parquet(sink).count() === expected.size + 1L)
-  }
 
   test("buildCorpus is deterministic across independent runs") {
     val docs = (0L until 300L)
@@ -46,23 +16,5 @@ class CompactSpec extends AnyFunSuite {
       .collect().map(_.toSeq).toSet
     assert(run() === run())
     assert(run().nonEmpty)
-  }
-
-  test("compact merges many small append files without losing rows") {
-    val dir = Files.createTempDirectory("graft-compact").toString + "/sink"
-    // 10 appends → at least 10 files
-    (0 until 10).foreach { i =>
-      Seq((i.toLong, s"v$i")).toDF("id", "v").coalesce(1)
-        .write.mode("append").parquet(dir)
-    }
-    val before = new java.io.File(dir).listFiles().count(_.getName.endsWith(".parquet"))
-    assert(before >= 10)
-    val rowsBefore = spark.read.parquet(dir).collect().map(_.toSeq).toSet
-
-    Sinks.compact(spark, dir, numFiles = 2)
-
-    val after = new java.io.File(dir).listFiles().count(_.getName.endsWith(".parquet"))
-    assert(after <= 2)
-    assert(spark.read.parquet(dir).collect().map(_.toSeq).toSet === rowsBefore)
   }
 }

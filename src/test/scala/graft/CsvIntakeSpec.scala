@@ -53,31 +53,4 @@ class CsvIntakeSpec extends AnyFunSuite {
     assert(got(0).getLong(0) === 7L && got(0).getString(1) === "t7" && got(0).isNullAt(2))
     assert(got(1).getLong(0) === 8L && got(1).isNullAt(1) && got(1).getDouble(2) === 0.25)
   }
-
-  test("streaming twin routes good rows and quarantines raw lines across drops") {
-    val base = Files.createTempDirectory("graft-csv-stream").toString
-    val (src, good, quar, ckpt) =
-      (s"$base/src", s"$base/good", s"$base/quar", s"$base/ckpt")
-    val s2 = StructType(Seq(
-      StructField("event_id", LongType), StructField("event_type", StringType)))
-
-    // drop 1: a malformed long cell between good rows
-    Seq("1,a", "oops,bad", "4,b")
-      .toDF("value").coalesce(1).write.mode("append").text(src)
-    graft.streaming.StreamingCorpus
-      .dirtyCsvIntake(spark, src, s2, ckpt, good, quar).awaitTermination()
-    assert(spark.read.parquet(good).select("event_id").as[Long]
-      .collect().sorted.toSeq === Seq(1L, 4L))
-    assert(spark.read.parquet(quar).count() === 1)
-
-    // drop 2: the file source resumes from its log — only the new file
-    // processes, sinks accumulate
-    Seq("5,c")
-      .toDF("value").coalesce(1).write.mode("append").text(src)
-    graft.streaming.StreamingCorpus
-      .dirtyCsvIntake(spark, src, s2, ckpt, good, quar).awaitTermination()
-    assert(spark.read.parquet(good).select("event_id").as[Long]
-      .collect().sorted.toSeq === Seq(1L, 4L, 5L))
-    assert(spark.read.parquet(quar).count() === 1)
-  }
 }

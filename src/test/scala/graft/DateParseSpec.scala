@@ -37,24 +37,4 @@ class DateParseSpec extends AnyFunSuite {
   test("day-first formats accept days above 12") {
     assert(parse("25/12/2024") === Seq(Some("2024-12-25")))
   }
-
-  private def parseStrict(ss: Option[String]*): Seq[Option[String]] =
-    ss.toDF("raw")
-      .select(TimeFns.parseMultiFormatStrict(col("raw")).cast("string").as("d"))
-      .collect().toSeq.map(r => Option(r.getString(0)))
-
-  test("strict variant parses valid input and passes NULL through") {
-    assert(parseStrict(Some("2024-03-05"), None, Some("25/12/2024"))
-      === Seq(Some("2024-03-05"), None, Some("2024-12-25")))
-  }
-
-  test("strict variant RAISES on an unparseable non-null string (extract_bq.py:286-288)") {
-    val e = intercept[Exception] {
-      parseStrict(Some("not-a-date"))
-    }
-    def messages(t: Throwable): Seq[String] =
-      Option(t).toSeq.flatMap(x => Option(x.getMessage).toSeq ++ messages(x.getCause))
-    assert(messages(e).exists(_.contains("matches no supported format")),
-      s"unexpected error chain: ${messages(e)}")
-  }
 }

@@ -102,11 +102,11 @@ class DedupAdvancedSpec extends AnyFunSuite {
     ).toDF("doc_id", "text")
     val uncapped = graft.ops.Dedup.ngramJaccardPairs(corpus, 0.1)
       .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
-    val loose = graft.ops.Dedup.ngramJaccardPairsCapped(corpus, 0.1, dfCap = 1000L)
+    val loose = graft.ops.Dedup.ngramJaccardPairs(corpus, 0.1, dfCap = 1000L)
       .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
     assert(loose === uncapped)
     assert(uncapped.contains((1L, 2L))) // the exact-dup pair is found
-    val tight = graft.ops.Dedup.ngramJaccardPairsCapped(corpus, 0.0, dfCap = 2L)
+    val tight = graft.ops.Dedup.ngramJaccardPairs(corpus, 0.0, dfCap = 2L)
       .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
     // capped J never exceeds uncapped J for the same pair (sizes still
     // count capped shingles; only the overlap can shrink)

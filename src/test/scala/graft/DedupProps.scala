@@ -64,7 +64,7 @@ object DedupProps extends Properties("Dedup") {
       import org.apache.spark.sql.functions._
       import spark.implicits._
       val corpus = docs.toDF("doc_id", "text")
-      val batch = Dedup.minhashSignatures(corpus, 16)
+      val batch = Dedup.docDedupFrame(corpus, 16).select("doc_id", "minhashes")
         .collect().map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
       val mapSide = corpus
         .select(col("doc_id"), Dedup.minhashSignatureExpr(col("text"), 16).as("mh"))

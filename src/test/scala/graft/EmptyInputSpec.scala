@@ -62,8 +62,6 @@ class EmptyInputSpec extends AnyFunSuite {
     assert(Relational.gapFillDaily(ev, "k", "ts_us").count() === 0)
     assert(Relational.rollingDistinctDaily(
       ev.withColumnRenamed("k", "user_id"), "user_id", "ts_us", 7).count() === 0)
-    assert(Relational.rollingDistinctHllDaily(
-      ev.withColumnRenamed("k", "user_id"), "user_id", "ts_us", 7).count() === 0)
     val vals = Seq.empty[(Long, String, Long, Option[Double])]
       .toDF("event_id", "k", "ord", "v")
     assert(Relational.forwardFill(vals, "k", Seq("ord"), "v").count() === 0)
@@ -203,14 +201,7 @@ class EmptyInputSpec extends AnyFunSuite {
     import graft.ops.Sketches
     val emptyGk = Seq.empty[(String, String)].toDF("g", "k")
     assert(Sketches.hllRegistersOnly(emptyGk, "g", "k").count() === 0)
-    val counters = Sketches.cmsCountersFromRaw(emptyGk, "k")
-    assert(counters.count() === 0)
-    // probing keys against an empty counter frame: every bucket is
-    // empty, so every probe reads EXACTLY 0 (the left-join zero-fill —
-    // an empty sketch answers "never seen", it doesn't drop the probe)
-    val probed = Sketches.cmsEstimateFor(counters, Seq("a", "b").toDF("k"))
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    assert(probed === Map("a" -> 0L, "b" -> 0L))
+    assert(Sketches.cmsCountersFromRaw(emptyGk, "k").count() === 0)
   }
 
   test("round-12 dp / minhash-group / projection ops on empty inputs") {

@@ -2,7 +2,7 @@ package graft
 
 import java.nio.file.Files
 import org.scalacheck.{Gen, Prop, Properties, Test}
-import graft.etl.Incremental
+import graft.etl.{Incremental, Sinks}
 
 /** SURVEY §5.3 — property: for any event set and any split point,
   * incremental processing (run each half in turn, watermark persisted
@@ -32,11 +32,14 @@ object IncrementalProps extends Properties("Incremental") {
       val df = evs.toDF("user_id", "event_type", "ts_us")
       val base = Files.createTempDirectory("graft-prop").toString
 
-      Incremental.runOnce(spark, df, "ts_us", keys, s"$base/fw.txt", s"$base/full", 0L)
+      Incremental.runOnceTo(spark, df, "ts_us", keys, s"$base/fw.txt", 0L,
+        b => Sinks.upsertAppend(spark, b, s"$base/full", keys))
 
       val firstHalf = df.filter($"ts_us" <= split)
-      Incremental.runOnce(spark, firstHalf, "ts_us", keys, s"$base/iw.txt", s"$base/inc", 0L)
-      Incremental.runOnce(spark, df, "ts_us", keys, s"$base/iw.txt", s"$base/inc", 0L)
+      Incremental.runOnceTo(spark, firstHalf, "ts_us", keys, s"$base/iw.txt", 0L,
+        b => Sinks.upsertAppend(spark, b, s"$base/inc", keys))
+      Incremental.runOnceTo(spark, df, "ts_us", keys, s"$base/iw.txt", 0L,
+        b => Sinks.upsertAppend(spark, b, s"$base/inc", keys))
 
       def read(p: String): Set[Seq[Any]] = {
         val f = new java.io.File(p)

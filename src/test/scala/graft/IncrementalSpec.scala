@@ -41,16 +41,19 @@ class IncrementalSpec extends AnyFunSuite {
     // Full run in one shot.
     val fullState = s"$base/full_wm.txt"
     val fullSink = s"$base/full_sink"
-    Incremental.runOnce(spark, stream, "ts_us", keys, fullState, fullSink, 0L)
+    Incremental.runOnceTo(spark, stream, "ts_us", keys, fullState, 0L,
+      b => Sinks.upsertAppend(spark, b, fullSink, keys))
     // Incremental: first the old half, then the whole stream again
     // (the second run sees only rows newer than the persisted watermark,
     // plus replays — which the keyed sink drops).
     val incState = s"$base/inc_wm.txt"
     val incSink = s"$base/inc_sink"
     val firstHalf = stream.filter($"ts_us" <= 300L)
-    val r1 = Incremental.runOnce(spark, firstHalf, "ts_us", keys, incState, incSink, 0L).get
+    val r1 = Incremental.runOnceTo(spark, firstHalf, "ts_us", keys, incState, 0L,
+      b => Sinks.upsertAppend(spark, b, incSink, keys)).get
     assert(r1.newWatermarkUs === 300L)
-    val r2 = Incremental.runOnce(spark, stream, "ts_us", keys, incState, incSink, 0L).get
+    val r2 = Incremental.runOnceTo(spark, stream, "ts_us", keys, incState, 0L,
+      b => Sinks.upsertAppend(spark, b, incSink, keys)).get
     assert(r2.newWatermarkUs === 600L)
 
     val full = spark.read.parquet(fullSink).collect().map(_.toSeq).toSet
@@ -63,8 +66,10 @@ class IncrementalSpec extends AnyFunSuite {
     val base = tmp()
     val state = s"$base/wm.txt"
     val sink = s"$base/sink"
-    Incremental.runOnce(spark, stream, "ts_us", keys, state, sink, 0L)
-    val r = Incremental.runOnce(spark, stream, "ts_us", keys, state, sink, 0L).get
+    Incremental.runOnceTo(spark, stream, "ts_us", keys, state, 0L,
+      b => Sinks.upsertAppend(spark, b, sink, keys))
+    val r = Incremental.runOnceTo(spark, stream, "ts_us", keys, state, 0L,
+      b => Sinks.upsertAppend(spark, b, sink, keys)).get
     assert(r.rowsFetched === 0L)
     assert(r.rowsInserted === 0L)
     assert(r.newWatermarkUs === 600L)
@@ -78,8 +83,8 @@ class IncrementalSpec extends AnyFunSuite {
     // A transform that blows up at execution time → the run fails
     // before any sink write, so the persisted watermark must not move.
     val boom = intercept[Exception] {
-      Incremental.runOnce(
-        spark, stream, "ts_us", keys, state, s"$base/sink", 0L,
+      Incremental.runOnceTo(spark, stream, "ts_us", keys, state, 0L,
+        b => Sinks.upsertAppend(spark, b, s"$base/sink", keys),
         transform = df => df.filter(
           org.apache.spark.sql.functions.expr("assert_true(ts_us < 0)").isNull))
     }
@@ -106,7 +111,8 @@ class IncrementalSpec extends AnyFunSuite {
     val (state, sink) = (s"$base/wm.txt", s"$base/sink")
     val runs = Seq(wide.filter($"ts_us" <= 200L), wide).map { src =>
       val before = partFiles(sink)
-      val r = Incremental.runOnce(spark, src, "ts_us", keys, state, sink, 0L).get
+      val r = Incremental.runOnceTo(spark, src, "ts_us", keys, state, 0L,
+        b => Sinks.upsertAppend(spark, b, sink, keys)).get
       (r, partFiles(sink) - before)
     }
     (runs.map(_._1), runs.map(_._2), sinkRows(sink))
@@ -127,8 +133,8 @@ class IncrementalSpec extends AnyFunSuite {
   test("a crash after the sink commit keeps the watermark; the rerun inserts nothing") {
     val base = tmp()
     val cleanSink = s"$base/clean_sink"
-    val clean = Incremental.runOnce(spark, stream, "ts_us", keys, s"$base/clean_wm.txt",
-      cleanSink, 0L).get
+    val clean = Incremental.runOnceTo(spark, stream, "ts_us", keys, s"$base/clean_wm.txt", 0L,
+      b => Sinks.upsertAppend(spark, b, cleanSink, keys)).get
     val (state, sink) = (s"$base/wm.txt", s"$base/sink")
     Incremental.writeWatermark(state, 0L)
     intercept[IllegalStateException] {
@@ -138,7 +144,8 @@ class IncrementalSpec extends AnyFunSuite {
       })
     }
     assert(Incremental.readWatermark(state, -1L) === 0L)
-    val rerun = Incremental.runOnce(spark, stream, "ts_us", keys, state, sink, 0L).get
+    val rerun = Incremental.runOnceTo(spark, stream, "ts_us", keys, state, 0L,
+      b => Sinks.upsertAppend(spark, b, sink, keys)).get
     assert(rerun.rowsInserted === 0L)
     assert(rerun.newWatermarkUs === clean.newWatermarkUs)
     assert(sinkRows(sink) === sinkRows(cleanSink))
@@ -157,14 +164,17 @@ class IncrementalSpec extends AnyFunSuite {
   test("a parquet run with no new rows appends no part file") {
     val base = tmp()
     val (state, sink) = (s"$base/wm.txt", s"$base/sink")
-    Incremental.runOnce(spark, stream, "ts_us", keys, state, sink, 0L)
+    Incremental.runOnceTo(spark, stream, "ts_us", keys, state, 0L,
+      b => Sinks.upsertAppend(spark, b, sink, keys))
     val before = tree(sink)
-    val r = Incremental.runOnce(spark, stream, "ts_us", keys, state, sink, 0L).get
+    val r = Incremental.runOnceTo(spark, stream, "ts_us", keys, state, 0L,
+      b => Sinks.upsertAppend(spark, b, sink, keys)).get
     assert(r.rowsInserted === 0L)
     assert(tree(sink) === before, "the empty run changed the sink directory")
     // nothing to append into a sink that does not exist leaves it absent
     val absent = s"$base/absent"
-    assert(Incremental.runOnce(spark, stream, "ts_us", keys, state, absent, 0L).get.rowsFetched === 0L)
+    assert(Incremental.runOnceTo(spark, stream, "ts_us", keys, state, 0L,
+      b => Sinks.upsertAppend(spark, b, absent, keys)).get.rowsFetched === 0L)
     assert(!Files.exists(java.nio.file.Paths.get(absent)))
   }
 
@@ -218,21 +228,22 @@ class IncrementalSpec extends AnyFunSuite {
     val held = heldRun(s"$base/wm.txt", release)
     try {
       // the same path, spelled differently
-      val second = Incremental.runOnce(spark, stream, "ts_us", keys, s"$base/./wm.txt",
-        s"$base/sink", 0L)
+      val second = Incremental.runOnceTo(spark, stream, "ts_us", keys, s"$base/./wm.txt", 0L,
+        b => Sinks.upsertAppend(spark, b, s"$base/sink", keys))
       assert(second === None)
     } finally release.countDown()
     assert(Await.result(held, 2.minutes).isDefined)
-    assert(Incremental.runOnce(spark, stream, "ts_us", keys, s"$base/wm.txt",
-      s"$base/sink", 0L).isDefined, "the guard is released when a run ends")
+    assert(Incremental.runOnceTo(spark, stream, "ts_us", keys, s"$base/wm.txt", 0L,
+      b => Sinks.upsertAppend(spark, b, s"$base/sink", keys)).isDefined,
+      "the guard is released when a run ends")
   }
 
   test("single-flight: runs on different state paths proceed concurrently") {
     val base = tmp()
     val release = new CountDownLatch(1)
     val held = heldRun(s"$base/a_wm.txt", release)
-    val other = try Incremental.runOnce(spark, stream, "ts_us", keys, s"$base/b_wm.txt",
-      s"$base/b_sink", 0L) finally release.countDown()
+    val other = try Incremental.runOnceTo(spark, stream, "ts_us", keys, s"$base/b_wm.txt", 0L,
+      b => Sinks.upsertAppend(spark, b, s"$base/b_sink", keys)) finally release.countDown()
     assert(other.map(_.rowsInserted) === Some(6L))
     assert(Await.result(held, 2.minutes).isDefined)
   }

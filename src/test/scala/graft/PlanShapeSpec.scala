@@ -560,7 +560,7 @@ class PlanShapeSpec extends AnyFunSuite {
     import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
     import org.apache.spark.sql.execution.datasources.InsertIntoHadoopFsRelationCommand
     import org.apache.spark.sql.util.QueryExecutionListener
-    import graft.etl.Incremental
+    import graft.etl.{Incremental, Sinks}
     val base = java.nio.file.Files.createTempDirectory("graft-plan-inc").toString
     val (state, sink) = (s"$base/wm.txt", s"$base/sink")
     val keys = Seq("user_id", "event_type", "ts_us")
@@ -569,7 +569,8 @@ class PlanShapeSpec extends AnyFunSuite {
     (1 to 60).map(i => (i % 7L, Seq("click", "view", "buy")(i % 3), 10L * i))
       .toDF("user_id", "event_type", "ts_us").write.parquet(s"$base/src")
     val events = spark.read.parquet(s"$base/src")
-    Incremental.runOnce(spark, events.filter($"ts_us" <= 450L), "ts_us", keys, state, sink, 0L)
+    Incremental.runOnceTo(spark, events.filter($"ts_us" <= 450L), "ts_us", keys, state, 0L,
+      b => Sinks.upsertAppend(spark, b, sink, keys))
     // rolled back, as a crash after the sink commit leaves it: the sink
     // holds rows newer than the watermark, so AQE cannot drop the
     // anti-join for an empty sink side
@@ -594,7 +595,8 @@ class PlanShapeSpec extends AnyFunSuite {
     spark.listenerManager.register(writeListener)
     val (run, write) = try {
       sc.setJobGroup(group, "parquet runOnce")
-      val r = try Incremental.runOnce(spark, events, "ts_us", keys, state, sink, 0L).get
+      val r = try Incremental.runOnceTo(spark, events, "ts_us", keys, state, 0L,
+        b => Sinks.upsertAppend(spark, b, sink, keys)).get
       finally sc.clearJobGroup()
       (r, writes.poll(60, TimeUnit.SECONDS))
     } finally {

@@ -50,15 +50,6 @@ class PngCodecSpec extends AnyFunSuite {
     }
   }
 
-  test("rgb encode/decode round-trips bit-exactly") {
-    val w = 19; val h = 11
-    val rgb = Array.tabulate(w * h * 3)(i => ((i * 31 + 7) % 256).toByte)
-    val img = PpmCodec.Image(w, h, rgb)
-    val dec = Png.decode(Png.encodeRgb(img)).get
-    assert(dec.width === w && dec.height === h)
-    assert(dec.rgb.sameElements(rgb))
-  }
-
   test("conformance A: ImageIO decodes MY encode to the identical raster") {
     val w = 24; val h = 16
     val y = grayRaster(w, h)((x, yy) => (x * 11 + yy * 3) % 256)
@@ -69,11 +60,6 @@ class PngCodecSpec extends AnyFunSuite {
       assert(px(i * 3) === (y(i) & 0xff), s"pixel $i")
       i += 1
     }
-    // color direction too
-    val rgb = Array.tabulate(w * h * 3)(i => ((i * 5 + 1) % 256).toByte)
-    val (cw, ch, cpx) = imageIoDecode(Png.encodeRgb(PpmCodec.Image(w, h, rgb)))
-    assert(cw === w && ch === h)
-    assert(cpx.map(_.toByte).sameElements(rgb))
   }
 
   test("conformance B: MY decoder reads ImageIO's encode to the identical raster") {
@@ -226,7 +212,11 @@ class PngCodecSpec extends AnyFunSuite {
     // 16384x16384 colour type 2: exactly 2^28 pixels (the old
     // pixel-count guard admitted it) but ~805 MB of decoded bytes —
     // must quarantine before any allocation
-    val small = Png.encodeRgb(PpmCodec.Image(4, 4, Array.fill(48)(7.toByte)))
+    val img = new java.awt.image.BufferedImage(4, 4, java.awt.image.BufferedImage.TYPE_3BYTE_BGR)
+    val out = new java.io.ByteArrayOutputStream()
+    assert(javax.imageio.ImageIO.write(img, "png", out), "no PNG writer")
+    val small = out.toByteArray
+    assert(small(25) === 2, "ImageIO wrote a colour type other than RGB")
     val bomb = small.clone()
     def put32(p: Int, v: Int): Unit = {
       bomb(p) = ((v >> 24) & 0xff).toByte; bomb(p + 1) = ((v >> 16) & 0xff).toByte

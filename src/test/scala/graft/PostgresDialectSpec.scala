@@ -74,166 +74,6 @@ class PostgresDialectSpec extends AnyFunSuite {
     } finally psql("DROP TABLE IF EXISTS graft_pg_dialect_spec")
   }
 
-  test("COPY-staging upsert loads real events into live Postgres end to end") {
-    // The 100 TB load path (Sinks.copyUpsertPostgres): per-partition
-    // COPY into unlogged staging + one set-based ON CONFLICT insert —
-    // run against the real server with the real sf0.001 events table,
-    // including a replay-with-overlap to prove idempotent accounting.
-    import scala.sys.process._
-    val defaultArgs = Seq("-h", "/tmp/graft_pg", "-p", "54329", "-U", "postgres")
-    def reachable: Boolean =
-      try (Seq("psql") ++ defaultArgs ++ Seq("-X", "-t", "-A", "-c", "SELECT 1"))
-        .!(ProcessLogger(_ => ())) == 0
-      catch { case _: Throwable => false }
-    assume(reachable, "no psql-reachable Postgres in this environment")
-    def psql(sql: String): String =
-      (Seq("psql") ++ defaultArgs ++
-        Seq("-X", "-t", "-A", "-v", "ON_ERROR_STOP=1", "-c", sql)).!!.trim
-    val spark = SparkTestSession.spark
-    val ev = Tables.events(spark, "/root/testdata/sf0.001")
-      .select("event_id", "user_id", "ts_us", "event_type", "props")
-    psql("DROP TABLE IF EXISTS graft_pg_events")
-    psql("""CREATE TABLE graft_pg_events (
-            event_id BIGINT PRIMARY KEY, user_id BIGINT, ts_us BIGINT,
-            event_type VARCHAR(32), props TEXT)""")
-    try {
-      val total = ev.count()
-      val firstHalf = ev.filter(org.apache.spark.sql.functions.col("event_id") % 2 === 0)
-      val n1 = Sinks.copyUpsertPostgres(firstHalf, defaultArgs, "graft_pg_events", Seq("event_id"))
-      assert(n1 === firstHalf.count())
-      // full replay: the first half conflicts row-for-row, only the
-      // second half lands — the reference's idempotent re-run contract
-      val n2 = Sinks.copyUpsertPostgres(ev, defaultArgs, "graft_pg_events", Seq("event_id"))
-      assert(n2 === total - n1, s"expected ${total - n1} fresh rows, got $n2")
-      assert(psql("SELECT count(*) FROM graft_pg_events").toLong === total)
-      // spot-check content fidelity through the CSV pipe (props holds
-      // JSON with quotes/commas — the quoting contract's worst case)
-      val probe = ev.orderBy("event_id").limit(1).collect().head
-      val got = psql(s"SELECT user_id, ts_us, event_type, props FROM graft_pg_events " +
-        s"WHERE event_id = ${probe.getLong(0)}")
-      val want = s"${probe.get(1)}|${probe.get(2)}|${probe.get(3)}|${probe.get(4)}"
-      assert(got === want)
-    } finally psql("DROP TABLE IF EXISTS graft_pg_events")
-  }
-
-  test("the full incremental pipeline runs against live Postgres: watermark -> extract -> upsert -> advance") {
-    // The reference's COMPLETE flow (flask_server.py run_etl):
-    // read watermark, extract rows past it, natural-key dedup,
-    // conflict-skip insert into Postgres, advance the watermark only
-    // after the sink commit — executed here with the real sf0.001
-    // events and the real server, across two incremental runs plus an
-    // idempotent no-new-data replay.
-    import scala.sys.process._
-    import graft.etl.{Incremental, Sinks}
-    val pgArgs = Seq("-h", "/tmp/graft_pg", "-p", "54329", "-U", "postgres")
-    def reachable: Boolean =
-      try (Seq("psql") ++ pgArgs ++ Seq("-X", "-t", "-A", "-c", "SELECT 1"))
-        .!(ProcessLogger(_ => ())) == 0
-      catch { case _: Throwable => false }
-    assume(reachable, "no psql-reachable Postgres in this environment")
-    def psql(sql: String): String =
-      (Seq("psql") ++ pgArgs ++
-        Seq("-X", "-t", "-A", "-v", "ON_ERROR_STOP=1", "-c", sql)).!!.trim
-    val spark = SparkTestSession.spark
-    val ev = Tables.events(spark, "/root/testdata/sf0.001")
-      .select("event_id", "user_id", "ts_us", "event_type")
-    val Array(tsLo, tsMid, tsHi) = ev
-      .agg(org.apache.spark.sql.functions.min("ts_us"),
-        org.apache.spark.sql.functions.expr("percentile(ts_us, 0.5)").cast("long"),
-        org.apache.spark.sql.functions.max("ts_us"))
-      .collect().head.toSeq.map(_.asInstanceOf[Long]).toArray
-    val state = java.nio.file.Files.createTempDirectory("graft-pg-inc").toString + "/wm.txt"
-    psql("DROP TABLE IF EXISTS graft_pg_inc")
-    psql("""CREATE TABLE graft_pg_inc (
-            event_id BIGINT PRIMARY KEY, user_id BIGINT, ts_us BIGINT,
-            event_type VARCHAR(32))""")
-    try {
-      val sink = (b: org.apache.spark.sql.DataFrame) =>
-        Sinks.copyUpsertPostgres(b, pgArgs, "graft_pg_inc", Seq("event_id"))
-      // run 1: the source "so far" is everything up to the median ts
-      val r1 = Incremental.runOnceTo(spark,
-        ev.filter(org.apache.spark.sql.functions.col("ts_us") <= tsMid),
-        "ts_us", Seq("event_id"), state, tsLo - 1, sink).get
-      assert(r1.rowsInserted === r1.rowsFetched && r1.rowsFetched > 0)
-      // the watermark lands on the max OBSERVED ts, not the filter cut
-      // (percentile interpolates between middle values)
-      val wm1 = ev.filter(org.apache.spark.sql.functions.col("ts_us") <= tsMid)
-        .agg(org.apache.spark.sql.functions.max("ts_us")).collect().head.getLong(0)
-      assert(r1.newWatermarkUs === wm1)
-      assert(psql("SELECT count(*) FROM graft_pg_inc").toLong === r1.rowsInserted)
-      // run 2: the full source arrives; only rows past the watermark move
-      val r2 = Incremental.runOnceTo(spark, ev, "ts_us", Seq("event_id"),
-        state, tsLo - 1, sink).get
-      assert(r2.rowsInserted === r2.rowsFetched)
-      assert(r2.newWatermarkUs === tsHi)
-      val total = psql("SELECT count(*) FROM graft_pg_inc").toLong
-      assert(total === r1.rowsInserted + r2.rowsInserted)
-      assert(total === ev.select("event_id").distinct().count())
-      // run 3: no new data — zero fetched, zero inserted, watermark holds
-      val r3 = Incremental.runOnceTo(spark, ev, "ts_us", Seq("event_id"),
-        state, tsLo - 1, sink).get
-      assert(r3.rowsFetched === 0 && r3.rowsInserted === 0 &&
-        r3.newWatermarkUs === tsHi)
-    } finally psql("DROP TABLE IF EXISTS graft_pg_inc")
-  }
-
-  test("streaming intake drains into live Postgres exactly once, replay included") {
-    // The continuous twin: files land in a source dir, Structured
-    // Streaming drains them (AvailableNow) through the COPY-staging
-    // sink. A second drain after MORE files arrive loads only the new
-    // rows; deleting the CHECKPOINT and draining again re-offers
-    // everything and the database skips it all — at-least-once
-    // delivery x conflict-skip = exactly-once contents.
-    import scala.sys.process._
-    val pgArgs = Seq("-h", "/tmp/graft_pg", "-p", "54329", "-U", "postgres")
-    def reachable: Boolean =
-      try (Seq("psql") ++ pgArgs ++ Seq("-X", "-t", "-A", "-c", "SELECT 1"))
-        .!(ProcessLogger(_ => ())) == 0
-      catch { case _: Throwable => false }
-    assume(reachable, "no psql-reachable Postgres in this environment")
-    def psql(sql: String): String =
-      (Seq("psql") ++ pgArgs ++
-        Seq("-X", "-t", "-A", "-v", "ON_ERROR_STOP=1", "-c", sql)).!!.trim
-    val spark = SparkTestSession.spark
-    import org.apache.spark.sql.functions.col
-    val ev = Tables.events(spark, "/root/testdata/sf0.001")
-      .select("event_id", "user_id", "ts_us", "event_type")
-    val tmp = java.nio.file.Files.createTempDirectory("graft-pg-stream").toString
-    val srcDir = s"$tmp/src"; val ckpt = s"$tmp/ckpt"
-    // batches split by TIME (the reference's arrival order): the second
-    // batch is strictly newer, so the persisted watermark never
-    // classifies it late
-    val tsMid = ev.agg(org.apache.spark.sql.functions
-      .expr("percentile(ts_us, 0.5)").cast("long")).collect().head.getLong(0)
-    val early = ev.filter(col("ts_us") <= tsMid)
-    val late = ev.filter(col("ts_us") > tsMid)
-    early.write.parquet(srcDir)
-    val schema = spark.read.parquet(srcDir).schema
-    psql("DROP TABLE IF EXISTS graft_pg_stream")
-    psql("""CREATE TABLE graft_pg_stream (
-            event_id BIGINT PRIMARY KEY, user_id BIGINT, ts_us BIGINT,
-            event_type VARCHAR(32))""")
-    try {
-      def drain(checkpoint: String): Unit =
-        graft.streaming.StreamingIncremental.start(
-          spark, srcDir, schema, "ts_us", Seq("event_id"), checkpoint,
-          b => Sinks.copyUpsertPostgres(b, pgArgs, "graft_pg_stream", Seq("event_id")))
-          .awaitTermination()
-      drain(ckpt)
-      val half = psql("SELECT count(*) FROM graft_pg_stream").toLong
-      assert(half === early.count())
-      // newer files arrive; the SAME checkpoint drains only the delta
-      late.write.mode("append").parquet(srcDir)
-      drain(ckpt)
-      val total = psql("SELECT count(*) FROM graft_pg_stream").toLong
-      assert(total === ev.count())
-      // checkpoint loss: a full replay re-offers every row; the keyed
-      // conflict-skip absorbs all of it
-      drain(s"$tmp/ckpt2")
-      assert(psql("SELECT count(*) FROM graft_pg_stream").toLong === total)
-    } finally psql("DROP TABLE IF EXISTS graft_pg_stream")
-  }
-
   test("ON CONFLICT upsert is idempotent against a live Postgres") {
     val url = sys.env.get("SPARK_GRAFT_PG_URL")
     assume(url.isDefined, "SPARK_GRAFT_PG_URL not set — no Postgres in this environment")

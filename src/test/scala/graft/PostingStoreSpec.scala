@@ -152,39 +152,6 @@ class PostingStoreSpec extends AnyFunSuite {
         seqs(new Reference(d, c).hybrid(2, 3, 3)))
   }
 
-  test("tfidfTopTermsFrom(store) equals tfidfTopTerms(docs) row for row") {
-    val store = Text.postingStoreFrame(docs, cap)
-    assert(rows(Text.tfidfTopTermsFrom(store, k = 3), Seq("doc_id", "rnk")) ===
-      rows(Text.tfidfTopTerms(docs, k = 3), Seq("doc_id", "rnk")))
-  }
-
-  test("tfidfCosineTopKFrom(store) equals tfidfCosineTopK(docs) row for row") {
-    val store = Text.postingStoreFrame(docs, cap)
-    assert(rows(Text.tfidfCosineTopKFrom(store, nQueries = 3, k = 4), Seq("q_id", "rnk")) ===
-      rows(Text.tfidfCosineTopK(docs, nQueries = 3, k = 4, dfCapFrac = cap), Seq("q_id", "rnk")))
-  }
-
-  test("bm25TopKFrom(store) equals bm25TopK(docs) row for row") {
-    val store = Text.postingStoreFrame(docs, cap)
-    assert(rows(Text.bm25TopKFrom(store, nQueries = 3, k = 4), Seq("q_id", "rnk")) ===
-      rows(Text.bm25TopK(docs, nQueries = 3, k = 4), Seq("q_id", "rnk")))
-  }
-
-  test("hybridRrfTopKFrom(store) equals hybridRrfTopK(docs), capped-only corner included") {
-    // doc 0 (query) and doc 5 share ONLY the df-capped token: the
-    // store form must keep it in the BM25 universe with n_kept = 0 and
-    // never let it steal a cosine rank — the same corner HybridRrfSpec
-    // pins on the raw form
-    val corner = cornerDocs.toDF("doc_id", "text")
-    for ((d, c) <- Seq((docs, cap), (corner, 0.5))) {
-      val store = Text.postingStoreFrame(d, c)
-      assert(rows(Text.hybridRrfTopKFrom(store, nQueries = 2, kPer = 3, kFused = 3),
-          Seq("q_id", "fused_rnk")) ===
-        rows(Text.hybridRrfTopK(d, nQueries = 2, kPer = 3, kFused = 3, dfCapFrac = c),
-          Seq("q_id", "fused_rnk")))
-    }
-  }
-
   test("driver-local query slices leave every *From operator bit-identical") {
     // the r12 LocalRelation move: collect docs 0..nQ-1's postings
     // (q_id, token, qw) driver-side and pass them as qSlice — scores,

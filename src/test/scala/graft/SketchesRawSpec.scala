@@ -82,35 +82,6 @@ class SketchesRawSpec extends AnyFunSuite {
     assert(sums.values.forall(_ === n), s"per-row counter mass must equal $n: $sums")
   }
 
-  test("cmsEstimateFor over raw counters == the audit form's cms_est for every key") {
-    val keys = dupRows.map(_._2).distinct
-    val audit = Sketches.cmsHeavyHitters(dupDf, "k", topK = keys.size)
-      .collect().map(r => r.getString(0) -> r.getLong(2)).toMap
-    val counters = Sketches.cmsCountersFromRaw(dupDf, "k")
-    val raw = Sketches.cmsEstimateFor(counters, keys.toDF("k"))
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    assert(raw.keySet === audit.keySet)
-    for ((k, est) <- raw) assert(est === audit(k), s"key $k estimate diverged")
-  }
-
-  test("cmsEstimateFor: an unseen probe key reads 0 when any of its buckets is empty") {
-    // tiny input -> most of the 4x64 counter grid has NO rows; an
-    // unseen key whose bucket set touches an empty cell must estimate
-    // 0 (the r12 review fix: the inner-join form dropped the empty
-    // bucket and took min over the collided rest — an overestimate in
-    // the one direction CMS promises to never be wrong about)
-    val tiny = Seq("a", "a", "b").toDF("k")
-    val counters = Sketches.cmsCountersFromRaw(tiny, "k")
-    val probes = (Seq("a", "b") ++ (0 until 50).map(i => s"unseen$i")).toDF("k")
-    val est = Sketches.cmsEstimateFor(counters, probes)
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    assert(est("a") === 2L && est("b") === 1L)
-    // with 3 raw keys over a 64-wide grid, every unseen probe key has
-    // at least one empty bucket among its 4 -> exact zero
-    assert((0 until 50).forall(i => est(s"unseen$i") === 0L),
-      s"unseen keys must read 0: ${est.filter(_._1.startsWith("unseen")).filter(_._2 != 0)}")
-  }
-
   test("bloomBits sizes for the target false-positive rate; undersized saturates") {
     assert(Sketches.bloomBits(8000) === 98914) // the q_bloom_dedup literal
     assert(Sketches.bloomBits(100) > Sketches.bloomBits(10))

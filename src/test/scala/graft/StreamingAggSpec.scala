@@ -5,7 +5,7 @@ import org.apache.spark.sql.streaming.{OutputMode, Trigger}
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.streaming.StreamingAggregates
-import graft.streaming.StreamingAggregates.{SessionInput, SessionOut, TouchInput, TouchOut}
+import graft.streaming.StreamingAggregates.{TouchInput, TouchOut}
 
 class StreamingAggSpec extends AnyFunSuite {
 
@@ -29,30 +29,6 @@ class StreamingAggSpec extends AnyFunSuite {
       Files.copy(part.toPath, dst.toPath)
       dst.setLastModified(now - 10000L + i * 5000L) // file order = arrival order
     }
-  }
-
-  test("watermarked tumbling counts finalize closed windows in append mode") {
-    val base = Files.createTempDirectory("graft-sagg").toString
-    val h = 3600L * 1000000
-    // hour 0: 3 clicks, 1 view; hour 1: 1 click; far-future row pushes
-    // the watermark past both hours so they finalize
-    Seq(
-      ("click", 1L * 1000000), ("click", 2L * 1000000), ("click", 3L * 1000000),
-      ("view", 4L * 1000000), ("click", h + 5L * 1000000),
-      ("tick", 100 * h)
-    ).toDF("event_type", "ts_us").coalesce(1).write.parquet(s"$base/src")
-
-    StreamingAggregates.hourlyCounts(
-      spark, s"$base/src", schema, "ts_us", s"$base/ckpt", s"$base/sink")
-      .awaitTermination()
-
-    val out = spark.read.parquet(s"$base/sink")
-      .collect().map(r => (r.getString(1), r.getLong(2))).toSet
-    assert(out.contains(("click", 3L)))
-    assert(out.contains(("view", 1L)))
-    assert(out.contains(("click", 1L)))
-    // the far-future 'tick' window is still open — not emitted
-    assert(!out.exists(_._1 == "tick"))
   }
 
   test("streaming HLL registers project to EXACTLY the batch estimate") {
@@ -213,108 +189,6 @@ class StreamingAggSpec extends AnyFunSuite {
     assert(quantile(0.99) === batch.getDouble(4))
   }
 
-  test("stream-stream interval join equals the batch interval join") {
-    val base = Files.createTempDirectory("graft-ssj").toString
-    val h = 3600L * 1000000
-    val evSchema = StructType(Seq(
-      StructField("event_id", LongType), StructField("user_id", LongType),
-      StructField("ts_us", LongType)))
-    // all plants sit one hour past the epoch: a row AT the initial
-    // watermark (epoch 0) is dropped as late before it can join.
-    // left: touches at t=0s and t=100s per user; right: conversions at
-    // t=30s (matches the first touch within 1 minute), t=130s (matches
-    // the second), t=500s (matches nothing); user 99 converts with no
-    // touch at all; far-future ticks advance both watermarks
-    val t0 = h
-    val left = Seq((1L, 7L, t0), (2L, 7L, t0 + 100L * 1000000),
-      (3L, 8L, t0), (900L, 0L, 100 * h))
-    val right = Seq((10L, 7L, t0 + 30L * 1000000), (11L, 7L, t0 + 130L * 1000000),
-      (12L, 7L, t0 + 500L * 1000000), (13L, 99L, t0 + 30L * 1000000),
-      (901L, 0L, 100 * h))
-    left.toDF("event_id", "user_id", "ts_us").coalesce(1).write.parquet(s"$base/l")
-    right.toDF("event_id", "user_id", "ts_us").coalesce(1).write.parquet(s"$base/r")
-
-    StreamingAggregates.streamStreamJoin(
-      spark, s"$base/l", s"$base/r", evSchema, maxGap = "1 minute",
-      s"$base/ckpt", s"$base/sink").awaitTermination()
-
-    val got = spark.read.parquet(s"$base/sink")
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
-      .toSet
-    // batch twin: plain interval join on the same rows
-    val l = left.toDF("l_id", "user_id", "l_ts")
-    val r = right.toDF("r_id", "user_id", "r_ts")
-    val expected = l.join(r, Seq("user_id"))
-      .filter($"r_ts" >= $"l_ts" && $"r_ts" <= $"l_ts" + 60L * 1000000)
-      .select($"user_id", $"l_id", $"r_id", ($"r_ts" - $"l_ts").as("gap_us"))
-      .collect().map(t => (t.getLong(0), t.getLong(1), t.getLong(2), t.getLong(3)))
-      .toSet
-    assert(got === expected)
-    // the planted structure, explicitly: each conversion matched its
-    // touch, the out-of-window and touchless conversions matched nothing
-    assert(got.contains((7L, 1L, 10L, 30L * 1000000)))
-    assert(got.contains((7L, 2L, 11L, 30L * 1000000)))
-    assert(!got.exists(_._3 == 12L) && !got.exists(_._1 == 99L))
-  }
-
-  test("sliding windows count each event once per covered window") {
-    val base = Files.createTempDirectory("graft-slide").toString
-    val h = 3600L * 1000000
-    // one click at minute 45: with 1h windows sliding every 30min it is
-    // covered by windows starting at 00:00 and 00:30 — two rows
-    Seq(
-      ("click", 45L * 60 * 1000000),
-      ("tick", 100 * h) // watermark pusher; its windows stay open
-    ).toDF("event_type", "ts_us").coalesce(1).write.parquet(s"$base/src")
-
-    StreamingAggregates.slidingCounts(
-      spark, s"$base/src", schema, "ts_us", s"$base/ckpt", s"$base/sink")
-      .awaitTermination()
-
-    val clickRows = spark.read.parquet(s"$base/sink")
-      .collect().filter(_.getString(1) == "click")
-      .map(r => (r.getAs[java.sql.Timestamp]("win_start").getTime, r.getLong(2)))
-    assert(clickRows.length === 2)
-    assert(clickRows.forall(_._2 === 1L))
-    assert(clickRows.map(_._1).sorted.toSeq === Seq(0L, 30L * 60 * 1000))
-  }
-
-  test("flatMapGroupsWithState sessionizes by gap and emits closed sessions") {
-    val base = Files.createTempDirectory("graft-sess").toString
-    val m = 60L * 1000000
-    // offset away from epoch 0: a row whose event time equals the
-    // initial watermark (0) is dropped as late
-    val t0 = 1000 * m
-    Seq(
-      SessionInput(1L, t0), SessionInput(1L, t0 + 5 * m), SessionInput(1L, t0 + 10 * m),
-      // > 30 min gap: new session for user 1
-      SessionInput(1L, t0 + 60 * m), SessionInput(1L, t0 + 62 * m),
-      SessionInput(2L, t0),
-      // watermark pusher
-      SessionInput(99L, t0 + 1000 * m)
-    ).toDF().coalesce(1).write.parquet(s"$base/src")
-
-    val src = spark.readStream.schema(
-      StructType(Seq(StructField("user_id", LongType), StructField("ts_us", LongType))))
-      .parquet(s"$base/src").as[SessionInput]
-
-    StreamingAggregates.sessionize(src, gapUs = 30 * m)
-      .writeStream
-      .format("parquet")
-      .option("path", s"$base/sink")
-      .option("checkpointLocation", s"$base/ckpt")
-      .outputMode(OutputMode.Append)
-      .trigger(Trigger.AvailableNow())
-      .start()
-      .awaitTermination()
-
-    val out = spark.read.parquet(s"$base/sink").as[SessionOut]
-      .collect().map(s => (s.user_id, s.start_us, s.end_us, s.n_events)).toSet
-    assert(out.contains((1L, t0, t0 + 10 * m, 3L)))            // first session of user 1
-    assert(out.contains((1L, t0 + 60 * m, t0 + 62 * m, 2L)))   // second, closed by timeout
-    assert(out.contains((2L, t0, t0, 1L)))                     // single-event session
-  }
-
   test("streaming last-touch attribution matches the batch operator on one batch") {
     val base = Files.createTempDirectory("graft-attr").toString
     val t0 = 1000L * 60 * 1000000
@@ -392,100 +266,5 @@ class StreamingAggSpec extends AnyFunSuite {
     val streamed = spark.read.parquet(s"$base/sink").as[TouchOut].collect()
       .map(o => (o.event_id, o.last_touch_ts)).toMap
     assert(streamed === Map(2L -> None))
-  }
-
-  // The next two land user 1 at t0+10h (watermark t0+9h after the
-  // batch), then user 2 at t0 with a 1 h gap: user 2's state would time
-  // out at t0+1h, already behind the watermark when it is built.
-  test("streaming recency scores drop state whose timeout the watermark already passed") {
-    import StreamingAggregates.{DecayInput, DecayOut}
-    val base = Files.createTempDirectory("graft-sdecay-late").toString
-    val t0 = 1000L * 60 * 1000000
-    val hourUs = 3600L * 1000000
-    landInOrder(base, Seq(
-      Seq(DecayInput(1L, 1L, t0 + 10 * hourUs, 1.0)).toDF(),
-      Seq(DecayInput(2L, 2L, t0, 2.0)).toDF()))
-    val src = spark.readStream.option("maxFilesPerTrigger", "1").schema(StructType(Seq(
-      StructField("event_id", LongType), StructField("user_id", LongType),
-      StructField("ts_us", LongType), StructField("value", DoubleType))))
-      .parquet(s"$base/src").as[DecayInput]
-    StreamingAggregates.recencyScores(src, halflifeDays = 1.0, idleUs = hourUs)
-      .writeStream.format("parquet")
-      .option("path", s"$base/sink")
-      .option("checkpointLocation", s"$base/ckpt")
-      .outputMode(OutputMode.Append)
-      .trigger(Trigger.AvailableNow())
-      .start().awaitTermination()
-    val out = spark.read.parquet(s"$base/sink").as[DecayOut].collect()
-      .map(o => (o.user_id, o.ts_us, o.n_events, o.score)).toSet
-    assert(out === Set((1L, t0 + 10 * hourUs, 1L, 1.0), (2L, t0, 1L, 2.0)))
-  }
-
-  test("streaming sessionize emits a session whose close the watermark already passed") {
-    val base = Files.createTempDirectory("graft-sess-late").toString
-    val t0 = 1000L * 60 * 1000000
-    val hourUs = 3600L * 1000000
-    landInOrder(base, Seq(
-      Seq(SessionInput(1L, t0 + 10 * hourUs)).toDF(),
-      Seq(SessionInput(2L, t0)).toDF()))
-    val src = spark.readStream.option("maxFilesPerTrigger", "1").schema(
-      StructType(Seq(StructField("user_id", LongType), StructField("ts_us", LongType))))
-      .parquet(s"$base/src").as[SessionInput]
-    StreamingAggregates.sessionize(src, gapUs = hourUs)
-      .writeStream.format("parquet")
-      .option("path", s"$base/sink")
-      .option("checkpointLocation", s"$base/ckpt")
-      .outputMode(OutputMode.Append)
-      .trigger(Trigger.AvailableNow())
-      .start().awaitTermination()
-    // user 1's session is still open (closes at t0+11h)
-    val out = spark.read.parquet(s"$base/sink").as[SessionOut].collect()
-      .map(s => (s.user_id, s.start_us, s.end_us, s.n_events)).toSet
-    assert(out === Set((2L, t0, t0, 1L)))
-  }
-
-  test("streaming recency scores: incremental decay equals the smooth batch sum across batches") {
-    import StreamingAggregates.{DecayInput, DecayOut}
-    val base = java.nio.file.Files.createTempDirectory("graft-sdecay").toString
-    val day = 86400000000L
-    val t0 = 1704067200000000L
-    val h = 2.0
-    // user 1: three events across two micro-batches (the second
-    // out-of-order WITHIN its batch); user 2: one event
-    val b1 = Seq(
-      DecayInput(1L, 1L, t0, 8.0), DecayInput(2L, 1L, t0 + 2 * day, 4.0),
-      DecayInput(3L, 2L, t0 + day, 5.0))
-    val b2 = Seq(
-      DecayInput(5L, 1L, t0 + 5 * day, 2.0),
-      DecayInput(4L, 1L, t0 + 3 * day, 1.0)) // late-in-batch, folds by ts
-    val schema = StructType(Seq(
-      StructField("event_id", LongType), StructField("user_id", LongType),
-      StructField("ts_us", LongType), StructField("value", DoubleType)))
-    def run(rows: Seq[DecayInput]): Unit = {
-      rows.toDF().coalesce(1).write.mode("append").parquet(s"$base/src")
-      StreamingAggregates.recencyScores(
-          spark.readStream.schema(schema).parquet(s"$base/src").as[DecayInput],
-          halflifeDays = h, idleUs = 365L * day)
-        .writeStream.format("parquet")
-        .option("path", s"$base/sink")
-        .option("checkpointLocation", s"$base/ckpt")
-        .outputMode(OutputMode.Append)
-        .trigger(Trigger.AvailableNow())
-        .start().awaitTermination()
-    }
-    run(b1); run(b2)
-    // latest emitted row per user = the running score at its last event
-    val latest = spark.read.parquet(s"$base/sink").as[DecayOut].collect()
-      .groupBy(_.user_id).map { case (u, rows) => u -> rows.maxBy(_.ts_us) }
-    // smooth batch reference: sum of value * 2^(-(tLast - t)/h) per user
-    def ref(events: Seq[(Long, Double)]): Double = {
-      val tLast = events.map(_._1).max
-      events.map { case (t, v) => v * math.pow(2.0, -(tLast - t) / (h * day)) }.sum
-    }
-    val u1 = ref(Seq((t0, 8.0), (t0 + 2 * day, 4.0), (t0 + 3 * day, 1.0), (t0 + 5 * day, 2.0)))
-    assert(math.abs(latest(1L).score - u1) / u1 < 1e-9,
-      s"user 1: ${latest(1L).score} vs $u1")
-    assert(latest(1L).n_events === 4L)
-    assert(latest(2L).score === 5.0 && latest(2L).n_events === 1L)
   }
 }

@@ -22,55 +22,6 @@ class StreamingCorpusSpec extends AnyFunSuite {
   private def goodText(tag: String): String =
     (1 to 15).map(i => s"${tag}word$i").mkString(" ") // 15 words: passes the gate
 
-  test("dedups content, gates quality, and absorbs replays") {
-    val base = Files.createTempDirectory("graft-scorpus").toString
-    val (src, sink, ckpt) = (s"$base/src", s"$base/sink", s"$base/ckpt")
-    val t0 = System.currentTimeMillis() * 1000L
-
-    Seq(
-      (1L, goodText("a"), t0 + 1),
-      (2L, goodText("a"), t0 + 2),   // same CONTENT, different id → dropped
-      (3L, "too short", t0 + 3),     // fails the Gopher gate (< 10 words)
-      (4L, goodText("b"), t0 + 4)
-    ).toDF("doc_id", "text", "ts_us").coalesce(1).write.mode("append").parquet(src)
-    StreamingCorpus.start(spark, src, schema, "ts_us", ckpt, sink).awaitTermination()
-    val after1 = spark.read.parquet(sink).collect()
-    assert(after1.length === 2) // one per distinct quality content
-    assert(after1.map(_.getAs[String]("text")).toSet ===
-      Set(goodText("a"), goodText("b")))
-
-    // second drop: a replay of content 'b' (new id, late) + new content
-    Seq(
-      (5L, goodText("b"), t0 + 10),  // replayed content → sink skips
-      (6L, goodText("c"), t0 + 11)
-    ).toDF("doc_id", "text", "ts_us").coalesce(1).write.mode("append").parquet(src)
-    StreamingCorpus.start(spark, src, schema, "ts_us", ckpt, sink).awaitTermination()
-    val after2 = spark.read.parquet(sink).collect()
-    assert(after2.length === 3)
-
-    // checkpoint loss: full source replay, idempotent sink absorbs all
-    StreamingCorpus.start(spark, src, schema, "ts_us", s"$base/ckpt2", sink)
-      .awaitTermination()
-    assert(spark.read.parquet(sink).collect().length === 3)
-  }
-
-  test("a corpus micro-batch at the shipped 200 shuffle partitions appends a data-sized file count") {
-    val base = Files.createTempDirectory("graft-scorpus-wide").toString
-    val (src, sink, ckpt) = (s"$base/src", s"$base/sink", s"$base/ckpt")
-    val t0 = System.currentTimeMillis() * 1000L
-    (1 to 40).map(i => (i.toLong, goodText(s"d$i"), t0 + i))
-      .toDF("doc_id", "text", "ts_us").coalesce(1).write.parquet(src)
-    val key = "spark.sql.shuffle.partitions"
-    val prior = spark.conf.get(key)
-    spark.conf.set(key, "200")
-    try StreamingCorpus.start(spark, src, schema, "ts_us", ckpt, sink).awaitTermination()
-    finally spark.conf.set(key, prior)
-    val files = new java.io.File(sink).listFiles().count(_.getName.startsWith("part-"))
-    val cap = spark.sparkContext.defaultParallelism
-    assert(files <= cap, s"the micro-batch appended $files part files, over $cap")
-    assert(spark.read.parquet(sink).count() === 40L)
-  }
-
   test("streaming LSH candidates: near-dups pair across and within batches") {
     import org.apache.spark.sql.streaming.{OutputMode, Trigger}
     val base = Files.createTempDirectory("graft-slsh").toString

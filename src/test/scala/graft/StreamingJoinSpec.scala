@@ -61,30 +61,4 @@ class StreamingJoinSpec extends AnyFunSuite {
       .collect().map(r => (r.getLong(0), r.getLong(2))).toSet
     assert(out === Set((1L, t0 + 5 * m)))
   }
-
-  test("stream-static enrichment: every batch sees the full dimension, no state") {
-    val base = Files.createTempDirectory("graft-senrich").toString
-    Seq((1L, 10L), (2L, 20L), (9L, 30L))
-      .toDF("user_id", "ts_us").coalesce(1).write.parquet(s"$base/events")
-    val dim = Seq((1L, "gold"), (2L, "silver")).toDF("user_id", "segment")
-
-    val enriched = graft.streaming.StreamingAggregates.enrich(
-      spark.readStream.schema(schema).parquet(s"$base/events"),
-      dim, Seq("user_id"))
-
-    enriched.writeStream
-      .format("parquet")
-      .option("path", s"$base/sink")
-      .option("checkpointLocation", s"$base/ckpt")
-      .outputMode(OutputMode.Append)
-      .trigger(Trigger.AvailableNow())
-      .start()
-      .awaitTermination()
-
-    val out = spark.read.parquet(s"$base/sink")
-      .collect()
-      .map(r => (r.getLong(0), if (r.isNullAt(2)) null else r.getString(2))).toSet
-    // unmatched stream rows pass through with NULL enrichment (left join)
-    assert(out === Set((1L, "gold"), (2L, "silver"), (9L, null)))
-  }
 }

@@ -25,23 +25,6 @@ class TextSimSpec extends AnyFunSuite {
     assert(out === Map(2L -> 2L, 9L -> 1L))
   }
 
-  test("exactDedupByHash agrees with exactDedup on keep ids") {
-    val docs = Seq((5L, "same"), (2L, "same"), (9L, "other"))
-      .toDF("doc_id", "text")
-    val byText = Text.exactDedup(docs).collect().map(_.getLong(0)).toSet
-    val byHash = Text.exactDedupByHash(docs).collect().map(_.getLong(0)).toSet
-    assert(byText === byHash)
-  }
-
-  test("rollingHash matches the hand-computed polynomial fold") {
-    val docs = Seq((0L, "ab"), (1L, "ab"), (2L, "ba")).toDF("doc_id", "text")
-    val out = Text.rollingHash(docs)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(out(0L) === 97L * 31 + 98)  // 'a'=97, 'b'=98 → 3105
-    assert(out(0L) === out(1L))        // content-determined
-    assert(out(0L) !== out(2L))        // order matters (rolling, not bag)
-  }
-
   test("heavyHitters finds tokens above the support threshold") {
     val docs = Seq(
       (0L, "spam spam spam spam a"),
@@ -82,20 +65,6 @@ class TextSimSpec extends AnyFunSuite {
     val again = Sim.hyperplaneLshBuckets(emb, dim = 8, nPlanes = 8)
       .collect().map(r => r.getLong(0) -> r.getLong(2)).toMap
     assert(again === buckets)
-  }
-
-  test("cosineTopKLsh finds the identical twin through its bucket") {
-    val rnd = new scala.util.Random(11)
-    // query 0 and vec 100 identical (same bucket guaranteed); plus
-    // 50 random 64-dim distractors
-    val base = Array.fill(64)(rnd.nextGaussian().toFloat)
-    val rows = Seq((0L, base), (100L, base.clone())) ++
-      (1L to 50L).map(i => (100L + i, Array.fill(64)(rnd.nextGaussian().toFloat)))
-    val emb = rows.toDF("vec_id", "embedding")
-    val out = Sim.cosineTopKLsh(emb, nQueries = 1, k = 3, nPlanes = 6)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getLong(3)))
-    // the identical twin must rank first with cosine 1.0
-    assert(out.exists(r => r._1 == 0L && r._2 == 100L && r._3 == 1.0 && r._4 == 1L))
   }
 
   test("cosineTopK returns k ranked neighbours per query") {

@@ -35,7 +35,6 @@ class TopKAggSpec extends AnyFunSuite {
       }
       val df = rows.toDF("g", "score", "rid")
       val expected = asSet(windowForm(df, 5))
-      assert(asSet(TopK.topKPerGroup(df, "g", "score", "rid", 5)) === expected, s"df form, trial $trial")
       assert(asSet(TopK.topKPerGroupTyped(df, "g", "score", "rid", 5)) === expected, s"typed form, trial $trial")
     }
   }

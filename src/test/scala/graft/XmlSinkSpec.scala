@@ -62,35 +62,4 @@ class XmlSinkSpec extends AnyFunSuite {
     assert(bad.length === 1)
     assert(bad.head.contains("oops"), "the quarantine column carries the raw line")
   }
-
-  test("streaming twin routes good rows and quarantines raw lines across drops") {
-    val base = Files.createTempDirectory("graft-xml-stream").toString
-    val (src, good, quar, ckpt) =
-      (s"$base/src", s"$base/good", s"$base/quar", s"$base/ckpt")
-    val s2 = StructType(Seq(
-      StructField("event_id", LongType), StructField("event_type", StringType)))
-
-    // drop 1: a malformed VALUE and a malformed MARKUP row between good ones
-    Seq(
-      "<row><event_id>1</event_id><event_type>a</event_type></row>",
-      "<row><event_id>oops</event_id><event_type>bad</event_type></row>",
-      "<row><event_id>3</event_id>",
-      "<row><event_id>4</event_id><event_type>b</event_type></row>")
-      .toDF("value").coalesce(1).write.mode("append").text(src)
-    graft.streaming.StreamingCorpus
-      .dirtyXmlIntake(spark, src, s2, ckpt, good, quar).awaitTermination()
-    assert(spark.read.parquet(good).select("event_id").as[Long]
-      .collect().sorted.toSeq === Seq(1L, 4L))
-    assert(spark.read.parquet(quar).count() === 2)
-
-    // drop 2: the file source resumes from its log — only the new file
-    // processes, sinks accumulate
-    Seq("<row><event_id>5</event_id><event_type>c</event_type></row>")
-      .toDF("value").coalesce(1).write.mode("append").text(src)
-    graft.streaming.StreamingCorpus
-      .dirtyXmlIntake(spark, src, s2, ckpt, good, quar).awaitTermination()
-    assert(spark.read.parquet(good).select("event_id").as[Long]
-      .collect().sorted.toSeq === Seq(1L, 4L, 5L))
-    assert(spark.read.parquet(quar).count() === 2)
-  }
 }
