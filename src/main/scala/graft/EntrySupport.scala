@@ -21,38 +21,21 @@ private[graft] object EntrySupport {
     s
   }
 
-  /** Data-proportional fan-out widths for the per-row-heavy map stages
-    * in query bodies: width tracks the source table's
-    * BYTES (one partition per fanout-target of compressed parquet,
-    * clamped to the session's parallelism), replacing the former
-    * `defaultParallelism` — which shredded sub-MB corpora into one
-    * micro-task per core and made the whole bench anti-scale from 8 to
-    * 32 cores. At 100 TB the byte term saturates the
-    * clamp and the width is the cluster parallelism, exactly as
-    * before. [[fanN]] = documents-derived frames (tokenize/shingle/
-    * decode tiers), [[fanEvN]] = events-derived feeds (JSON/XML/CSV
-    * intake), [[fanEmbN]] = embedding math.
-    */
-  private[graft] def fanN(s: SparkSession, dir: String): Int =
-    Tables.fanWidthFor(s, dir, "documents")
-  private[graft] def fanEvN(s: SparkSession, dir: String): Int =
-    Tables.fanWidthFor(s, dir, "events")
-  /** [[fanEvN]] at 1/8 the bytes/task target — for the row-format
-    * SERIALIZE→PARSE round-trip tier (dirty JSONL/XML/CSV feeds, the
-    * XML sink): their cost per source byte is ~an order of magnitude
-    * over columnar work (text expansion ×6 + java.regex/Jackson parse
-    * per row), and the written FILE COUNT is the read-back parse
-    * parallelism ceiling (row formats don't re-split below file
-    * boundaries once open-cost packing merges small files). Measured
-    * on a 32-core host: the 8-file feed layout parsed 2-4-way and cost the intake
-    * trio +0.35 s each vs the ~380 KB/file layout this multiplier
-    * restores (still data-proportional: byte-driven below the clamp,
-    * cluster-parallel at 100 TB).
+  /** Write width of the row-format feed fixtures (dirty JSONL/XML/CSV,
+    * the XML sink): the events table's data-proportional
+    * [[Tables.fanWidth]] at 1/8 the bytes/task target. Their cost per
+    * source byte is ~an order of magnitude over columnar work (text
+    * expansion ×6 + java.regex/Jackson parse per row), and the written
+    * FILE COUNT is the read-back parse parallelism ceiling (row formats
+    * don't re-split below file boundaries once open-cost packing merges
+    * small files). Measured on a 32-core host: the 8-file feed layout
+    * parsed 2-4-way and cost the intake trio +0.35 s each vs the
+    * ~380 KB/file layout this multiplier restores (still
+    * data-proportional: byte-driven below the clamp, cluster-parallel
+    * at 100 TB).
     */
   private[graft] def fanEvHeavyN(s: SparkSession, dir: String): Int =
-    Tables.fanWidthFor(s, dir, "events", targetMult = 0.125)
-  private[graft] def fanEmbN(s: SparkSession, dir: String): Int =
-    Tables.fanWidthFor(s, dir, "embeddings")
+    Tables.fanWidth(s, Tables.pathBytes(s, s"$dir/events.parquet"), targetMult = 0.125)
 
   /** Layout version for materialized scratch dirs: an ESCAPE HATCH for
     * layout changes the bytecode fingerprint below can't see (e.g. a
@@ -286,10 +269,7 @@ private[graft] object EntrySupport {
   private[graft] def isStore(path: String, sfDir: String): Boolean =
     stores.exists(st => tmpDir(st.tag, sfDir) == path)
 
-  /** documents ∪ suffix-perturbed copies (high-Jaccard near-dups).
-    * Repartitioned: the small parquet arrives as 1-2 splits, which
-    * would serialize the hash-heavy map-side work onto 2 cores.
-    */
+  /** documents ∪ suffix-perturbed copies (high-Jaccard near-dups). */
   private[graft] def perturbedCorpus(s: SparkSession, dir: String, cap: Long = Long.MaxValue): DataFrame = {
     val d = Tables.documents(s, dir)
       .filter(col("doc_id") < cap)
@@ -297,14 +277,12 @@ private[graft] object EntrySupport {
     d.unionByName(d.select(
       (col("doc_id") + 100000L).as("doc_id"),
       concat(col("text"), lit(" zz9 zz9")).as("text")))
-      .repartition(fanN(s, dir))
   }
 
   /** documents ∪ exact copies (identical token bags). */
   private[graft] def exactDupCorpus(s: SparkSession, dir: String): DataFrame = {
     val d = Tables.documents(s, dir).select(col("doc_id"), col("text"))
     d.unionByName(d.select((col("doc_id") + 100000L).as("doc_id"), col("text")))
-      .repartition(fanN(s, dir))
   }
 
   /** documents ∪ two prefix-truncated generations — guaranteed
@@ -323,7 +301,6 @@ private[graft] object EntrySupport {
     d.select(col("doc_id"), col("text"))
       .unionByName(d.select((col("doc_id") + 100000L).as("doc_id"), prefix(0.80).as("text")))
       .unionByName(d.select((col("doc_id") + 200000L).as("doc_id"), prefix(0.64).as("text")))
-      .repartition(fanN(s, dir))
   }
 
   /** The chain corpus is a deterministic derived FIXTURE (like the
@@ -412,7 +389,6 @@ private[graft] object EntrySupport {
   private[graft] val JpegMedia = Store("jpeg_media", Parquet, spread = true) { (s, dir) =>
     import s.implicits._
     Tables.documents(s, dir).select(col("doc_id")).as[Long]
-      .repartition(fanN(s, dir))
       .map { id =>
         val wb = (2 + id % 3).toInt; val hb = (2 + id % 2).toInt
         val w = wb * 8; val h = hb * 8
@@ -447,7 +423,6 @@ private[graft] object EntrySupport {
   private[graft] val PngMedia = Store("png_media", Parquet, spread = true) { (s, dir) =>
     import s.implicits._
     Tables.documents(s, dir).select(col("doc_id")).as[Long]
-      .repartition(fanN(s, dir))
       .map { id =>
         val w = (12 + (id % 7) * 4).toInt // multiple of 4: x%4 offsets balance
         val h = (10 + (id % 5) * 6).toInt // even: y%2 offsets balance
@@ -568,7 +543,7 @@ private[graft] object EntrySupport {
     * cache-materialize job.
     */
   private[graft] val LmCollapse = Store("lm_collapse", Parquet)((s, dir) =>
-    graft.ops.Text.bigramCollapse(Tables.documents(s, dir).repartition(fanN(s, dir))))
+    graft.ops.Text.bigramCollapse(Tables.documents(s, dir)))
   private[graft] def lmCollapse(s: SparkSession, dir: String): DataFrame =
     readStore(LmCollapse, s, dir)
 
@@ -661,8 +636,7 @@ private[graft] object EntrySupport {
   private[graft] def dsirRatioLocal(s: SparkSession, dir: String,
                                     buckets: Int): Seq[(Long, Long)] =
     memo(("dsir_ratio", dir, buckets)) {
-      graft.ops.Text.dsirRatio(
-        Tables.documents(s, dir), col("lang") === "en", buckets)
+      graft.ops.Text.dsirRatio(Tables.documents(s, dir), col("lang") === "en", buckets)
     }
 
   /** Memoized routed-query model for [[graft.ops.Hnsw.hnswTopKRouted]]
@@ -846,10 +820,8 @@ private[graft] object EntrySupport {
     */
   private[graft] val QualityLr = Store("quality_lr", Parquet) { (s, dir) =>
     import s.implicits._
-    val docs = Tables.documents(s, dir)
-      .repartition(fanN(s, dir))
     val (w, b) = graft.ops.Text.trainQualityLrLocal(
-      graft.ops.Text.qualityCorpus(docs), dim = 256)
+      graft.ops.Text.qualityCorpus(Tables.documents(s, dir)), dim = 256)
     (w.zipWithIndex.map { case (x, i) => (i, x) }.toSeq :+ ((-1, b)))
       .toDF("idx", "w")
   }
@@ -875,9 +847,7 @@ private[graft] object EntrySupport {
     */
   private[graft] val BpeMerges = Store("bpe_merges", Parquet) { (s, dir) =>
     import s.implicits._
-    val m = graft.ops.Text.bpeTrain(
-      Tables.documents(s, dir).repartition(fanN(s, dir)),
-      nMerges = 32, minWordCount = 2L)
+    val m = graft.ops.Text.bpeTrain(Tables.documents(s, dir), nMerges = 32, minWordCount = 2L)
     m.zipWithIndex.map { case ((a, b), i) => (i, a, b) }.toDF("rank", "a", "b")
   }
   private[graft] def bpeMerges(s: SparkSession, dir: String): Seq[(String, String)] =
@@ -901,8 +871,7 @@ private[graft] object EntrySupport {
     */
   private[graft] val SpmSampleTauU6 = 300000L
   private[graft] def spmTrain(s: SparkSession, dir: String): Seq[(String, Long)] =
-    graft.ops.Text.spmTrainLocal(
-      Tables.documents(s, dir).repartition(fanN(s, dir)),
+    graft.ops.Text.spmTrainLocal(Tables.documents(s, dir),
       vocabSize = SpmVocabSize, maxPieceLen = SpmMaxPieceLen,
       emIters = SpmEmIters, minWordCount = 2L)
 
@@ -1163,8 +1132,7 @@ private[graft] object EntrySupport {
   private[graft] def qvApproxLocal(s: SparkSession, dir: String): (Double, Double, Double, Double) =
     memo(("qv_approx", dir)) {
       graft.ops.Text.qualityVotesMediansApprox(
-        Tables.documents(s, dir).select(col("doc_id"), col("text"))
-          .repartition(fanN(s, dir)),
+        Tables.documents(s, dir).select(col("doc_id"), col("text")),
         stopwords = Seq("the", "a"))
     }
 
@@ -1178,9 +1146,7 @@ private[graft] object EntrySupport {
     * the three consumers and both oracles cannot drift.
     */
   private[graft] def wcStandingPages(s: SparkSession, dir: String): DataFrame = {
-    val docs = Tables.documents(s, dir)
-      .repartition(fanN(s, dir))
-    docs.select(col("doc_id"), concat(
+    Tables.documents(s, dir).select(col("doc_id"), concat(
       lit("<html><head><title>doc "), col("doc_id").cast("string"),
       lit("</title>"),
       when(col("doc_id") % 5 === 0,
@@ -1210,7 +1176,6 @@ private[graft] object EntrySupport {
                                   copyMod: Int, freshMod: Int): DataFrame = {
     import s.implicits._
     val docs = Tables.documents(s, dir)
-      .repartition(fanN(s, dir))
     val copies = docs.filter(col("doc_id") % 4 === copyMod).select(
       (col("doc_id") + 5000000L).as("doc_id"),
       concat(lit("<html><head><title>doc "), col("doc_id").cast("string"),

@@ -123,23 +123,19 @@ object Tables {
   /** Fact/corpus tables whose consumers do real per-row work (tokenize,
     * JSON parse, vector math). At test scale each ships as ONE parquet
     * split, so without an explicit spread every map-side operator over
-    * them runs single-threaded — the reader repartitions to the
-    * session's parallelism so the cached base frame (and every scan)
-    * fans out. At 100 TB the files bring their own splits and this
-    * round-robin is a no-op in spirit (n ≈ cluster parallelism either
-    * way); predicates and column pruning push through Repartition, so
-    * nothing is lost at the scan. Dimension tables stay single-split:
-    * they feed broadcasts, where extra partitions are pure task
-    * overhead.
+    * them runs single-threaded — the reader round-robins the scan to the
+    * data-proportional [[fanWidth]] of the table's own bytes, so the
+    * cached base frame (and every scan) fans out. This reader is the
+    * one place that spread is decided: query bodies over these tables
+    * add none of their own. At 100 TB the files bring at least that many
+    * splits themselves, and a round-robin there would be a full shuffle
+    * of the table, so [[readParquetCached]] does not spread a scan that
+    * is already that wide. Predicates and column pruning push through
+    * Repartition, so nothing is lost at the scan. Dimension tables stay
+    * single-split: they feed broadcasts, where extra partitions are
+    * pure task overhead.
     */
   private val spreadTables = Set("events", "documents", "embeddings", "lineitem")
-
-  /** Spread width for [[spreadTables]]: the data-proportional
-    * [[fanWidth]] of the table's own bytes — fan-out tracks input
-    * volume at every scale instead of a constant.
-    */
-  private def spreadParts(spark: SparkSession, path: String, targetMult: Double): Int =
-    fanWidth(spark, pathBytes(spark, path), targetMult)
 
   /** Bytes on disk under `path` (recursive), memoized — static inputs
     * and write-once fixtures by design; [[invalidatePath]] evicts when
@@ -148,7 +144,7 @@ object Tables {
     */
   private val pathBytesCache =
     new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
-  private def pathBytes(spark: SparkSession, path: String): Long =
+  private[graft] def pathBytes(spark: SparkSession, path: String): Long =
     pathBytesCache.computeIfAbsent(path, { p =>
       try {
         val hp = new org.apache.hadoop.fs.Path(p)
@@ -183,16 +179,6 @@ object Tables {
       else math.ceil(bytes.toDouble / math.max(1L, target)).toLong
     math.max(1L, math.min(spark.sparkContext.defaultParallelism.toLong, byData)).toInt
   }
-
-  /** [[fanWidth]] keyed by a base-table parquet in `sfDir` — the width
-    * every query-body `repartition` over frames DERIVED from that
-    * table should use (the derived frame's bytes track the base
-    * table's within small constant factors, which the 256 KiB target
-    * absorbs).
-    */
-  def fanWidthFor(spark: SparkSession, sfDir: String, name: String = "documents",
-                  targetMult: Double = 1.0): Int =
-    fanWidth(spark, pathBytes(spark, s"$sfDir/$name.parquet"), targetMult)
 
   /** Analyzed-relation memo per (session, path, spread). A fresh
     * `spark.read.parquet` pays a footer schema-merge JOB plus a file
@@ -245,6 +231,15 @@ object Tables {
     * listed once per (session, path), optional round-robin spread
     * baked into the memoized frame. Keyed by a stable, never-reused
     * per-session id; dead sessions' entries are purged on miss.
+    *
+    * `spread` is a CAP: callers pass their parallelism budget, and the
+    * baked-in round-robin width is the data-proportional [[fanWidth]]
+    * of the path's actual bytes — never more partitions than the data
+    * warrants, never more than the caller's budget. A scan that
+    * already has that many splits (estimated as ⌈bytes /
+    * `spark.sql.files.maxPartitionBytes`⌉) is not spread at all: at
+    * 100 TB the files bring the width themselves, and a round-robin
+    * would only shuffle the whole table.
     */
   def readParquetCached(spark: SparkSession, path: String, spread: Int = 0): DataFrame = {
     // Purge BEFORE the computeIfAbsent: ConcurrentHashMap forbids the
@@ -254,13 +249,15 @@ object Tables {
     // outside the lambda, on every call; it is a cheap no-op when
     // nothing died.
     purgeDeadSessions()
-    // `spread` is a CAP: callers pass their parallelism budget
-    // and the baked-in round-robin width is the data-proportional
-    // fanWidth of the path's actual bytes — never more partitions
-    // than the data warrants, never more than the caller's budget.
     val width =
-      if (spread > 1) math.min(spread, fanWidth(spark, pathBytes(spark, path)))
-      else spread
+      if (spread <= 1) spread
+      else {
+        val bytes = pathBytes(spark, path)
+        val splits = math.ceil(
+          bytes.toDouble / spark.sessionState.conf.filesMaxPartitionBytes)
+        val w = math.min(spread, fanWidth(spark, bytes))
+        if (splits >= w) 0 else w
+      }
     dfCache.computeIfAbsent((sessionId(spark), path, width), { _ =>
       val schema = schemaCache.computeIfAbsent(path, p => spark.read.parquet(p).schema)
       val df = spark.read.schema(schema).parquet(path)
@@ -312,7 +309,7 @@ object Tables {
   def table(spark: SparkSession, sfDir: String, name: String): DataFrame = {
     val path = s"$sfDir/$name.parquet"
     val n =
-      if (spreadTables(name)) spreadParts(spark, path, spreadTargetMult(name))
+      if (spreadTables(name)) fanWidth(spark, pathBytes(spark, path), spreadTargetMult(name))
       else 0
     readParquetCached(spark, path, n)
   }

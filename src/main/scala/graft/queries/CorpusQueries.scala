@@ -303,10 +303,7 @@ private[graft] object CorpusQueries {
     Query("q_boilerplate", (s, dir) => {
       // plant a shared 5-token banner on even docs so the detector has
       // real chrome to find (the corpus itself is near-collision-free)
-      // scan fan-out: the hash-per-segment explode precedes the first
-      // exchange and the corpus parquet is one split
       val withBanner = Tables.documents(s, dir)
-        .repartition(fanN(s, dir))
         .withColumn("text",
           when(col("doc_id") % 2 === 0,
             concat(lit("cookie banner terms apply here "), col("text")))
@@ -460,8 +457,7 @@ private[graft] object CorpusQueries {
       // whole query: one feature aggregate + one doc-keyed fold.
       val (w, b) = qualityModel(s, dir)
       Text.qualityScoreFrom(
-          Text.qualityCorpus(Tables.documents(s, dir)
-            .repartition(fanN(s, dir))), 256, w, b)
+          Text.qualityCorpus(Tables.documents(s, dir)), 256, w, b)
         .orderBy(col("doc_id"))
     }, Pinned(m =>
       Text.qualityClassifierOracleSql(256, m.qualityLr._1, m.qualityLr._2)),
@@ -494,10 +490,7 @@ private[graft] object CorpusQueries {
       // bucket distribution vs the raw corpus — the data-selection
       // scorer of Xie et al. NeurIPS 2023 (Text.dsirWeights scaladoc
       // has the corpus-linear scale contract)
-      Text.dsirWeights(
-          Tables.documents(s, dir)
-            .repartition(fanN(s, dir)),
-          col("lang") === "en", buckets = 256)
+      Text.dsirWeights(Tables.documents(s, dir), col("lang") === "en", buckets = 256)
         .orderBy(col("doc_id"))
     }, Sql(
       // DSIR importance weights: hashed uni+bigram log-likelihood ratio
@@ -526,7 +519,6 @@ private[graft] object CorpusQueries {
       // head_50). The construction is mirrored in the oracle; the
       // shared farm literal lives in EntrySupport.htmlLinkFarm.
       val page = Tables.documents(s, dir)
-        .repartition(fanN(s, dir))
         .select(col("doc_id"), concat(
           lit("<html><head><title>doc "), col("doc_id").cast("string"),
           lit("</title><style>p { margin: 0; }</style></head><body>"),
@@ -617,7 +609,6 @@ private[graft] object CorpusQueries {
       // sizes the dedup would act on), and a title on all pages; the
       // oracle mirrors the construction
       val page = Tables.documents(s, dir)
-        .repartition(fanN(s, dir))
         .select(col("doc_id"), concat(
           lit("<html><head><title>doc "), col("doc_id").cast("string"),
           lit("</title>"),
@@ -690,7 +681,6 @@ private[graft] object CorpusQueries {
       // keep themselves). Per-doc verdict row — every drop reason
       // visible, nothing silently vanishes.
       val page = Tables.documents(s, dir)
-        .repartition(fanN(s, dir))
         .select(col("doc_id"), concat(
           lit("<html><head><title>doc "), col("doc_id").cast("string"),
           lit("</title>"),
@@ -769,7 +759,6 @@ private[graft] object CorpusQueries {
       // same-text page pair (text_dup fires on the later ids) and a
       // two-word page (low_quality fires on the Gopher word floor).
       val docs = Tables.documents(s, dir)
-        .repartition(fanN(s, dir))
       // title text survives tag strip, so the dup PAIR must share one
       // title (keyed to the seed doc, not the planted id) for its
       // extracted texts to collide
@@ -1071,8 +1060,7 @@ private[graft] object CorpusQueries {
       // arithmetic integer-or-single-division (bit-identical), medians
       // exact order statistics — no float-fold parity surface.
       Text.qualityVotes(
-          Tables.documents(s, dir).select(col("doc_id"), col("text"))
-            .repartition(fanN(s, dir)),
+          Tables.documents(s, dir).select(col("doc_id"), col("text")),
           stopwords = Seq("the", "a"))
         .orderBy(col("doc_id"))
     }, Sql(
@@ -1125,8 +1113,7 @@ private[graft] object CorpusQueries {
       // votes independently; QualityVotesSpec pins the approx
       // thresholds' rank error against the exact order statistic.
       Text.qualityVotesFrom(
-          Tables.documents(s, dir).select(col("doc_id"), col("text"))
-            .repartition(fanN(s, dir)),
+          Tables.documents(s, dir).select(col("doc_id"), col("text")),
           stopwords = Seq("the", "a"),
           medians = qvApproxLocal(s, dir))
         .orderBy(col("doc_id"))
@@ -1145,9 +1132,7 @@ private[graft] object CorpusQueries {
       // (dsirWeightsFrom scaladoc — the frozen-model deployment shape:
       // one job instead of three; the in-plan twin q_dsir_weights keeps
       // the full train+score pipeline declared)
-      Text.dsirWeightsFrom(
-          Tables.documents(s, dir)
-            .repartition(fanN(s, dir)),
+      Text.dsirWeightsFrom(Tables.documents(s, dir),
           col("lang") === "en", buckets = 256,
           ratioRows = dsirRatioLocal(s, dir, 256))
         .orderBy(col("logw_r").desc, col("doc_id"))

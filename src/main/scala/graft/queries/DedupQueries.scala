@@ -340,7 +340,6 @@ private[graft] object DedupQueries {
         .unionByName(bench.select(
           (col("doc_id") + 100000L).as("doc_id"),
           concat(col("text"), lit(" zz9 zz9")).as("text")))
-        .repartition(fanN(s, dir))
       graft.ops.Corpus.decontaminate(train, bench, minShared = 5)
         .orderBy(col("doc_id"))
     }, Sql(
@@ -416,7 +415,6 @@ private[graft] object DedupQueries {
           concat(col("text"), lit(" zz8 zz8")).as("text"))
       val rebatch = fresh.select((col("doc_id") + 100000L).as("doc_id"), col("text"))
       val batch = copies.unionByName(fresh).unionByName(rebatch)
-        .repartition(fanN(s, dir))
       Dedup.incrementalNewDocs(docs, batch).orderBy(col("doc_id"))
     }, Sql(
       """WITH corpus AS (SELECT doc_id, text FROM documents),
@@ -443,9 +441,7 @@ private[graft] object DedupQueries {
         |ORDER BY b.doc_id""".stripMargin)),
 
     Query("q_overlap_matrix", (s, dir) => {
-      Dedup.sourceOverlapMatrix(
-          Tables.documents(s, dir)
-            .repartition(fanN(s, dir)))
+      Dedup.sourceOverlapMatrix(Tables.documents(s, dir))
         .orderBy(col("src_a"), col("src_b"))
     }, Sql(
       """WITH tok AS (
@@ -474,10 +470,7 @@ private[graft] object DedupQueries {
         |ORDER BY src_a, src_b""".stripMargin)),
 
     Query("q_winnow", (s, dir) => {
-      Text.winnow(
-          Tables.documents(s, dir)
-            .repartition(fanN(s, dir)),
-          3, 4)
+      Text.winnow(Tables.documents(s, dir), 3, 4)
         .orderBy(col("doc_id"), col("fp_pos"))
     }, Sql(
       """WITH t AS (

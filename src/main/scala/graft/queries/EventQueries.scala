@@ -567,11 +567,7 @@ private[graft] object EventQueries {
           concat(lit("{\"tag\": \""), col("event_type"), lit("\", \"n\": "),
             (col("event_id") % 7).cast("string"), lit("}")))
         .otherwise(col("props"))
-      // scan fan-out: the per-row JSON parse is the whole cost and the
-      // events parquet is one split — spread it before parsing
-      EventOps.jsonKeyProfile(
-          Tables.events(s, dir).select(raw.as("raw"))
-            .repartition(fanEvN(s, dir)), "raw")
+      EventOps.jsonKeyProfile(Tables.events(s, dir).select(raw.as("raw")), "raw")
         .orderBy(col("key"))
     }, Sql(
       """WITH r AS (

@@ -46,7 +46,7 @@ private[graft] final case class Pinned(sql: PinnedModels => String) extends Orac
   * drifted store fails the hash gate.
   */
 private[graft] final class PinnedModels(s: SparkSession, dir: String) {
-  import EntrySupport.{fanN, qvApproxLocal, spmTrain}
+  import EntrySupport.{qvApproxLocal, spmTrain}
 
   private lazy val pq = Sim.pqTrainLocal(Tables.embeddings(s, dir),
     nCells = 8, m = 8, ks = 16, iters = 4, sampleMod = 2)
@@ -57,10 +57,9 @@ private[graft] final class PinnedModels(s: SparkSession, dir: String) {
   /** Quality-classifier weights and bias. */
   lazy val qualityLr: (Array[Double], Double) =
     Text.trainQualityLrLocal(
-      Text.qualityCorpus(Tables.documents(s, dir).repartition(fanN(s, dir))), dim = 256)
+      Text.qualityCorpus(Tables.documents(s, dir)), dim = 256)
   lazy val bpeMerges: Seq[(String, String)] =
-    Text.bpeTrain(Tables.documents(s, dir).repartition(fanN(s, dir)),
-      nMerges = 32, minWordCount = 2L)
+    Text.bpeTrain(Tables.documents(s, dir), nMerges = 32, minWordCount = 2L)
   lazy val spm: Seq[(String, Long)] = spmTrain(s, dir)
   /** The frozen approx-percentile thresholds q_quality_votes_approx
     * scores with (memoized per dir, so query and oracle share them). */

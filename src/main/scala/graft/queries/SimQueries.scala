@@ -347,9 +347,7 @@ private[graft] object SimQueries {
       // is the recall claim itself (a detached level-0 component or a
       // broken merge fails the hash gate); HnswSpec grades the
       // production configuration (efSearch=64) by recall at sf0.1.
-      graft.ops.Hnsw.hnswTopK(
-          Tables.embeddings(s, dir)
-            .repartition(fanEmbN(s, dir)),
+      graft.ops.Hnsw.hnswTopK(Tables.embeddings(s, dir),
           nQueries = 10, k = 5, m = 8, efConstruction = 64, efSearch = 512,
           queryRows = Some(embQueryLocal(s, dir, 10)))
         .orderBy(col("q_id"), col("rnk"))

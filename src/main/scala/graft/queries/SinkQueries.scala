@@ -60,11 +60,7 @@ private[graft] object SinkQueries {
         |) ORDER BY event_id""".stripMargin)),
 
     Query("q_sink_csv", (s, dir) => {
-      // repartition BEFORE the json extraction: the cached events table
-      // is one partition, and both the per-row json parse and the CSV
-      // text serialization would otherwise run on a single core
-      val out = EventOps.extractJsonLong(
-          Tables.events(s, dir).repartition(8), "props", "k", "param_k")
+      val out = EventOps.extractJsonLong(Tables.events(s, dir), "props", "k", "param_k")
         .select(
           col("event_id"), col("user_id"),
           date_format(timestamp_micros(col("ts_us")), "yyyy-MM-dd").as("event_date"),

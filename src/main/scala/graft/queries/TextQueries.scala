@@ -266,8 +266,7 @@ private[graft] object TextQueries {
       val planted = bpePlantedDocs(merges).toDF("doc_id", "text")
       Text.bpeEncodeDocs(
           Tables.documents(s, dir).select(col("doc_id"), col("text"))
-            .unionByName(planted)
-            .repartition(fanN(s, dir)),
+            .unionByName(planted),
           merges)
         .orderBy(col("doc_id"))
     }, Pinned(m =>
@@ -282,8 +281,7 @@ private[graft] object TextQueries {
       // and re-runs the replace-chain encode per lang in DuckDB
       Text.bpeFertilityByLang(
           Tables.documents(s, dir)
-            .select(col("doc_id"), col("lang"), col("text"))
-            .repartition(fanN(s, dir)),
+            .select(col("doc_id"), col("lang"), col("text")),
           bpeMerges(s, dir))
         .orderBy(col("lang"))
     }, Pinned(m =>
@@ -302,8 +300,7 @@ private[graft] object TextQueries {
       val planted = spmPlantedDocs(model).toDF("doc_id", "text")
       Text.spmEncodeDocs(
           Tables.documents(s, dir).select(col("doc_id"), col("text"))
-            .unionByName(planted)
-            .repartition(fanN(s, dir)),
+            .unionByName(planted),
           model, maxPieceLen = SpmMaxPieceLen,
           segRows = Some(spmSegLocal(s, dir)))
         .orderBy(col("doc_id"))
@@ -318,8 +315,7 @@ private[graft] object TextQueries {
       // tokenizer families graded on the same corpus per language
       Text.spmFertilityByLang(
           Tables.documents(s, dir)
-            .select(col("lang"), col("text"))
-            .repartition(fanN(s, dir)),
+            .select(col("lang"), col("text")),
           spmModel(s, dir), maxPieceLen = SpmMaxPieceLen,
           segRows = Some(spmSegLocal(s, dir)))
         .orderBy(col("lang"))
@@ -336,8 +332,7 @@ private[graft] object TextQueries {
       // optimality — the SpmSpec law). The oracle re-runs the whole
       // perturbed DP with the same inlined noise formula.
       Text.spmSampleEncodeDocs(
-          Tables.documents(s, dir).select(col("doc_id"), col("text"))
-            .repartition(fanN(s, dir)),
+          Tables.documents(s, dir).select(col("doc_id"), col("text")),
           spmModel(s, dir), maxPieceLen = SpmMaxPieceLen,
           tauU6 = SpmSampleTauU6, epoch = 1,
           segRows = Some(spmSampleSegLocal(s, dir, SpmSampleTauU6, 1)))
@@ -360,8 +355,7 @@ private[graft] object TextQueries {
       // recursive CTE with the same byte tallies.
       Text.spmEncodeDocs(
           Tables.documents(s, dir).select(col("doc_id"), col("text"))
-            .unionByName(spmFallbackPlantedDocs.toDF("doc_id", "text"))
-            .repartition(fanN(s, dir)),
+            .unionByName(spmFallbackPlantedDocs.toDF("doc_id", "text")),
           spmModel(s, dir), maxPieceLen = SpmMaxPieceLen,
           byteFallback = true,
           fbSegRows = Some(spmSegFbLocal(s, dir)))
@@ -471,10 +465,7 @@ private[graft] object TextQueries {
         |GROUP BY t.doc_id ORDER BY t.doc_id""".stripMargin)),
 
     Query("q_textrank", (s, dir) =>
-      Text.textrank(
-          Tables.documents(s, dir)
-            .repartition(fanN(s, dir)),
-          0.85, 5)
+      Text.textrank(Tables.documents(s, dir), 0.85, 5)
         .orderBy(col("token")), Sql(
       """WITH t AS (
         |  SELECT list_filter(string_split(text, ' '), x -> x != '') AS toks
@@ -520,9 +511,7 @@ private[graft] object TextQueries {
         |ORDER BY token""".stripMargin)),
 
     Query("q_hash_embed", (s, dir) => {
-      Text.hashedBowVectors(
-          Tables.documents(s, dir)
-            .repartition(fanN(s, dir)), 64)
+      Text.hashedBowVectors(Tables.documents(s, dir), 64)
         .orderBy(col("doc_id"), col("bucket"))
     }, Sql(
       """WITH tok AS (
@@ -540,9 +529,7 @@ private[graft] object TextQueries {
         |ORDER BY doc_id, bucket""".stripMargin)),
 
     Query("q_skipgrams", (s, dir) => {
-      Text.skipgramPairs(
-          Tables.documents(s, dir)
-            .repartition(fanN(s, dir)), 2)
+      Text.skipgramPairs(Tables.documents(s, dir), 2)
         .orderBy(col("center"), col("context"))
     }, Sql(
       """WITH t AS (
@@ -613,8 +600,7 @@ private[graft] object TextQueries {
         |FROM dt GROUP BY token ORDER BY token""".stripMargin)),
 
     Query("q_repetition", (s, dir) => {
-      Text.repetitionSignals(
-          Tables.documents(s, dir).repartition(fanN(s, dir)))
+      Text.repetitionSignals(Tables.documents(s, dir))
         .orderBy(col("doc_id"))
     }, Sql(
       """WITH t AS (
@@ -839,8 +825,7 @@ private[graft] object TextQueries {
       // break, and the multi-chunk collapse through both engines.
       Text.langSegments(
           Tables.documents(s, dir).select(col("doc_id"), col("text"))
-            .unionByName(langSegPlantedDocs.toDF("doc_id", "text"))
-            .repartition(fanN(s, dir)),
+            .unionByName(langSegPlantedDocs.toDF("doc_id", "text")),
           w = 8)
         .orderBy(col("doc_id"), col("seg_start"))
     }, Sql(

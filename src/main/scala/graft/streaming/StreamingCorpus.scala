@@ -177,15 +177,15 @@ object StreamingCorpus {
   /** Runs `body` with Spark's multi-stateful-operator analyzer guard
     * (`spark.sql.streaming.statefulOperator.checkCorrectness.enabled`)
     * disabled, restoring the session's prior value afterwards — the
-    * opt-in scope for starting [[webCorpusStreamCycle]] (whose chained
-    * append-mode stages are proven safe in its scaladoc) without
-    * stripping the guard from every other streaming query the session
-    * later builds. Wrap BOTH the plan construction and the
-    * `writeStream...start()` call: the analyzer consults the conf at
-    * query start. Once `start()` returns, the running query is not
-    * re-checked, so restoring immediately after is safe.
+    * scope [[webCorpusStreamCycle]] (whose chained append-mode stages
+    * are proven safe in its scaladoc) builds and starts itself in,
+    * without stripping the guard from every other streaming query the
+    * session later builds. It wraps BOTH the plan construction and the
+    * start: the analyzer consults the conf at query start. Once the
+    * start returns, the running query is not re-checked, so restoring
+    * immediately after is safe.
     */
-  def withChainedStatefulGuardDisabled[T](spark: SparkSession)(body: => T): T = {
+  private def withChainedStatefulGuardDisabled[T](spark: SparkSession)(body: => T): T = {
     val key = "spark.sql.streaming.statefulOperator.checkCorrectness.enabled"
     val prior = spark.conf.getOption(key)
     spark.conf.set(key, "false")
@@ -262,101 +262,109 @@ object StreamingCorpus {
     * — so a row reaches stage 2 behind stage 2's watermark iff it
     * already reached stage 1 behind stage 1's, i.e. the chain's
     * lateness semantics are exactly a single stage's. The check is
-    * session-wide, so this operator does NOT flip it itself (a
+    * session-wide, so this operator does NOT leave it off (a
     * permanent disable would silently strip the guard from every
-    * OTHER streaming query later built on the session):
-    * callers opt in by wrapping plan construction AND `start()` in
+    * OTHER streaming query later built on the session): it builds the
+    * plan AND starts the query inside
     * [[withChainedStatefulGuardDisabled]], which restores the prior
     * session value the moment the query is running. The spec proves
     * the semantics across batch splits under exactly that scope.
+    *
+    * Drains the verdict rows into the parquet files under `sinkDir`
+    * ([[Drain.toParquet]], checkpointed in `checkpointDir`) and returns
+    * the started query.
     */
   def webCorpusStreamCycle(
       pages: DataFrame,
       tsMicrosCol: String,
       canonIdx: DataFrame,
       textIdx: DataFrame,
+      sinkDir: String,
+      checkpointDir: String,
       linkDensityPct: Int = 30,
-      lateness: String = "1 hour"): DataFrame = {
+      lateness: String = "1 hour"): StreamingQuery = {
     val spark = pages.sparkSession
     import spark.implicits._
-    val gated = Corpus.crawlGate(pages, linkDensityPct, keepText = true,
-        carry = Seq(tsMicrosCol))
-      .withColumn("passes",
-        (col("status") === "ok" && col("verdict") === "index").cast("long"))
-      .withColumn("th", md5(col("text")))
-      .join(broadcast(canonIdx.select(col("canonical"))
-        .withColumn("__ic", lit(1L))), Seq("canonical"), "left")
-      .join(broadcast(textIdx.select(col("th"))
-        .withColumn("__it", lit(1L))), Seq("th"), "left")
-      .select(col("doc_id"), col(tsMicrosCol).as("ts_us"), col("status"),
-        col("verdict"), col("text"), col("n_toks"), col("canonical"),
-        col("passes"), col("th"),
-        col("__ic").isNotNull.as("in_canon_idx"),
-        col("__it").isNotNull.as("in_text_idx"),
-        timestamp_micros(col(tsMicrosCol)).as("__event_time"))
-      .withWatermark("__event_time", lateness)
-      .as[WcArr]
-    // stage 1: canonical first-seen — a passing page with a canonical
-    // claimed by the standing index OR by an earlier passing arrival
-    // is a canonical_dup (the batch rn1 rule under arrival order)
-    // `d:` groups hold only non-claiming rows, whose verdicts never
-    // consult `seen` — persisting state + a timer for them would put one
-    // entry per PAGE in the store for the whole horizon. Only contested
-    // canonical keys keep state.
-    val afterCanon = keyedFold(gated, lateness)(
-        p => canonicalKey(p.passes, p.canonical, p.doc_id), r => (r.ts_us, r.doc_id), false,
-        contested) {
-      (seen, r) =>
-        val claims = r.passes == 1L && r.canonical != null
-        val dup = claims && (r.in_canon_idx || seen)
-        // the arrival that takes the keeper slot is the one that ADMITS
-        // the canonical into the index — the streamed write-back flag
-        // (≡ the batch delta's rank-free "any gate survivor claims it,
-        // not in standing")
-        val admits = claims && !dup
-        (seen || admits,
-          Some(WcMid(r.doc_id, r.ts_us, r.status, r.verdict, r.text, r.n_toks,
-            r.canonical, r.th, r.in_text_idx, canon_dup = dup,
-            alive1 = r.passes == 1L && !dup, new_canon = admits, r.__event_time)))
+    withChainedStatefulGuardDisabled(spark) {
+      val gated = Corpus.crawlGate(pages, linkDensityPct, keepText = true,
+          carry = Seq(tsMicrosCol))
+        .withColumn("passes",
+          (col("status") === "ok" && col("verdict") === "index").cast("long"))
+        .withColumn("th", md5(col("text")))
+        .join(broadcast(canonIdx.select(col("canonical"))
+          .withColumn("__ic", lit(1L))), Seq("canonical"), "left")
+        .join(broadcast(textIdx.select(col("th"))
+          .withColumn("__it", lit(1L))), Seq("th"), "left")
+        .select(col("doc_id"), col(tsMicrosCol).as("ts_us"), col("status"),
+          col("verdict"), col("text"), col("n_toks"), col("canonical"),
+          col("passes"), col("th"),
+          col("__ic").isNotNull.as("in_canon_idx"),
+          col("__it").isNotNull.as("in_text_idx"),
+          timestamp_micros(col(tsMicrosCol)).as("__event_time"))
+        .withWatermark("__event_time", lateness)
+        .as[WcArr]
+      // stage 1: canonical first-seen — a passing page with a canonical
+      // claimed by the standing index OR by an earlier passing arrival
+      // is a canonical_dup (the batch rn1 rule under arrival order)
+      // `d:` groups hold only non-claiming rows, whose verdicts never
+      // consult `seen` — persisting state + a timer for them would put one
+      // entry per PAGE in the store for the whole horizon. Only contested
+      // canonical keys keep state.
+      val afterCanon = keyedFold(gated, lateness)(
+          p => canonicalKey(p.passes, p.canonical, p.doc_id), r => (r.ts_us, r.doc_id), false,
+          contested) {
+        (seen, r) =>
+          val claims = r.passes == 1L && r.canonical != null
+          val dup = claims && (r.in_canon_idx || seen)
+          // the arrival that takes the keeper slot is the one that ADMITS
+          // the canonical into the index — the streamed write-back flag
+          // (≡ the batch delta's rank-free "any gate survivor claims it,
+          // not in standing")
+          val admits = claims && !dup
+          (seen || admits,
+            Some(WcMid(r.doc_id, r.ts_us, r.status, r.verdict, r.text, r.n_toks,
+              r.canonical, r.th, r.in_text_idx, canon_dup = dup,
+              alive1 = r.passes == 1L && !dup, new_canon = admits, r.__event_time)))
+      }
+      // stage 2: text-hash first-seen over canonical-stage survivors —
+      // the incrementalDedup state keyed on md5(text) (the batch rn2
+      // rule; md5 equality stands in for text equality exactly as the
+      // standing textIdx probe already does). The event-time column is
+      // RE-MARKED: watermark metadata does not survive a
+      // flatMapGroupsWithState, and the second stage's event-time
+      // timeout needs its own watermark node (chained append-mode
+      // stateful operators are supported; the re-mark is how the chain
+      // declares its time column at each stage)
+      // same state-free rule as stage 1: `d:` groups hold only
+      // non-survivors (alive1 = false), whose verdicts never consult `seen`
+      val afterText = keyedFold(afterCanon.withWatermark("__event_time", lateness), lateness)(
+          p => if (p.alive1) "t:" + p.th else "d:" + p.doc_id, r => (r.ts_us, r.doc_id), false,
+          contested) {
+        (seen, r) =>
+          val dup = r.alive1 && (r.in_text_idx || seen)
+          val admits = r.alive1 && !dup
+          (seen || admits,
+            Some(WcStaged(r.doc_id, r.ts_us, r.status, r.verdict, r.text,
+              r.n_toks, r.canonical, r.th, r.canon_dup, text_dup = dup,
+              alive2 = r.alive1 && !dup, new_canon = r.new_canon, new_text = admits)))
+      }
+      // stage 3: the Gopher gate map-side + the batch increment's final
+      // verdict projection, with the write-back columns riding along
+      Drain.toParquet(Corpus.withGopher(afterText.toDF())
+        .select(
+          col("doc_id"), col("ts_us"),
+          when(col("status") === "quarantined", lit("quarantined"))
+            .when(col("status") === "chrome", lit("chrome"))
+            .when(col("verdict") === "drop", lit("noindex"))
+            .when(col("canon_dup"), lit("canonical_dup"))
+            .when(col("text_dup"), lit("text_dup"))
+            .when(coalesce(col("gopher_ok"), lit(0L)) =!= 1L, lit("low_quality"))
+            .otherwise(lit("kept")).as("stage"),
+          when(col("alive2") && coalesce(col("gopher_ok"), lit(0L)) === 1L,
+            col("n_toks")).as("tok_cnt"),
+          when(col("new_canon"), col("canonical")).as("delta_canon"),
+          when(col("new_text"), col("th")).as("delta_text")), sinkDir, checkpointDir)
     }
-    // stage 2: text-hash first-seen over canonical-stage survivors —
-    // the incrementalDedup state keyed on md5(text) (the batch rn2
-    // rule; md5 equality stands in for text equality exactly as the
-    // standing textIdx probe already does). The event-time column is
-    // RE-MARKED: watermark metadata does not survive a
-    // flatMapGroupsWithState, and the second stage's event-time
-    // timeout needs its own watermark node (chained append-mode
-    // stateful operators are supported; the re-mark is how the chain
-    // declares its time column at each stage)
-    // same state-free rule as stage 1: `d:` groups hold only
-    // non-survivors (alive1 = false), whose verdicts never consult `seen`
-    val afterText = keyedFold(afterCanon.withWatermark("__event_time", lateness), lateness)(
-        p => if (p.alive1) "t:" + p.th else "d:" + p.doc_id, r => (r.ts_us, r.doc_id), false,
-        contested) {
-      (seen, r) =>
-        val dup = r.alive1 && (r.in_text_idx || seen)
-        val admits = r.alive1 && !dup
-        (seen || admits,
-          Some(WcStaged(r.doc_id, r.ts_us, r.status, r.verdict, r.text,
-            r.n_toks, r.canonical, r.th, r.canon_dup, text_dup = dup,
-            alive2 = r.alive1 && !dup, new_canon = r.new_canon, new_text = admits)))
-    }
-    // stage 3: the Gopher gate map-side + the batch increment's final
-    // verdict projection, with the write-back columns riding along
-    Corpus.withGopher(afterText.toDF())
-      .select(
-        col("doc_id"), col("ts_us"),
-        when(col("status") === "quarantined", lit("quarantined"))
-          .when(col("status") === "chrome", lit("chrome"))
-          .when(col("verdict") === "drop", lit("noindex"))
-          .when(col("canon_dup"), lit("canonical_dup"))
-          .when(col("text_dup"), lit("text_dup"))
-          .when(coalesce(col("gopher_ok"), lit(0L)) =!= 1L, lit("low_quality"))
-          .otherwise(lit("kept")).as("stage"),
-        when(col("alive2") && coalesce(col("gopher_ok"), lit(0L)) === 1L,
-          col("n_toks")).as("tok_cnt"),
-        when(col("new_canon"), col("canonical")).as("delta_canon"),
-        when(col("new_text"), col("th")).as("delta_text"))
   }
 
   /** Streaming twin of `q_quality_votes` — the ensemble gate run

@@ -189,9 +189,6 @@ object OperatorReachSpec {
       "streaming encode twin ≡ batch under the frozen model", "Text.spmEncodeDocs"),
     "StreamingCorpus.webCorpusStreamCycle" -> StreamingTwin("WebCorpusStreamSpec",
       "streamed capstone verdicts ≡ batch increment verdicts", "Corpus.webCorpusIncrementFrom"),
-    // the scope the capstone twin must start in; its pin runs it so
-    "StreamingCorpus.withChainedStatefulGuardDisabled" -> StreamingTwin("WebCorpusStreamSpec",
-      "streamed capstone verdicts ≡ batch increment verdicts", "Corpus.webCorpusIncrementFrom"),
     // (d) reference implementations
     "Corpus.webCorpusIndexClaims" -> Reference("RetentionSpec",
       "the one-pass day-column form ≡ the per-day form", "Corpus.webCorpusIndexClaimsWithDay"),

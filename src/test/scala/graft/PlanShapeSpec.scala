@@ -507,6 +507,84 @@ class PlanShapeSpec extends AnyFunSuite {
         "document the bounded input in this allowlist")
   }
 
+  test("the reader spreads documents, events and embeddings at their fan width, " +
+      "and not a scan that already has that many splits") {
+    // The reader is the one place per-row work over a base table gets
+    // its width: a regression here serializes every tokenize / JSON
+    // parse / vector query over these tables.
+    import org.apache.spark.sql.catalyst.plans.physical.RoundRobinPartitioning
+    import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    val dir = new java.io.File(new java.io.File(sf).getParentFile, "sf0.1").getPath
+    def roundRobins(p: SparkPlan): Seq[ShuffleExchangeExec] = p.collect {
+      case e: ShuffleExchangeExec if e.outputPartitioning.isInstanceOf[RoundRobinPartitioning] => e
+    }
+    val spread = Seq("documents" -> Tables.documents _, "events" -> Tables.events _,
+      "embeddings" -> Tables.embeddings _)
+    val bytes = spread.map { case (t, _) => t -> Tables.pathBytes(spark, s"$dir/$t.parquet") }.toMap
+    for ((t, read) <- spread) {
+      val width = Tables.fanWidth(spark, bytes(t))
+      assert(width > 1, s"$t: sf0.1 must be over one fan target")
+      val p = read(spark, dir).queryExecution.sparkPlan
+      val rr = roundRobins(p)
+      assert(rr.size === 1, s"$t:\n$p")
+      assert(rr.head.outputPartitioning === RoundRobinPartitioning(width), s"$t:\n$p")
+      assert(rr.head.child.isInstanceOf[FileSourceScanExec], s"$t: not over the scan:\n$p")
+    }
+    for (read <- Seq(Tables.nation _, Tables.region _))
+      assert(roundRobins(read(spark, dir).queryExecution.sparkPlan).isEmpty)
+
+    // at least `width` splits of maxPartitionBytes each: the 100 TB case
+    val key = "spark.sql.files.maxPartitionBytes"
+    val prior = spark.conf.getOption(key)
+    spark.conf.set(key, spread.map { case (t, _) =>
+      bytes(t) / Tables.fanWidth(spark, bytes(t)) }.min.toString)
+    try for ((t, read) <- spread) {
+      val p = read(spark, dir).queryExecution.sparkPlan
+      assert(roundRobins(p).isEmpty, s"$t: a wide scan is spread again:\n$p")
+    } finally prior match {
+      case Some(v) => spark.conf.set(key, v)
+      case None => spark.conf.unset(key)
+    }
+  }
+
+  test("no declared query round-robins what the reader already spread") {
+    // Width is the reader's decision (the test above): its spread is a
+    // Repartition directly over a file relation, at most that file's
+    // fanWidth wide. Any other shuffling Repartition in a declared
+    // query's analyzed plan was put there by the query body (at sf0.001
+    // every base table is under one fan target, so a body call over one
+    // plans a single-partition exchange). A body-level round-robin is
+    // legal ONLY where its width is bound to the operator's own work
+    // rather than to the scan, documented below.
+    import org.apache.spark.sql.catalyst.plans.logical.Repartition
+    import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+    val workBound: Map[String, String] = Map(
+      "q_dedup_embed" -> "Dedup.embeddingNearDupPairs: cap² pair scorings per ~50k-pair task")
+    def readerSpread(r: Repartition): Boolean = r.child match {
+      case lr: LogicalRelation => lr.relation match {
+        case fs: HadoopFsRelation =>
+          val bytes = fs.location.rootPaths.map(p => Tables.pathBytes(spark, p.toString)).sum
+          r.numPartitions > 1 && r.numPartitions <= Tables.fanWidth(spark, bytes)
+        case _ => false
+      }
+      case _ => false
+    }
+    prepared
+    val offenders = SparkEntry.queries.toSeq.sortBy(_._1).flatMap { case (name, fn) =>
+      val analyzed =
+        try fn(spark, sf).queryExecution.analyzed
+        catch { case e: Throwable => fail(s"$name failed to build: $e") }
+      val rr = analyzed.collect { case r: Repartition if r.shuffle && !readerSpread(r) => r }
+      CacheScope.flush()
+      if (rr.nonEmpty && !workBound.contains(name)) Seq(name) else Nil
+    }
+    assert(offenders.isEmpty,
+      s"round-robin repartitions in query bodies: $offenders — the reader " +
+        "(Tables.readParquetCached) owns the spread over base tables; delete " +
+        "the call, or document a width bound to the operator's work here")
+  }
+
   test("cosineTopKSq: queries and shortlist broadcast back — candidates never shuffle") {
     val emb = (0L until 200L)
       .map(i => (i, Array.tabulate(8)(j => ((i * 31 + j * 7) % 13).toFloat), 0))

@@ -2,7 +2,6 @@ package graft
 
 import java.nio.file.Files
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{OutputMode, Trigger}
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.ops.Corpus
@@ -51,22 +50,14 @@ class WebCorpusStreamSpec extends AnyFunSuite {
         .toDF("doc_id", "html"))
     val feed = batch.withColumn("ts_us", lit(t0) + col("doc_id"))
 
-    // construction + start run under the SCOPED guard disable; the
-    // session's prior value must be back the moment start() returns
+    // the cycle builds and starts under its SCOPED guard disable; the
+    // session's prior value must be back the moment it returns
     val guardKey =
       "spark.sql.streaming.statefulOperator.checkCorrectness.enabled"
     def run(): Unit = {
-      val q = StreamingCorpus.withChainedStatefulGuardDisabled(spark) {
-        StreamingCorpus.webCorpusStreamCycle(
-            spark.readStream.schema(schema).parquet(src), "ts_us",
-            canonIdx, textIdx)
-          .writeStream
-          .format("parquet").option("path", sink)
-          .option("checkpointLocation", ckpt)
-          .outputMode(OutputMode.Append)
-          .trigger(Trigger.AvailableNow())
-          .start()
-      }
+      val q = StreamingCorpus.webCorpusStreamCycle(
+        spark.readStream.schema(schema).parquet(src), "ts_us",
+        canonIdx, textIdx, sink, ckpt)
       assert(spark.conf.get(guardKey) === "true",
         "the guard must be restored session-wide once the query is running")
       q.awaitTermination()
@@ -190,17 +181,9 @@ class WebCorpusStreamSpec extends AnyFunSuite {
     // streamed wave 2 (fresh state — the day boundary), two splits
     val feed = wave2.withColumn("ts_us", lit(t0) + col("doc_id"))
     def run(): Unit = {
-      val q = StreamingCorpus.withChainedStatefulGuardDisabled(spark) {
-        StreamingCorpus.webCorpusStreamCycle(
-            spark.readStream.schema(schema).parquet(s"$base/src"), "ts_us",
-            ci1, ti1)
-          .writeStream
-          .format("parquet").option("path", s"$base/sink")
-          .option("checkpointLocation", s"$base/ckpt")
-          .outputMode(OutputMode.Append)
-          .trigger(Trigger.AvailableNow())
-          .start()
-      }
+      val q = StreamingCorpus.webCorpusStreamCycle(
+        spark.readStream.schema(schema).parquet(s"$base/src"), "ts_us",
+        ci1, ti1, s"$base/sink", s"$base/ckpt")
       q.awaitTermination()
     }
     feed.filter(col("doc_id") < 9400000L)
